@@ -3,48 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // numeric width for confs that need an int ("*" is valid for
-    // local[*] but crashed shuffle.partitions and the ambient-cpu
-    // threshold — r12 ADVICE): fall back to the host's core count
-    val cpusInt = scala.util.Try(cpus.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    // knob-matrix passes (r4 verdict item 8): inject session confs via
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — e.g. spark.sql.cbo.enabled=true
-    // or AQE coalesce targets — so A/B bench runs vary ONLY the knobs
-    val extraConf: Seq[(String, String)] =
-      sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-        .flatMap(_.split(";")).filter(_.contains("="))
-        .map { kv => val Array(k, v) = kv.split("=", 2); (k.trim, v.trim) }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpusInt.toString)
-    // throwaway scratch (shuffle files, RocksDB state working dirs)
-    // on the RAM disk: /tmp is ext4 here, and RocksDB commit fsyncs
-    // against it were the stream family's largest remaining fixed
-    // cost — stream_join warm 5.4 → 3.4 s from the local.dir move
-    // alone, 3.1 s with checkpoint checksums off (worthless on a
-    // throwaway tmpfs checkpoint); changelog-off was the measured
-    // NEGATIVE (3.3 s) so the production changelog mode stays
-    // (r13 verdict #3 A/B, StreamProf). EXTRA_CONF below can still
-    // override both for future A/Bs.
-    scratchConfs.foreach { case (k, v) => builder.config(k, v) }
-    extraConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder
-      // same tz as Verify: interval/bucket arithmetic on NTZ timestamps
-      // must agree with unix-epoch bucketing in any deployment zone
-      .config("spark.sql.session.timeZone", "UTC")
-      // Tables.loadEvents probes the footer for the ts unit; this conf
-      // only matters when that probe finds timestamp[ns] (it must be
-      // set at session build — see the loadEvents scaladoc) and is a
-      // no-op for the µs/ms shapes current testdata ships
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // managed tables (bucketed-join keys) live in tmp, not the repo
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.catalogImplementation", "in-memory")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores)
     // n runs per key, report the best: the round-3 judge re-litigated
     // ~1 s noisy-neighbor swings on single-run numbers; best-of-n in
     // the artifact itself settles that. Spread is kept in "runs".
@@ -62,10 +21,7 @@ object Bench {
     // "code regression" vs "co-running load" without a re-run: a noisy
     // neighbor shows up as loadavg ≫ allocated cores with flat GC; a
     // real regression reproduces at loadavg ≈ cores.
-    def loadAvg(): Double =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
+    import BenchAmbient.loadAvg
     def gcMs(): Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -318,7 +274,7 @@ object Bench {
     // intersecting keys only), and the tail re-run list. A reader of
     // BENCH_r{N}.json decides "environment vs regression" from the
     // artifact alone; thresholds live in BenchAmbient (spec'd).
-    val ambient = BenchAmbient.contaminated(loadStart, cpusInt)
+    val ambient = BenchAmbient.contaminated(loadStart, GraftSession.cores)
     val bestsMap: Map[String, Double] =
       results.collect { case (n, Some(b), _, _) => n -> b }.toMap
     val rateVsBase = BenchAmbient.rateVsBaseline(bestsMap, baseline)
@@ -367,7 +323,7 @@ object Bench {
       "\"" + n + "\":" + cpuMedians.get(n).fold("null")(_.toString)
     }.mkString("{", ",", "}")
     val env =
-      s"""{"cpus":"$cpus","start_epoch_ms":$benchStart,"end_epoch_ms":${System.currentTimeMillis()},"load_start":$loadStart,"ambient_load":$ambient,"midrun_divergence":$midrun,"pass_loads":$passLoadsJson,"rate_vs_baseline":$rateJson,"cpu_rate_vs_baseline":$cpuRateJson,"tail_rerun":$tailJson,"load_end":${loadAvg()},"gc_total_ms":${gcMs()},"warmup":$warmupJson}"""
+      s"""{"cpus":"${GraftSession.cpus}","start_epoch_ms":$benchStart,"end_epoch_ms":${System.currentTimeMillis()},"load_start":$loadStart,"ambient_load":$ambient,"midrun_divergence":$midrun,"pass_loads":$passLoadsJson,"rate_vs_baseline":$rateJson,"cpu_rate_vs_baseline":$cpuRateJson,"tail_rerun":$tailJson,"load_end":${loadAvg()},"gc_total_ms":${gcMs()},"warmup":$warmupJson}"""
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","total_median":$totalMedian,"ambient_load":$ambient,"midrun_divergence":$midrun,"rate_vs_baseline":$rateJson,"cpu_rate_vs_baseline":$cpuRateJson,"queries":$qs,"medians":$ms,"cpu_medians":$cpuMediansJson,"runs":$rs,"telemetry":$tele,"env":$env,"n":$nRuns,"failed":$fs,"sf":"$sfDir"}"""
     // durable copy: the round-2 driver artifact lost its tail to stdout

@@ -77,9 +77,15 @@ object BenchAmbient {
     }
   }
 
-  /** Minimal flat {"key": secs} parse for the committed baseline —
-    * same no-JSON-library approach as BenchGate (the build has no
-    * JSON dependency by contract). Missing/unreadable file → empty
+  /** 1-min loadavg; -1 when /proc/loadavg is unreadable. */
+  def loadAvg(): Double =
+    try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
+      .split(" ")(0).toDouble
+    catch { case _: Throwable => -1.0 }
+
+  /** Minimal flat {"key": secs} parse for the committed baseline, read
+    * by Bench and BenchGate (the build has no JSON dependency by
+    * contract). Missing/unreadable file → empty
     * map (the bench still runs; the artifact annotates
     * rate_vs_baseline as null). */
   def readBaseline(path: String): Map[String, Double] =

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** In-tree wall-time regression gate (r10 verdict #6): the
   * shuffle-budget ledger pins every key's PLAN shape, but nothing
   * pinned its RATE — a regression surfaced only at the next driver
@@ -36,7 +34,6 @@ import org.apache.spark.sql.SparkSession
 object BenchGate {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val factor = sys.env.getOrElse("SPARK_GRAFT_GATE_FACTOR", "3.0").toDouble
     val only: Option[Set[String]] =
       args.headOption.map(_.split(",").toSet)
@@ -52,36 +49,17 @@ object BenchGate {
     }
     val baselinePath = sys.env.getOrElse(
       "SPARK_GRAFT_GATE_BASELINE", "tools/bench_baseline.json")
-    // minimal flat {"key": secs} parse — no JSON library in the build
-    val baseline: Map[String, Double] = {
-      val txt = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(baselinePath))
-      """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-    require(baseline.nonEmpty, s"empty baseline at $baselinePath")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.catalogImplementation", "in-memory")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def loadAvg(): Double =
-      try java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
+    val baseline = BenchAmbient.readBaseline(baselinePath)
+    require(baseline.nonEmpty, s"empty or missing baseline at $baselinePath")
+    val spark = GraftSession.local(GraftSession.cores)
     val keys = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // AMBIENT load, captured before the gate does any work: loadavg
     // sampled mid-run is contaminated by the gate's own previous keys
-    // (a 32-core key pushes the 1-min average over `cpus` for the next
-    // minute on an otherwise idle box), which would systematically
-    // downgrade real FAILs to WARN
-    val ambientLoad = loadAvg()
+    // (a 32-core key pushes the 1-min average over the core count for
+    // the next minute on an otherwise idle box), which would
+    // systematically downgrade real FAILs to WARN
+    val ambientLoad = BenchAmbient.loadAvg()
     var fails = List.empty[String]
     var warns = List.empty[String]
     var skipped = List.empty[String]
@@ -110,7 +88,7 @@ object BenchGate {
             val ratio = best / base
             val verdict =
               if (!over) "ok"
-              else if (ambientLoad > cpus.toDouble) { warns ::= name; "WARN(ambient-load)" }
+              else if (ambientLoad > GraftSession.cores) { warns ::= name; "WARN(ambient-load)" }
               else { fails ::= name; "FAIL" }
             println(f"[gate] $name%-28s base $base%7.3f s  best $best%7.3f s" +
               f"  ratio $ratio%5.2fx  $verdict")

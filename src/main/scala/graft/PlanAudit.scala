@@ -164,7 +164,9 @@ object PlanAudit {
     "llm_containment" -> "gram frame localCheckpoint (derive once, 5 scans -> 1)",
     "llm_near_dedup" -> "sig + gram frame localCheckpoints (derive once)",
     "llm_near_dedup_exact" -> "sig + gram frame localCheckpoints (derive once)",
-    "llm_minhash_portable" -> "signature frame localCheckpoint (derive once, 3 scans -> 1)")
+    "llm_minhash_portable" -> "signature frame localCheckpoint (derive once, 3 scans -> 1)",
+    "llm_decontaminate" ->
+      "repartitioned docs localCheckpoint (derive once for eval + train)")
 
   /** Keys whose RETURNED plan legitimately has no WholeStageCodegen
     * span. `join_skew_aqe` executes the real (codegen'd, skew-split)
@@ -179,10 +181,11 @@ object PlanAudit {
     * relation, the plan the audit should actually grade (r15, ADVICE):
     * without this substitution the smell scan and shuffle budget for
     * `join_skew_aqe` would audit a LocalTableScan — vacuously clean.
-    * The captured plan is the skew-split join the key exists to run. */
+    * The captured plan is the skew-split join the key exists to run;
+    * reading it releases it, so call this once per construction. */
   def constructionPlan(name: String)
       : Option[org.apache.spark.sql.execution.SparkPlan] = name match {
-    case "join_skew_aqe" => Option(operators.Extras2.lastSkewJoinExec)
+    case "join_skew_aqe" => operators.Extras2.takeSkewJoinExec()
     case _ => None
   }
 
@@ -298,14 +301,23 @@ object PlanAudit {
       }
     }
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  /** Core count the audit, its shuffle budgets and the shared test
+    * session run under. [[Tables.parallelizeKernel]] repartitions a
+    * scan only when it is narrower than a quarter of the session's
+    * cores, so one key can plan a different number of exchanges on
+    * 4, 8 and 32 cores; [[ShuffleBudgets]] hold at this count. */
+  val AuditCores = 8
+
+  /** `runMain graft.PlanAudit` prints one line per smell;
+    * `... counts` prints every key's shuffle count as budget entries;
+    * `... explain <outDir> <suffix> <key1,key2,...> <sfDir>` writes
+    * each key's formatted plan to `<outDir>/<key>_<suffix>.txt`. */
+  def main(args: Array[String]): Unit =
+    if (args.headOption.contains("explain")) explain(args.tail)
+    else auditMain(args)
+
+  private def auditMain(args: Array[String]): Unit = {
+    val spark = GraftSession.local(AuditCores)
     if (args.contains("counts")) {
       // budget (re)generation mode: print the measured shuffle count
       // per key as ready-to-paste map entries (same execution path the
@@ -322,13 +334,42 @@ object PlanAudit {
         }
       }
     } else audit(spark, "/root/testdata/sf0.001").foreach(println)
-    println("AUDIT DONE")
+    println(s"AUDIT DONE (local[$AuditCores])")
+    spark.stop()
+  }
+
+  /** Writes `.explain("formatted")` of registry keys to files, the
+    * before/after plan evidence of an optimization (plans/r{N}/). Runs
+    * under the Bench session width, [[GraftSession.cores]], so the
+    * dumped plan is the benched plan. Streaming keys are skipped:
+    * invoking one RUNS the query, and the returned frame is a sink
+    * read-back whose plan says nothing about the streaming execution. */
+  private def explain(args: Array[String]): Unit = {
+    require(args.length == 4,
+      "usage: PlanAudit explain <outDir> <suffix> <keys> <sfDir>")
+    val Array(outDir, suffix, keyList, d) = args
+    val keys = keyList.split(",").map(_.trim).filter(_.nonEmpty)
+    val spark = GraftSession.local(GraftSession.cores)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    keys.foreach { key =>
+      require(SparkEntry.queries.contains(key), s"unknown key $key")
+      if (key.startsWith("stream_")) {
+        System.err.println(s"[explain] $key skipped (streaming)")
+      } else {
+        val txt = SparkEntry.queries(key)(spark, d).queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        val out = java.nio.file.Paths.get(s"$outDir/${key}_$suffix.txt")
+        java.nio.file.Files.write(out, txt.getBytes("UTF-8"))
+        println(s"[explain] wrote $out (${txt.count(_ == '\n')} lines)")
+      }
+    }
     spark.stop()
   }
 }
 
 /** Committed per-key shuffle budgets at the audit scale (sf0.001,
-  * local[8], AQE on — the PlanContractSpec environment). Measured by
+  * `local[PlanAudit.AuditCores]` = local[8], AQE on — the
+  * PlanContractSpec environment). Measured by
   * `runMain graft.PlanAudit counts` and pasted here verbatim; the
   * audit fails any key that EXCEEDS its number (a new shuffle slipped
   * into the plan) or that has NO entry (new operators must declare
@@ -546,7 +587,9 @@ object ShuffleBudgets {
     "llm_exact_dedup" -> 2,
     "llm_feature_hash" -> 2,
     "llm_fingerprint" -> 1,
-    "llm_hybrid_search" -> 12,
+    // +1 (r15): Tables.parallelizeKernel's hash repartition of the
+    // single-file documents scan ahead of the tokenize + explode
+    "llm_hybrid_search" -> 13,
     "llm_interleave_sources" -> 2,
     "llm_kmeans" -> 3,
     "llm_knn_cosine" -> 2,
@@ -588,8 +631,10 @@ object ShuffleBudgets {
     "mm_frame_sample" -> 1,
     "mm_audio_window" -> 1,
     // band self-join exchange + pair distinct (hash attachments fold
-    // to broadcasts at audit scale; the sort rides the distinct)
-    "mm_phash_neardup" -> 2,
+    // to broadcasts at audit scale; the sort rides the distinct), +1
+    // (r15) for Tables.parallelizeKernel's hash repartition of the
+    // single-file documents scan ahead of the decode
+    "mm_phash_neardup" -> 3,
     // same pipeline at the 128-bit operating point — same two
     // exchanges (band self-join + pair distinct)
     "mm_phash_wide" -> 2,

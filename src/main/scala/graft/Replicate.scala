@@ -64,15 +64,7 @@ object Replicate {
     val factor = if (args.length > 2) args(2).toInt else 10
     val skew = args.length > 3 && args(3) == "skew"
     val hubSkew = args.length > 3 && args(3) == "hubskew"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores)
     run(spark, src, dst, factor, skew, hubSkew)
     spark.stop()
   }

@@ -1,6 +1,4 @@
 package graft
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
   FloatType, MapType, StructType}
 
@@ -30,16 +28,7 @@ object SchemaDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.catalogImplementation", "in-memory")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(PlanAudit.AuditCores)
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val cols = floatCols(fn(spark, sfDir).schema)

@@ -271,7 +271,7 @@ object Tables {
     * so every scan is one task and any heavy per-row kernel applied
     * before the first exchange (media decode, gram hashing, n-gram
     * explodes) runs on ONE core of the session's 32 — measured via
-    * the KeyProf job listener: mm_phash_neardup and llm_decontaminate
+    * a job listener: mm_phash_neardup and llm_decontaminate
     * execute as 4 single-task stages, ~1.3-1.5 s of serialized
     * compute. At production scale the corpus arrives as thousands of
     * splits and scans parallelize naturally, so this helper is a

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,28 +9,7 @@ object Verify {
     // the driver always runs the full set
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-    // throwaway scratch (shuffle files, RocksDB state working dirs)
-    // on the RAM disk — /tmp is a real ext4 disk here and RocksDB
-    // commit fsyncs against it were the stream family's largest
-    // fixed cost (see graft.scratchConfs)
-    scratchConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder
-      // Tables.loadEvents probes the footer for the ts unit; this conf
-      // only matters if the probe finds timestamp[ns] (must be set at
-      // session build) and is a no-op for the µs/ms shapes current
-      // testdata ships
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // managed tables (bucketed-join keys) live in tmp, not the repo
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.catalogImplementation", "in-memory")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

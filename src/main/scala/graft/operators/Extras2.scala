@@ -546,8 +546,17 @@ object Extras2 {
 
   /** The same executed plan as a live SparkPlan, so PlanAudit can run
     * its structural checks (countShuffles, smell scan) against the
-    * construction-time join instead of the returned LocalTableScan. */
-  @volatile var lastSkewJoinExec: org.apache.spark.sql.execution.SparkPlan = _
+    * construction-time join instead of the returned LocalTableScan.
+    * Cleared at the start of every [[joinSkewAqe]] and by
+    * [[takeSkewJoinExec]], so a live plan (with its materialized query
+    * stages) is never pinned past its audit, and a run that fails
+    * before capturing leaves nothing stale to grade. */
+  private val lastSkewJoinExec =
+    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.sql.execution.SparkPlan]()
+
+  /** The plan captured by the last [[joinSkewAqe]] run, at most once. */
+  def takeSkewJoinExec(): Option[org.apache.spark.sql.execution.SparkPlan] =
+    Option(lastSkewJoinExec.getAndSet(null))
 
   /** AQE skew-join under a deliberately skewed key distribution — the
     * runtime half of the skew story at BENCH scale (agg_salted_skew is
@@ -566,6 +575,7 @@ object Extras2 {
     * construction plan for this key (shuffle budget + smells), since
     * the returned LocalTableScan has no structure to audit. */
   val joinSkewAqe: QFn = (s, d) => {
+    lastSkewJoinExec.set(null)
     def build(): DataFrame = {
       val skewK = (c: Column) => when(c % 100 < 90, 0L).otherwise(c % 100)
       // repartition: a one-file parquet is one map task, and a skewed
@@ -602,7 +612,7 @@ object Extras2 {
       val skewed = build()
       val out = skewed.collect() // ~11 aggregated rows; runs the skew-split join
       lastSkewJoinPlan = skewed.queryExecution.executedPlan.toString
-      lastSkewJoinExec = skewed.queryExecution.executedPlan
+      lastSkewJoinExec.set(skewed.queryExecution.executedPlan)
       (out, skewed.schema)
     } finally prev.foreach {
       case (k, Some(v)) => s.conf.set(k, v)

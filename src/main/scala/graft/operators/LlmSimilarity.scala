@@ -499,7 +499,7 @@ object LlmSimilarity {
     * lists. */
   val llmHybridSearch: QFn = (s, d) => {
     // parallelizeKernel (r15): the tokenize + explode feeding the tf
-    // table ran on the single-task local scan (KeyProf: 18 single-
+    // table ran on the single-task local scan (18 single-
     // task stages); a no-op at production split counts
     val docs = Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")
       .select(col("doc_id"), words.as("w"))

@@ -522,9 +522,14 @@ object LlmText {
       .otherwise(array().cast("array<string>"))
     // parallelizeKernel (r15): the 3-gram HOF chain is interpreted
     // (CodegenFallback) and ran on the single-task local scan — one
-    // core of 32 (KeyProf: 4 single-task stages, ~1.5 s serialized
-    // jobwall); a no-op at production split counts
-    val docs = Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")
+    // core of 32 (4 single-task stages, ~1.5 s serialized
+    // jobwall); a no-op at production split counts. The repartitioned
+    // docs frame is derived once: the eval and train filters would
+    // otherwise push below the repartition and plan two exchanges
+    // that Spark cannot reuse
+    val docs = Tables.parallelizeKernel(s,
+      Tables.documents(s, d).select("doc_id", "text"), "doc_id")
+      .localCheckpoint()
     val evalG = docs.filter(col("doc_id") % 10 === 0)
       .select(col("doc_id").as("eval_id"), explode(grams3).as("gram"))
     val trainG = docs.filter(col("doc_id") % 10 =!= 0)

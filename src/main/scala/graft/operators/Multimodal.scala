@@ -224,7 +224,7 @@ object Multimodal {
   // the incremental key's index builder
   val mmPhashNeardup: QFn = (s, d) =>
     // parallelizeKernel (r15): the single-file local scan ran the
-    // whole decode on ONE core (KeyProf: 4 single-task stages,
+    // whole decode on ONE core (4 single-task stages,
     // ~1.3 s serialized); a no-op at production split counts
     phashPairs(narrowHashes(
       Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")),

@@ -326,16 +326,10 @@ object Unigram {
     // materialize the word→segmentation table ONCE: it is
     // vocabulary-bounded (31 rows here; bounded at any corpus size)
     // and has TWO consumers below (token join + first-word join).
-    // Default path is the single-job local enumerator; the relational
-    // form (the oracle's shape; ~80 tiny broadcast joins of pure
-    // scheduling floor — r13 measured 3.6 → 2.2 s just from
-    // checkpointing it once) stays selectable for A/B and is pinned
-    // output-equal by UnigramSpec
-    val segFn =
-      if (sys.env.get("SPARK_GRAFT_UNIGRAM_SEG").contains("relational"))
-        segmentWords _
-      else segmentWordsLocal _
-    val seg = segFn(distinctWords, vocab).localCheckpoint()
+    // The single-job local enumerator; the relational form
+    // (segmentWords, the oracle's shape; ~80 tiny broadcast joins of
+    // pure scheduling floor) is UnigramSpec's reference for it
+    val seg = segmentWordsLocal(distinctWords, vocab).localCheckpoint()
     val perDoc = tokens.join(broadcast(seg), "w")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"),

@@ -24,7 +24,7 @@ package object graft {
     * else the JVM default. This box's /tmp is ext4 — RocksDB commits
     * fsync their SST/changelog staging there, and that real-disk
     * round-trip was measured as the stream family's largest remaining
-    * fixed cost (StreamProf, stream_join warm 5.4 → 3.4 s from this
+    * fixed cost (stream_join warm 5.4 → 3.4 s from this
     * alone; r14). All of spark.local.dir's contents are throwaway by
     * construction — a production deployment points it at local NVMe,
     * which tmpfs stands in for here, same rationale as the
@@ -34,13 +34,12 @@ package object graft {
     if (root == "/dev/shm") "/dev/shm/graft_local" else root
   }
 
-  /** The scratch session-conf pair every harness main (and the shared
-    * test session) must apply IDENTICALLY — one definition, four
-    * builder sites, so a future scratch tweak cannot leave the
-    * profiler measuring a different configuration than the bench
-    * (the r14 review's duplication finding). Checkpoint-file
-    * checksums are off because every checkpoint here is throwaway
-    * tmpfs state — they protect durable remote checkpoints. */
+  /** The scratch session-conf pair, applied by [[GraftSession.local]]
+    * for every main and the shared test session (and by the perfbench
+    * harness), so a scratch tweak reaches them all alike.
+    * Checkpoint-file checksums are off because every checkpoint here
+    * is throwaway tmpfs state — they protect durable remote
+    * checkpoints. */
   def scratchConfs: Seq[(String, String)] = Seq(
     "spark.local.dir" -> scratchLocalDir,
     "spark.sql.streaming.stateStore.rocksdb.checkpointFileChecksumEnabled" ->

@@ -170,11 +170,6 @@ object Streaming {
     * `collectIvfDiagnostics`. */
   @volatile var trackStateRows: Boolean = false
 
-  /** Per-micro-batch progress JSON of the LAST [[runStream]] query —
-    * harness profiling diagnostic (where does the fixed per-key cost
-    * go: planning, state commit, sink write). */
-  @volatile var lastProgressJson: Seq[String] = Nil
-
   /** Chunking rule for the staged feed: each chunk is one
     * micro-batch, so the watermark advances per chunk and multi-batch
     * progression is preserved (floor of two chunks on small data).
@@ -299,7 +294,7 @@ object Streaming {
   /** Harness checkpoint dir on tmpfs: the per-batch state commit
     * fsyncs its changelog files to the checkpoint dir, and at
     * ~0.4-0.6 s of file-sync per micro-batch that disk round-trip WAS
-    * most of the fixed per-key cost (measured via StreamProf). A
+    * most of the fixed per-key cost (measured from the micro-batch progress events). A
     * bench-harness checkpoint is throwaway by construction (each run
     * starts fresh or resumes within the same key invocation), so
     * RAM-disk durability is exactly right HERE — a production
@@ -394,25 +389,21 @@ object Streaming {
     // r12 A/B took it further: a stream-stream join holds FOUR store
     // instances per partition, so 8 partitions = 32 per-batch changelog
     // commits + loads; at 4 that halves and the family benched 67.6 →
-    // 55.0 s (stream_join_semi warm 8.1 → 4.6 s in StreamProf), while
+    // 55.0 s (stream_join_semi warm 8.1 → 4.6 s), while
     // 2 went CPU-bound (5.8 s) — 4 is the measured knee. Pinned at
     // query start (state partitioning is fixed for the query's life);
     // previous values restored immediately after start. A production
     // deployment sizes this to state volume, not harness latency.
     val confs = Map(
-      "spark.sql.shuffle.partitions" ->
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"),
+      "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       // commit a small changelog per batch instead of a full RocksDB
       // snapshot zip — the production durability mode for frequent
       // micro-batches (snapshots still happen, in the background
-      // maintenance thread). Env knob for A/B only (r13 verdict #3
-      // candidate: per-batch zips could beat changelogs on a tmpfs
-      // checkpoint); measured on stream_join warm: OFF was not faster
-      // (see Bench scaladoc) so the production mode stays the default.
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_CHANGELOG", "true"),
+      // maintenance thread). Per-batch zips on the tmpfs checkpoint
+      // were A/B'd (r13) on stream_join warm and were not faster.
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" ->
         trackStateRows.toString,
       // stream-stream joins at state format v3 (r13): the four join
@@ -434,7 +425,7 @@ object Streaming {
       // every batch here is ~0.4 s of task-scheduling + state-store
       // floor, and watermark advancement after each data batch was
       // spawning a no-data batch right behind it (6 batches per key
-      // for a 3-addData feed — measured via StreamProf). The sentinel
+      // for a 3-addData feed — measured from the progress events). The sentinel
       // feed seals every real window inside DATA batches, so the
       // no-data batches contribute nothing to the sink and eviction
       // just moves to the next data batch: halve the batch count
@@ -480,7 +471,6 @@ object Streaming {
       q.awaitTermination()
       lastStateRowsTotal = Option(q.lastProgress)
         .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
-      lastProgressJson = q.recentProgress.map(_.json).toSeq
     } finally {
       q.stop()
       // tmpfs is a shared finite resource: reclaim the throwaway

@@ -66,6 +66,15 @@ class PlanContractSpec extends SparkTestBase {
       val p = operators.Extras2.lastSkewJoinPlan
       assert(p.contains("skew=true") || p.contains("skewed"),
         s"AQE did not split the skewed join partition:\n$p")
+      // the audit reads the captured live plan once, which releases it
+      assert(PlanAudit.constructionPlan("join_skew_aqe").isDefined)
+      assert(PlanAudit.constructionPlan("join_skew_aqe").isEmpty,
+        "the captured plan stayed pinned after the audit read it")
+      // a run that fails before capturing leaves no stale plan behind
+      operators.Extras2.joinSkewAqe(spark, sf)
+      intercept[Exception](operators.Extras2.joinSkewAqe(spark, s"$sf/absent"))
+      assert(PlanAudit.constructionPlan("join_skew_aqe").isEmpty,
+        "a failed run left the previous run's plan to be audited")
     }
   }
 

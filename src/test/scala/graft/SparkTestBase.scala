@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for all specs (UTC, AQE on, 8 shuffle
-  * partitions — small data, fast tests; prod entry points use 32). */
+/** Shared local SparkSession for all specs: [[GraftSession.local]] at
+  * the plan audit's 8 cores (small data, fast tests; the mains default
+  * to 32). */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkTestBase.session
@@ -33,24 +34,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val builder = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-    // same throwaway-scratch environment as the Bench/Verify mains
-    // (r14): RocksDB state working dirs on this box's ext4 /tmp were
-    // the streaming suites' fixed cost too (suite 13m -> 8m47s)
-    graft.scratchConfs.foreach { case (k, v) => builder.config(k, v) }
-    val s = builder
-      // events.ts is parquet timestamp[ns] — see Tables.loadEvents
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // managed tables (the ANALYZE/CBO spec) go to tmp, not the repo
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The audit's session: PlanContractSpec's budgets hold at this
+    * core count (see [[PlanAudit.AuditCores]]). */
+  lazy val session: SparkSession = GraftSession.local(PlanAudit.AuditCores)
 }
