@@ -1,6 +1,18 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+
+  /** The staging keys to warm before the timed passes: those the
+    * selected keys (all, or the `only` subset) read, in first-reference
+    * order. A key-subset run warms only the artifacts its keys touch
+    * instead of all of them (r10 review finding: a 1-key iterate loop
+    * paid minutes of unrelated staging per invocation). */
+  def warmupKeys(specs: Seq[KeySpec], only: Option[Set[String]]): Seq[String] = {
+    val needed =
+      specs.filter(s => only.forall(_.contains(s.name))).flatMap(_.staging).toSet
+    specs.flatMap(_.staging).distinct.filter(needed)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local(GraftSession.cores)
@@ -86,43 +98,6 @@ object Bench {
     // keys. Stage them ONCE, untimed, before any timed pass; the
     // warm-up walls are recorded in env.warmup so the exclusion is
     // auditable, not silent.
-    // Each staging key paired with the predicate "does this SELECTED
-    // key read that artifact" — a key-subset run (`only`) warms only
-    // the artifacts its keys actually touch instead of all eight
-    // (r10 review finding: a 1-key iterate loop paid minutes of
-    // unrelated staging per invocation).
-    val stagingKeys: Seq[(String, String => Boolean)] = Seq(
-      // trades_mid_v2 layout
-      "ts_effective_spread" -> ((k: String) => Set("ts_effective_spread",
-        "ts_trade_sign", "ts_ofi", "ts_kyle_lambda").contains(k)),
-      // the three stream feed directories
-      "stream_tumbling" -> ((k: String) => k.startsWith("stream_")),
-      "stream_foreach_batch" -> ((k: String) => k.startsWith("stream_")),
-      "stream_late_data_final" -> ((k: String) => k.startsWith("stream_")),
-      // kmeans centroids + ivf_layout_v1 / pq_books_v1
-      "llm_knn_ivf" -> ((k: String) => k.startsWith("llm_knn_ivf")),
-      // base-slice quantizer + ivf_append_layout_v1 (its own artifacts)
-      "llm_knn_ivf_append" -> ((k: String) => k == "llm_knn_ivf_append"),
-      "llm_knn_pq" -> ((k: String) => k == "llm_knn_pq"),
-      // neardup_pairs_v1
-      "llm_near_dedup" -> ((k: String) => k.startsWith("llm_near_dedup") ||
-        k == "llm_dedup_cluster"),
-      // neardup_band_index_v1 (its own base-corpus banding artifact)
-      "llm_incremental_neardup" -> ((k: String) => k == "llm_incremental_neardup"),
-      // phash_band_index_v1 (media-side banding artifact)
-      "mm_phash_incremental" -> ((k: String) => k == "mm_phash_incremental"),
-      // bpe_merges_v1
-      "llm_bpe_encode" -> ((k: String) => k.startsWith("llm_bpe") ||
-        k == "llm_tokenizer_fertility"),
-      // unigram_vocab_v1 (shared by vocab + encode)
-      "llm_unigram_vocab" -> ((k: String) => k.startsWith("llm_unigram")))
-    // a renamed staging key must fail LOUDLY, not silently skip the
-    // warm-up it exists for (the r9 artifact-skew bug would return
-    // silently otherwise)
-    stagingKeys.foreach { case (name, _) =>
-      require(SparkEntry.queries.contains(name),
-        s"bench staging key '$name' not in the registry — renamed?")
-    }
     // each entry carries ok=false when the staging build itself failed
     // (r10 ADVICE: a failed warm-up printed to stderr but recorded a
     // short wall, so the artifact claimed the exclusion worked while
@@ -136,17 +111,16 @@ object Bench {
     val loadStart = loadAvg()
     val warmup: Seq[(String, Double, Boolean)] =
       if (sys.env.contains("SPARK_GRAFT_NO_WARMUP")) Seq.empty
-      else stagingKeys.collect {
-        case (name, needed) if only.forall(_.exists(needed)) =>
-          val fn = SparkEntry.queries(name)
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).count(); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
-              false
-            }
-          (name, (System.nanoTime() - t0) / 1e9, ok)
+      else warmupKeys(SparkEntry.specs, only).map { name =>
+        val fn = SparkEntry.queries(name)
+        val t0 = System.nanoTime()
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
+            false
+          }
+        (name, (System.nanoTime() - t0) / 1e9, ok)
       }
     // drain warm-up's in-flight task-end events so the first timed
     // run's spill/shuffle baselines aren't polluted by warm-up

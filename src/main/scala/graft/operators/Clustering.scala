@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables}
+import graft.{KeySpec, QFn, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -295,12 +295,6 @@ object Clustering {
       .orderBy("lang")
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "llm_kmeans" -> llmKmeans,
-    "llm_bpe_train" -> llmBpeTrain,
-    "llm_bpe_encode" -> llmBpeEncode,
-    "llm_tokenizer_fertility" -> llmTokenizerFertility)
-
   /** DuckDB twin of the D2 assignment kernel: squared euclidean over
     * the zipped (float-cast-to-double, centroid) lists, summed in list
     * order — the same left-to-right IEEE accumulation as SqEuclidFD's
@@ -513,11 +507,8 @@ object Clustering {
           GROUP BY d.lang ORDER BY d.lang"""
   }
 
-  val oracles: Seq[(String, String)] = Seq(
-    "llm_bpe_train" -> bpeOracleSql,
-    "llm_bpe_encode" -> bpeEncodeOracleSql,
-    "llm_tokenizer_fertility" -> tokenizerFertilityOracleSql,
-    "llm_kmeans" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("llm_kmeans", llmKmeans, shuffles = 3,
       s"""WITH emb AS (SELECT vec_id, embedding FROM embeddings),
           ${lloydKmeans._1},
           final AS (
@@ -528,4 +519,23 @@ object Clustering {
           SELECT CAST(cluster AS INT) AS cluster, count(*) AS n_points,
             CAST(sum(CAST(floor(d2 * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS wssse
           FROM final GROUP BY cluster ORDER BY cluster""")
+      .crossJoinOk("broadcasts the k=8-row centroid table — O(1) build side")
+      .constructionJobsOk("Lloyd rounds materialize K×dim centroids per iter"),
+    KeySpec.batch("llm_bpe_train", llmBpeTrain, shuffles = 1, bpeOracleSql)
+      .constructionJobsOk("one 1-row argmax collect per merge round")
+      .reads("llm_bpe_encode"),
+    KeySpec.batch("llm_bpe_encode", llmBpeEncode,
+      // encode = per-row fuse chain + the presentation sort; training
+      // happens in construction (stored-artifact read after first touch)
+      shuffles = 1, bpeEncodeOracleSql)
+      .constructionJobsOk("reads the content-keyed stored merge table " +
+        "(trains it on first touch of new content) + a 6-row collect — " +
+        "the merge table IS the tokenizer")
+      // stages bpe_merges_v1
+      .reads("llm_bpe_encode"),
+    KeySpec.batch("llm_tokenizer_fertility", llmTokenizerFertility,
+      // per-row encode fold + ONE |langs|-grain agg + presentation sort
+      shuffles = 2, tokenizerFertilityOracleSql)
+      .constructionJobsOk("reads the same stored merge table + 6-row collect as llm_bpe_encode")
+      .reads("llm_bpe_encode"))
 }

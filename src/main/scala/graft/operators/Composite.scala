@@ -257,20 +257,11 @@ object Composite {
       .limit(100)
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "q21_suppliers_waiting" -> q21SuppliersWaiting,
-    "q3_shipping_priority" -> q3ShippingPriority,
-    "q10_returned_items" -> q10ReturnedItems,
-    "q18_large_orders" -> q18LargeOrders,
-    "q5_local_supplier_volume" -> q5LocalSupplierVolume,
-    "q7_volume_shipping" -> q7VolumeShipping,
-    "q8_market_share" -> q8MarketShare)
-
-  val oracles: Seq[(String, String)] = Seq(
-    // the oracle keeps the textbook correlated EXISTS / NOT-EXISTS
-    // form — proving the one-pass grouped rewrite equivalent to the
-    // subquery semantics, not just to itself
-    "q21_suppliers_waiting" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("q21_suppliers_waiting", q21SuppliersWaiting, shuffles = 4,
+      // the oracle keeps the textbook correlated EXISTS / NOT-EXISTS
+      // form — proving the one-pass grouped rewrite equivalent to the
+      // subquery semantics, not just to itself
       """SELECT s_name, count(*) AS numwait
          FROM supplier, lineitem l1, orders
          WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
@@ -283,8 +274,8 @@ object Composite {
                            WHERE l3.l_orderkey = l1.l_orderkey
                              AND l3.l_suppkey <> l1.l_suppkey
                              AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
-         GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 100""",
-    "q3_shipping_priority" ->
+         GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 100"""),
+    KeySpec.batch("q3_shipping_priority", q3ShippingPriority, shuffles = 1,
       s"""SELECT l_orderkey, o_orderdate, o_orderpriority,
             ${sqlSum4("l_extendedprice * (1 - l_discount)")} AS revenue
           FROM lineitem
@@ -294,8 +285,8 @@ object Composite {
             AND o_orderdate < TIMESTAMP '1998-06-01'
             AND l_shipdate > TIMESTAMP '1998-06-01'
           GROUP BY 1, 2, 3
-          ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-    "q10_returned_items" ->
+          ORDER BY revenue DESC, l_orderkey LIMIT 10"""),
+    KeySpec.batch("q10_returned_items", q10ReturnedItems, shuffles = 1,
       s"""SELECT c_custkey, c_name, c_acctbal, n_name,
             ${sqlSum4("l_extendedprice * (1 - l_discount)")} AS revenue
           FROM lineitem
@@ -306,8 +297,8 @@ object Composite {
             AND o_orderdate >= TIMESTAMP '1997-01-01'
             AND o_orderdate < TIMESTAMP '1997-04-01'
           GROUP BY 1, 2, 3, 4
-          ORDER BY revenue DESC, c_custkey LIMIT 20""",
-    "q18_large_orders" ->
+          ORDER BY revenue DESC, c_custkey LIMIT 20"""),
+    KeySpec.batch("q18_large_orders", q18LargeOrders, shuffles = 1,
       s"""SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
             total_qty
           FROM (SELECT l_orderkey, ${sqlSum2("l_quantity")} AS total_qty
@@ -315,8 +306,8 @@ object Composite {
           JOIN orders ON l_orderkey = o_orderkey
           JOIN customer ON o_custkey = c_custkey
           WHERE total_qty > 150.0
-          ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""",
-    "q5_local_supplier_volume" ->
+          ORDER BY o_totalprice DESC, o_orderkey LIMIT 100"""),
+    KeySpec.batch("q5_local_supplier_volume", q5LocalSupplierVolume, shuffles = 1,
       s"""SELECT n_name,
             ${sqlSum4("l_extendedprice * (1 - l_discount)")} AS revenue
           FROM lineitem
@@ -330,8 +321,8 @@ object Composite {
             AND o_orderdate >= TIMESTAMP '1997-01-01'
             AND o_orderdate < TIMESTAMP '1998-01-01'
           GROUP BY 1
-          ORDER BY revenue DESC, n_name""",
-    "q7_volume_shipping" ->
+          ORDER BY revenue DESC, n_name"""),
+    KeySpec.batch("q7_volume_shipping", q7VolumeShipping, shuffles = 2,
       s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
             CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS l_year,
             ${sqlSum4("l_extendedprice * (1 - l_discount)")} AS revenue
@@ -347,8 +338,8 @@ object Composite {
             AND l_shipdate >= TIMESTAMP '1996-01-01'
             AND l_shipdate < TIMESTAMP '1998-01-01'
           GROUP BY 1, 2, 3
-          ORDER BY 1, 2, 3""",
-    "q8_market_share" ->
+          ORDER BY 1, 2, 3"""),
+    KeySpec.batch("q8_market_share", q8MarketShare, shuffles = 2,
       s"""SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
             ${sqlSum4("CASE WHEN n2.n_name = 'NATION_3' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END")}
               / ${sqlSum4("l_extendedprice * (1 - l_discount)")} AS mkt_share,
@@ -366,5 +357,5 @@ object Composite {
             AND o_orderdate >= TIMESTAMP '1996-01-01'
             AND o_orderdate < TIMESTAMP '1998-01-01'
           GROUP BY 1
-          ORDER BY 1""")
+          ORDER BY 1"""))
 }

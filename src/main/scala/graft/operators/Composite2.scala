@@ -239,22 +239,14 @@ object Composite2 {
       .orderBy("c_nationkey")
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "q4_priority_exists" -> q4PriorityExists,
-    "q6_forecast_revenue" -> q6ForecastRevenue,
-    "q12_late_shipments" -> q12LateShipments,
-    "q13_customer_distribution" -> q13CustomerDistribution,
-    "q14_promo_revenue" -> q14PromoRevenue,
-    "q15_top_supplier" -> q15TopSupplier,
-    "q17_small_quantity" -> q17SmallQuantity,
-    "q19_disjunctive_predicates" -> q19DisjunctivePredicates,
-    "q22_idle_customers" -> q22IdleCustomers)
-
-  val oracles: Seq[(String, String)] = Seq(
-    // oracles keep the textbook correlated/subquery forms where the
-    // original had them — proving the decorrelated plan equivalent
-    // to the subquery semantics, not just to itself
-    "q4_priority_exists" ->
+  val specs: Seq[KeySpec] = Seq(
+    // TPC-H completion set: at audit scale AQE folds most dim joins to
+    // broadcasts, so the shuffle counts are the agg/sort exchanges plus
+    // the one fact-fact shuffle where the probe side is too big to fold
+    KeySpec.batch("q4_priority_exists", q4PriorityExists, shuffles = 2,
+      // oracles keep the textbook correlated/subquery forms where the
+      // original had them — proving the decorrelated plan equivalent
+      // to the subquery semantics, not just to itself
       """SELECT o_orderpriority, count(*) AS order_count
          FROM orders o
          WHERE o_orderdate >= TIMESTAMP '1997-01-01'
@@ -262,15 +254,15 @@ object Composite2 {
            AND EXISTS (SELECT 1 FROM lineitem l
                        WHERE l.l_orderkey = o.o_orderkey
                          AND l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY)
-         GROUP BY 1 ORDER BY 1""",
-    "q6_forecast_revenue" ->
+         GROUP BY 1 ORDER BY 1"""),
+    KeySpec.batch("q6_forecast_revenue", q6ForecastRevenue, shuffles = 1,
       s"""SELECT ${sqlSum4("l_extendedprice * l_discount")} AS revenue
           FROM lineitem
           WHERE l_shipdate >= TIMESTAMP '1997-01-01'
             AND l_shipdate < TIMESTAMP '1998-01-01'
             AND l_discount BETWEEN 0.05 AND 0.07
-            AND l_quantity < 24.0""",
-    "q12_late_shipments" ->
+            AND l_quantity < 24.0"""),
+    KeySpec.batch("q12_late_shipments", q12LateShipments, shuffles = 2,
       """SELECT ship_band,
            CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -285,8 +277,10 @@ object Composite2 {
                FROM lineitem JOIN orders ON l_orderkey = o_orderkey
                WHERE l_shipdate >= TIMESTAMP '1997-01-01'
                  AND l_shipdate < TIMESTAMP '1998-01-01')
-         GROUP BY 1 ORDER BY 1""",
-    "q13_customer_distribution" ->
+         GROUP BY 1 ORDER BY 1"""),
+    KeySpec.batch("q13_customer_distribution", q13CustomerDistribution,
+      // the left join keeps the outer exchange
+      shuffles = 3,
       """SELECT c_count, count(*) AS custdist
          FROM (SELECT c_custkey, count(o_orderkey) AS c_count
                FROM customer LEFT OUTER JOIN orders
@@ -294,15 +288,17 @@ object Composite2 {
                 AND o_orderpriority <> '1-URGENT'
                GROUP BY c_custkey)
          GROUP BY c_count
-         ORDER BY custdist DESC, c_count DESC""",
-    "q14_promo_revenue" ->
+         ORDER BY custdist DESC, c_count DESC"""),
+    KeySpec.batch("q14_promo_revenue", q14PromoRevenue, shuffles = 1,
       s"""SELECT 100.0 * (
             ${sqlSum4("CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END")}
             / ${sqlSum4("l_extendedprice * (1 - l_discount)")}) AS promo_revenue
           FROM lineitem JOIN part ON l_partkey = p_partkey
           WHERE l_shipdate >= TIMESTAMP '1997-09-01'
-            AND l_shipdate < TIMESTAMP '1997-10-01'""",
-    "q15_top_supplier" ->
+            AND l_shipdate < TIMESTAMP '1997-10-01'"""),
+    KeySpec.batch("q15_top_supplier", q15TopSupplier,
+      // the aggregate view feeds both the max and the tie filter
+      shuffles = 4,
       """WITH revenue AS (
            SELECT l_suppkey AS supplier_no,
              sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(30,4)))
@@ -314,15 +310,17 @@ object Composite2 {
          SELECT s_suppkey, s_name, CAST(rev_dec AS DOUBLE) AS total_revenue
          FROM supplier JOIN revenue ON s_suppkey = supplier_no
          WHERE rev_dec = (SELECT max(rev_dec) FROM revenue)
-         ORDER BY s_suppkey""",
-    "q17_small_quantity" ->
+         ORDER BY s_suppkey"""),
+    KeySpec.batch("q17_small_quantity", q17SmallQuantity,
+      // the decorrelated avg shares the part-filtered slice
+      shuffles = 3,
       s"""SELECT ${sqlSum4("l_extendedprice")} / 7.0 AS avg_yearly
           FROM lineitem JOIN part ON p_partkey = l_partkey
           WHERE p_brand = 'Brand#3' AND p_size < 10
             AND l_quantity < 0.2 *
               (SELECT ${sqlSum2("l2.l_quantity")} / count(l2.l_quantity)
-               FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""",
-    "q19_disjunctive_predicates" ->
+               FROM lineitem l2 WHERE l2.l_partkey = p_partkey)"""),
+    KeySpec.batch("q19_disjunctive_predicates", q19DisjunctivePredicates, shuffles = 1,
       s"""SELECT ${sqlSum4("l_extendedprice * (1 - l_discount)")} AS revenue
           FROM lineitem JOIN part ON p_partkey = l_partkey
           WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
@@ -330,8 +328,8 @@ object Composite2 {
              OR (p_brand = 'Brand#3' AND p_size BETWEEN 10 AND 30
                  AND l_quantity BETWEEN 10 AND 20)
              OR (p_brand = 'Brand#7' AND p_size BETWEEN 20 AND 50
-                 AND l_quantity BETWEEN 20 AND 30)""",
-    "q22_idle_customers" ->
+                 AND l_quantity BETWEEN 20 AND 30)"""),
+    KeySpec.batch("q22_idle_customers", q22IdleCustomers, shuffles = 3,
       s"""SELECT c_nationkey, count(*) AS numcust,
             ${sqlSum2("c_acctbal")} AS totacctbal
           FROM customer c
@@ -344,4 +342,7 @@ object Composite2 {
                             WHERE o.o_custkey = c.c_custkey
                               AND o.o_orderdate >= TIMESTAMP '2000-02-01')
           GROUP BY 1 ORDER BY 1""")
+      .crossJoinOk("compares every selected customer against the broadcast 1-row segment " +
+        "average with an INEQUALITY, so the cross join cannot fold to an equi-join the " +
+        "way q15's tie filter does — O(1) build side"))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables, Det}
+import graft.{KeySpec, QFn, Tables, Det}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -396,114 +396,14 @@ object Extras {
       .orderBy("o_orderstatus")
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "dq_reconcile" -> dqReconcile,
-    "agg_pivot" -> aggPivot,
-    "agg_sessionize" -> aggSessionize,
-    "agg_retention_cohort" -> aggRetentionCohort,
-    "etl_cdc_apply" -> etlCdcApply,
-    "win_funnel" -> winFunnel,
-    "etl_incremental_agg" -> etlIncrementalAgg,
-    "agg_approx_quantile" -> aggApproxQuantile,
-    "agg_quantile_twopass" -> aggQuantileTwopass,
-    "etl_scd2" -> etlScd2,
-    "dq_outliers" -> dqOutliers,
-    "subquery_family" -> subqueryFamily,
-    "win_percentiles" -> winPercentiles,
-    "fn_struct" -> fnStruct,
-    "sink_partitioned_scan" -> sinkPartitionedScan,
-    "dq_checks" -> dqChecks,
-    "etl_upsert" -> etlUpsert)
-
-  val oracles: Seq[(String, String)] = Seq(
-    // the portable columns + the literal-TRUE contract bit (see the
-    // aggApproxQuantile scaladoc: hash mismatch ⇔ GK bound violated)
-    "agg_approx_quantile" -> {
-      val rows = Seq(0.25, 0.5, 0.75).map(q =>
-        s"""SELECT CAST($q AS DOUBLE) AS q,
-             round(quantile_cont(l_extendedprice, $q), 6) AS exact_q,
-             count(*) AS n, true AS rank_ok FROM lineitem""")
-      rows.mkString("", "\n UNION ALL\n ", "\n ORDER BY q")
-    },
-    "agg_quantile_twopass" -> {
-      // quantile_cont shares the (n−1)·q linear-interpolation
-      // definition with the sharded two-pass; round(6) absorbs the
-      // final-interpolation ulp like agg_percentile_exact
-      val rows = Seq(0.1, 0.25, 0.5, 0.75, 0.9, 0.99).map(q =>
-        s"""SELECT CAST($q AS DOUBLE) AS q,
-             round(quantile_cont(l_extendedprice, $q), 6) AS exact_q,
-             count(*) AS n FROM lineitem""")
-      rows.mkString("", "\n UNION ALL\n ", "\n ORDER BY q")
-    },
-    "agg_pivot" -> {
-      val cols = Segments.map(seg =>
-        s"""CAST(sum(CASE WHEN c_mktsegment = '$seg' THEN CAST(c_acctbal AS DECIMAL(30,2)) END) AS DOUBLE) AS "$seg"""")
-        .mkString(",\n           ")
-      s"""SELECT n_name,
-           $cols
-         FROM customer JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY n_name ORDER BY n_name"""
-    },
-    "subquery_family" ->
-      """SELECT o_orderkey, o_totalprice
-         FROM orders o
-         WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders)
-           AND o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-           AND EXISTS (SELECT 1 FROM lineitem l
-                       WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)
-         ORDER BY o_orderkey""",
-    "win_percentiles" ->
-      """SELECT c_mktsegment, c_custkey, c_acctbal,
-           percent_rank() OVER w AS pr,
-           cume_dist() OVER w AS cd,
-           nth_value(c_custkey, 3) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-             AND UNBOUNDED FOLLOWING) AS third_cust
-         FROM customer
-         WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
-         ORDER BY c_mktsegment, c_custkey""",
-    "fn_struct" ->
-      """SELECT o_orderkey, o_orderstatus AS status, o_totalprice AS amount,
-           CAST(o_totalprice > 150000.0 AS INT) AS is_big,
-           CAST(length(o_orderpriority) AS INT) AS prio_len
-         FROM orders ORDER BY o_orderkey""",
-    "sink_partitioned_scan" ->
-      """SELECT event_type, count(*) AS n,
-           CAST(sum(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
-         FROM events WHERE event_type IN ('purchase', 'error')
-         GROUP BY event_type ORDER BY event_type""",
-    "dq_outliers" ->
-      s"""WITH st AS (
-            SELECT event_type,
-              ${sqlSum2("value")} AS sx,
-              ${sqlSum4("value * value")} AS sx2,
-              count(*) AS n
-            FROM events GROUP BY event_type),
-          zs AS (
-            SELECT e.event_id, e.event_type, e.value,
-              ${sqlFq("(e.value - st.sx / st.n) / sqrt((st.sx2 - st.sx * st.sx / st.n) / (st.n - 1))", 6)} AS z
-            FROM events e JOIN st ON e.event_type = st.event_type)
-          SELECT event_id, event_type, value, z FROM zs
-          WHERE abs(z) > 2.5 ORDER BY event_id""",
-    "dq_checks" ->
-      """SELECT * FROM (
-           SELECT 'orders_rows' AS "check", count(*) AS metric FROM orders
-           UNION ALL
-           SELECT 'orders_null_custkey', count(*) FROM orders WHERE o_custkey IS NULL
-           UNION ALL
-           SELECT 'orders_orphan_custkey', count(*) FROM orders
-             WHERE NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = o_custkey)
-           UNION ALL
-           SELECT 'orders_dup_pk', count(*) FROM (
-             SELECT o_orderkey FROM orders GROUP BY o_orderkey HAVING count(*) > 1)
-           UNION ALL
-           SELECT 'lineitem_discount_range', count(*) FROM lineitem
-             WHERE l_discount < 0.0 OR l_discount > 0.99
-           UNION ALL
-           SELECT 'lineitem_negative_tax', count(*) FROM lineitem WHERE l_tax < 0.0)
-         ORDER BY "check"""",
-    // same micro-unit quantization on both sides; CASE sums recast
-    // (DuckDB sum(int) is HUGEINT)
-    "dq_reconcile" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("dq_reconcile", dqReconcile,
+      // per-order line rollup + the orderkey-co-partitioned header join
+      // + status groupBy (AQE folds the 3-row presentation sort;
+      // measured 3, one exchange of headroom for AQE broadcast flips)
+      shuffles = 4,
+      // same micro-unit quantization on both sides; CASE sums recast
+      // (DuckDB sum(int) is HUGEINT)
       """WITH li AS (
            SELECT l_orderkey,
              CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount) *
@@ -525,8 +425,49 @@ object Extras {
              THEN abs(tot_micro - calc_micro) END) AS BIGINT)
              AS max_abs_diff_micro
          FROM o LEFT JOIN li ON o_orderkey = l_orderkey
-         GROUP BY 1 ORDER BY 1""",
-    "etl_cdc_apply" ->
+         GROUP BY 1 ORDER BY 1"""),
+    KeySpec.batch("agg_pivot", aggPivot, shuffles = 3, {
+      val cols = Segments.map(seg =>
+        s"""CAST(sum(CASE WHEN c_mktsegment = '$seg' THEN CAST(c_acctbal AS DECIMAL(30,2)) END) AS DOUBLE) AS "$seg"""")
+        .mkString(",\n           ")
+      s"""SELECT n_name,
+           $cols
+         FROM customer JOIN nation ON c_nationkey = n_nationkey
+         GROUP BY n_name ORDER BY n_name"""
+    }),
+    KeySpec.batch("agg_sessionize", aggSessionize, shuffles = 2,
+      """WITH t AS (
+           SELECT user_id, ts, event_id,
+             lag(epoch_us(CAST(ts AS TIMESTAMP)))
+               OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
+           FROM events),
+         marked AS (
+           SELECT user_id, ts, event_id,
+             CASE WHEN prev_us IS NULL
+                    OR epoch_us(CAST(ts AS TIMESTAMP)) - prev_us > 1800000000
+                  THEN 1 ELSE 0 END AS new_sess
+           FROM t),
+         sess AS (
+           SELECT user_id, ts,
+             CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess_id
+           FROM marked)
+         SELECT user_id, sess_id, count(*) AS n_events,
+           min(ts) AS sess_start, max(ts) AS sess_end
+         FROM sess GROUP BY user_id, sess_id ORDER BY user_id, sess_id"""),
+    KeySpec.batch("agg_retention_cohort", aggRetentionCohort, shuffles = 5,
+      """WITH e AS (
+           SELECT user_id, date_trunc('week', CAST(ts AS TIMESTAMP)) AS wk
+           FROM events),
+         f AS (SELECT user_id, min(wk) AS cohort FROM e GROUP BY user_id),
+         a AS (SELECT DISTINCT user_id, wk FROM e)
+         SELECT cohort,
+           CAST(date_diff('day', CAST(cohort AS DATE), CAST(wk AS DATE)) // 7 AS INT)
+             AS week_offset,
+           count(DISTINCT a.user_id) AS n_users
+         FROM a JOIN f USING (user_id)
+         GROUP BY 1, 2 ORDER BY 1, 2"""),
+    KeySpec.batch("etl_cdc_apply", etlCdcApply, shuffles = 2,
       """WITH c AS (
            SELECT user_id, ts, event_id, value,
              CASE WHEN event_type = 'signup' THEN 'I'
@@ -536,8 +477,9 @@ object Extras {
                ORDER BY ts DESC, event_id DESC) AS rn
            FROM events)
          SELECT user_id, op AS last_op, ts AS last_ts, value AS last_value
-         FROM c WHERE rn = 1 AND op <> 'D' ORDER BY user_id""",
-    "win_funnel" ->
+         FROM c WHERE rn = 1 AND op <> 'D' ORDER BY user_id""")
+      .constructionJobsOk("applies the changelog to a staged table"),
+    KeySpec.batch("win_funnel", winFunnel, shuffles = 7,
       """WITH t1 AS (
            SELECT user_id, min(ts) AS t1 FROM events
            WHERE event_type = 'view' GROUP BY user_id),
@@ -557,46 +499,40 @@ object Extras {
            SELECT '2_click', count(*) FROM t2
            UNION ALL
            SELECT '3_purchase', count(*) FROM t3)
-         ORDER BY stage""",
-    "etl_incremental_agg" ->
+         ORDER BY stage"""),
+    KeySpec.batch("etl_incremental_agg", etlIncrementalAgg, shuffles = 4,
       """SELECT event_type,
            count(DISTINCT CAST(ts AS DATE)) AS n_partials,
            count(*) AS n,
            CAST(sum(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "agg_retention_cohort" ->
-      """WITH e AS (
-           SELECT user_id, date_trunc('week', CAST(ts AS TIMESTAMP)) AS wk
-           FROM events),
-         f AS (SELECT user_id, min(wk) AS cohort FROM e GROUP BY user_id),
-         a AS (SELECT DISTINCT user_id, wk FROM e)
-         SELECT cohort,
-           CAST(date_diff('day', CAST(cohort AS DATE), CAST(wk AS DATE)) // 7 AS INT)
-             AS week_offset,
-           count(DISTINCT a.user_id) AS n_users
-         FROM a JOIN f USING (user_id)
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "agg_sessionize" ->
-      """WITH t AS (
-           SELECT user_id, ts, event_id,
-             lag(epoch_us(CAST(ts AS TIMESTAMP)))
-               OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM events),
-         marked AS (
-           SELECT user_id, ts, event_id,
-             CASE WHEN prev_us IS NULL
-                    OR epoch_us(CAST(ts AS TIMESTAMP)) - prev_us > 1800000000
-                  THEN 1 ELSE 0 END AS new_sess
-           FROM t),
-         sess AS (
-           SELECT user_id, ts,
-             CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess_id
-           FROM marked)
-         SELECT user_id, sess_id, count(*) AS n_events,
-           min(ts) AS sess_start, max(ts) AS sess_end
-         FROM sess GROUP BY user_id, sess_id ORDER BY user_id, sess_id""",
-    "etl_scd2" ->
+         FROM events GROUP BY event_type ORDER BY event_type""")
+      .constructionJobsOk("maintains a staged running-aggregate table"),
+    KeySpec.batch("agg_approx_quantile", aggApproxQuantile,
+      // +2 since r9: the oracle'd rank_ok contract column adds a
+      // 3-group rank-count aggregation (grouped count + its exchange)
+      // on top of the sketch agg and the exact-twin two-pass
+      shuffles = 10, {
+      // the portable columns + the literal-TRUE contract bit (see the
+      // aggApproxQuantile scaladoc: hash mismatch ⇔ GK bound violated)
+      val rows = Seq(0.25, 0.5, 0.75).map(q =>
+        s"""SELECT CAST($q AS DOUBLE) AS q,
+             round(quantile_cont(l_extendedprice, $q), 6) AS exact_q,
+             count(*) AS n, true AS rank_ok FROM lineitem""")
+      rows.mkString("", "\n UNION ALL\n ", "\n ORDER BY q")
+    })
+      .crossJoinOk("agg_stats' global exactQuantiles path — O(1) build sides"),
+    KeySpec.batch("agg_quantile_twopass", aggQuantileTwopass, shuffles = 8, {
+      // quantile_cont shares the (n−1)·q linear-interpolation
+      // definition with the sharded two-pass; round(6) absorbs the
+      // final-interpolation ulp like agg_percentile_exact
+      val rows = Seq(0.1, 0.25, 0.5, 0.75, 0.9, 0.99).map(q =>
+        s"""SELECT CAST($q AS DOUBLE) AS q,
+             round(quantile_cont(l_extendedprice, $q), 6) AS exact_q,
+             count(*) AS n FROM lineitem""")
+      rows.mkString("", "\n UNION ALL\n ", "\n ORDER BY q")
+    })
+      .crossJoinOk("agg_stats' global exactQuantiles path — O(1) build sides"),
+    KeySpec.batch("etl_scd2", etlScd2, shuffles = 2,
       """WITH marked AS (
            SELECT user_id, ts, event_id, event_type,
              lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
@@ -607,8 +543,66 @@ object Extras {
          SELECT user_id, event_type, ts AS valid_from,
            lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
            lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL AS is_current
-         FROM changes ORDER BY user_id, valid_from""",
-    "etl_upsert" ->
+         FROM changes ORDER BY user_id, valid_from"""),
+    KeySpec.batch("dq_outliers", dqOutliers, shuffles = 2,
+      s"""WITH st AS (
+            SELECT event_type,
+              ${sqlSum2("value")} AS sx,
+              ${sqlSum4("value * value")} AS sx2,
+              count(*) AS n
+            FROM events GROUP BY event_type),
+          zs AS (
+            SELECT e.event_id, e.event_type, e.value,
+              ${sqlFq("(e.value - st.sx / st.n) / sqrt((st.sx2 - st.sx * st.sx / st.n) / (st.n - 1))", 6)} AS z
+            FROM events e JOIN st ON e.event_type = st.event_type)
+          SELECT event_id, event_type, value, z FROM zs
+          WHERE abs(z) > 2.5 ORDER BY event_id"""),
+    KeySpec.batch("subquery_family", subqueryFamily, shuffles = 2,
+      """SELECT o_orderkey, o_totalprice
+         FROM orders o
+         WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders)
+           AND o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
+           AND EXISTS (SELECT 1 FROM lineitem l
+                       WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)
+         ORDER BY o_orderkey"""),
+    KeySpec.batch("win_percentiles", winPercentiles, shuffles = 2,
+      """SELECT c_mktsegment, c_custkey, c_acctbal,
+           percent_rank() OVER w AS pr,
+           cume_dist() OVER w AS cd,
+           nth_value(c_custkey, 3) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
+             AND UNBOUNDED FOLLOWING) AS third_cust
+         FROM customer
+         WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
+         ORDER BY c_mktsegment, c_custkey"""),
+    KeySpec.batch("fn_struct", fnStruct, shuffles = 1,
+      """SELECT o_orderkey, o_orderstatus AS status, o_totalprice AS amount,
+           CAST(o_totalprice > 150000.0 AS INT) AS is_big,
+           CAST(length(o_orderpriority) AS INT) AS prio_len
+         FROM orders ORDER BY o_orderkey"""),
+    KeySpec.batch("sink_partitioned_scan", sinkPartitionedScan, shuffles = 2,
+      """SELECT event_type, count(*) AS n,
+           CAST(sum(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
+         FROM events WHERE event_type IN ('purchase', 'error')
+         GROUP BY event_type ORDER BY event_type""")
+      .constructionJobsOk("writes the partitioned layout it scans"),
+    KeySpec.batch("dq_checks", dqChecks, shuffles = 7,
+      """SELECT * FROM (
+           SELECT 'orders_rows' AS "check", count(*) AS metric FROM orders
+           UNION ALL
+           SELECT 'orders_null_custkey', count(*) FROM orders WHERE o_custkey IS NULL
+           UNION ALL
+           SELECT 'orders_orphan_custkey', count(*) FROM orders
+             WHERE NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = o_custkey)
+           UNION ALL
+           SELECT 'orders_dup_pk', count(*) FROM (
+             SELECT o_orderkey FROM orders GROUP BY o_orderkey HAVING count(*) > 1)
+           UNION ALL
+           SELECT 'lineitem_discount_range', count(*) FROM lineitem
+             WHERE l_discount < 0.0 OR l_discount > 0.99
+           UNION ALL
+           SELECT 'lineitem_negative_tax', count(*) FROM lineitem WHERE l_tax < 0.0)
+         ORDER BY "check""""),
+    KeySpec.batch("etl_upsert", etlUpsert, shuffles = 3,
       """WITH updates AS (
            SELECT c_custkey AS u_custkey, c_name || '_v2' AS u_name,
                   c_acctbal + 100.0 AS u_acctbal
@@ -621,4 +615,5 @@ object Extras {
                 coalesce(u_acctbal, c_acctbal) AS acctbal
          FROM customer FULL OUTER JOIN updates ON c_custkey = u_custkey
          ORDER BY custkey""")
+      .constructionJobsOk("merges into a staged target table"))
 }

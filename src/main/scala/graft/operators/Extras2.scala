@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables, Det}
+import graft.{KeySpec, QFn, Tables, Det}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -717,45 +717,16 @@ object Extras2 {
           6).as("welch_dof"))
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "agg_ttest_welch" -> aggTtestWelch,
-    "etl_dynamic_partition_overwrite" -> etlDynamicPartitionOverwrite,
-    "etl_gdpr_delete" -> etlGdprDelete,
-    "agg_modern_fillins" -> aggModernFillins,
-    "join_bloom_prefilter" -> joinBloomPrefilter,
-    "agg_hll_sketch" -> aggHllSketch,
-    "scan_csv_malformed" -> scanCsvMalformed,
-    "etl_compaction" -> etlCompaction,
-    "fn_collation" -> fnCollation,
-    "join_null_safe" -> joinNullSafe,
-    "join_dpp" -> joinDpp,
-    "join_shuffle_hash" -> joinShuffleHash,
-    "join_skew_aqe" -> joinSkewAqe,
-    "etl_zorder" -> etlZorder,
-    "scan_schema_evolution" -> scanSchemaEvolution,
-    "join_range_bucketed" -> joinRangeBucketed,
-    "join_bucketed_colocated" -> joinBucketedColocated,
-    "join_multiway" -> joinMultiway,
-    "fn_bitwise_hash" -> fnBitwiseHash,
-    "agg_percentile_exact" -> aggPercentileExact,
-    "agg_salted_skew" -> aggSaltedSkew,
-    "set_except_intersect" -> setExceptIntersect,
-    "unpivot_melt" -> unpivotMelt,
-    "agg_string_agg" -> aggStringAgg)
+  /** Oracle of `etl_compaction`, `stream_snapshot_sink`, `stream_file_source`, `stream_incremental_resume` and `stream_dedup`. */
+  val eventTypeTotalsSql: String =
+    """SELECT event_type, count(*) AS n,
+           CAST(sum(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
+         FROM events GROUP BY event_type ORDER BY event_type"""
 
-  val oracles: Seq[(String, String)] = Seq(
-    // contract oracle (see aggHllSketch scaladoc): literal TRUE for
-    // the two error-bound bits (direct_err_ok / merged_err_ok — union
-    // distributivity is deliberately NOT the contract; it breaks once
-    // per-day sketches densify) — hash mismatch ⇔ the DataSketches
-    // surface broke its error contract
-    "agg_hll_sketch" ->
-      """SELECT count(DISTINCT user_id) AS exact_users,
-           true AS direct_err_ok, true AS merged_err_ok
-         FROM events""",
-    // identical moment extraction (exact decimal sums) and the same
-    // double-arithmetic t / Welch-dof formulas, term for term
-    "agg_ttest_welch" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("agg_ttest_welch", aggTtestWelch, shuffles = 1,
+      // identical moment extraction (exact decimal sums) and the same
+      // double-arithmetic t / Welch-dof formulas, term for term
       s"""WITH m AS (SELECT
            CAST(count(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 END) AS DOUBLE) AS n1,
            CAST(sum(CAST(CASE WHEN c_mktsegment = 'BUILDING' THEN c_acctbal END AS DECIMAL(30,2))) AS DOUBLE) AS s1,
@@ -772,16 +743,23 @@ object Extras2 {
            ${sqlFq("s1 / n1", 6)} AS mean1, ${sqlFq("s2 / n2", 6)} AS mean2,
            ${sqlFq("(s1 / n1 - s2 / n2) / sqrt(se2)", 6)} AS t_stat,
            ${sqlFq("se2 * se2 / ((v1 / n1) * (v1 / n1) / (n1 - 1) + (v2 / n2) * (v2 / n2) / (n2 - 1))", 6)} AS welch_dof
-         FROM w""",
-    "etl_dynamic_partition_overwrite" ->
+         FROM w"""),
+    KeySpec.batch("etl_dynamic_partition_overwrite", etlDynamicPartitionOverwrite, shuffles = 2,
       s"""SELECT event_type, count(*) AS n, ${sqlSum2("value")} AS sum_value
           FROM (
             SELECT event_type, value FROM events WHERE event_type <> 'purchase'
             UNION ALL
             SELECT event_type, value FROM events
             WHERE event_type = 'purchase' AND value > 10)
-          GROUP BY event_type ORDER BY event_type""",
-    "agg_modern_fillins" ->
+          GROUP BY event_type ORDER BY event_type""")
+      .constructionJobsOk("overwrites hit partitions of a staged layout"),
+    KeySpec.batch("etl_gdpr_delete", etlGdprDelete, shuffles = 3,
+      s"""SELECT event_type, count(*) AS n, ${sqlSum2("value")} AS sum_value,
+            count(DISTINCT user_id) AS n_users
+          FROM events WHERE user_id NOT IN (1, 7, 42, 99)
+          GROUP BY event_type ORDER BY event_type""")
+      .constructionJobsOk("rewrites the hit buckets of the staged layout"),
+    KeySpec.batch("agg_modern_fillins", aggModernFillins, shuffles = 2,
       """WITH am AS (
            SELECT event_type, event_id AS argmax_id,
              row_number() OVER (PARTITION BY event_type
@@ -796,34 +774,40 @@ object Extras2 {
          FROM events e
          JOIN (SELECT event_type, argmax_id FROM am WHERE rn = 1) am
            USING (event_type)
-         GROUP BY e.event_type ORDER BY e.event_type""",
-    "etl_gdpr_delete" ->
-      s"""SELECT event_type, count(*) AS n, ${sqlSum2("value")} AS sum_value,
-            count(DISTINCT user_id) AS n_users
-          FROM events WHERE user_id NOT IN (1, 7, 42, 99)
-          GROUP BY event_type ORDER BY event_type""",
-    "join_bloom_prefilter" ->
+         GROUP BY e.event_type ORDER BY e.event_type"""),
+    KeySpec.batch("join_bloom_prefilter", joinBloomPrefilter, shuffles = 2,
       s"""SELECT o_orderpriority, count(*) AS n,
             ${sqlSum2("o_totalprice")} AS sum_price
           FROM orders JOIN customer ON o_custkey = c_custkey
           WHERE c_mktsegment = 'BUILDING'
-          GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "scan_csv_malformed" ->
+          GROUP BY o_orderpriority ORDER BY o_orderpriority""")
+      .constructionJobsOk("builds the bounded bloom filter from the dim"),
+    KeySpec.batch("agg_hll_sketch", aggHllSketch, shuffles = 4,
+      // contract oracle (see aggHllSketch scaladoc): literal TRUE for
+      // the two error-bound bits (direct_err_ok / merged_err_ok — union
+      // distributivity is deliberately NOT the contract; it breaks once
+      // per-day sketches densify) — hash mismatch ⇔ the DataSketches
+      // surface broke its error contract
+      """SELECT count(DISTINCT user_id) AS exact_users,
+           true AS direct_err_ok, true AS merged_err_ok
+         FROM events""")
+      .crossJoinOk("crosses 1-row aggregates — O(1) both sides"),
+    KeySpec.batch("scan_csv_malformed", scanCsvMalformed, shuffles = 2,
       """SELECT count(*) + 3 AS n_permissive,
            CAST(3 AS BIGINT) AS n_corrupt,
            count(*) AS n_dropmalformed
-         FROM orders""",
-    "etl_compaction" ->
-      """SELECT event_type, count(*) AS n,
-           CAST(sum(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "fn_collation" ->
+         FROM orders""")
+      .crossJoinOk("crosses 1-row aggregates — O(1) both sides")
+      .constructionJobsOk("stages the malformed CSV it then reads"),
+    KeySpec.batch("etl_compaction", etlCompaction, shuffles = 2, eventTypeTotalsSql)
+      .constructionJobsOk("writes the small-file layout it compacts"),
+    KeySpec.batch("fn_collation", fnCollation, shuffles = 1,
       """SELECT p_partkey,
            lower(upper(p_type)) = lower(p_type) AS ci_eq,
            upper(p_type) = p_type AS bin_eq,
            starts_with(lower(upper(p_name)), lower('std')) AS ci_prefix
-         FROM part ORDER BY p_partkey""",
-    "join_null_safe" ->
+         FROM part ORDER BY p_partkey"""),
+    KeySpec.batch("join_null_safe", joinNullSafe, shuffles = 2,
       """WITH p AS (
            SELECT p_partkey, nullif(p_size % 7, 0) AS k FROM part),
          dim AS (
@@ -832,8 +816,8 @@ object Extras2 {
          SELECT d_key, count(*) AS n_matches,
            CAST(sum(CASE WHEN k IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_matches
          FROM p JOIN dim ON k IS NOT DISTINCT FROM k2
-         GROUP BY d_key ORDER BY d_key""",
-    "join_dpp" ->
+         GROUP BY d_key ORDER BY d_key"""),
+    KeySpec.batch("join_dpp", joinDpp, shuffles = 3,
       """WITH dim AS (
            SELECT event_type AS dim_type, count(*) AS type_n
            FROM events GROUP BY event_type)
@@ -841,13 +825,22 @@ object Extras2 {
            CAST(sum(CAST(e.value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
          FROM events e JOIN dim ON e.event_type = dim.dim_type
          WHERE dim.dim_type IN ('purchase', 'error')
-         GROUP BY e.event_type ORDER BY e.event_type""",
-    "join_shuffle_hash" ->
+         GROUP BY e.event_type ORDER BY e.event_type""")
+      .constructionJobsOk("writes the partitioned fact layout the DPP scan prunes")
+      .pushdownRequired("the key exists to prove the dynamic partition filter reaches " +
+        "the fact scan"),
+    KeySpec.batch("join_shuffle_hash", joinShuffleHash, shuffles = 4,
       """SELECT o_orderstatus, count(*) AS n,
            CAST(sum(CAST(l_quantity AS DECIMAL(30,2))) AS DOUBLE) AS sum_qty
          FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-         GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-    "join_skew_aqe" ->
+         GROUP BY o_orderstatus ORDER BY o_orderstatus"""),
+    KeySpec.batch("join_skew_aqe", joinSkewAqe,
+      // r15: the audited plan is now the CAPTURED construction-time
+      // skew join (see constructionPlan) — broadcast is disabled inside
+      // its conf scope, so the dim side shuffles too: fact repartition +
+      // both SMJ sides + final sort = 4 (the old 3 graded the lazy
+      // session-conf rebuild, where the dim folded to a broadcast)
+      shuffles = 4,
       s"""WITH f AS (
             SELECT CASE WHEN l_orderkey % 100 < 90 THEN 0
                         ELSE l_orderkey % 100 END AS k, l_quantity
@@ -859,8 +852,9 @@ object Extras2 {
           SELECT k, count(*) AS n, ${sqlSum2("l_quantity")} AS sum_qty,
             min(o_n) AS o_n
           FROM f JOIN dm USING (k)
-          GROUP BY k ORDER BY k""",
-    "etl_zorder" ->
+          GROUP BY k ORDER BY k""")
+      .constructionJobsOk("stages the skewed fact layout the AQE split needs"),
+    KeySpec.batch("etl_zorder", etlZorder, shuffles = 2,
       """WITH b AS (
            SELECT l_orderkey, l_partkey,
              l_orderkey & 65535 AS a, l_partkey & 65535 AS bb FROM lineitem),
@@ -876,75 +870,27 @@ object Extras2 {
          SELECT z_range, count(*) AS n,
            min(l_orderkey) AS min_ok, max(l_orderkey) AS max_ok,
            min(l_partkey) AS min_pk, max(l_partkey) AS max_pk
-         FROM z GROUP BY z_range ORDER BY z_range""",
-    "scan_schema_evolution" ->
+         FROM z GROUP BY z_range ORDER BY z_range""")
+      .constructionJobsOk("writes the interleaved layout it range-scans"),
+    KeySpec.batch("scan_schema_evolution", scanSchemaEvolution, shuffles = 2,
       """SELECT event_type, count(*) AS n,
            count(CASE WHEN CAST(ts AS DATE) >= DATE '2024-01-15' THEN 1 END) AS n_with_value,
            CAST(sum(CASE WHEN CAST(ts AS DATE) >= DATE '2024-01-15'
                          THEN CAST(value AS DECIMAL(30,2))
                          ELSE CAST(0.0 AS DECIMAL(30,2)) END) AS DOUBLE) AS sum_value
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    // oracle = the straightforward range join; results must be
-    // identical, which proves the bucketing rewrite is lossless
-    "join_range_bucketed" ->
-      s"""SELECT o_orderpriority, count(*) AS n, ${sqlSum2("l_quantity")} AS sum_qty
-          FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-            AND l_shipdate >= o_orderdate AND l_shipdate < o_orderdate + INTERVAL 30 DAY
-          GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "fn_bitwise_hash" ->
-      """SELECT p_partkey,
-           p_partkey & 255 AS band,
-           p_partkey | 4096 AS bor,
-           xor(p_partkey, 21) AS bxor,
-           p_partkey << 3 AS shl,
-           p_partkey >> 2 AS shr,
-           CAST(bit_count(p_partkey) AS INT) AS popcnt,
-           md5(p_name) AS md5_hex,
-           sha256(p_brand) AS sha256_hex,
-           128 AS sha512_len
-         FROM part ORDER BY p_partkey""",
-    "agg_salted_skew" ->
-      s"""SELECT l_returnflag, count(*) AS n, ${sqlSum2("l_quantity")} AS sum_qty
-          FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "agg_percentile_exact" ->
-      """SELECT l_returnflag,
-           round(quantile_cont(l_quantity, 0.25), 6) AS q25,
-           round(quantile_cont(l_quantity, 0.5), 6) AS q50,
-           round(quantile_cont(l_quantity, 0.75), 6) AS q75,
-           round(quantile_cont(l_quantity, 0.9), 6) AS q90,
-           count(*) AS n
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "join_bucketed_colocated" ->
+         FROM events GROUP BY event_type ORDER BY event_type""")
+      .constructionJobsOk("stages two schema generations, then " +
+        "mergeSchema-reads them (footer inference is the semantics here)"),
+    KeySpec.batch("join_range_bucketed", joinRangeBucketed, shuffles = 5,
+      // oracle = the straightforward range join; results must be
+      // identical, which proves the bucketing rewrite is lossless
+      Relational.intervalJoinSql),
+    KeySpec.batch("join_bucketed_colocated", joinBucketedColocated, shuffles = 2,
       s"""SELECT o_orderstatus, count(*) AS n, ${sqlSum2("l_quantity")} AS sum_qty
           FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-          GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-    "set_except_intersect" ->
-      """SELECT o_custkey, 'final_only' AS tag FROM (
-           SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-           EXCEPT
-           SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
-         UNION ALL
-         SELECT o_custkey, 'both' AS tag FROM (
-           SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-           INTERSECT
-           SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
-         ORDER BY tag, o_custkey""",
-    "unpivot_melt" ->
-      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure, l_quantity AS val FROM lineitem
-         UNION ALL
-         SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice FROM lineitem
-         UNION ALL
-         SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
-         UNION ALL
-         SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem
-         ORDER BY l_orderkey, l_linenumber, measure""",
-    "agg_string_agg" ->
-      """SELECT c_mktsegment,
-           string_agg(c_name, ',' ORDER BY c_name) AS names,
-           count(*) AS n
-         FROM customer WHERE c_custkey <= 50
-         GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "join_multiway" ->
+          GROUP BY o_orderstatus ORDER BY o_orderstatus""")
+      .constructionJobsOk("saves both bucketed tables before the join"),
+    KeySpec.batch("join_multiway", joinMultiway, shuffles = 3,
       s"""SELECT n_name, ${sqlSum4("l_extendedprice * (1 - l_discount)")} AS revenue
           FROM region
           JOIN nation ON n_regionkey = r_regionkey
@@ -955,5 +901,54 @@ object Extras2 {
           WHERE r_name = 'ASIA'
             AND o_orderdate >= TIMESTAMP '1996-01-01'
             AND o_orderdate < TIMESTAMP '1997-01-01'
-          GROUP BY n_name ORDER BY revenue DESC, n_name""")
+          GROUP BY n_name ORDER BY revenue DESC, n_name"""),
+    KeySpec.batch("fn_bitwise_hash", fnBitwiseHash, shuffles = 1,
+      """SELECT p_partkey,
+           p_partkey & 255 AS band,
+           p_partkey | 4096 AS bor,
+           xor(p_partkey, 21) AS bxor,
+           p_partkey << 3 AS shl,
+           p_partkey >> 2 AS shr,
+           CAST(bit_count(p_partkey) AS INT) AS popcnt,
+           md5(p_name) AS md5_hex,
+           sha256(p_brand) AS sha256_hex,
+           128 AS sha512_len
+         FROM part ORDER BY p_partkey"""),
+    KeySpec.batch("agg_percentile_exact", aggPercentileExact, shuffles = 9,
+      """SELECT l_returnflag,
+           round(quantile_cont(l_quantity, 0.25), 6) AS q25,
+           round(quantile_cont(l_quantity, 0.5), 6) AS q50,
+           round(quantile_cont(l_quantity, 0.75), 6) AS q75,
+           round(quantile_cont(l_quantity, 0.9), 6) AS q90,
+           count(*) AS n
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
+    KeySpec.batch("agg_salted_skew", aggSaltedSkew, shuffles = 3,
+      s"""SELECT l_returnflag, count(*) AS n, ${sqlSum2("l_quantity")} AS sum_qty
+          FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
+    KeySpec.batch("set_except_intersect", setExceptIntersect, shuffles = 3,
+      """SELECT o_custkey, 'final_only' AS tag FROM (
+           SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
+           EXCEPT
+           SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
+         UNION ALL
+         SELECT o_custkey, 'both' AS tag FROM (
+           SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
+           INTERSECT
+           SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
+         ORDER BY tag, o_custkey"""),
+    KeySpec.batch("unpivot_melt", unpivotMelt, shuffles = 1,
+      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure, l_quantity AS val FROM lineitem
+         UNION ALL
+         SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice FROM lineitem
+         UNION ALL
+         SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
+         UNION ALL
+         SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem
+         ORDER BY l_orderkey, l_linenumber, measure"""),
+    KeySpec.batch("agg_string_agg", aggStringAgg, shuffles = 2,
+      """SELECT c_mktsegment,
+           string_agg(c_name, ',' ORDER BY c_name) AS names,
+           count(*) AS n
+         FROM customer WHERE c_custkey <= 50
+         GROUP BY c_mktsegment ORDER BY c_mktsegment"""))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables}
+import graft.{KeySpec, QFn, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -265,26 +265,11 @@ object Functions {
       .orderBy("p_partkey")
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "fn_url" -> fnUrl,
-    "fn_xml" -> fnXml,
-    "fn_mask" -> fnMask,
-    "fn_try_safe" -> fnTrySafe,
-    "fn_variant" -> fnVariant,
-    "fn_string" -> fnString,
-    "fn_date" -> fnDate,
-    "fn_ts_arith" -> fnTsArith,
-    "fn_math" -> fnMath,
-    "fn_cond" -> fnCond,
-    "fn_array" -> fnArray,
-    "fn_map" -> fnMap,
-    "fn_json" -> fnJson)
-
-  val oracles: Seq[(String, String)] = Seq(
-    // expected URL components reconstructed from the source columns,
-    // no parser involved: host drops the port, the path keeps the
-    // percent-encoded brand ('#' -> %23), the param round-trips
-    "fn_url" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("fn_url", fnUrl, shuffles = 1,
+      // expected URL components reconstructed from the source columns,
+      // no parser involved: host drops the port, the path keeps the
+      // percent-encoded brand ('#' -> %23), the param round-trips
       """SELECT p_partkey,
            'h' || (p_partkey % 50) || '.example.com' AS host,
            '/catalog/' || replace(p_brand, '#', '%23') || '/item' AS path,
@@ -292,15 +277,12 @@ object Functions {
            p_size::VARCHAR AS size_param,
            'frag' AS frag,
            p_partkey::VARCHAR AS key_param
-         FROM part ORDER BY p_partkey""",
-    "fn_try_safe" ->
-      """SELECT l_orderkey, l_linenumber,
-           CAST(NULL AS DOUBLE) AS div0,
-           l_extendedprice / l_quantity AS divq,
-           CASE WHEN l_orderkey > 0 THEN CAST(NULL AS BIGINT)
-                ELSE 9223372036854775807 + l_orderkey END AS add_ovf
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
-    "fn_mask" ->
+         FROM part ORDER BY p_partkey"""),
+    KeySpec.batch("fn_xml", fnXml, shuffles = 1,
+      """SELECT p_partkey, p_name AS name, CAST(p_size AS INT) AS size,
+           p_retailprice AS price
+         FROM part ORDER BY p_partkey"""),
+    KeySpec.batch("fn_mask", fnMask, shuffles = 1,
       """SELECT p_partkey,
            array_to_string(list_transform(regexp_extract_all(p_brand, '.'),
              c -> CASE WHEN c >= 'A' AND c <= 'Z' THEN 'X'
@@ -312,12 +294,21 @@ object Functions {
                        WHEN c >= 'a' AND c <= 'z' THEN 'l'
                        WHEN c >= '0' AND c <= '9' THEN 'd' ELSE 'o' END), '')
              AS m_custom
-         FROM part ORDER BY p_partkey""",
-    "fn_xml" ->
-      """SELECT p_partkey, p_name AS name, CAST(p_size AS INT) AS size,
-           p_retailprice AS price
-         FROM part ORDER BY p_partkey""",
-    "fn_string" ->
+         FROM part ORDER BY p_partkey"""),
+    KeySpec.batch("fn_try_safe", fnTrySafe, shuffles = 1,
+      """SELECT l_orderkey, l_linenumber,
+           CAST(NULL AS DOUBLE) AS div0,
+           l_extendedprice / l_quantity AS divq,
+           CASE WHEN l_orderkey > 0 THEN CAST(NULL AS BIGINT)
+                ELSE 9223372036854775807 + l_orderkey END AS add_ovf
+         FROM lineitem ORDER BY l_orderkey, l_linenumber"""),
+    KeySpec.batch("fn_variant", fnVariant, shuffles = 1,
+      """SELECT event_id,
+           CAST(props->>'$.k' AS INT) AS k_var,
+           CAST(props->>'$.k' AS BIGINT) * 2 AS k_var2,
+           props->>'$.missing' AS k_missing
+         FROM events ORDER BY event_id"""),
+    KeySpec.batch("fn_string", fnString, shuffles = 1,
       """SELECT p_partkey,
            upper(p_name) AS up, lower(p_brand) AS lo,
            substr(p_name, 1, 8) AS sub8,
@@ -331,8 +322,8 @@ object Functions {
            CAST(levenshtein(p_brand, p_type) AS INT) AS lev,
            trim(lpad(p_brand, 10, ' ')) AS trimmed,
            reverse(p_brand) AS rev
-         FROM part ORDER BY p_partkey""",
-    "fn_date" ->
+         FROM part ORDER BY p_partkey"""),
+    KeySpec.batch("fn_date", fnDate, shuffles = 1,
       """SELECT o_orderkey,
            date_trunc('month', o_orderdate) AS month_start,
            CAST(year(o_orderdate) AS INT) AS yr,
@@ -349,8 +340,8 @@ object Functions {
            last_day(CAST(o_orderdate AS DATE)) AS eom,
            CAST(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH AS DATE) AS plus3mo,
            CAST((year(o_orderdate) - 1995) * 12 + (month(o_orderdate) - 1) AS DOUBLE) AS months_since
-         FROM orders ORDER BY o_orderkey""",
-    "fn_ts_arith" ->
+         FROM orders ORDER BY o_orderkey"""),
+    KeySpec.batch("fn_ts_arith", fnTsArith, shuffles = 1,
       """SELECT event_id,
            CAST(ts AS TIMESTAMP) + INTERVAL 2 HOUR AS plus2h,
            CAST(ts AS TIMESTAMP) - INTERVAL 30 MINUTE AS minus30m,
@@ -358,8 +349,8 @@ object Functions {
            CAST(floor(epoch(CAST(ts AS TIMESTAMP)) - epoch(TIMESTAMP '2024-01-01 00:00:00')) AS BIGINT) AS secs_since,
            strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d %H') AS fmt_hour,
            epoch_ms(CAST(ts AS TIMESTAMP)) AS epoch_ms
-         FROM events ORDER BY event_id""",
-    "fn_math" ->
+         FROM events ORDER BY event_id"""),
+    KeySpec.batch("fn_math", fnMath, shuffles = 1,
       """SELECT p_partkey,
            CAST(round(CAST(p_retailprice AS DECIMAL(30,2)), 1) AS DOUBLE) AS r1,
            CAST(ceil(p_retailprice) AS BIGINT) AS ce,
@@ -374,8 +365,8 @@ object Functions {
            greatest(p_retailprice, 950.0) AS gst,
            least(p_retailprice, 950.0) AS lst,
            p_partkey % 7 AS md
-         FROM part ORDER BY p_partkey""",
-    "fn_cond" ->
+         FROM part ORDER BY p_partkey"""),
+    KeySpec.batch("fn_cond", fnCond, shuffles = 1,
       """SELECT o_orderkey,
            CASE WHEN o_totalprice > 200000.0 THEN 'big'
                 WHEN o_totalprice > 100000.0 THEN 'mid'
@@ -383,8 +374,8 @@ object Functions {
            coalesce(nullif(o_orderstatus, 'O'), 'open') AS status_or_open,
            CASE WHEN nullif(o_orderpriority, '1-URGENT') IS NOT NULL THEN 0 ELSE 1 END AS is_urgent,
            CAST(o_orderstatus = 'F' AS INT) AS is_final
-         FROM orders ORDER BY o_orderkey""",
-    "fn_array" ->
+         FROM orders ORDER BY o_orderkey"""),
+    KeySpec.batch("fn_array", fnArray, shuffles = 1,
       """SELECT doc_id,
            CAST(len(string_split(text, ' ')) AS INT) AS n_words,
            CAST(len(list_distinct(string_split(text, ' '))) AS INT) AS n_distinct,
@@ -396,27 +387,21 @@ object Functions {
            CAST(list_sum(list_transform(string_split(text, ' '), w -> length(w))) AS INT) AS sum_len,
            CAST(len(list_filter(string_split(text, ' '), w -> length(w) > 4)) AS INT) AS n_long,
            CAST(coalesce(list_position(string_split(text, ' '), 'table'), 0) AS INT) AS pos_table
-         FROM documents ORDER BY doc_id""",
-    "fn_map" ->
+         FROM documents ORDER BY doc_id"""),
+    KeySpec.batch("fn_map", fnMap, shuffles = 1,
       """SELECT doc_id,
            CAST(length(text) AS BIGINT) AS m_len,
            CAST(len(string_split(text, ' ')) AS BIGINT) AS m_words,
            2 AS n_keys,
            'len,words' AS keys_csv,
            CAST(length(text) + len(string_split(text, ' ')) AS BIGINT) AS vals_sum
-         FROM documents ORDER BY doc_id""",
-    "fn_variant" ->
-      """SELECT event_id,
-           CAST(props->>'$.k' AS INT) AS k_var,
-           CAST(props->>'$.k' AS BIGINT) * 2 AS k_var2,
-           props->>'$.missing' AS k_missing
-         FROM events ORDER BY event_id""",
-    "fn_json" ->
+         FROM documents ORDER BY doc_id"""),
+    KeySpec.batch("fn_json", fnJson, shuffles = 1,
       """SELECT event_id,
            CAST(props->>'$.k' AS INT) AS k_get,
            CAST(props->>'$.k' AS INT) AS k_parsed,
            CAST(props->>'$.k' AS BIGINT) * 2 AS k2,
            props->>'$.missing' AS k_missing,
            CAST(length(props) AS INT) AS raw_len
-         FROM events ORDER BY event_id""")
+         FROM events ORDER BY event_id"""))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables}
+import graft.{KeySpec, QFn, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -79,15 +79,15 @@ object FuzzyJoin {
       .filter(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey").as("id"), col("c_name").as("name")))
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "join_fuzzy_blocked" -> joinFuzzyBlocked)
-
   /** The oracle is the INDEPENDENT brute-force formulation — every
     * pair checked directly with levenshtein — so the neighborhood
     * blocking's no-false-negative guarantee is verified against
     * exhaustive search, not replayed. */
-  val oracles: Seq[(String, String)] = Seq(
-    "join_fuzzy_blocked" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("join_fuzzy_blocked", joinFuzzyBlocked,
+      // variant equi-join (self-join reuses one exchange) + pair
+      // distinct; the presentation sort rides AQE's reuse at audit scale
+      shuffles = 3,
       """SELECT a.c_custkey AS a_id, a.c_name AS a_name,
                 b.c_custkey AS b_id, b.c_name AS b_name,
                 CAST(levenshtein(a.c_name, b.c_name) AS INT) AS dist
@@ -95,5 +95,5 @@ object FuzzyJoin {
            ON a.c_custkey < b.c_custkey
           AND a.c_mktsegment = 'BUILDING' AND b.c_mktsegment = 'BUILDING'
           AND levenshtein(a.c_name, b.c_name) <= 1
-         ORDER BY a_id, b_id""")
+         ORDER BY a_id, b_id"""))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables}
+import graft.{KeySpec, QFn, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -90,7 +90,7 @@ object Graph {
     * engines compute identically, so the result is hash-exact.
     * The (edge ⋈ degree) join is hoisted out of the loop; each
     * iteration is one equi-join on the rank key and one sum. N joins
-    * in as a broadcast single-row aggregate (allowCross: O(1) build
+    * in as a broadcast single-row aggregate (crossJoinOk: O(1) build
     * side by construction) — no driver collect anywhere. */
   val graphPagerank: QFn = (s, d) =>
     pagerankMicro(csEdges(s, d), iters = 3)
@@ -190,7 +190,7 @@ object Graph {
     * closes; the oracle counts the same triangles from the canonical
     * u<v edge list directly — identical totals, and the orientation
     * is the shape that survives degree skew at scale. The three
-    * single-row aggregates meet in 1-row broadcast joins (allowCross:
+    * single-row aggregates meet in 1-row broadcast joins (crossJoinOk:
     * O(1) sides by construction). */
   val graphTriangles: QFn = (s, d) => {
     val li = Tables.lineitem(s, d)
@@ -369,62 +369,15 @@ object Graph {
   private val ssspCache = new java.util.concurrent.atomic.AtomicReference[
     (Int, Seq[DataFrame])]((0, Nil))
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "graph_degree" -> graphDegree,
-    "graph_pagerank" -> graphPagerank,
-    "graph_triangles" -> graphTriangles,
-    "graph_components" -> graphComponents,
-    "graph_sssp" -> graphSssp)
-
   /** The PageRank oracle unrolls the 3 iterations as CTE stages with
     * the same truncating BIGINT arithmetic (DuckDB `//`). */
-  val oracles: Seq[(String, String)] = Seq(
-    // TRUE components via recursive closure — an INDEPENDENT
-    // formulation of what the distributed fixpoint converges to
-    // (min reachable node id), so label propagation is verified
-    // against transitive closure, not against itself
-    "graph_components" ->
-      """WITH RECURSIVE e0 AS (
-           SELECT DISTINCT c.c_custkey*2 AS u, s.s_suppkey*2+1 AS v
-           FROM orders o
-           JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-           JOIN customer c ON o.o_custkey = c.c_custkey
-           JOIN supplier s ON l.l_suppkey = s.s_suppkey
-           WHERE o.o_orderkey % 13 = 0 AND c.c_nationkey = s.s_nationkey),
-         edges AS (SELECT u, v FROM e0 UNION SELECT v, u FROM e0),
-         nodes AS (SELECT DISTINCT u AS node FROM edges),
-         reach(node, lbl) AS (
-           SELECT node, node FROM nodes
-           UNION
-           SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.node),
-         comp AS (SELECT node, min(lbl) AS comp FROM reach GROUP BY node),
-         sizes AS (SELECT comp, count(*) AS comp_size FROM comp GROUP BY comp)
-         SELECT comp_size, count(*) AS n_comps, min(comp) AS min_comp_id
-         FROM sizes GROUP BY comp_size ORDER BY comp_size""",
-    // min hops via recursive closure (set-semantics UNION dedups the
-    // walk) — independent of the frontier-iteration formulation
-    "graph_sssp" ->
-      """WITH RECURSIVE e0 AS (
-           SELECT DISTINCT o_custkey*2 AS u, l_suppkey*2+1 AS v
-           FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         edges AS (SELECT u, v FROM e0 UNION SELECT v, u FROM e0),
-         nodes AS (SELECT DISTINCT u AS node FROM edges),
-         walk(node, hop) AS (
-           SELECT node, 0 FROM nodes WHERE node % 200 = 0
-           UNION
-           SELECT e.v, w.hop + 1 FROM walk w
-           JOIN edges e ON e.u = w.node WHERE w.hop < 4),
-         dist AS (SELECT node, min(hop) AS hop FROM walk GROUP BY node)
-         SELECT CAST(hop AS INT) AS hop, count(*) AS n_nodes,
-           CASE WHEN min(node) % 2 = 0 THEN 'c' || (min(node) // 2)
-                ELSE 's' || ((min(node) - 1) // 2) END AS min_node
-         FROM dist GROUP BY hop ORDER BY hop""",
-    "graph_degree" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("graph_degree", graphDegree, shuffles = 4,
       """WITH cs AS (SELECT DISTINCT o_custkey, l_suppkey
            FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
          dg AS (SELECT o_custkey, count(*) AS deg FROM cs GROUP BY o_custkey)
-         SELECT deg, count(*) AS n_nodes FROM dg GROUP BY deg ORDER BY deg""",
-    "graph_pagerank" ->
+         SELECT deg, count(*) AS n_nodes FROM dg GROUP BY deg ORDER BY deg"""),
+    KeySpec.batch("graph_pagerank", graphPagerank, shuffles = 8,
       """WITH e0 AS (SELECT DISTINCT 'c' || o_custkey AS u, 's' || l_suppkey AS v
            FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
          ed AS (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
@@ -446,8 +399,10 @@ object Graph {
                     + 85 * sum(p2.pr // deg.dg)) // 100 AS BIGINT) AS pr
                 FROM ed JOIN p2 ON ed.u = p2.u JOIN deg ON ed.u = deg.u
                 GROUP BY ed.v)
-         SELECT u AS node, pr AS pr_micro FROM p3 ORDER BY node""",
-    "graph_triangles" ->
+         SELECT u AS node, pr AS pr_micro FROM p3 ORDER BY node""")
+      .crossJoinOk("joins the broadcast 1-row node count N into each iteration (no " +
+        "driver collect)"),
+    KeySpec.batch("graph_triangles", graphTriangles, shuffles = 5,
       """WITH e AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
            FROM lineitem a JOIN lineitem b
              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
@@ -459,4 +414,60 @@ object Graph {
                 (SELECT count(*) FROM e e1
                    JOIN e e2 ON e1.v = e2.u
                    JOIN e e3 ON e1.u = e3.u AND e2.v = e3.v) AS n_triangles""")
+      .crossJoinOk("meets its three single-row aggregates in 1-row broadcast crosses"),
+    KeySpec.batch("graph_components", graphComponents,
+      // final plan reads the last round's localCheckpoint: two size
+      // groupBys + the presentation sort
+      shuffles = 4,
+      // TRUE components via recursive closure — an INDEPENDENT
+      // formulation of what the distributed fixpoint converges to
+      // (min reachable node id), so label propagation is verified
+      // against transitive closure, not against itself
+      """WITH RECURSIVE e0 AS (
+           SELECT DISTINCT c.c_custkey*2 AS u, s.s_suppkey*2+1 AS v
+           FROM orders o
+           JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+           JOIN customer c ON o.o_custkey = c.c_custkey
+           JOIN supplier s ON l.l_suppkey = s.s_suppkey
+           WHERE o.o_orderkey % 13 = 0 AND c.c_nationkey = s.s_nationkey),
+         edges AS (SELECT u, v FROM e0 UNION SELECT v, u FROM e0),
+         nodes AS (SELECT DISTINCT u AS node FROM edges),
+         reach(node, lbl) AS (
+           SELECT node, node FROM nodes
+           UNION
+           SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.node),
+         comp AS (SELECT node, min(lbl) AS comp FROM reach GROUP BY node),
+         sizes AS (SELECT comp, count(*) AS comp_size FROM comp GROUP BY comp)
+         SELECT comp_size, count(*) AS n_comps, min(comp) AS min_comp_id
+         FROM sizes GROUP BY comp_size ORDER BY comp_size""")
+      .constructionJobsOk("same CC kernel on the trade subgraph — " +
+        "per-round localCheckpoint + 1-value convergence count"),
+    KeySpec.batch("graph_sssp", graphSssp,
+      // final plan reads the checkpointed per-hop frontiers: the
+      // histogram groupBy + presentation sort (BFS rounds run in
+      // construction, CC-kernel style). Note: the final-horizon round
+      // stays LAZY in the result plan, but at audit scale the frontier
+      // exhausts at hop 3 (early exit), so that branch's extra distinct
+      // exchange never appears here — if the audit graph ever deepens
+      // past the horizon, expect +2 (distinct + anti-join probe side)
+      shuffles = 2,
+      // min hops via recursive closure (set-semantics UNION dedups the
+      // walk) — independent of the frontier-iteration formulation
+      """WITH RECURSIVE e0 AS (
+           SELECT DISTINCT o_custkey*2 AS u, l_suppkey*2+1 AS v
+           FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+         edges AS (SELECT u, v FROM e0 UNION SELECT v, u FROM e0),
+         nodes AS (SELECT DISTINCT u AS node FROM edges),
+         walk(node, hop) AS (
+           SELECT node, 0 FROM nodes WHERE node % 200 = 0
+           UNION
+           SELECT e.v, w.hop + 1 FROM walk w
+           JOIN edges e ON e.u = w.node WHERE w.hop < 4),
+         dist AS (SELECT node, min(hop) AS hop FROM walk GROUP BY node)
+         SELECT CAST(hop AS INT) AS hop, count(*) AS n_nodes,
+           CASE WHEN min(node) % 2 = 0 THEN 'c' || (min(node) // 2)
+                ELSE 's' || ((min(node) - 1) // 2) END AS min_node
+         FROM dist GROUP BY hop ORDER BY hop""")
+      .constructionJobsOk("fixed 4-round BFS: per-round frontier " +
+        "localCheckpoint (node-sized frames), CC-kernel pattern"))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import graft.{QFn, Tables, IndexStore}
+import graft.{KeySpec, QFn, Tables, IndexStore}
 import org.apache.spark.sql.functions._
 
 /** `etl_index_store` — the machine-local staged-artifact store as a
@@ -113,17 +113,21 @@ object IndexStoreOp {
       .orderBy("event_type")
   }
 
-  val entries: Seq[(String, QFn)] = Seq("etl_index_store" -> etlIndexStore)
-
-  val oracles: Seq[(String, String)] = Seq(
-    // data half recomputed from the raw table (a corrupt/stale/truncated
-    // artifact mismatches on values); contract half literal TRUE (a
-    // broken store contract mismatches on the booleans)
-    "etl_index_store" -> {
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("etl_index_store", etlIndexStore,
+      // reads the K-row staged rollup + presentation sort
+      shuffles = 1, {
+      // data half recomputed from the raw table (a corrupt/stale/truncated
+      // artifact mismatches on values); contract half literal TRUE (a
+      // broken store contract mismatches on the booleans)
       import graft.Det._
       s"""SELECT event_type, count(*) AS n_events,
             ${sqlSum2("value")} AS sum_value,
             true AS reuse_ok, true AS atomic_ok, true AS invalidation_ok
           FROM events GROUP BY event_type ORDER BY event_type"""
     })
+      // the store-contract key IS a write-then-read: first touch of new
+      // content publishes the K-row rollup artifact it then reads back
+      .constructionJobsOk("stages the fingerprint-keyed rollup artifact " +
+        "it then reads — the staged-artifact contract is the operator"))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables}
+import graft.{KeySpec, QFn, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -115,13 +115,11 @@ object LlmCorpus {
       .orderBy("doc_id")
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "llm_collocations" -> llmCollocations,
-    "llm_doc_freq_prune" -> llmDocFreqPrune,
-    "llm_incremental_dedup" -> llmIncrementalDedup)
-
-  val oracles: Seq[(String, String)] = Seq(
-    "llm_collocations" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("llm_collocations", llmCollocations,
+      // bigram count table + the vocab²-bounded marginal windows
+      // (same-key windows share the exchange; top-50 is TakeOrdered)
+      shuffles = 2,
       """WITH toks AS (
            SELECT string_split(text, ' ') AS w FROM documents),
          idx AS (
@@ -141,8 +139,11 @@ object LlmCorpus {
            CAST(floor(CAST(n12 AS DOUBLE) * CAST(nn AS DOUBLE) /
              (CAST(cx AS DOUBLE) * CAST(cy AS DOUBLE)) * 1000000.0) AS BIGINT)
              AS pmi_ratio_q
-         FROM m ORDER BY pmi_ratio_q DESC, w1, w2 LIMIT 50""",
-    "llm_doc_freq_prune" ->
+         FROM m ORDER BY pmi_ratio_q DESC, w1, w2 LIMIT 50"""),
+    KeySpec.batch("llm_doc_freq_prune", llmDocFreqPrune,
+      // df build (2-phase distinct) + broadcast kept-vocab + per-doc
+      // re-agg with a distinct (2-phase) + presentation sort
+      shuffles = 6,
       """WITH toks AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
          nd AS (SELECT count(*) AS n_docs FROM documents),
@@ -161,11 +162,16 @@ object LlmCorpus {
          SELECT doc_id, n_tokens, n_kept, n_distinct_kept,
            CAST(floor(CAST(n_tokens - n_kept AS DOUBLE) /
              CAST(n_tokens AS DOUBLE) * 1000000.0) AS BIGINT) AS pruned_ratio_q
-         FROM agg ORDER BY doc_id""",
-    // TRY_CAST, not CAST: a digit-less source yields '' which plain
-    // CAST raises on in DuckDB while Spark silently nulls — TRY_CAST
-    // makes both engines treat it as null (r8 ADVICE latent-crash fix)
-    "llm_incremental_dedup" ->
+         FROM agg ORDER BY doc_id""")
+      .crossJoinOk("crosses the vocab-bounded df table with the broadcast 1-row corpus " +
+        "doc count for the stopword threshold — O(1) build"),
+    KeySpec.batch("llm_incremental_dedup", llmIncrementalDedup,
+      // existing-fingerprint distinct + the anti-join/first-occurrence
+      // window exchange + presentation sort
+      shuffles = 3,
+      // TRY_CAST, not CAST: a digit-less source yields '' which plain
+      // CAST raises on in DuckDB while Spark silently nulls — TRY_CAST
+      // makes both engines treat it as null (r8 ADVICE latent-crash fix)
       """WITH tagged AS (
            SELECT doc_id, source, n_chars,
              md5(array_to_string(string_split(text, ' ')[1:16], ' ')) AS h,
@@ -181,5 +187,5 @@ object LlmCorpus {
              row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn
            FROM fresh)
          SELECT doc_id, source, n_chars FROM first_occ
-         WHERE rn = 1 ORDER BY doc_id""")
+         WHERE rn = 1 ORDER BY doc_id"""))
 }

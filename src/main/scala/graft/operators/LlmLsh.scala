@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QFn, Tables}
+import graft.{KeySpec, QFn, Tables}
 
 /** PORTABLE locality-sensitive hashing — the two LSH families whose
   * APPROXIMATE output is itself DuckDB-reproducible, closing the last
@@ -527,13 +527,25 @@ object LlmLsh {
 
   // ---------------------------------------------------- registration
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "llm_knn_signlsh" -> llmKnnSignLsh,
-    "llm_minhash_portable" -> llmMinhashPortable,
-    "llm_incremental_neardup" -> llmIncrementalNeardup)
-
-  val oracles: Seq[(String, String)] = Seq(
-    "llm_knn_signlsh" -> signLshOracleSql,
-    "llm_minhash_portable" -> minhashPortableOracleSql,
-    "llm_incremental_neardup" -> incrementalNeardupOracleSql)
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("llm_knn_signlsh", llmKnnSignLsh,
+      // sign-LSH: candidate distinct + window top-k + final sort
+      // (probes broadcast, codes a per-row projection)
+      shuffles = 3, signLshOracleSql),
+    KeySpec.batch("llm_minhash_portable", llmMinhashPortable,
+      // band-bucket self-join feeding the pair distinct
+      // (signature joins fold to broadcasts at audit scale)
+      shuffles = 2, minhashPortableOracleSql)
+      .constructionJobsOk("signature frame localCheckpoint (derive once, 3 scans -> 1)"),
+    KeySpec.batch("llm_incremental_neardup", llmIncrementalNeardup,
+      // ingestion near-dedup: 2 candidate distincts (vs stored index,
+      // vs prior delta) + 2 verdict groupBys + the delta/verdict join +
+      // presentation sort — every shuffle on narrow key/id rows; the
+      // base side arrives pre-signed from the stored index
+      shuffles = 6, incrementalNeardupOracleSql)
+      .constructionJobsOk("first touch of new content stages the " +
+        "base corpus's MinHash banding index (band keys + signature store) " +
+        "it then bands the delta against — the persisted index IS the key")
+      // stages neardup_band_index_v1
+      .reads("llm_incremental_neardup"))
 }

@@ -92,12 +92,10 @@ object LlmQuantize {
       .orderBy("stratum")
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "llm_emb_quantize" -> llmEmbQuantize,
-    "llm_sample_temperature" -> llmSampleTemperature)
-
-  val oracles: Seq[(String, String)] = Seq(
-    "llm_emb_quantize" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("llm_emb_quantize", llmEmbQuantize,
+      // explode-agg + scale join-back agg + sort
+      shuffles = 3,
       """WITH ex AS (
            SELECT vec_id, CAST(t.i AS INT) AS pos,
              CAST(floor(CAST(embedding[t.i + 1] AS DOUBLE) * 1000000.0)
@@ -117,8 +115,11 @@ object LlmQuantize {
              AS n_saturated,
            CAST(sum((127 * m - qc * scale) * (127 * m - qc * scale))
              AS BIGINT) AS recon_err
-         FROM q GROUP BY 1, 2 ORDER BY vec_id""",
-    "llm_sample_temperature" ->
+         FROM q GROUP BY 1, 2 ORDER BY vec_id"""),
+    KeySpec.batch("llm_sample_temperature", llmSampleTemperature,
+      // stratum count + stratum window rank + final agg
+      // (the allot frame broadcasts)
+      shuffles = 3,
       """WITH docs AS (
            SELECT doc_id, lang || '_' || CAST(n_chars // 400 AS VARCHAR)
              AS stratum
@@ -139,5 +140,5 @@ object LlmQuantize {
            CAST(sum(r.doc_id) AS BIGINT) AS doc_checksum
          FROM r JOIN al a ON r.stratum = a.stratum
          WHERE r.rk <= a.allot
-         GROUP BY 1, 2, 3 ORDER BY 1""")
+         GROUP BY 1, 2, 3 ORDER BY 1"""))
 }

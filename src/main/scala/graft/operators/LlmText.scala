@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables}
+import graft.{KeySpec, QFn, Tables}
 import graft.Det.{dsum6, fq}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
@@ -650,36 +650,13 @@ object LlmText {
       .orderBy("doc_id")
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "llm_global_shuffle" -> llmGlobalShuffle,
-    "llm_pii_scrub" -> llmPiiScrub,
-    "llm_embed_normalize" -> llmEmbedNormalize,
-    "llm_decontaminate" -> llmDecontaminate,
-    "llm_corpus_pipeline" -> llmCorpusPipeline,
-    "llm_chunk_docs" -> llmChunkDocs,
-    "llm_embed_centroid" -> llmEmbedCentroid,
-    "llm_sample_stratified" -> llmSampleStratified,
-    "llm_pack_sequences" -> llmPackSequences,
-    "llm_interleave_sources" -> llmInterleaveSources,
-    "llm_exact_dedup" -> llmExactDedup,
-    "llm_span_dedup" -> llmSpanDedup,
-    "llm_token_count" -> llmTokenCount,
-    "llm_text_stats" -> llmTextStats,
-    "llm_tfidf" -> llmTfidf,
-    "llm_quality_score" -> llmQualityScore,
-    "llm_lang_id" -> llmLangId,
-    "llm_fingerprint" -> llmFingerprint,
-    "llm_feature_hash" -> llmFeatureHash,
-    "llm_ngram_lm" -> llmNgramLm,
-    "llm_ngram_windows" -> llmNgramWindows,
-    "llm_lm_score" -> llmLmScore,
-    "llm_repetition" -> llmRepetition,
-    "llm_source_drift" -> llmSourceDrift)
-
-  val oracles: Seq[(String, String)] = Seq(
-    // same md5-salt hashes: the full shuffle assignment (shard, split,
-    // order) reproduces in any engine with md5 — no seed, no RNG state
-    "llm_global_shuffle" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("llm_global_shuffle", llmGlobalShuffle,
+      // the shard window's hash exchange + the presentation sort — the
+      // global-shuffle-for-training plan IS those two exchanges
+      shuffles = 2,
+      // same md5-salt hashes: the full shuffle assignment (shard, split,
+      // order) reproduces in any engine with md5 — no seed, no RNG state
       """WITH a AS (
            SELECT doc_id,
              CAST(('0x' || substr(md5('shard:' || doc_id), 25, 8))::UBIGINT % 8 AS INT) AS shard,
@@ -690,10 +667,12 @@ object LlmText {
            FROM documents)
          SELECT doc_id, shard, split, pos,
            CAST(row_number() OVER (PARTITION BY shard ORDER BY pos, doc_id) AS INT) AS rank_in_shard
-         FROM a ORDER BY doc_id""",
-    // same derived contact block, same patterns; DuckDB regexp_replace
-    // needs the explicit 'g' flag to match Spark's replace-all default
-    "llm_pii_scrub" ->
+         FROM a ORDER BY doc_id"""),
+    KeySpec.batch("llm_pii_scrub", llmPiiScrub,
+      // pure per-row projection; the single shuffle is the output sort
+      shuffles = 1,
+      // same derived contact block, same patterns; DuckDB regexp_replace
+      // needs the explicit 'g' flag to match Spark's replace-all default
       """WITH raw AS (
            SELECT doc_id, source,
              substr(text, 1, 80) || ' contact u' || doc_id || '@example.com'
@@ -707,8 +686,8 @@ object LlmText {
            CAST(len(regexp_extract_all(raw, '\+1-555-[0-9]{4}')) AS BIGINT) AS n_phone,
            regexp_replace(regexp_replace(raw, '[a-z0-9]+@[a-z]+\.[a-z]+', '<EMAIL>', 'g'),
              '\+1-555-[0-9]{4}', '<PHONE>', 'g') AS scrubbed
-         FROM raw ORDER BY doc_id""",
-    "llm_embed_normalize" ->
+         FROM raw ORDER BY doc_id"""),
+    KeySpec.batch("llm_embed_normalize", llmEmbedNormalize, shuffles = 2,
       """WITH ex AS (
            SELECT vec_id, CAST(t.i AS INT) AS pos,
              CAST(floor(CAST(embedding[t.i + 1] AS DOUBLE) * 1000000.0) AS BIGINT) AS q
@@ -723,8 +702,8 @@ object LlmText {
              / sqrt(st.sqq / st.n - (st.sq / st.n) * (st.sq / st.n)), 6) AS z
          FROM ex e JOIN st USING (pos)
          WHERE e.vec_id % 50 = 0
-         ORDER BY e.vec_id, e.pos""",
-    "llm_decontaminate" ->
+         ORDER BY e.vec_id, e.pos"""),
+    KeySpec.batch("llm_decontaminate", llmDecontaminate, shuffles = 3,
       """WITH t AS (
            SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          g AS (
@@ -737,8 +716,9 @@ object LlmText {
            count(DISTINCT ev.doc_id) AS n_eval_docs
          FROM g tr JOIN g ev ON tr.gram = ev.gram
          WHERE tr.doc_id % 10 <> 0 AND ev.doc_id % 10 = 0
-         GROUP BY tr.doc_id ORDER BY tr.doc_id""",
-    "llm_corpus_pipeline" ->
+         GROUP BY tr.doc_id ORDER BY tr.doc_id""")
+      .constructionJobsOk("repartitioned docs localCheckpoint (derive once for eval + train)"),
+    KeySpec.batch("llm_corpus_pipeline", llmCorpusPipeline, shuffles = 6,
       """WITH scored AS (
            SELECT doc_id, text, lang,
              len(string_split(text, ' ')) AS n_words,
@@ -766,8 +746,8 @@ object LlmText {
            FROM uniq WHERE rn = 1)
          SELECT CAST(floor((cum_after - n_tokens) / 512.0) AS BIGINT) AS pack_id,
            count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS pack_tokens
-         FROM packed GROUP BY 1 ORDER BY 1""",
-    "llm_chunk_docs" ->
+         FROM packed GROUP BY 1 ORDER BY 1"""),
+    KeySpec.batch("llm_chunk_docs", llmChunkDocs, shuffles = 1,
       """WITH t AS (
            SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
          st AS (
@@ -777,20 +757,20 @@ object LlmText {
            CAST(start // 48 AS INT) AS chunk_id,
            CAST(len(toks[start + 1 : start + 64]) AS INT) AS n_tokens,
            array_to_string(toks[start + 1 : start + 64], ' ') AS chunk_text
-         FROM st ORDER BY doc_id, chunk_id""",
-    "llm_embed_centroid" ->
+         FROM st ORDER BY doc_id, chunk_id"""),
+    KeySpec.batch("llm_embed_centroid", llmEmbedCentroid, shuffles = 2,
       """WITH ex AS (
            SELECT label, CAST(t.i AS INT) AS pos,
              CAST(floor(CAST(embedding[t.i + 1] AS DOUBLE) * 1000000.0) AS BIGINT) AS q
            FROM embeddings, range(64) t(i))
          SELECT label, pos, count(*) AS n,
            CAST(sum(q) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1000000.0 AS c
-         FROM ex GROUP BY label, pos ORDER BY label, pos""",
-    "llm_sample_stratified" ->
+         FROM ex GROUP BY label, pos ORDER BY label, pos"""),
+    KeySpec.batch("llm_sample_stratified", llmSampleStratified, shuffles = 2,
       """SELECT lang, count(*) AS n_sampled, CAST(sum(n_chars) AS BIGINT) AS chars_sampled
          FROM documents WHERE (doc_id * 2654435761) % 100 < 20
-         GROUP BY lang ORDER BY lang""",
-    "llm_pack_sequences" ->
+         GROUP BY lang ORDER BY lang"""),
+    KeySpec.batch("llm_pack_sequences", llmPackSequences, shuffles = 5,
       """WITH t AS (
            SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
              sum(CAST(len(string_split(text, ' ')) AS BIGINT))
@@ -798,8 +778,8 @@ object LlmText {
            FROM documents)
          SELECT CAST(floor((cum_after - n_tokens) / 4096.0) AS BIGINT) AS pack_id,
            count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS pack_tokens
-         FROM t GROUP BY 1 ORDER BY pack_id""",
-    "llm_interleave_sources" ->
+         FROM t GROUP BY 1 ORDER BY pack_id"""),
+    KeySpec.batch("llm_interleave_sources", llmInterleaveSources, shuffles = 2,
       """SELECT position, source, doc_id FROM (
            SELECT doc_id, source,
              CAST(row_number() OVER (ORDER BY rank_in_source, source, doc_id) AS INT) AS position
@@ -807,8 +787,13 @@ object LlmText {
              SELECT doc_id, source,
                row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rank_in_source
              FROM documents))
-         WHERE position <= 200 ORDER BY position""",
-    "llm_span_dedup" ->
+         WHERE position <= 200 ORDER BY position""")
+      .crossJoinOk("crosses a <=#sources-row broadcast counts dim — O(1) build side"),
+    KeySpec.batch("llm_exact_dedup", llmExactDedup, shuffles = 2,
+      """SELECT sha256(lower(trim(text))) AS h,
+           min(doc_id) AS keep_id, count(*) AS n_copies
+         FROM documents GROUP BY 1 ORDER BY keep_id"""),
+    KeySpec.batch("llm_span_dedup", llmSpanDedup, shuffles = 3,
       """WITH t AS (
            SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
          sp AS (
@@ -827,19 +812,15 @@ object LlmText {
            string_agg(span_text, ' ' ORDER BY span_id) FILTER (WHERE rn = 1) AS clean_text,
            count(*) FILTER (WHERE rn = 1) AS n_kept,
            count(*) FILTER (WHERE rn > 1) AS n_dropped
-         FROM r GROUP BY doc_id ORDER BY doc_id""",
-    "llm_exact_dedup" ->
-      """SELECT sha256(lower(trim(text))) AS h,
-           min(doc_id) AS keep_id, count(*) AS n_copies
-         FROM documents GROUP BY 1 ORDER BY keep_id""",
-    "llm_token_count" ->
+         FROM r GROUP BY doc_id ORDER BY doc_id"""),
+    KeySpec.batch("llm_token_count", llmTokenCount, shuffles = 1,
       """SELECT doc_id,
            CAST(len(string_split(text, ' ')) AS INT) AS n_ws_tokens,
            CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS INT) AS n_re_tokens,
            CAST(length(text) AS INT) AS n_chars_measured,
            CAST(ceil(length(text) / 4.0) AS BIGINT) AS approx_llm_tokens
-         FROM documents ORDER BY doc_id""",
-    "llm_text_stats" ->
+         FROM documents ORDER BY doc_id"""),
+    KeySpec.batch("llm_text_stats", llmTextStats, shuffles = 3,
       """SELECT source, term, cnt, rk FROM (
            SELECT source, term, cnt,
              CAST(row_number() OVER (PARTITION BY source ORDER BY cnt DESC, term) AS INT) AS rk
@@ -847,8 +828,8 @@ object LlmText {
              SELECT source, term, count(*) AS cnt FROM (
                SELECT source, unnest(string_split(text, ' ')) AS term FROM documents)
              GROUP BY source, term
-           )) WHERE rk <= 5 ORDER BY source, rk""",
-    "llm_tfidf" ->
+           )) WHERE rk <= 5 ORDER BY source, rk"""),
+    KeySpec.batch("llm_tfidf", llmTfidf, shuffles = 7,
       """WITH tokens AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
          tf AS (
@@ -867,8 +848,9 @@ object LlmText {
            FROM tf JOIN dlen ON tf.doc_id = dlen.doc_id
                 JOIN df ON tf.term = df.term
                 CROSS JOIN n)
-         WHERE rk <= 3 ORDER BY doc_id, rk""",
-    "llm_quality_score" ->
+         WHERE rk <= 3 ORDER BY doc_id, rk""")
+      .crossJoinOk("crosses a 1-row broadcast count scalar — O(1) build side"),
+    KeySpec.batch("llm_quality_score", llmQualityScore, shuffles = 1,
       """SELECT doc_id, n_chars,
            CAST(len(string_split(text, ' ')) AS INT) AS n_words,
            floor((CAST(length(text) AS DOUBLE) / len(string_split(text, ' '))) * 1e6) / 1e6 AS avg_token_len,
@@ -884,8 +866,8 @@ object LlmText {
                   / len(string_split(text, ' ')) > 0.02 THEN 0.25 ELSE 0.0 END)
              + (CASE WHEN CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
                   / len(string_split(text, ' ')) > 0.2 THEN 0.25 ELSE 0.0 END)) * 1e2) / 1e2 AS quality
-         FROM documents ORDER BY doc_id""",
-    "llm_lang_id" ->
+         FROM documents ORDER BY doc_id"""),
+    KeySpec.batch("llm_lang_id", llmLangId, shuffles = 1,
       """SELECT doc_id, lang AS true_lang,
            (list_reverse(list_sort([
              {'score': CAST(len(list_filter(string_split(text,' '), w -> w='the')) +
@@ -902,20 +884,25 @@ object LlmText {
                        len(list_filter(string_split(text,' '), w -> w='et')) AS BIGINT), 'lang': 'fr'},
              {'score': CAST(CASE WHEN regexp_matches(text, '[一-鿿]') THEN 100 ELSE 0 END AS BIGINT), 'lang': 'zh'}
            ]))[1]).lang AS pred_lang
-         FROM documents ORDER BY doc_id""",
-    "llm_ngram_windows" ->
-      """WITH toks AS (
-           SELECT string_split(text, ' ') AS w FROM documents),
-         idx AS (
-           SELECT w, unnest(range(1, len(w) - 1)) AS i FROM toks),
-         tri AS (
-           SELECT list_extract(w, CAST(i AS INT)) || '_' ||
-                  list_extract(w, CAST(i AS INT) + 1) || '_' ||
-                  list_extract(w, CAST(i AS INT) + 2) AS gram
-           FROM idx)
-         SELECT gram, count(*) AS n FROM tri
-         GROUP BY gram ORDER BY n DESC, gram LIMIT 20""",
-    "llm_ngram_lm" ->
+         FROM documents ORDER BY doc_id"""),
+    KeySpec.batch("llm_fingerprint", llmFingerprint, shuffles = 1,
+      """SELECT doc_id,
+           list_reduce(
+             list_prepend(CAST(0 AS BIGINT),
+               list_transform(string_split(text, ' '),
+                 w -> CAST(length(w) * 17 + ascii(substr(w, 1, 1)) AS BIGINT))),
+             (h, c) -> (h * 31 + c) % 1000000007) AS fingerprint,
+           CAST(len(string_split(text, ' ')) AS INT) AS n_tokens
+         FROM documents ORDER BY doc_id"""),
+    KeySpec.batch("llm_feature_hash", llmFeatureHash, shuffles = 2,
+      """WITH tok AS (
+           SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
+         SELECT doc_id,
+           CAST((length(w) * 17 + ascii(substr(w, 1, 1)) * 31
+                 + ascii(substr(w, length(w), 1)) * 7) % 32 AS INT) AS bucket,
+           count(*) AS cnt
+         FROM tok GROUP BY doc_id, bucket ORDER BY doc_id, bucket"""),
+    KeySpec.batch("llm_ngram_lm", llmNgramLm, shuffles = 2,
       """WITH toks AS (
            SELECT string_split(text, ' ') AS w FROM documents),
          idx AS (
@@ -929,8 +916,20 @@ object LlmText {
          SELECT b.w1, b.w2, n12, n1,
            CAST(n12 AS DOUBLE) / CAST(n1 AS DOUBLE) AS p
          FROM big b JOIN uni u USING (w1)
-         ORDER BY n12 DESC, w1, w2 LIMIT 50""",
-    "llm_lm_score" ->
+         ORDER BY n12 DESC, w1, w2 LIMIT 50"""),
+    KeySpec.batch("llm_ngram_windows", llmNgramWindows, shuffles = 1,
+      """WITH toks AS (
+           SELECT string_split(text, ' ') AS w FROM documents),
+         idx AS (
+           SELECT w, unnest(range(1, len(w) - 1)) AS i FROM toks),
+         tri AS (
+           SELECT list_extract(w, CAST(i AS INT)) || '_' ||
+                  list_extract(w, CAST(i AS INT) + 1) || '_' ||
+                  list_extract(w, CAST(i AS INT) + 2) AS gram
+           FROM idx)
+         SELECT gram, count(*) AS n FROM tri
+         GROUP BY gram ORDER BY n DESC, gram LIMIT 20"""),
+    KeySpec.batch("llm_lm_score", llmLmScore, shuffles = 4,
       """WITH toks AS (
            SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          idx AS (
@@ -948,33 +947,8 @@ object LlmText {
          SELECT doc_id, count(*) AS n_bigrams,
            CAST(sum(CAST(p AS DECIMAL(30,6))) AS DOUBLE) / count(*) AS avg_p
          FROM prs JOIN lm USING (w1, w2)
-         GROUP BY doc_id ORDER BY doc_id""",
-    "llm_source_drift" ->
-      """WITH tok AS (
-           SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
-         counts AS (SELECT source, w, count(*) AS o FROM tok GROUP BY source, w),
-         top AS (
-           SELECT w, CAST(sum(o) AS BIGINT) AS tok_n FROM counts
-           GROUP BY w ORDER BY tok_n DESC, w LIMIT 50),
-         src AS (SELECT source, CAST(sum(o) AS BIGINT) AS src_n FROM counts GROUP BY source),
-         tot AS (SELECT CAST(sum(src_n) AS BIGINT) AS all_n FROM src),
-         grid AS (
-           SELECT s.source, t.w, s.src_n, t.tok_n,
-             coalesce(c.o, 0) AS o, tot.all_n
-           FROM src s CROSS JOIN top t
-           LEFT JOIN counts c ON c.source = s.source AND c.w = t.w
-           CROSS JOIN tot),
-         terms AS (
-           SELECT source,
-             floor(((CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / e) * 1e6) / 1e6 AS term
-           FROM (
-             SELECT source, o,
-               CAST(src_n AS DOUBLE) * CAST(tok_n AS DOUBLE) / CAST(all_n AS DOUBLE) AS e
-             FROM grid))
-         SELECT source, count(*) AS n_cells,
-           CAST(sum(CAST(term AS DECIMAL(30,6))) AS DOUBLE) AS chi2
-         FROM terms GROUP BY source ORDER BY source""",
-    "llm_repetition" ->
+         GROUP BY doc_id ORDER BY doc_id"""),
+    KeySpec.batch("llm_repetition", llmRepetition, shuffles = 5,
       """WITH tok AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
          tc AS (SELECT doc_id, w, count(*) AS c FROM tok GROUP BY doc_id, w),
@@ -998,22 +972,34 @@ object LlmText {
            floor((1.0 - CAST(n_distinct AS DOUBLE) / n_tokens) * 1e6) / 1e6 AS dup_token_frac,
            floor((1.0 - CAST(n_distinct_bigrams AS DOUBLE) / n_bigrams) * 1e6) / 1e6 AS dup_bigram_frac
          FROM t LEFT JOIN b ON t.doc_id = b.doc_id
-         ORDER BY t.doc_id""",
-    "llm_feature_hash" ->
+         ORDER BY t.doc_id"""),
+    KeySpec.batch("llm_source_drift", llmSourceDrift, shuffles = 4,
       """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
-         SELECT doc_id,
-           CAST((length(w) * 17 + ascii(substr(w, 1, 1)) * 31
-                 + ascii(substr(w, length(w), 1)) * 7) % 32 AS INT) AS bucket,
-           count(*) AS cnt
-         FROM tok GROUP BY doc_id, bucket ORDER BY doc_id, bucket""",
-    "llm_fingerprint" ->
-      """SELECT doc_id,
-           list_reduce(
-             list_prepend(CAST(0 AS BIGINT),
-               list_transform(string_split(text, ' '),
-                 w -> CAST(length(w) * 17 + ascii(substr(w, 1, 1)) AS BIGINT))),
-             (h, c) -> (h * 31 + c) % 1000000007) AS fingerprint,
-           CAST(len(string_split(text, ' ')) AS INT) AS n_tokens
-         FROM documents ORDER BY doc_id""")
+           SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
+         counts AS (SELECT source, w, count(*) AS o FROM tok GROUP BY source, w),
+         top AS (
+           SELECT w, CAST(sum(o) AS BIGINT) AS tok_n FROM counts
+           GROUP BY w ORDER BY tok_n DESC, w LIMIT 50),
+         src AS (SELECT source, CAST(sum(o) AS BIGINT) AS src_n FROM counts GROUP BY source),
+         tot AS (SELECT CAST(sum(src_n) AS BIGINT) AS all_n FROM src),
+         grid AS (
+           SELECT s.source, t.w, s.src_n, t.tok_n,
+             coalesce(c.o, 0) AS o, tot.all_n
+           FROM src s CROSS JOIN top t
+           LEFT JOIN counts c ON c.source = s.source AND c.w = t.w
+           CROSS JOIN tot),
+         terms AS (
+           SELECT source,
+             floor(((CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / e) * 1e6) / 1e6 AS term
+           FROM (
+             SELECT source, o,
+               CAST(src_n AS DOUBLE) * CAST(tok_n AS DOUBLE) / CAST(all_n AS DOUBLE) AS e
+             FROM grid))
+         SELECT source, count(*) AS n_cells,
+           CAST(sum(CAST(term AS DECIMAL(30,6))) AS DOUBLE) AS chi2
+         FROM terms GROUP BY source ORDER BY source""")
+      .crossJoinOk("crosses the 50-row broadcast top-token list and the 1-row corpus " +
+        "total against the sources dim — O(1) build sides")
+      .constructionJobsOk("token counts localCheckpoint'd once, reused by " +
+        "top-50/source-total/chi-square consumers"))
 }

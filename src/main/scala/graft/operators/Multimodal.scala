@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables}
+import graft.{KeySpec, QFn, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
@@ -531,16 +531,6 @@ object Multimodal {
     phashIncrementalOn(delta, narrowHashes(delta), baseBands, baseHashes)
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "mm_decode_features" -> mmDecodeFeatures,
-    "mm_frame_sample" -> mmFrameSample,
-    "mm_audio_window" -> mmAudioWindow,
-    "mm_phash_neardup" -> mmPhashNeardup,
-    "mm_phash_wide" -> mmPhashWide,
-    "mm_phash_band_stats" -> mmPhashBandStats,
-    "mm_phash_incremental" -> mmPhashIncremental,
-    "mm_modality_dispatch" -> mmModalityDispatch)
-
   /** The aHash oracle re-derives every block's cross-multiply bit in
     * SQL (generated per block, like the BPE/Lloyd unrolls — the SAME
     * 32/band constants the engine runs with), then computes the
@@ -677,38 +667,8 @@ object Multimodal {
   /** Text payloads are pure ASCII, so the byte histogram/checksums are
     * SQL-expressible: bucket = ascii(char) >> 4, checksum = sum of
     * codes. The oracle proves the distributed decode path byte-exact. */
-  val oracles: Seq[(String, String)] = Seq(
-    "mm_phash_neardup" -> phashOracleSql,
-    "mm_phash_wide" -> phashWideOracleSql,
-    "mm_phash_band_stats" -> phashBandStatsOracleSql,
-    "mm_phash_incremental" -> phashIncrementalOracleSql,
-    "mm_audio_window" ->
-      """SELECT doc_id, CAST(k AS INT) AS win_idx,
-           CAST(length(substr(text, k * 64 + 1, 128)) AS INT) AS n_samples,
-           CAST(list_sum(list_transform(
-             regexp_extract_all(substr(text, k * 64 + 1, 128), '.'),
-             c -> CAST((ascii(c) - 128) * (ascii(c) - 128) AS BIGINT)))
-             AS BIGINT) AS energy,
-           CAST(list_max(list_transform(
-             regexp_extract_all(substr(text, k * 64 + 1, 128), '.'),
-             c -> CAST(abs(ascii(c) - 128) AS BIGINT))) AS BIGINT) AS peak
-         FROM documents
-         CROSS JOIN (SELECT unnest(range(0, 10000)) AS k)
-         WHERE k * 64 < length(text)
-         ORDER BY doc_id, win_idx""",
-    "mm_modality_dispatch" ->
-      """SELECT doc_id,
-           CASE WHEN doc_id % 3 = 0 THEN 'text/plain'
-                WHEN doc_id % 3 = 1 THEN 'image/fake'
-                ELSE 'audio/fake' END AS mime,
-           CASE WHEN doc_id % 3 = 0 THEN 'n_tokens'
-                WHEN doc_id % 3 = 1 THEN 'width_px'
-                ELSE 'duration_ms' END AS feature,
-           CASE WHEN doc_id % 3 = 0 THEN CAST(len(string_split(text, ' ')) AS BIGINT)
-                WHEN doc_id % 3 = 1 THEN CAST(ceil(length(text) / 64.0) AS BIGINT)
-                ELSE CAST(floor(length(text) * 1000.0 / 8000.0) AS BIGINT) END AS value
-         FROM documents ORDER BY doc_id""",
-    "mm_decode_features" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("mm_decode_features", mmDecodeFeatures, shuffles = 1,
       """WITH h AS (
            SELECT doc_id, bucket, count(*) AS cnt FROM (
              SELECT doc_id, ascii(c) // 16 AS bucket
@@ -722,8 +682,9 @@ object Multimodal {
            CAST((SELECT h.cnt FROM h WHERE h.doc_id = d.doc_id
                  ORDER BY h.cnt DESC, h.bucket LIMIT 1) AS INT) AS top_count,
            CAST((SELECT count(*) FROM h WHERE h.doc_id = d.doc_id) AS INT) AS hist_nonzero
-         FROM documents d ORDER BY d.doc_id""",
-    "mm_frame_sample" ->
+         FROM documents d ORDER BY d.doc_id""")
+      .constructionJobsOk("stages the binary-asset table it decodes"),
+    KeySpec.batch("mm_frame_sample", mmFrameSample, shuffles = 1,
       """SELECT doc_id, CAST(i AS INT) AS frame_idx,
            CAST(length(substr(text, i * 256 + 1, 256)) AS INT) AS frame_bytes,
            CAST(list_sum(list_transform(regexp_extract_all(substr(text, i * 256 + 1, 256), '.'),
@@ -731,5 +692,55 @@ object Multimodal {
          FROM documents
          CROSS JOIN (SELECT unnest(range(0, 10000, 4)) AS i)
          WHERE i * 256 < length(text)
-         ORDER BY doc_id, frame_idx""")
+         ORDER BY doc_id, frame_idx"""),
+    KeySpec.batch("mm_audio_window", mmAudioWindow, shuffles = 1,
+      """SELECT doc_id, CAST(k AS INT) AS win_idx,
+           CAST(length(substr(text, k * 64 + 1, 128)) AS INT) AS n_samples,
+           CAST(list_sum(list_transform(
+             regexp_extract_all(substr(text, k * 64 + 1, 128), '.'),
+             c -> CAST((ascii(c) - 128) * (ascii(c) - 128) AS BIGINT)))
+             AS BIGINT) AS energy,
+           CAST(list_max(list_transform(
+             regexp_extract_all(substr(text, k * 64 + 1, 128), '.'),
+             c -> CAST(abs(ascii(c) - 128) AS BIGINT))) AS BIGINT) AS peak
+         FROM documents
+         CROSS JOIN (SELECT unnest(range(0, 10000)) AS k)
+         WHERE k * 64 < length(text)
+         ORDER BY doc_id, win_idx"""),
+    KeySpec.batch("mm_phash_neardup", mmPhashNeardup,
+      // band self-join exchange + pair distinct (hash attachments fold
+      // to broadcasts at audit scale; the sort rides the distinct), +1
+      // (r15) for Tables.parallelizeKernel's hash repartition of the
+      // single-file documents scan ahead of the decode
+      shuffles = 3, phashOracleSql),
+    KeySpec.batch("mm_phash_wide", mmPhashWide,
+      // same pipeline at the 128-bit operating point — same two
+      // exchanges (band self-join + pair distinct)
+      shuffles = 2, phashWideOracleSql)
+      .codegenAbsentOk("the audit scale plants no 128-bit duplicates, so AQE " +
+        "replaces the empty pair search with an EmptyRelation"),
+    KeySpec.batch("mm_phash_band_stats", mmPhashBandStats,
+      // (band,bval) partial-agg exchange + band re-agg + output sort
+      shuffles = 3, phashBandStatsOracleSql),
+    KeySpec.batch("mm_phash_incremental", mmPhashIncremental,
+      // llm_incremental_neardup's pipeline shape over phash
+      // bands (media leg)
+      shuffles = 6, phashIncrementalOracleSql)
+      .constructionJobsOk("first touch of new content stages the base " +
+        "media corpus's phash band index (bands + hash store) it then bands " +
+        "the delta against — the media-side leg of the same pattern")
+      // stages phash_band_index_v1
+      .reads("mm_phash_incremental"),
+    KeySpec.batch("mm_modality_dispatch", mmModalityDispatch, shuffles = 1,
+      """SELECT doc_id,
+           CASE WHEN doc_id % 3 = 0 THEN 'text/plain'
+                WHEN doc_id % 3 = 1 THEN 'image/fake'
+                ELSE 'audio/fake' END AS mime,
+           CASE WHEN doc_id % 3 = 0 THEN 'n_tokens'
+                WHEN doc_id % 3 = 1 THEN 'width_px'
+                ELSE 'duration_ms' END AS feature,
+           CASE WHEN doc_id % 3 = 0 THEN CAST(len(string_split(text, ' ')) AS BIGINT)
+                WHEN doc_id % 3 = 1 THEN CAST(ceil(length(text) / 64.0) AS BIGINT)
+                ELSE CAST(floor(length(text) * 1000.0 / 8000.0) AS BIGINT) END AS value
+         FROM documents ORDER BY doc_id"""))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables, Det}
+import graft.{KeySpec, QFn, Tables, Det}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -449,89 +449,98 @@ object Relational {
 
   // ------------------------------------------------------------ registry
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "scan_parquet" -> scanParquet,
-    "scan_pruned" -> scanPruned,
-    "scan_filter_pushdown" -> scanFilterPushdown,
-    "source_csv_roundtrip" -> sourceCsvRoundtrip,
-    "source_json_roundtrip" -> sourceJsonRoundtrip,
-    "source_orc_roundtrip" -> sourceOrcRoundtrip,
-    "source_text_roundtrip" -> sourceTextRoundtrip,
-    "project_arith" -> projectArith,
-    "filter_conj" -> filterConj,
-    "filter_null_semantics" -> filterNullSemantics,
-    "join_inner_equi" -> joinInnerEqui,
-    "join_broadcast" -> joinBroadcast,
-    "join_left_right_full" -> joinOuter,
-    "join_semi_anti" -> joinSemiAnti,
-    "join_theta_range" -> joinThetaRange,
-    "join_theta_prefix" -> joinThetaPrefix,
-    "join_cross" -> joinCross,
-    "join_asof" -> joinAsof,
-    "join_asof_forward" -> joinAsofForward,
-    "join_asof_nearest" -> joinAsofNearest,
-    "join_asof_tolerance" -> joinAsofTolerance,
-    "join_interval" -> joinInterval,
-    "agg_pricing_summary" -> aggPricingSummary,
-    "agg_distinct" -> aggDistinct,
-    "agg_approx_distinct" -> aggApproxDistinct,
-    "agg_rollup_cube_sets" -> aggRollupCubeSets,
-    "agg_stats" -> aggStats,
-    "sort_multi" -> sortMulti,
-    "limit_topk" -> limitTopk,
-    "set_union_all" -> setOps)
+  /** Oracle of `join_theta_range` and `join_theta_prefix`. */
+  private val thetaPairsSql: String =
+    """SELECT a.p_brand AS p_brand, count(*) AS n_pairs,
+           CAST(sum(CAST(b.p_size - a.p_size AS BIGINT)) AS DOUBLE) / count(*) AS avg_gap
+         FROM part a JOIN part b ON a.p_brand = b.p_brand AND a.p_size < b.p_size
+         GROUP BY a.p_brand ORDER BY a.p_brand"""
 
-  val oracles: Seq[(String, String)] = Seq(
-    "scan_parquet" ->
-      s"""SELECT count(*) AS n_rows, ${sqlSum2("l_quantity")} AS sum_qty FROM lineitem""",
-    "scan_pruned" ->
-      "SELECT l_orderkey, l_quantity FROM lineitem ORDER BY 1, 2",
-    "source_csv_roundtrip" ->
-      s"""SELECT l_returnflag, count(*) AS n, ${sqlSum2("l_quantity")} AS sum_qty
+  /** Oracle of `source_csv_roundtrip`, `source_json_roundtrip` and `source_orc_roundtrip`. */
+  private val roundtripSql: String =
+    s"""SELECT l_returnflag, count(*) AS n, ${sqlSum2("l_quantity")} AS sum_qty
           FROM lineitem WHERE l_orderkey % 50 = 0
-          GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "source_json_roundtrip" ->
-      s"""SELECT l_returnflag, count(*) AS n, ${sqlSum2("l_quantity")} AS sum_qty
-          FROM lineitem WHERE l_orderkey % 50 = 0
-          GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "source_orc_roundtrip" ->
-      s"""SELECT l_returnflag, count(*) AS n, ${sqlSum2("l_quantity")} AS sum_qty
-          FROM lineitem WHERE l_orderkey % 50 = 0
-          GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "source_text_roundtrip" ->
-      """SELECT count(*) AS n_lines, CAST(sum(len(text)) AS BIGINT) AS n_chars
-         FROM documents""",
-    "scan_filter_pushdown" ->
+          GROUP BY l_returnflag ORDER BY l_returnflag"""
+
+  /** Oracle of `join_asof` and `join_asof_native`. */
+  val asofBackwardSql: String =
+    """SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
+           CAST((SELECT max(c.ts) FROM events c
+             WHERE c.event_type = 'click' AND c.user_id = p.user_id AND c.ts <= p.ts) AS TIMESTAMP) AS last_click_ts
+         FROM events p WHERE p.event_type = 'purchase' ORDER BY p.event_id"""
+
+  /** Oracle of `join_asof_forward` and `join_asof_forward_native`. */
+  val asofForwardSql: String =
+    """SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
+           (SELECT min(CAST(c.ts AS TIMESTAMP)) FROM events c
+             WHERE c.event_type = 'click' AND c.user_id = p.user_id
+               AND CAST(c.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP)) AS next_click_ts
+         FROM events p WHERE p.event_type = 'purchase' ORDER BY p.event_id"""
+
+  /** Oracle of `join_asof_tolerance` and `join_asof_tolerance_native`. */
+  val asofToleranceSql: String =
+    """SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
+           (SELECT max(CAST(c.ts AS TIMESTAMP)) FROM events c
+             WHERE c.event_type = 'click' AND c.user_id = p.user_id
+               AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP)
+               AND CAST(c.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP) - INTERVAL 1 HOUR)
+             AS last_click_1h
+         FROM events p WHERE p.event_type = 'purchase' ORDER BY p.event_id"""
+
+  /** Oracle of `join_interval` and `join_range_bucketed`. */
+  val intervalJoinSql: String =
+    s"""SELECT o_orderpriority, count(*) AS n, ${sqlSum2("l_quantity")} AS sum_qty
+          FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+            AND l_shipdate >= o_orderdate AND l_shipdate < o_orderdate + INTERVAL 30 DAY
+          GROUP BY o_orderpriority ORDER BY o_orderpriority"""
+
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("scan_parquet", scanParquet, shuffles = 1,
+      s"""SELECT count(*) AS n_rows, ${sqlSum2("l_quantity")} AS sum_qty FROM lineitem"""),
+    KeySpec.batch("scan_pruned", scanPruned, shuffles = 1,
+      "SELECT l_orderkey, l_quantity FROM lineitem ORDER BY 1, 2"),
+    KeySpec.batch("scan_filter_pushdown", scanFilterPushdown, shuffles = 2,
       s"""SELECT l_returnflag, count(*) AS n, ${sqlSum2("l_extendedprice")} AS sum_price
           FROM lineitem WHERE l_shipdate >= TIMESTAMP '1998-01-01'
-          GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "project_arith" ->
+          GROUP BY l_returnflag ORDER BY l_returnflag""")
+      .pushdownRequired("the key exists to prove parquet filter pushdown"),
+    KeySpec.batch("source_csv_roundtrip", sourceCsvRoundtrip, shuffles = 2, roundtripSql)
+      .constructionJobsOk("stages the CSV it then reads"),
+    KeySpec.batch("source_json_roundtrip", sourceJsonRoundtrip, shuffles = 2, roundtripSql)
+      .constructionJobsOk("stages the JSON it then reads"),
+    KeySpec.batch("source_orc_roundtrip", sourceOrcRoundtrip, shuffles = 2, roundtripSql)
+      .constructionJobsOk("stages the ORC it then reads"),
+    KeySpec.batch("source_text_roundtrip", sourceTextRoundtrip, shuffles = 1,
+      """SELECT count(*) AS n_lines, CAST(sum(len(text)) AS BIGINT) AS n_chars
+         FROM documents""")
+      .constructionJobsOk("stages the text file it then reads"),
+    KeySpec.batch("project_arith", projectArith, shuffles = 1,
       """SELECT l_orderkey, l_linenumber,
            l_extendedprice * (1 - l_discount) AS disc_price,
            l_extendedprice * (1 - l_discount) * (1 + l_tax) AS charge,
            l_quantity * l_extendedprice AS qty_price
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
-    "filter_conj" ->
+         FROM lineitem ORDER BY l_orderkey, l_linenumber"""),
+    KeySpec.batch("filter_conj", filterConj, shuffles = 1,
       """SELECT * FROM part
          WHERE (p_size BETWEEN 5 AND 20 AND p_type IN ('ECONOMY','SMALL')
                 AND p_name LIKE '%bolt%')
             OR (NOT p_brand = 'Brand#1' AND p_retailprice > 910.0)
-         ORDER BY p_partkey""",
-    "filter_null_semantics" ->
+         ORDER BY p_partkey"""),
+    KeySpec.batch("filter_null_semantics", filterNullSemantics, shuffles = 1,
       """SELECT count(CASE WHEN dn IS NULL THEN 1 END) AS n_null,
            count(CASE WHEN dn IS NOT NULL THEN 1 END) AS n_not_null,
            count(CASE WHEN dn IS NOT DISTINCT FROM 0.05 THEN 1 END) AS n_nullsafe_eq,
            count(CASE WHEN dn IS NOT DISTINCT FROM CAST(NULL AS DOUBLE) THEN 1 END) AS n_nullsafe_null
-         FROM (SELECT CASE WHEN l_discount = 0.0 THEN NULL ELSE l_discount END AS dn FROM lineitem)""",
-    "join_inner_equi" ->
+         FROM (SELECT CASE WHEN l_discount = 0.0 THEN NULL ELSE l_discount END AS dn FROM lineitem)"""),
+    KeySpec.batch("join_inner_equi", joinInnerEqui, shuffles = 2,
       s"""SELECT c_mktsegment, count(*) AS n_orders, ${sqlSum2("o_totalprice")} AS sum_total
           FROM orders JOIN customer ON o_custkey = c_custkey
-          GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "join_broadcast" ->
+          GROUP BY c_mktsegment ORDER BY c_mktsegment"""),
+    KeySpec.batch("join_broadcast", joinBroadcast, shuffles = 2,
       s"""SELECT p_brand, count(*) AS n, ${sqlSum4("l_extendedprice * (1 - l_discount)")} AS revenue
           FROM lineitem JOIN part ON l_partkey = p_partkey
-          GROUP BY p_brand ORDER BY p_brand""",
-    "join_left_right_full" ->
+          GROUP BY p_brand ORDER BY p_brand"""),
+    KeySpec.batch("join_left_right_full", joinOuter, shuffles = 4,
       s"""WITH l AS (SELECT c_custkey, c_mktsegment FROM customer WHERE c_custkey % 3 <> 0),
             r AS (SELECT o_custkey, count(*) AS n_orders, ${sqlSum2("o_totalprice")} AS sum_price
                   FROM orders WHERE o_custkey % 3 <> 1 GROUP BY o_custkey)
@@ -543,48 +552,26 @@ object Relational {
           UNION ALL
           SELECT 'full', coalesce(c_custkey, o_custkey), c_mktsegment, n_orders, sum_price
             FROM l FULL JOIN r ON c_custkey = o_custkey
-          ORDER BY jt, custkey""",
-    "join_semi_anti" ->
+          ORDER BY jt, custkey"""),
+    KeySpec.batch("join_semi_anti", joinSemiAnti, shuffles = 1,
       """SELECT 'semi' AS jt, c_custkey, c_name FROM customer
          WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
          UNION ALL
          SELECT 'anti', c_custkey, c_name FROM customer
          WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-         ORDER BY jt, c_custkey""",
-    "join_theta_range" ->
-      """SELECT a.p_brand AS p_brand, count(*) AS n_pairs,
-           CAST(sum(CAST(b.p_size - a.p_size AS BIGINT)) AS DOUBLE) / count(*) AS avg_gap
-         FROM part a JOIN part b ON a.p_brand = b.p_brand AND a.p_size < b.p_size
-         GROUP BY a.p_brand ORDER BY a.p_brand""",
-    // deliberately the NAIVE pair enumeration: the oracle verifies the
-    // prefix-sum rewrite against the pair semantics it replaces
-    "join_theta_prefix" ->
-      """SELECT a.p_brand AS p_brand, count(*) AS n_pairs,
-           CAST(sum(CAST(b.p_size - a.p_size AS BIGINT)) AS DOUBLE) / count(*) AS avg_gap
-         FROM part a JOIN part b ON a.p_brand = b.p_brand AND a.p_size < b.p_size
-         GROUP BY a.p_brand ORDER BY a.p_brand""",
-    "join_cross" ->
-      "SELECT r_name, n_name FROM region CROSS JOIN nation ORDER BY r_name, n_name",
-    "join_asof" ->
-      """SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
-           CAST((SELECT max(c.ts) FROM events c
-             WHERE c.event_type = 'click' AND c.user_id = p.user_id AND c.ts <= p.ts) AS TIMESTAMP) AS last_click_ts
-         FROM events p WHERE p.event_type = 'purchase' ORDER BY p.event_id""",
-    "join_asof_forward" ->
-      """SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
-           (SELECT min(CAST(c.ts AS TIMESTAMP)) FROM events c
-             WHERE c.event_type = 'click' AND c.user_id = p.user_id
-               AND CAST(c.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP)) AS next_click_ts
-         FROM events p WHERE p.event_type = 'purchase' ORDER BY p.event_id""",
-    "join_asof_tolerance" ->
-      """SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
-           (SELECT max(CAST(c.ts AS TIMESTAMP)) FROM events c
-             WHERE c.event_type = 'click' AND c.user_id = p.user_id
-               AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP)
-               AND CAST(c.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP) - INTERVAL 1 HOUR)
-             AS last_click_1h
-         FROM events p WHERE p.event_type = 'purchase' ORDER BY p.event_id""",
-    "join_asof_nearest" ->
+         ORDER BY jt, c_custkey"""),
+    KeySpec.batch("join_theta_range", joinThetaRange, shuffles = 2, thetaPairsSql)
+      .crossJoinOk("an intentionally bounded theta join"),
+    KeySpec.batch("join_theta_prefix", joinThetaPrefix, shuffles = 3,
+      // deliberately the NAIVE pair enumeration: the oracle verifies the
+      // prefix-sum rewrite against the pair semantics it replaces
+      thetaPairsSql),
+    KeySpec.batch("join_cross", joinCross, shuffles = 1,
+      "SELECT r_name, n_name FROM region CROSS JOIN nation ORDER BY r_name, n_name")
+      .crossJoinOk("the operator IS a cross product"),
+    KeySpec.batch("join_asof", joinAsof, shuffles = 2, asofBackwardSql),
+    KeySpec.batch("join_asof_forward", joinAsofForward, shuffles = 2, asofForwardSql),
+    KeySpec.batch("join_asof_nearest", joinAsofNearest, shuffles = 2,
       """WITH p AS (
            SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
              (SELECT max(CAST(c.ts AS TIMESTAMP)) FROM events c
@@ -600,13 +587,10 @@ object Relational {
                 WHEN epoch_us(ts) - epoch_us(prev_ts)
                   <= epoch_us(next_ts) - epoch_us(ts) THEN prev_ts
                 ELSE next_ts END AS near_click_ts
-         FROM p ORDER BY event_id""",
-    "join_interval" ->
-      s"""SELECT o_orderpriority, count(*) AS n, ${sqlSum2("l_quantity")} AS sum_qty
-          FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-            AND l_shipdate >= o_orderdate AND l_shipdate < o_orderdate + INTERVAL 30 DAY
-          GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "agg_pricing_summary" ->
+         FROM p ORDER BY event_id"""),
+    KeySpec.batch("join_asof_tolerance", joinAsofTolerance, shuffles = 2, asofToleranceSql),
+    KeySpec.batch("join_interval", joinInterval, shuffles = 2, intervalJoinSql),
+    KeySpec.batch("agg_pricing_summary", aggPricingSummary, shuffles = 2,
       s"""SELECT l_returnflag, l_linestatus,
             ${sqlSum2("l_quantity")} AS sum_qty,
             ${sqlSum2("l_extendedprice")} AS sum_base_price,
@@ -617,16 +601,19 @@ object Relational {
             ${sqlAvg2("l_discount")} AS avg_disc,
             count(*) AS count_order
           FROM lineitem WHERE l_shipdate <= TIMESTAMP '2001-09-01'
-          GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""",
-    "agg_distinct" ->
+          GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus"""),
+    KeySpec.batch("agg_distinct", aggDistinct, shuffles = 3,
       """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
            CAST(sum(DISTINCT CAST(l_quantity AS DECIMAL(30,2))) AS DOUBLE) AS sum_dist_qty,
            count(*) AS n
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    // the portable HLL twin: same md5 register slicing, same exact-
-    // integer harmonic denominator, same literal-for-literal double
-    // chain — see Sketches.aggApproxDistinctHll
-    "agg_approx_distinct" ->
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
+    KeySpec.batch("agg_approx_distinct", aggApproxDistinct,
+      // r8 portable HLL: distinct pre-agg + register fold + per-group
+      // harmonic sum + the exact-count twin column (2-phase distinct)
+      shuffles = 6,
+      // the portable HLL twin: same md5 register slicing, same exact-
+      // integer harmonic denominator, same literal-for-literal double
+      // chain — see Sketches.aggApproxDistinctHll
       """WITH pairs AS (SELECT DISTINCT event_type, user_id::VARCHAR AS k FROM events),
          hashed AS (SELECT event_type,
              ('0x' || substr(md5(k), 1, 8))::UBIGINT % 512 AS idx,
@@ -654,15 +641,15 @@ object Relational {
          FROM est e JOIN (SELECT event_type, count(DISTINCT user_id) AS exact_users
                           FROM events GROUP BY event_type) x
            ON e.event_type = x.event_type
-         ORDER BY e.event_type""",
-    "agg_rollup_cube_sets" ->
+         ORDER BY e.event_type"""),
+    KeySpec.batch("agg_rollup_cube_sets", aggRollupCubeSets, shuffles = 2,
       s"""SELECT n_name, c_mktsegment, count(*) AS n, ${sqlSum2("c_acctbal")} AS sum_bal,
             CAST(GROUPING(n_name) AS BIGINT) AS g_nation,
             CAST(GROUPING(c_mktsegment) AS BIGINT) AS g_segment
           FROM customer JOIN nation ON c_nationkey = n_nationkey
           GROUP BY CUBE (n_name, c_mktsegment)
-          ORDER BY n_name NULLS FIRST, c_mktsegment NULLS FIRST""",
-    "agg_stats" ->
+          ORDER BY n_name NULLS FIRST, c_mktsegment NULLS FIRST"""),
+    KeySpec.batch("agg_stats", aggStats, shuffles = 8,
       s"""SELECT round(stddev_samp(l_extendedprice), 2) AS std_price,
             round(var_samp(l_extendedprice), 2) AS var_price,
             round(corr(l_extendedprice, l_quantity), 6) AS corr_pq,
@@ -679,14 +666,18 @@ object Relational {
             round(quantile_cont(l_extendedprice, 0.5), 3) AS median_price,
             ${sqlSum2("l_extendedprice")} AS s1,
             CAST(floor(sum(CAST(l_extendedprice * l_extendedprice AS DECIMAL(30,4)))) AS BIGINT) AS s2_int
-          FROM lineitem""",
-    "sort_multi" ->
+          FROM lineitem""")
+      .crossJoinOk("the GLOBAL Quantiles.exactQuantiles path: the constant pseudo-group " +
+        "key folds away, so its broadcast joins (1-row stats, <=nShards offset rows, " +
+        "<=|qs| position rows) surface as BNLJ — every build side is O(1); the grouped " +
+        "agg_percentile_exact stays a hash join"),
+    KeySpec.batch("sort_multi", sortMulti, shuffles = 1,
       """SELECT o_orderkey, nullif(o_orderpriority, '3-MEDIUM') AS pr, o_totalprice
-         FROM orders ORDER BY pr ASC NULLS FIRST, o_totalprice DESC, o_orderkey""",
-    "limit_topk" ->
+         FROM orders ORDER BY pr ASC NULLS FIRST, o_totalprice DESC, o_orderkey"""),
+    KeySpec.batch("limit_topk", limitTopk, shuffles = 0,
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""",
-    "set_union_all" ->
+         ORDER BY o_totalprice DESC, o_orderkey LIMIT 100"""),
+    KeySpec.batch("set_union_all", setOps, shuffles = 4,
       """WITH a AS (SELECT c_custkey, c_mktsegment FROM customer WHERE c_custkey % 2 = 0),
            b AS (SELECT c_custkey, c_mktsegment FROM customer WHERE c_custkey % 3 = 0)
          SELECT 'union_all' AS op, c_custkey, c_mktsegment FROM (SELECT * FROM a UNION ALL SELECT * FROM b)
@@ -696,5 +687,5 @@ object Relational {
          SELECT 'intersect', c_custkey, c_mktsegment FROM (SELECT * FROM a INTERSECT SELECT * FROM b)
          UNION ALL
          SELECT 'except', c_custkey, c_mktsegment FROM (SELECT * FROM a EXCEPT SELECT * FROM b)
-         ORDER BY op, c_custkey""")
+         ORDER BY op, c_custkey"""))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables}
+import graft.{KeySpec, QFn, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -228,16 +228,11 @@ object Sketches {
     perQ.reduce(_.unionByName(_)).orderBy("q")
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "agg_cms" -> aggCms,
-    "agg_hll_portable_merge" -> aggHllPortableMerge,
-    "agg_quantile_histogram" -> aggQuantileHistogram)
-
-  val oracles: Seq[(String, String)] = Seq(
-    // the oracle keeps the definitional per-ROW insertion form —
-    // counter (r, b) = number of rows whose key hashes there — which
-    // the Spark side's per-key pre-aggregation must equal exactly
-    "agg_cms" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("agg_cms", aggCms, shuffles = 3,
+      // the oracle keeps the definitional per-ROW insertion form —
+      // counter (r, b) = number of rows whose key hashes there — which
+      // the Spark side's per-key pre-aggregation must equal exactly
       s"""WITH li AS (SELECT l_suppkey::VARCHAR AS k FROM lineitem),
          rs AS (SELECT * FROM (VALUES (0), (1), (2), (3)) t(r)),
          cells AS (SELECT k, r,
@@ -250,11 +245,15 @@ object Sketches {
            FROM probes p, rs)
          SELECT pb.k AS k, min(s.cnt) AS est, max(pb.true_cnt) AS true_cnt
          FROM pb JOIN sketch s ON pb.r = s.r AND pb.b = s.b
-         GROUP BY pb.k ORDER BY k""",
-    // per-day register sketches, max-merged, next to the direct
-    // construction — the same md5 slicing and literal-for-literal
-    // double chain as agg_approx_distinct's oracle
-    "agg_hll_portable_merge" ->
+         GROUP BY pb.k ORDER BY k"""),
+    KeySpec.batch("agg_hll_portable_merge", aggHllPortableMerge,
+      // merged + direct registers + exact twin: three aggregate chains
+      // over the distinct (day, user) pre-agg; every post-register frame
+      // is ≤ m rows
+      shuffles = 8,
+      // per-day register sketches, max-merged, next to the direct
+      // construction — the same md5 slicing and literal-for-literal
+      // double chain as agg_approx_distinct's oracle
       """WITH pairs AS (SELECT DISTINCT CAST(ts AS DATE) AS day,
              user_id::VARCHAR AS k FROM events),
          hashed AS (SELECT day,
@@ -287,10 +286,14 @@ object Sketches {
              FROM direct))
          SELECT est_merged, est_direct,
            (SELECT count(DISTINCT user_id) FROM events) AS exact_users
-         FROM est_m, est_d""",
-    // identical IEEE sequence: double bin width, floor-assignment with
-    // last-bin clamp, ⌈q·n⌉ rank, linear interpolation inside the bin
-    "agg_quantile_histogram" ->
+         FROM est_m, est_d""")
+      .crossJoinOk("crosses 1-row aggregates — O(1) both sides"),
+    KeySpec.batch("agg_quantile_histogram", aggQuantileHistogram,
+      // two scan-aggregate passes + the 256-row histogram + 4 quantile
+      // probes over the bounded frame
+      shuffles = 4,
+      // identical IEEE sequence: double bin width, floor-assignment with
+      // last-bin clamp, ⌈q·n⌉ rank, linear interpolation inside the bin
       s"""WITH li AS (SELECT CAST(l_extendedprice AS DOUBLE) AS x FROM lineitem),
          stats AS (SELECT min(x) AS lo, max(x) AS hi, count(*) AS n FROM li),
          binned AS (SELECT CAST(least(floor((x - lo) / ((hi - lo) / 256)), 255) AS INT) AS bin
@@ -305,4 +308,5 @@ object Sketches {
          FROM qs, cum, stats
          WHERE cum_before < ceil(q * n) AND ceil(q * n) <= cum_before + cnt
          ORDER BY q""")
+      .crossJoinOk("crosses the 1-row stats and the 256-row counter table"))
 }

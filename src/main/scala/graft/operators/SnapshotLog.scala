@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import graft.{QFn, Tables}
+import graft.{KeySpec, QFn, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -211,10 +211,8 @@ object SnapshotLog {
       .select("custkey", "name", "acctbal").orderBy("custkey")
   }
 
-  val entries: Seq[(String, QFn)] = Seq("etl_snapshot_log" -> etlSnapshotLog)
-
-  val oracles: Seq[(String, String)] = Seq(
-    "etl_snapshot_log" ->
-      """SELECT c_custkey AS custkey, c_name AS name, c_acctbal AS acctbal
-         FROM customer ORDER BY custkey""")
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("etl_snapshot_log", etlSnapshotLog, shuffles = 1, SnapshotTable.baseVersionSql)
+      .constructionJobsOk("builds the 9-commit delta-action log fixture " +
+        "(slices + checkpoints + compaction) it then resolves through"))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import graft.{QFn, Tables}
+import graft.{KeySpec, QFn, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -584,51 +584,68 @@ object SnapshotTable {
       .select("custkey", "name", "acctbal").orderBy("custkey")
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "etl_snapshot_clone" -> etlSnapshotClone,
-    "etl_snapshot_restore" -> etlSnapshotRestore,
-    "etl_snapshot_read" -> etlSnapshotRead,
-    "etl_time_travel" -> etlTimeTravel,
-    "etl_snapshot_diff" -> etlSnapshotDiff,
-    "etl_snapshot_compact" -> etlSnapshotCompact,
-    "etl_snapshot_merge" -> etlSnapshotMerge,
-    "etl_snapshot_vacuum" -> etlSnapshotVacuum,
-    "etl_snapshot_prune" -> etlSnapshotPrune,
-    "etl_snapshot_add_column" -> etlSnapshotAddColumn)
+  /** Oracle of `etl_snapshot_read`, `etl_snapshot_clone`, `etl_snapshot_compact` and `etl_snapshot_vacuum`. */
+  private val latestVersionSql: String =
+    """WITH w AS (SELECT max(c_custkey) // 4 + 1 AS wd FROM customer)
+         SELECT c_custkey AS custkey,
+           CASE WHEN c_custkey % 5 = 0 AND c_custkey < wd
+                THEN c_name || '_v2' ELSE c_name END AS name,
+           CASE WHEN c_custkey % 5 = 0 AND c_custkey < wd
+                THEN c_acctbal + 100.0 ELSE c_acctbal END AS acctbal
+         FROM customer, w
+         UNION ALL
+         SELECT c_custkey + 10000000, 'new_customer', 0.0
+         FROM customer WHERE c_custkey % 7 = 0
+         ORDER BY custkey"""
 
-  val oracles: Seq[(String, String)] = Seq(
-    // recompute snapshot v1 from the base table: bucket-0-localized
-    // updates (same integer width arithmetic) + appended inserts
-    "etl_snapshot_read" ->
+  /** Oracle of `etl_time_travel`, `etl_snapshot_restore` and `etl_snapshot_log`. */
+  val baseVersionSql: String =
+    """SELECT c_custkey AS custkey, c_name AS name, c_acctbal AS acctbal
+         FROM customer ORDER BY custkey"""
+
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("etl_snapshot_clone", etlSnapshotClone, shuffles = 1,
+      // the shallow clone reads the source table's CURRENT snapshot
+      // through shared storage — same rows as etl_snapshot_read
+      // (compaction, if it committed first, is metadata-only)
+      latestVersionSql)
+      .constructionJobsOk("ensures the source table it then shallow-clones by reference"),
+    KeySpec.batch("etl_snapshot_restore", etlSnapshotRestore, shuffles = 1,
+      // RESTORE rolled the log tail back to the v0 snapshot: the
+      // untouched base projection, same as time travel to v0
+      baseVersionSql)
+      .constructionJobsOk("builds the staged table whose log tail it then rolls back"),
+    KeySpec.batch("etl_snapshot_read", etlSnapshotRead, shuffles = 1,
+      // recompute snapshot v1 from the base table: bucket-0-localized
+      // updates (same integer width arithmetic) + appended inserts
+      latestVersionSql)
+      .constructionJobsOk("builds the two-version manifest table it then snapshot-reads"),
+    KeySpec.batch("etl_time_travel", etlTimeTravel, shuffles = 1,
+      // snapshot v0 is the untouched base projection
+      baseVersionSql)
+      .constructionJobsOk("same staged manifest table, older version"),
+    KeySpec.batch("etl_snapshot_diff", etlSnapshotDiff, shuffles = 3,
+      // the v0->v1 change feed recomputed from the base table: the
+      // bucket-0-localized updates plus the appended inserts (the COW
+      // fixture produces no deletes)
       """WITH w AS (SELECT max(c_custkey) // 4 + 1 AS wd FROM customer)
-         SELECT c_custkey AS custkey,
-           CASE WHEN c_custkey % 5 = 0 AND c_custkey < wd
-                THEN c_name || '_v2' ELSE c_name END AS name,
-           CASE WHEN c_custkey % 5 = 0 AND c_custkey < wd
-                THEN c_acctbal + 100.0 ELSE c_acctbal END AS acctbal
-         FROM customer, w
+         SELECT c_custkey AS custkey, 'update' AS change,
+                c_name || '_v2' AS name, c_acctbal + 100.0 AS acctbal
+         FROM customer, w WHERE c_custkey % 5 = 0 AND c_custkey < wd
          UNION ALL
-         SELECT c_custkey + 10000000, 'new_customer', 0.0
+         SELECT c_custkey + 10000000, 'insert', 'new_customer', 0.0
          FROM customer WHERE c_custkey % 7 = 0
-         ORDER BY custkey""",
-    // compaction is metadata-only to readers: same rows as the
-    // pre-compaction snapshot, same oracle
-    "etl_snapshot_compact" ->
-      """WITH w AS (SELECT max(c_custkey) // 4 + 1 AS wd FROM customer)
-         SELECT c_custkey AS custkey,
-           CASE WHEN c_custkey % 5 = 0 AND c_custkey < wd
-                THEN c_name || '_v2' ELSE c_name END AS name,
-           CASE WHEN c_custkey % 5 = 0 AND c_custkey < wd
-                THEN c_acctbal + 100.0 ELSE c_acctbal END AS acctbal
-         FROM customer, w
-         UNION ALL
-         SELECT c_custkey + 10000000, 'new_customer', 0.0
-         FROM customer WHERE c_custkey % 7 = 0
-         ORDER BY custkey""",
-    // the three-clause MERGE recomputed from the base table: deletes
-    // drop, updates rewrite, inserts append — matched rows localized
-    // below 2·width by construction
-    "etl_snapshot_merge" ->
+         ORDER BY custkey""")
+      .constructionJobsOk("same staged manifest table, unit-diff read"),
+    KeySpec.batch("etl_snapshot_compact", etlSnapshotCompact, shuffles = 1,
+      // compaction is metadata-only to readers: same rows as the
+      // pre-compaction snapshot, same oracle
+      latestVersionSql)
+      .constructionJobsOk("rewrites the staged units into one and commits the new version"),
+    KeySpec.batch("etl_snapshot_merge", etlSnapshotMerge, shuffles = 1,
+      // the three-clause MERGE recomputed from the base table: deletes
+      // drop, updates rewrite, inserts append — matched rows localized
+      // below 2·width by construction
       """WITH w AS (SELECT max(c_custkey) // 4 + 1 AS wd FROM customer)
          SELECT c_custkey AS custkey,
            CASE WHEN c_custkey % 10 = 3 AND c_custkey < 2 * wd
@@ -640,74 +657,34 @@ object SnapshotTable {
          UNION ALL
          SELECT c_custkey + 20000000, 'merged_customer', 1.0
          FROM customer WHERE c_custkey % 11 = 0
-         ORDER BY custkey""",
-    // vacuum is invisible to the latest snapshot: same rows as the
-    // post-upsert read — the deletion of unreferenced units is pinned
-    // structurally by SnapshotTableSpec
-    "etl_snapshot_vacuum" ->
-      """WITH w AS (SELECT max(c_custkey) // 4 + 1 AS wd FROM customer)
-         SELECT c_custkey AS custkey,
-           CASE WHEN c_custkey % 5 = 0 AND c_custkey < wd
-                THEN c_name || '_v2' ELSE c_name END AS name,
-           CASE WHEN c_custkey % 5 = 0 AND c_custkey < wd
-                THEN c_acctbal + 100.0 ELSE c_acctbal END AS acctbal
-         FROM customer, w
-         UNION ALL
-         SELECT c_custkey + 10000000, 'new_customer', 0.0
-         FROM customer WHERE c_custkey % 7 = 0
-         ORDER BY custkey""",
-    // the shallow clone reads the source table's CURRENT snapshot
-    // through shared storage — same rows as etl_snapshot_read
-    // (compaction, if it committed first, is metadata-only)
-    "etl_snapshot_clone" ->
-      """WITH w AS (SELECT max(c_custkey) // 4 + 1 AS wd FROM customer)
-         SELECT c_custkey AS custkey,
-           CASE WHEN c_custkey % 5 = 0 AND c_custkey < wd
-                THEN c_name || '_v2' ELSE c_name END AS name,
-           CASE WHEN c_custkey % 5 = 0 AND c_custkey < wd
-                THEN c_acctbal + 100.0 ELSE c_acctbal END AS acctbal
-         FROM customer, w
-         UNION ALL
-         SELECT c_custkey + 10000000, 'new_customer', 0.0
-         FROM customer WHERE c_custkey % 7 = 0
-         ORDER BY custkey""",
-    // RESTORE rolled the log tail back to the v0 snapshot: the
-    // untouched base projection, same as time travel to v0
-    "etl_snapshot_restore" ->
-      """SELECT c_custkey AS custkey, c_name AS name, c_acctbal AS acctbal
-         FROM customer ORDER BY custkey""",
-    // the stats-pruned read is just the predicate applied to the base
-    // — pruning must be invisible to results (it only skips units the
-    // predicate could never match; the structural claim is spec-pinned)
-    "etl_snapshot_prune" ->
+         ORDER BY custkey""")
+      .constructionJobsOk("builds its own staged table, discovers the " +
+        "touched buckets (<=NBuckets ints collected), rewrites them COW"),
+    KeySpec.batch("etl_snapshot_vacuum", etlSnapshotVacuum, shuffles = 1,
+      // vacuum is invisible to the latest snapshot: same rows as the
+      // post-upsert read — the deletion of unreferenced units is pinned
+      // structurally by SnapshotTableSpec
+      latestVersionSql)
+      .constructionJobsOk("builds the staged table it then vacuums and reads"),
+    KeySpec.batch("etl_snapshot_prune", etlSnapshotPrune, shuffles = 1,
+      // the stats-pruned read is just the predicate applied to the base
+      // — pruning must be invisible to results (it only skips units the
+      // predicate could never match; the structural claim is spec-pinned)
       """WITH w AS (SELECT max(c_custkey) // 4 + 1 AS wd FROM customer)
          SELECT c_custkey AS custkey, c_name AS name, c_acctbal AS acctbal
          FROM customer, w WHERE c_custkey < wd // 2
-         ORDER BY custkey""",
-    // ADD COLUMN: pre-evolution rows read back with segment NULL, the
-    // appended unit carries its values
-    "etl_snapshot_add_column" ->
+         ORDER BY custkey""")
+      .constructionJobsOk("writes the stats-annotated units, computing " +
+        "per-unit min/max as a writer does at file close"),
+    KeySpec.batch("etl_snapshot_add_column", etlSnapshotAddColumn, shuffles = 1,
+      // ADD COLUMN: pre-evolution rows read back with segment NULL, the
+      // appended unit carries its values
       """SELECT c_custkey AS custkey, c_name AS name,
            c_acctbal AS acctbal, CAST(NULL AS VARCHAR) AS segment
          FROM customer
          UNION ALL
          SELECT c_custkey + 30000000, c_name, c_acctbal, c_mktsegment
          FROM customer WHERE c_custkey % 9 = 0
-         ORDER BY custkey""",
-    // snapshot v0 is the untouched base projection
-    "etl_time_travel" ->
-      """SELECT c_custkey AS custkey, c_name AS name, c_acctbal AS acctbal
-         FROM customer ORDER BY custkey""",
-    // the v0->v1 change feed recomputed from the base table: the
-    // bucket-0-localized updates plus the appended inserts (the COW
-    // fixture produces no deletes)
-    "etl_snapshot_diff" ->
-      """WITH w AS (SELECT max(c_custkey) // 4 + 1 AS wd FROM customer)
-         SELECT c_custkey AS custkey, 'update' AS change,
-                c_name || '_v2' AS name, c_acctbal + 100.0 AS acctbal
-         FROM customer, w WHERE c_custkey % 5 = 0 AND c_custkey < wd
-         UNION ALL
-         SELECT c_custkey + 10000000, 'insert', 'new_customer', 0.0
-         FROM customer WHERE c_custkey % 7 = 0
          ORDER BY custkey""")
+      .constructionJobsOk("stages the two-schema-generation table it then reconciles"))
 }

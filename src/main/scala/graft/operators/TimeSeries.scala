@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables, Det}
+import graft.{KeySpec, QFn, Tables, Det}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -314,23 +314,12 @@ object TimeSeries {
       .orderBy("bar", "event_type")
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "ts_anomaly" -> tsAnomaly,
-    "ts_ewma" -> tsEwma,
-    "ts_drawdown" -> tsDrawdown,
-    "ts_ohlc_bars" -> tsOhlcBars,
-    "ts_vwap" -> tsVwap,
-    "ts_gapfill" -> tsGapfill,
-    "ts_interpolate" -> tsInterpolate,
-    "ts_twap" -> tsTwap,
-    "ts_corr_types" -> tsCorrTypes,
-    "ts_realized_vol" -> tsRealizedVol,
-    "ts_linreg_trend" -> tsLinregTrend)
-
-  val oracles: Seq[(String, String)] = Seq(
-    // identical exact-integer rolling moments (milli-unit quantized
-    // bar averages) → both engines derive z from the same integers
-    "ts_anomaly" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("ts_anomaly", tsAnomaly,
+      // hourly pre-agg + the event_type rolling window + final sort
+      shuffles = 3,
+      // identical exact-integer rolling moments (milli-unit quantized
+      // bar averages) → both engines derive z from the same integers
       s"""WITH hourly AS (
            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
              ${sqlAvg2("value")} AS hour_avg,
@@ -350,10 +339,10 @@ object TimeSeries {
                THEN ${sqlFq("(CAST(q AS DOUBLE) - CAST(s AS DOUBLE) / n) / sqrt((CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n) / (n-1))", 6)} END AS z
            FROM w WHERE n >= 12)
          SELECT bar, event_type, hour_avg, z FROM z
-         WHERE abs(z) > 2.5 ORDER BY bar, event_type""",
-    // the same ordered fold, elementwise: 0-prepended window list,
-    // left-to-right acc*0.8 + x*0.2 — identical IEEE sequence
-    "ts_ewma" ->
+         WHERE abs(z) > 2.5 ORDER BY bar, event_type"""),
+    KeySpec.batch("ts_ewma", tsEwma, shuffles = 3,
+      // the same ordered fold, elementwise: 0-prepended window list,
+      // left-to-right acc*0.8 + x*0.2 — identical IEEE sequence
       s"""WITH h AS (
            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
              ${sqlAvg2("value")} AS px
@@ -365,8 +354,8 @@ object TimeSeries {
            FROM h)
          SELECT bar, event_type,
            ${sqlFq("list_reduce(list_prepend(CAST(0.0 AS DOUBLE), l), (acc, x) -> acc * CAST(0.8 AS DOUBLE) + x * CAST(0.2 AS DOUBLE))", 6)} AS ewma
-         FROM wl ORDER BY bar, event_type""",
-    "ts_drawdown" ->
+         FROM wl ORDER BY bar, event_type"""),
+    KeySpec.batch("ts_drawdown", tsDrawdown, shuffles = 2,
       """WITH t AS (
            SELECT event_type, event_id, value, CAST(ts AS TIMESTAMP) AS tts,
              max(value) OVER (PARTITION BY event_type
@@ -380,8 +369,8 @@ object TimeSeries {
            FROM t)
          SELECT event_type, event_id AS trough_event,
            round(dd, 6) AS max_drawdown, peak AS peak_value
-         FROM dd WHERE rk = 1 ORDER BY event_type""",
-    "ts_ohlc_bars" ->
+         FROM dd WHERE rk = 1 ORDER BY event_type"""),
+    KeySpec.batch("ts_ohlc_bars", tsOhlcBars, shuffles = 2,
       """WITH t AS (
            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
              CAST(ts AS TIMESTAMP) AS tts, event_id, value,
@@ -395,16 +384,16 @@ object TimeSeries {
            max(value) AS high, min(value) AS low,
            max(CASE WHEN rn_d = 1 THEN value END) AS close,
            count(*) AS n_ticks
-         FROM t GROUP BY bar, event_type ORDER BY bar, event_type""",
-    "ts_vwap" ->
+         FROM t GROUP BY bar, event_type ORDER BY bar, event_type"""),
+    KeySpec.batch("ts_vwap", tsVwap, shuffles = 2,
       s"""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar,
             CASE WHEN sum(CAST(props->>'$$.k' AS INT)) = 0 THEN NULL
               ELSE ${sqlSum2("value * CAST(props->>'$.k' AS INT)")} / sum(CAST(props->>'$$.k' AS INT))
             END AS vwap,
             CAST(sum(CAST(props->>'$$.k' AS INT)) AS BIGINT) AS total_size,
             count(*) AS n_ticks
-          FROM events GROUP BY 1 ORDER BY bar""",
-    "ts_gapfill" ->
+          FROM events GROUP BY 1 ORDER BY bar"""),
+    KeySpec.batch("ts_gapfill", tsGapfill, shuffles = 4,
       s"""WITH hourly AS (
             SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
               ${sqlAvg2("value")} AS avg_value
@@ -422,72 +411,10 @@ object TimeSeries {
               PARTITION BY s.event_type ORDER BY s.bar
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_value
           FROM spine s LEFT JOIN hourly h ON s.bar = h.bar AND s.event_type = h.event_type
-          ORDER BY s.bar, s.event_type""",
-    "ts_linreg_trend" ->
-      s"""WITH t AS (
-            SELECT event_type,
-              CAST(epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP)))
-                   - epoch_us(TIMESTAMP '2024-01-01 00:00:00') AS DOUBLE)
-                / CAST(3600000000 AS DOUBLE) AS x,
-              value AS y
-            FROM events)
-          SELECT event_type, count(*) AS n,
-            ${sqlFq(s"""(count(*) * ${sqlSum6("x * y")} - ${sqlSum6("x")} * ${sqlSum6("y")})
-              / (count(*) * ${sqlSum6("x * x")} - ${sqlSum6("x")} * ${sqlSum6("x")})""", 9)}
-              AS slope,
-            ${sqlFq(s"""(${sqlSum6("y")}
-              - (count(*) * ${sqlSum6("x * y")} - ${sqlSum6("x")} * ${sqlSum6("y")})
-                / (count(*) * ${sqlSum6("x * x")} - ${sqlSum6("x")} * ${sqlSum6("x")})
-                * ${sqlSum6("x")}) / count(*)""", 6)} AS intercept
-          FROM t GROUP BY event_type ORDER BY event_type""",
-    "ts_realized_vol" ->
-      s"""WITH t AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_id,
-              value, epoch_us(CAST(ts AS TIMESTAMP)) AS uts
-            FROM events),
-          x AS (
-            SELECT bar, value,
-              lead(value) OVER (PARTITION BY bar ORDER BY uts, event_id) AS nv
-            FROM t),
-          r AS (
-            SELECT bar,
-              CASE WHEN value > 0 AND nv > 0 THEN round(ln(nv / value), 6) END AS r
-            FROM x)
-          SELECT bar, ${sqlFq("sqrt(" + sqlSum6("r * r") + ")", 6)} AS rv,
-            count(r) AS n_returns
-          FROM r GROUP BY bar ORDER BY bar""",
-    "ts_corr_types" ->
-      s"""WITH hourly AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-              ${sqlAvg2("value")} AS v
-            FROM events GROUP BY 1, 2),
-          j AS (
-            SELECT x.v AS x, y.v AS y
-            FROM (SELECT bar, v FROM hourly WHERE event_type = 'purchase') x
-            JOIN (SELECT bar, v FROM hourly WHERE event_type = 'click') y
-              USING (bar))
-          SELECT count(*) AS n_bars,
-            ${sqlFq(s"""(count(*) * ${sqlSum6("x * y")} - ${sqlSum6("x")} * ${sqlSum6("y")})
-              / sqrt((count(*) * ${sqlSum6("x * x")} - ${sqlSum6("x")} * ${sqlSum6("x")})
-                   * (count(*) * ${sqlSum6("y * y")} - ${sqlSum6("y")} * ${sqlSum6("y")}))""",
-              6)} AS corr
-          FROM j""",
-    "ts_twap" ->
-      s"""WITH t AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_id, value,
-              epoch_us(CAST(ts AS TIMESTAMP)) AS uts
-            FROM events),
-          x AS (
-            SELECT bar, value,
-              coalesce(lead(uts) OVER (PARTITION BY bar ORDER BY uts, event_id),
-                epoch_us(bar + INTERVAL 1 HOUR)) - uts AS dt
-            FROM t)
-          SELECT bar,
-            CASE WHEN sum(dt) = 0 THEN NULL
-                 ELSE ${sqlSum2("value * dt")} / sum(dt) END AS twap,
-            count(*) AS n_ticks
-          FROM x GROUP BY bar ORDER BY bar""",
-    "ts_interpolate" ->
+          ORDER BY s.bar, s.event_type""")
+      .crossJoinOk("crosses the generated hour spine with the <=5-value event-type dim — " +
+        "O(1)-size build side"),
+    KeySpec.batch("ts_interpolate", tsInterpolate, shuffles = 4,
       s"""WITH hourly AS (
             SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
               ${sqlAvg2("value")} AS v
@@ -517,4 +444,69 @@ object TimeSeries {
           SELECT bar, event_type, CAST(v IS NULL AS INT) AS is_gap,
             ${sqlFq("CASE WHEN v IS NOT NULL THEN v ELSE pv + (nv - pv) * (CAST(idx - pi AS DOUBLE) / CAST(ni - pi AS DOUBLE)) END", 6)} AS interp_value
           FROM f ORDER BY bar, event_type""")
+      .crossJoinOk("shares ts_gapfill's spine × event-type-dim cross"),
+    KeySpec.batch("ts_twap", tsTwap, shuffles = 2,
+      s"""WITH t AS (
+            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_id, value,
+              epoch_us(CAST(ts AS TIMESTAMP)) AS uts
+            FROM events),
+          x AS (
+            SELECT bar, value,
+              coalesce(lead(uts) OVER (PARTITION BY bar ORDER BY uts, event_id),
+                epoch_us(bar + INTERVAL 1 HOUR)) - uts AS dt
+            FROM t)
+          SELECT bar,
+            CASE WHEN sum(dt) = 0 THEN NULL
+                 ELSE ${sqlSum2("value * dt")} / sum(dt) END AS twap,
+            count(*) AS n_ticks
+          FROM x GROUP BY bar ORDER BY bar"""),
+    KeySpec.batch("ts_corr_types", tsCorrTypes, shuffles = 3,
+      s"""WITH hourly AS (
+            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
+              ${sqlAvg2("value")} AS v
+            FROM events GROUP BY 1, 2),
+          j AS (
+            SELECT x.v AS x, y.v AS y
+            FROM (SELECT bar, v FROM hourly WHERE event_type = 'purchase') x
+            JOIN (SELECT bar, v FROM hourly WHERE event_type = 'click') y
+              USING (bar))
+          SELECT count(*) AS n_bars,
+            ${sqlFq(s"""(count(*) * ${sqlSum6("x * y")} - ${sqlSum6("x")} * ${sqlSum6("y")})
+              / sqrt((count(*) * ${sqlSum6("x * x")} - ${sqlSum6("x")} * ${sqlSum6("x")})
+                   * (count(*) * ${sqlSum6("y * y")} - ${sqlSum6("y")} * ${sqlSum6("y")}))""",
+              6)} AS corr
+          FROM j"""),
+    KeySpec.batch("ts_realized_vol", tsRealizedVol, shuffles = 2,
+      s"""WITH t AS (
+            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_id,
+              value, epoch_us(CAST(ts AS TIMESTAMP)) AS uts
+            FROM events),
+          x AS (
+            SELECT bar, value,
+              lead(value) OVER (PARTITION BY bar ORDER BY uts, event_id) AS nv
+            FROM t),
+          r AS (
+            SELECT bar,
+              CASE WHEN value > 0 AND nv > 0 THEN round(ln(nv / value), 6) END AS r
+            FROM x)
+          SELECT bar, ${sqlFq("sqrt(" + sqlSum6("r * r") + ")", 6)} AS rv,
+            count(r) AS n_returns
+          FROM r GROUP BY bar ORDER BY bar"""),
+    KeySpec.batch("ts_linreg_trend", tsLinregTrend, shuffles = 2,
+      s"""WITH t AS (
+            SELECT event_type,
+              CAST(epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP)))
+                   - epoch_us(TIMESTAMP '2024-01-01 00:00:00') AS DOUBLE)
+                / CAST(3600000000 AS DOUBLE) AS x,
+              value AS y
+            FROM events)
+          SELECT event_type, count(*) AS n,
+            ${sqlFq(s"""(count(*) * ${sqlSum6("x * y")} - ${sqlSum6("x")} * ${sqlSum6("y")})
+              / (count(*) * ${sqlSum6("x * x")} - ${sqlSum6("x")} * ${sqlSum6("x")})""", 9)}
+              AS slope,
+            ${sqlFq(s"""(${sqlSum6("y")}
+              - (count(*) * ${sqlSum6("x * y")} - ${sqlSum6("x")} * ${sqlSum6("y")})
+                / (count(*) * ${sqlSum6("x * x")} - ${sqlSum6("x")} * ${sqlSum6("x")})
+                * ${sqlSum6("x")}) / count(*)""", 6)} AS intercept
+          FROM t GROUP BY event_type ORDER BY event_type"""))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables, Det}
+import graft.{KeySpec, QFn, Tables, Det}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -596,40 +596,12 @@ object TimeSeries2 {
   val tsCepPattern: QFn = (s, d) =>
     cepVReversal(Tables.events(s, d).filter(col("event_type") === "click"))
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "ts_intraday_profile" -> tsIntradayProfile,
-    "ts_bidask_spread" -> tsBidaskSpread,
-    "ts_autocorr" -> tsAutocorr,
-    "ts_rolling_beta" -> tsRollingBeta,
-    "ts_var_es" -> tsVarEs,
-    "ts_effective_spread" -> tsEffectiveSpread,
-    "ts_trade_sign" -> tsTradeSign,
-    "ts_ofi" -> tsOfi,
-    "ts_roll_spread" -> tsRollSpread,
-    "ts_variance_ratio" -> tsVarianceRatio,
-    "ts_amihud" -> tsAmihud,
-    "ts_corwin_schultz" -> tsCorwinSchultz,
-    "ts_tsrv" -> tsTsrv,
-    "ts_kyle_lambda" -> tsKyleLambda,
-    "ts_cep_pattern" -> tsCepPattern)
-
-  val oracles: Seq[(String, String)] = Seq(
-    "ts_intraday_profile" ->
-      s"""WITH prof AS (
-            SELECT CAST(hour(CAST(ts AS TIMESTAMP)) AS INT) AS hour_of_day,
-              event_type, count(*) AS n_ticks,
-              ${sqlFq(sqlAvg2("value"), 6)} AS avg_value,
-              CAST(sum(CAST(props->>'$$.k' AS BIGINT)) AS BIGINT) AS total_size
-            FROM events GROUP BY 1, 2)
-          SELECT hour_of_day, event_type, n_ticks, avg_value, total_size,
-            CAST(row_number() OVER (PARTITION BY event_type
-              ORDER BY n_ticks DESC, hour_of_day) AS INT) AS activity_rank
-          FROM prof ORDER BY hour_of_day, event_type""",
-    // integer micro-unit recipe end to end: `//` on non-negative
-    // operands == Spark `div`; the signed bps quotient carries its
-    // sign outside the abs() division (see tsBidaskSpread scaladoc)
-    "ts_bidask_spread" ->
-      s"""WITH q AS (
+  /** Oracle of `ts_bidask_spread`, shared by `stream_bidask_spread`.
+    * Integer micro-unit recipe end to end: `//` on non-negative
+    * operands == Spark `div`; the signed bps quotient carries its
+    * sign outside the abs() division (see tsBidaskSpread scaladoc). */
+  val bidaskSpreadSql: String =
+    s"""WITH q AS (
             SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar,
               ${sqlCsum2("CASE WHEN event_type = 'view' THEN value END")} AS bid_c,
               count(CASE WHEN event_type = 'view' THEN value END) AS n_bid,
@@ -650,8 +622,29 @@ object TimeSeries2 {
                 ((abs(ask_micro - bid_micro) * 1000000)
                   // ((bid_micro + ask_micro) // 2)) END AS spread_bps_c,
             n_bid, n_ask
-          FROM ba ORDER BY bar""",
-    "ts_autocorr" ->
+          FROM ba ORDER BY bar"""
+
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("ts_intraday_profile", tsIntradayProfile,
+      // hour-of-day pre-agg + the 24-row-per-symbol rank window + sort
+      shuffles = 3,
+      s"""WITH prof AS (
+            SELECT CAST(hour(CAST(ts AS TIMESTAMP)) AS INT) AS hour_of_day,
+              event_type, count(*) AS n_ticks,
+              ${sqlFq(sqlAvg2("value"), 6)} AS avg_value,
+              CAST(sum(CAST(props->>'$$.k' AS BIGINT)) AS BIGINT) AS total_size
+            FROM events GROUP BY 1, 2)
+          SELECT hour_of_day, event_type, n_ticks, avg_value, total_size,
+            CAST(row_number() OVER (PARTITION BY event_type
+              ORDER BY n_ticks DESC, hour_of_day) AS INT) AS activity_rank
+          FROM prof ORDER BY hour_of_day, event_type"""),
+    KeySpec.batch("ts_bidask_spread", tsBidaskSpread,
+      // bar pre-agg + sort
+      shuffles = 2, bidaskSpreadSql),
+    KeySpec.batch("ts_autocorr", tsAutocorr,
+      // pre-agg + lag window + grouped moments (AQE folds the
+      // tiny final sort)
+      shuffles = 3,
       s"""WITH hourly AS (
             SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
               CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q
@@ -674,8 +667,10 @@ object TimeSeries2 {
             FROM pairs GROUP BY 1, 2)
           SELECT event_type, lag, n,
             ${sqlFq("CAST(n * sxy - sx * sy AS DOUBLE) / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) * sqrt(CAST(n * syy - sy * sy AS DOUBLE)))", 6)} AS autocorr
-          FROM m ORDER BY event_type, lag""",
-    "ts_rolling_beta" ->
+          FROM m ORDER BY event_type, lag"""),
+    KeySpec.batch("ts_rolling_beta", tsRollingBeta,
+      // pre-agg + broadcast market join + rolling window + sort
+      shuffles = 4,
       s"""WITH hourly AS (
             SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
               CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q
@@ -698,8 +693,10 @@ object TimeSeries2 {
           SELECT bar, event_type, n,
             ${sqlFq("CAST(n * sxm - sx * sm AS DOUBLE) / CAST(n * smm - sm * sm AS DOUBLE)", 6)} AS beta
           FROM w WHERE n >= 12 AND n * smm - sm * sm > 0
-          ORDER BY bar, event_type""",
-    "ts_var_es" ->
+          ORDER BY bar, event_type"""),
+    KeySpec.batch("ts_var_es", tsVarEs,
+      // pre-agg + lag window + rank/count window + grouped tail + sort
+      shuffles = 5,
       s"""WITH hourly AS (
             SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
               CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q
@@ -722,8 +719,13 @@ object TimeSeries2 {
               AS var95,
             ${sqlFq("(CAST(sum(r) AS DOUBLE) / count(*)) / 1000.0", 6)} AS es95
           FROM tail WHERE rk <= cut
-          GROUP BY event_type ORDER BY event_type""",
-    "ts_effective_spread" ->
+          GROUP BY event_type ORDER BY event_type"""),
+    KeySpec.batch("ts_effective_spread", tsEffectiveSpread,
+      // consumers read the staged trades-with-mid enrichment (built
+      // once per dataset via IndexStore.cachedDir — the quote-dedup agg
+      // and the native as-of's key exchanges live in the build job):
+      // hour agg + presentation sort
+      shuffles = 2,
       s"""WITH q AS (
             SELECT user_id AS q_uid, ts AS q_ts, max(value) AS qv
             FROM events WHERE event_type = 'view' GROUP BY 1, 2),
@@ -739,8 +741,15 @@ object TimeSeries2 {
           SELECT date_trunc('hour', ts) AS bar, count(*) AS n_trades,
             ${sqlFq(sqlSum4("2.0 * abs(value - mid)") + " / count(*)", 6)}
               AS avg_eff_spread
-          FROM j WHERE mid IS NOT NULL GROUP BY 1 ORDER BY bar""",
-    "ts_trade_sign" ->
+          FROM j WHERE mid IS NOT NULL GROUP BY 1 ORDER BY bar""")
+      .constructionJobsOk("first touch of new content stages the " +
+        "trades-with-mid enrichment (native as-of join) it then reads — " +
+        "the production tick-store shape, shared with trade_sign/ofi")
+      // stages trades_mid_v2 layout
+      .reads("ts_effective_spread"),
+    KeySpec.batch("ts_trade_sign", tsTradeSign,
+      // staged-enrichment read: hour agg + presentation sort
+      shuffles = 2,
       """WITH q AS (
             SELECT user_id AS q_uid, ts AS q_ts, max(value) AS qv
             FROM events WHERE event_type = 'view' GROUP BY 1, 2),
@@ -763,8 +772,12 @@ object TimeSeries2 {
             CAST(floor(CAST(n_buy AS DOUBLE) /
               CAST(n_buy + n_sell + n_mid AS DOUBLE) * 1000000.0) AS BIGINT)
               AS buy_share_q
-          FROM agg ORDER BY bar""",
-    "ts_ofi" ->
+          FROM agg ORDER BY bar""")
+      .constructionJobsOk("reads the shared staged trades-with-mid enrichment")
+      .reads("ts_effective_spread"),
+    KeySpec.batch("ts_ofi", tsOfi,
+      // staged-enrichment read: hour agg + presentation sort
+      shuffles = 2,
       """WITH q AS (
             SELECT user_id AS q_uid, ts AS q_ts, max(value) AS qv
             FROM events WHERE event_type = 'view' GROUP BY 1, 2),
@@ -789,9 +802,13 @@ object TimeSeries2 {
               CAST(floor(CAST(buy_size - sell_size AS DOUBLE) /
                 CAST(buy_size + sell_size AS DOUBLE) * 1000000.0) AS BIGINT)
             END AS imbalance_q
-          FROM agg ORDER BY bar""",
-    // Roll: same hourly milli-unit bars; both lags in one window pass
-    "ts_roll_spread" ->
+          FROM agg ORDER BY bar""")
+      .constructionJobsOk("reads the shared staged trades-with-mid enrichment")
+      .reads("ts_effective_spread"),
+    KeySpec.batch("ts_roll_spread", tsRollSpread,
+      // bar pre-agg + per-symbol series window + grouped moments
+      shuffles = 3,
+      // Roll: same hourly milli-unit bars; both lags in one window pass
       s"""WITH hourly AS (
             SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
               CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q
@@ -816,35 +833,58 @@ object TimeSeries2 {
             CASE WHEN n * sxy - sx * sy < 0 THEN
               ${sqlFq("2.0 * sqrt(-CAST(n * sxy - sx * sy AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE)) / 1000.0", 6)}
             END AS roll_spread
-          FROM m ORDER BY event_type""",
-    // TSRV: tick-grain milli-unit prices, both lag scales in one
-    // window, exact integer squared-diff sums, fq on the two ratios
-    "ts_tsrv" ->
-      s"""WITH ticks AS (
-            SELECT event_type, ts, event_id,
-              CAST(floor(value * 1000.0) AS BIGINT) AS q
-            FROM events),
+          FROM m ORDER BY event_type"""),
+    KeySpec.batch("ts_variance_ratio", tsVarianceRatio, shuffles = 3,
+      s"""WITH hourly AS (
+            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
+              CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q
+            FROM events GROUP BY 1, 2),
           lagged AS (
             SELECT event_type,
-              q - lag(q, 1) OVER win AS d1,
-              q - lag(q, $TsrvK) OVER win AS dk
-            FROM ticks
-            WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id)),
+              q - lag(q, 1) OVER win AS r1,
+              q - lag(q, 4) OVER win AS r4
+            FROM hourly
+            WINDOW win AS (PARTITION BY event_type ORDER BY bar)),
           m AS (
-            SELECT event_type, count(*) AS n,
-              CAST(sum(d1 * d1) AS BIGINT) AS rv_all_m2,
-              CAST(sum(dk * dk) AS BIGINT) AS rv_k_m2
+            SELECT event_type,
+              count(r1) AS n1, CAST(sum(r1) AS BIGINT) AS s1,
+              CAST(sum(r1 * r1) AS BIGINT) AS ss1,
+              count(r4) AS n4, CAST(sum(r4) AS BIGINT) AS s4,
+              CAST(sum(r4 * r4) AS BIGINT) AS ss4
             FROM lagged GROUP BY event_type)
-          SELECT event_type, n,
-            ${sqlFq("CAST(rv_all_m2 AS DOUBLE) / 1e6", 9)} AS rv_all,
-            ${sqlFq(s"(CAST(rv_k_m2 AS DOUBLE) / $TsrvK.0 - (CAST(n - $TsrvK + 1 AS DOUBLE) / $TsrvK.0 / CAST(n AS DOUBLE)) * CAST(rv_all_m2 AS DOUBLE)) / 1e6", 9)} AS tsrv
-          FROM m WHERE n > $TsrvK ORDER BY event_type""",
-    // Corwin–Schultz: raw max/min bars (no arithmetic → identical
-    // doubles), per-pair transcendental chain with round(6) as the ulp
-    // absorber, DECIMAL(30,6)-exact means; the denominator 3−2√2 is
-    // embedded as the Scala-computed literal so both engines evaluate
-    // the identical double
-    "ts_corwin_schultz" ->
+          SELECT event_type, n1, n4,
+            ${sqlFq("CAST(n4 * ss4 - s4 * s4 AS DOUBLE) * CAST(n1 * n1 AS DOUBLE) / (CAST(n1 * ss1 - s1 * s1 AS DOUBLE) * 4.0 * CAST(n4 * n4 AS DOUBLE))", 6)} AS vr4
+          FROM m
+          WHERE n1 > 1 AND n4 > 1 AND n1 * ss1 - s1 * s1 > 0
+          ORDER BY event_type"""),
+    KeySpec.batch("ts_amihud", tsAmihud,
+      // bar pre-agg + per-symbol series window + grouped moments
+      shuffles = 3,
+      s"""WITH hourly AS (
+            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
+              CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q,
+              CAST(sum(CAST(props->>'$$.k' AS BIGINT)) AS BIGINT) AS vol
+            FROM events GROUP BY 1, 2),
+          lagged AS (
+            SELECT event_type, q, vol,
+              lag(q, 1) OVER (PARTITION BY event_type ORDER BY bar) AS qp
+            FROM hourly),
+          terms AS (
+            SELECT event_type,
+              ${sqlFq("CAST(abs(q - qp) AS DOUBLE) / CAST(qp AS DOUBLE) / CAST(vol AS DOUBLE)", 12)} AS term
+            FROM lagged WHERE qp IS NOT NULL AND qp > 0 AND vol > 0)
+          SELECT event_type, count(*) AS n_bars,
+            ${sqlFq("CAST(sum(CAST(term AS DECIMAL(30,12))) AS DOUBLE) / count(*) * 1e6", 6)} AS amihud_x1e6
+          FROM terms GROUP BY event_type ORDER BY event_type"""),
+    KeySpec.batch("ts_corwin_schultz", tsCorwinSchultz,
+      // hi/lo bar pre-agg + per-symbol lag window + grouped means (AQE
+      // folds the 5-row presentation sort)
+      shuffles = 3,
+      // Corwin–Schultz: raw max/min bars (no arithmetic → identical
+      // doubles), per-pair transcendental chain with round(6) as the ulp
+      // absorber, DECIMAL(30,6)-exact means; the denominator 3−2√2 is
+      // embedded as the Scala-computed literal so both engines evaluate
+      // the identical double
       s"""WITH h AS (
             SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
               max(value) AS hi, min(value) AS lo
@@ -869,50 +909,38 @@ object TimeSeries2 {
           SELECT event_type, count(*) AS n_pairs,
             ${sqlFq(s"${sqlSum6("s6")} / count(*)", 9)} AS cs_spread_raw,
             ${sqlFq(s"${sqlSum6("greatest(s6, 0.0)")} / count(*)", 9)} AS cs_spread
-          FROM t GROUP BY event_type ORDER BY event_type""",
-    "ts_variance_ratio" ->
-      s"""WITH hourly AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-              CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q
-            FROM events GROUP BY 1, 2),
+          FROM t GROUP BY event_type ORDER BY event_type"""),
+    KeySpec.batch("ts_tsrv", tsTsrv,
+      // one per-symbol tick window (both lag scales) + grouped sums
+      // (AQE folds the 5-row presentation sort)
+      shuffles = 2,
+      // TSRV: tick-grain milli-unit prices, both lag scales in one
+      // window, exact integer squared-diff sums, fq on the two ratios
+      s"""WITH ticks AS (
+            SELECT event_type, ts, event_id,
+              CAST(floor(value * 1000.0) AS BIGINT) AS q
+            FROM events),
           lagged AS (
             SELECT event_type,
-              q - lag(q, 1) OVER win AS r1,
-              q - lag(q, 4) OVER win AS r4
-            FROM hourly
-            WINDOW win AS (PARTITION BY event_type ORDER BY bar)),
+              q - lag(q, 1) OVER win AS d1,
+              q - lag(q, $TsrvK) OVER win AS dk
+            FROM ticks
+            WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id)),
           m AS (
-            SELECT event_type,
-              count(r1) AS n1, CAST(sum(r1) AS BIGINT) AS s1,
-              CAST(sum(r1 * r1) AS BIGINT) AS ss1,
-              count(r4) AS n4, CAST(sum(r4) AS BIGINT) AS s4,
-              CAST(sum(r4 * r4) AS BIGINT) AS ss4
+            SELECT event_type, count(*) AS n,
+              CAST(sum(d1 * d1) AS BIGINT) AS rv_all_m2,
+              CAST(sum(dk * dk) AS BIGINT) AS rv_k_m2
             FROM lagged GROUP BY event_type)
-          SELECT event_type, n1, n4,
-            ${sqlFq("CAST(n4 * ss4 - s4 * s4 AS DOUBLE) * CAST(n1 * n1 AS DOUBLE) / (CAST(n1 * ss1 - s1 * s1 AS DOUBLE) * 4.0 * CAST(n4 * n4 AS DOUBLE))", 6)} AS vr4
-          FROM m
-          WHERE n1 > 1 AND n4 > 1 AND n1 * ss1 - s1 * s1 > 0
-          ORDER BY event_type""",
-    "ts_amihud" ->
-      s"""WITH hourly AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-              CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q,
-              CAST(sum(CAST(props->>'$$.k' AS BIGINT)) AS BIGINT) AS vol
-            FROM events GROUP BY 1, 2),
-          lagged AS (
-            SELECT event_type, q, vol,
-              lag(q, 1) OVER (PARTITION BY event_type ORDER BY bar) AS qp
-            FROM hourly),
-          terms AS (
-            SELECT event_type,
-              ${sqlFq("CAST(abs(q - qp) AS DOUBLE) / CAST(qp AS DOUBLE) / CAST(vol AS DOUBLE)", 12)} AS term
-            FROM lagged WHERE qp IS NOT NULL AND qp > 0 AND vol > 0)
-          SELECT event_type, count(*) AS n_bars,
-            ${sqlFq("CAST(sum(CAST(term AS DECIMAL(30,12))) AS DOUBLE) / count(*) * 1e6", 6)} AS amihud_x1e6
-          FROM terms GROUP BY event_type ORDER BY event_type""",
-    // Kyle λ: the trades-with-mid enrichment (same correlated-subquery
-    // shape as ts_ofi) signs the flow; mid series from the view side
-    "ts_kyle_lambda" ->
+          SELECT event_type, n,
+            ${sqlFq("CAST(rv_all_m2 AS DOUBLE) / 1e6", 9)} AS rv_all,
+            ${sqlFq(s"(CAST(rv_k_m2 AS DOUBLE) / $TsrvK.0 - (CAST(n - $TsrvK + 1 AS DOUBLE) / $TsrvK.0 / CAST(n AS DOUBLE)) * CAST(rv_all_m2 AS DOUBLE)) / 1e6", 9)} AS tsrv
+          FROM m WHERE n > $TsrvK ORDER BY event_type"""),
+    KeySpec.batch("ts_kyle_lambda", tsKyleLambda,
+      // reads the staged enrichment, so its plan is two bar aggs
+      // + the 1-partition series window over the #bars joined frame
+      shuffles = 3,
+      // Kyle λ: the trades-with-mid enrichment (same correlated-subquery
+      // shape as ts_ofi) signs the flow; mid series from the view side
       s"""WITH q AS (
             SELECT user_id AS q_uid, ts AS q_ts, max(value) AS qv
             FROM events WHERE event_type = 'view' GROUP BY 1, 2),
@@ -948,11 +976,15 @@ object TimeSeries2 {
             CASE WHEN n * sxx - sx * sx > 0 THEN
               ${sqlFq("CAST(n * sxy - sx * sy AS DOUBLE) / CAST(n * sxx - sx * sx AS DOUBLE) / 1000.0 * 1e6", 6)}
             END AS kyle_lambda_x1e6
-          FROM m""",
-    // CEP V-reversal: same lag-window compilation of the pattern,
-    // exact integer cents end to end (count/sum/max over BIGINTs
-    // recast — DuckDB's sum(BIGINT) is HUGEINT)
-    "ts_cep_pattern" ->
+          FROM m""")
+      .constructionJobsOk("reads the shared staged trades-with-mid enrichment")
+      .reads("ts_effective_spread"),
+    KeySpec.batch("ts_cep_pattern", tsCepPattern,
+      // per-user lag window exchange + match groupBy + presentation sort
+      shuffles = 3,
+      // CEP V-reversal: same lag-window compilation of the pattern,
+      // exact integer cents end to end (count/sum/max over BIGINTs
+      // recast — DuckDB's sum(BIGINT) is HUGEINT)
       """WITH t AS (
            SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
              CAST(CAST(value AS DECIMAL(30,2)) * 100 AS BIGINT) AS vc,
@@ -966,5 +998,5 @@ object TimeSeries2 {
            CAST(sum(vc - v1) AS BIGINT) AS rebound_cents,
            CAST(max(v3 - v1) AS BIGINT) AS max_depth_cents
          FROM t WHERE v3 > v2 AND v2 > v1 AND vc > v1
-         GROUP BY user_id ORDER BY user_id""")
+         GROUP BY user_id ORDER BY user_id"""))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables}
+import graft.{KeySpec, QFn, Tables}
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -103,32 +103,26 @@ object UDX {
       .orderBy("o_orderstatus", "item")
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "udf_scalar" -> udfScalar,
-    "agg_udaf_wmid" -> aggUdafWmid,
-    "agg_heavy_hitters" -> aggHeavyHitters,
-    "expr_custom" -> exprCustom)
-
-  val oracles: Seq[(String, String)] = Seq(
-    "udf_scalar" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("udf_scalar", udfScalar, shuffles = 1,
       """SELECT p_partkey,
            (p_retailprice + 900.0) / 2.0 AS mid_udf,
            (p_retailprice + 900.0) / 2.0 AS mid_native,
            (p_retailprice - 900.0) / ((p_retailprice + 900.0) / 2.0) AS spread_udf,
            (p_retailprice - 900.0) / ((p_retailprice + 900.0) / 2.0) AS spread_native
-         FROM part ORDER BY p_partkey""",
-    "agg_udaf_wmid" ->
+         FROM part ORDER BY p_partkey"""),
+    KeySpec.batch("agg_udaf_wmid", aggUdafWmid, shuffles = 2,
       """SELECT l_returnflag,
            CAST(sum(CAST(l_extendedprice AS DECIMAL(30,2)) * CAST(l_quantity AS DECIMAL(30,2))) AS DOUBLE)
              / CAST(sum(CAST(l_quantity AS DECIMAL(30,2))) AS DOUBLE) AS wmid,
            CAST(sum(CAST(l_extendedprice AS DECIMAL(30,2)) * CAST(l_quantity AS DECIMAL(30,2))) AS DOUBLE)
              / CAST(sum(CAST(l_quantity AS DECIMAL(30,2))) AS DOUBLE) AS wmid_sums
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "agg_heavy_hitters" ->
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
+    KeySpec.batch("agg_heavy_hitters", aggHeavyHitters, shuffles = 2,
       """SELECT o_orderstatus, o_orderpriority AS item, count(*) AS cnt
          FROM orders GROUP BY o_orderstatus, o_orderpriority
-         ORDER BY o_orderstatus, item""",
-    "expr_custom" ->
+         ORDER BY o_orderstatus, item"""),
+    KeySpec.batch("expr_custom", exprCustom, shuffles = 1,
       """SELECT p_partkey,
            ((p_retailprice + 5.0) - (p_retailprice - 5.0))
              / (((p_retailprice + 5.0) + (p_retailprice - 5.0)) / 2.0) AS spread_native,
@@ -136,5 +130,5 @@ object UDX {
              / (((p_retailprice + 5.0) + (p_retailprice - 5.0)) / 2.0) AS spread_sql,
            ((p_retailprice + 5.0) - (p_retailprice - 5.0))
              / (((p_retailprice + 5.0) + (p_retailprice - 5.0)) / 2.0) AS spread_composed
-         FROM part ORDER BY p_partkey""")
+         FROM part ORDER BY p_partkey"""))
 }

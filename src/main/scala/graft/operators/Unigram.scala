@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables}
+import graft.{KeySpec, QFn, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.expressions.Window
@@ -457,11 +457,23 @@ object Unigram {
        FROM per_doc p LEFT JOIN firsts f ON f.doc_id = p.doc_id
        ORDER BY p.doc_id"""
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "llm_unigram_vocab" -> llmUnigramVocab,
-    "llm_unigram_encode" -> llmUnigramEncode)
-
-  val oracles: Seq[(String, String)] = Seq(
-    "llm_unigram_vocab" -> vocabOracleSql,
-    "llm_unigram_encode" -> encodeOracleSql)
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("llm_unigram_vocab", llmUnigramVocab,
+      // unigram vocab: the stored-artifact read + presentation sort
+      shuffles = 1, vocabOracleSql)
+      .crossJoinOk("llm_unigram_encode's piece-table cross, plus the 1-row normalizer")
+      .constructionJobsOk("first touch of new content trains and stores " +
+        "the unigram piece vocabulary (10% sample) it then reads back")
+      // stages unigram_vocab_v1 (shared by vocab + encode)
+      .reads("llm_unigram_vocab"),
+    KeySpec.batch("llm_unigram_encode", llmUnigramEncode,
+      // encode: distinct-words shuffle + per-doc groupBy + first-word
+      // join + presentation sort (segmentation itself is broadcast-only)
+      shuffles = 4, encodeOracleSql)
+      .crossJoinOk("each unrolled segmentation step joins the ≤(alphabet+VocabMulti)-row " +
+        "broadcast piece table on a substring match (inherently non-equi) — O(1) build " +
+        "side at any corpus size")
+      .constructionJobsOk("reads the same stored unigram vocabulary " +
+        "artifact (training it on first touch of new content)")
+      .reads("llm_unigram_vocab"))
 }

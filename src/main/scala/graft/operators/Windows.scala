@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QFn, Tables, Det}
+import graft.{KeySpec, QFn, Tables, Det}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -88,15 +88,8 @@ object Windows {
       .orderBy("user_id", "ts", "event_id")
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "win_rank" -> winRank,
-    "win_topk" -> winTopk,
-    "win_analytic" -> winAnalytic,
-    "win_frame_rows" -> winFrameRows,
-    "win_frame_range" -> winFrameRange)
-
-  val oracles: Seq[(String, String)] = Seq(
-    "win_rank" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("win_rank", winRank, shuffles = 2,
       """SELECT c_mktsegment, c_custkey, c_acctbal,
            CAST(row_number() OVER w AS INT) AS rn,
            rank() OVER w AS rk,
@@ -104,14 +97,14 @@ object Windows {
            CAST(ntile(4) OVER w AS INT) AS quartile
          FROM customer
          WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey)
-         ORDER BY c_mktsegment, rn""",
-    "win_topk" ->
+         ORDER BY c_mktsegment, rn"""),
+    KeySpec.batch("win_topk", winTopk, shuffles = 2,
       """SELECT c_mktsegment, rn, c_custkey, c_name, c_acctbal FROM (
            SELECT *, CAST(row_number() OVER (PARTITION BY c_mktsegment
              ORDER BY c_acctbal DESC, c_custkey) AS INT) AS rn
            FROM customer) WHERE rn <= 5
-         ORDER BY c_mktsegment, rn""",
-    "win_analytic" ->
+         ORDER BY c_mktsegment, rn"""),
+    KeySpec.batch("win_analytic", winAnalytic, shuffles = 2,
       """SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
            lag(value, 1) OVER w AS prev_value,
            lead(value, 1) OVER w AS next_value,
@@ -119,16 +112,16 @@ object Windows {
            last_value(value) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_value
          FROM events
          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         ORDER BY user_id, ts, event_id""",
-    "win_frame_rows" ->
+         ORDER BY user_id, ts, event_id"""),
+    KeySpec.batch("win_frame_rows", winFrameRows, shuffles = 2,
       """SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
            CAST(sum(CAST(value AS DECIMAL(30,2))) OVER w AS DOUBLE) AS run_sum,
            count(*) OVER w AS run_n
          FROM events
          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         ORDER BY user_id, ts, event_id""",
-    "win_frame_range" ->
+         ORDER BY user_id, ts, event_id"""),
+    KeySpec.batch("win_frame_range", winFrameRange, shuffles = 2,
       """SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
            CAST(sum(CAST(value AS DECIMAL(30,2))) OVER w AS DOUBLE)
              / count(*) OVER w AS roll_mean_1h,
@@ -136,5 +129,5 @@ object Windows {
          FROM events
          WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(CAST(ts AS TIMESTAMP))
            RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-         ORDER BY user_id, ts, event_id""")
+         ORDER BY user_id, ts, event_id"""))
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{QFn, Tables}
+import graft.{KeySpec, QFn, Tables}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -324,25 +324,12 @@ object AsOfJoinPlans {
       .orderBy("event_id")
   }
 
-  val entries: Seq[(String, QFn)] = Seq(
-    "join_asof_native" -> joinAsofNative,
-    "join_asof_forward_native" -> joinAsofForwardNative,
-    "join_asof_nearest_native" -> joinAsofNearestNative,
-    "join_asof_tolerance_native" -> joinAsofToleranceNative)
-
-  val oracles: Seq[(String, String)] = Seq(
-    "join_asof_native" ->
-      """SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
-           CAST((SELECT max(c.ts) FROM events c
-             WHERE c.event_type = 'click' AND c.user_id = p.user_id AND c.ts <= p.ts) AS TIMESTAMP) AS last_click_ts
-         FROM events p WHERE p.event_type = 'purchase' ORDER BY p.event_id""",
-    "join_asof_forward_native" ->
-      """SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
-           (SELECT min(CAST(c.ts AS TIMESTAMP)) FROM events c
-             WHERE c.event_type = 'click' AND c.user_id = p.user_id
-               AND CAST(c.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP)) AS next_click_ts
-         FROM events p WHERE p.event_type = 'purchase' ORDER BY p.event_id""",
-    "join_asof_nearest_native" ->
+  val specs: Seq[KeySpec] = Seq(
+    KeySpec.batch("join_asof_native", joinAsofNative, shuffles = 3,
+      graft.operators.Relational.asofBackwardSql),
+    KeySpec.batch("join_asof_forward_native", joinAsofForwardNative, shuffles = 3,
+      graft.operators.Relational.asofForwardSql),
+    KeySpec.batch("join_asof_nearest_native", joinAsofNearestNative, shuffles = 3,
       """WITH p AS (
            SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
              (SELECT max(CAST(c.ts AS TIMESTAMP)) FROM events c
@@ -357,13 +344,7 @@ object AsOfJoinPlans {
                 WHEN next_ts IS NULL THEN prev_ts
                 WHEN ts - prev_ts <= next_ts - ts THEN prev_ts
                 ELSE next_ts END AS near_click_ts
-         FROM p ORDER BY event_id""",
-    "join_asof_tolerance_native" ->
-      """SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
-           (SELECT max(CAST(c.ts AS TIMESTAMP)) FROM events c
-             WHERE c.event_type = 'click' AND c.user_id = p.user_id
-               AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP)
-               AND CAST(c.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP) - INTERVAL 1 HOUR)
-             AS last_click_1h
-         FROM events p WHERE p.event_type = 'purchase' ORDER BY p.event_id""")
+         FROM p ORDER BY event_id"""),
+    KeySpec.batch("join_asof_tolerance_native", joinAsofToleranceNative, shuffles = 3,
+      graft.operators.Relational.asofToleranceSql))
 }

@@ -78,6 +78,18 @@ class PlanContractSpec extends SparkTestBase {
     }
   }
 
+  test("join_skew_aqe: counts and the audit measure the captured plan alike, then release it") {
+    val spec = SparkEntry.specs.find(_.name == "join_skew_aqe").get
+    assert(PlanAudit.counts(spark, sf, Seq(spec)) == Seq("join_skew_aqe\t4\t4"))
+    assert(PlanAudit.constructionPlan("join_skew_aqe").isEmpty,
+      "counts left the captured plan pinned")
+    // the audit grades the same 4 shuffles: one budget below fails it
+    assert(PlanAudit.audit(spark, sf, Seq(spec.copy(shuffleBudget = Some(3)))) ==
+      Seq("SMELL join_skew_aqe: shuffles 4 over budget 3"))
+    assert(PlanAudit.constructionPlan("join_skew_aqe").isEmpty,
+      "the audit left the captured plan pinned")
+  }
+
   test("join_range_bucketed: bucket join is a shuffled merge, never a broadcast build") {
     // r5 knob matrix: the size estimator prices the exploded-distinct
     // orders side (2×|orders| rows) below the broadcast threshold and

@@ -29,11 +29,6 @@ class RelationalSpec extends SparkTestBase {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracle keys are a subset of query keys") {
-    val qs = SparkEntry.queries.keySet
-    assert(SparkEntry.oracleSql.keySet.subsetOf(qs))
-  }
-
   test("scan_pruned reads only 2 columns (column pruning reaches parquet)") {
     val p = plan(operators.Relational.scanPruned(spark, sf))
     assert(p.contains("ReadSchema"))
