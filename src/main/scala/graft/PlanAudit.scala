@@ -15,7 +15,7 @@ object PlanAudit {
     * The captured plan is the skew-split join the key exists to run;
     * reading it releases it, so call this once per construction. */
   def constructionPlan(name: String): Option[SparkPlan] = name match {
-    case "join_skew_aqe" => operators.Extras2.takeSkewJoinExec()
+    case "join_skew_aqe" => operators.Relational.takeSkewJoinExec()
     case _ => None
   }
 

@@ -20,7 +20,7 @@ object SparkEntry {
     * artifacts in first-reference order: the bid/ask enrichment, the
     * stream feeds, then the rest. */
   lazy val specs: Seq[KeySpec] = KeySpec.validate(
-    operators.TimeSeries2.specs ++
+    operators.TimeSeries.specs ++
     streaming.Streaming.specs ++
     operators.Relational.specs ++
     operators.Windows.specs ++
@@ -31,16 +31,13 @@ object SparkEntry {
     operators.LlmLsh.specs ++
     operators.LlmQuantize.specs ++
     operators.Multimodal.specs ++
-    operators.Extras.specs ++
-    operators.Extras2.specs ++
+    operators.Etl.specs ++
     operators.Composite.specs ++
-    operators.Composite2.specs ++
     operators.SnapshotTable.specs ++
     operators.SnapshotLog.specs ++
     operators.Clustering.specs ++
     operators.Graph.specs ++
     operators.Sketches.specs ++
-    operators.TimeSeries.specs ++
     operators.LlmCorpus.specs ++
     operators.IndexStoreOp.specs ++
     operators.Unigram.specs ++

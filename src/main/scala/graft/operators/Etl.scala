@@ -1,78 +1,22 @@
 package graft.operators
 
 import graft.{KeySpec, QFn, Tables, Det}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Coverage beyond the §2 enumeration: the OLAP/ETL operators a user
-  * of a lake pipeline reaches for daily — pivot, correlated
-  * subqueries, percentile windows, struct columns, a partitioned
-  * parquet sink with partition-pruned re-read, data-quality checks,
-  * and the upsert/merge load step.
+/** ETL load, maintenance and data-quality operators — the steps a lake
+  * pipeline runs around its queries: upsert/MERGE, SCD2 history, CDC
+  * apply, incremental aggregation, partitioned and dynamic-overwrite
+  * sinks, small-file compaction, Z-order clustering, targeted GDPR
+  * erasure, and the data-quality gates (checks, outliers,
+  * cross-table reconciliation). The sink keys write under
+  * [[graft.Tables.sinkPath]] and read their own output back, so the
+  * oracle checks what was written.
   */
-object Extras {
+object Etl {
 
   import Det._
-
-  private val Segments =
-    Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-
-  /** PIVOT: customer counts + balance sums per nation × segment.
-    * Fixed value list → deterministic output schema; at scale pivot is
-    * one partial-aggregated shuffle, same cost as the groupBy. */
-  val aggPivot: QFn = (s, d) =>
-    Tables.customer(s, d)
-      .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-      .groupBy("n_name")
-      .pivot("c_mktsegment", Segments)
-      .agg(dsum2(col("c_acctbal")))
-      .orderBy("n_name")
-
-  /** Correlated subqueries: scalar (vs. global avg), IN, and
-    * correlated EXISTS — exercises Catalyst decorrelation. */
-  val subqueryFamily: QFn = (s, d) => {
-    Tables.orders(s, d).createOrReplaceTempView("g_orders")
-    Tables.customer(s, d).createOrReplaceTempView("g_customer")
-    Tables.lineitem(s, d).createOrReplaceTempView("g_lineitem")
-    s.sql("""
-      SELECT o_orderkey, o_totalprice
-      FROM g_orders o
-      WHERE o_totalprice > (SELECT avg(o_totalprice) FROM g_orders)
-        AND o_custkey IN (SELECT c_custkey FROM g_customer WHERE c_mktsegment = 'BUILDING')
-        AND EXISTS (SELECT 1 FROM g_lineitem l
-                    WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)
-      ORDER BY o_orderkey""")
-  }
-
-  /** percent_rank / cume_dist / nth_value — the remaining analytic
-    * window functions. */
-  val winPercentiles: QFn = (s, d) => {
-    val w = Window.partitionBy("c_mktsegment")
-      .orderBy(col("c_acctbal"), col("c_custkey"))
-    val wAll = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    Tables.customer(s, d).select(
-      col("c_mktsegment"), col("c_custkey"), col("c_acctbal"),
-      percent_rank().over(w).as("pr"),
-      cume_dist().over(w).as("cd"),
-      nth_value(col("c_custkey"), 3).over(wAll).as("third_cust"))
-      .orderBy("c_mktsegment", "c_custkey")
-  }
-
-  /** Struct columns: build, nest, project fields back out. */
-  val fnStruct: QFn = (s, d) =>
-    Tables.orders(s, d).select(
-      col("o_orderkey"),
-      struct(
-        col("o_orderstatus").as("status"),
-        struct(col("o_totalprice").as("amount"),
-          col("o_orderpriority").as("prio")).as("detail")).as("ord"))
-      .select(
-        col("o_orderkey"),
-        col("ord.status").as("status"),
-        col("ord.detail.amount").as("amount"),
-        (col("ord.detail.amount") > 150000.0).cast("int").as("is_big"),
-        length(col("ord.detail.prio")).as("prio_len"))
-      .orderBy("o_orderkey")
 
   /** Partitioned parquet sink + partition-pruned re-read: events
     * written partitioned by event_type, read back with a partition
@@ -184,71 +128,6 @@ object Extras {
       .orderBy("user_id", "valid_from")
   }
 
-  /** Batch sessionization (gaps-and-islands): a new session starts
-    * after a >30-minute silence; session id is the running count of
-    * session starts per user. Both windows share one (user_id) hash
-    * partitioning + (ts, event_id) sort → one exchange total, then a
-    * partial-agg rollup per (user, session) — the standard clickstream
-    * shape at any scale. Gap compare is on epoch micros (exact integer
-    * math, identical in DuckDB via epoch_us). */
-  /** Cohort retention matrix — users bucketed by their FIRST active
-    * ISO week, counted per (cohort, week offset) of later activity:
-    * the product-analytics staple. Two aggregations on user_id (first
-    * week, distinct active weeks) + one broadcast-able join; offsets
-    * are exact day arithmetic / 7 (weeks truncate to Monday in both
-    * engines). */
-  val aggRetentionCohort: QFn = (s, d) => {
-    val e = Tables.events(s, d)
-      .select(col("user_id"), date_trunc("week", col("ts")).as("wk"))
-    val firstWk = e.groupBy("user_id").agg(min("wk").as("cohort"))
-    e.distinct().join(firstWk, "user_id")
-      .select(col("cohort"),
-        (datediff(col("wk").cast("date"), col("cohort").cast("date")) / 7)
-          .cast("int").as("week_offset"),
-        col("user_id"))
-      .groupBy("cohort", "week_offset")
-      .agg(countDistinct("user_id").as("n_users"))
-      .orderBy("cohort", "week_offset")
-  }
-
-  val aggSessionize: QFn = (s, d) => {
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val gapUs = 30L * 60 * 1000000
-    Tables.events(s, d)
-      .select(col("user_id"), col("ts"), col("event_id"))
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > gapUs, 1L).otherwise(0L))
-      .withColumn("sess_id", sum("new_sess")
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy("user_id", "sess_id")
-      .agg(count(lit(1)).as("n_events"),
-        min("ts").as("sess_start"), max("ts").as("sess_end"))
-      .orderBy("user_id", "sess_id")
-  }
-
-  /** Funnel analysis (view → click → purchase): per-user earliest
-    * stage times with strict ordering (each stage must follow the
-    * previous one), then stage reach counts. Three aggregations and
-    * two joins ALL keyed on user_id — one co-partitioned lineage, no
-    * broadcast needed at any corpus size. */
-  val winFunnel: QFn = (s, d) => {
-    val e = Tables.events(s, d).select(col("user_id"), col("ts"), col("event_type"))
-    val t1 = e.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min("ts").as("t1"))
-    val t2 = e.filter(col("event_type") === "click")
-      .join(t1, "user_id").filter(col("ts") > col("t1"))
-      .groupBy("user_id").agg(min("ts").as("t2"))
-    val t3 = e.filter(col("event_type") === "purchase")
-      .join(t2, "user_id").filter(col("ts") > col("t2"))
-      .groupBy("user_id").agg(min("ts").as("t3"))
-    t1.agg(lit("1_view").as("stage"), count(lit(1)).as("n_users"))
-      .unionByName(t2.agg(lit("2_click").as("stage"), count(lit(1)).as("n_users")))
-      .unionByName(t3.agg(lit("3_purchase").as("stage"), count(lit(1)).as("n_users")))
-      .orderBy("stage")
-  }
-
   /** Incremental aggregation (materialized-view maintenance): daily
     * partials over the closed history merged with the open delta by
     * re-aggregating the ALGEBRAIC state (count + exact decimal sum) —
@@ -270,67 +149,6 @@ object Extras {
         sum("psum").cast("double").as("sum_value"))
       .orderBy("event_type")
   }
-
-  /** Approximate quantiles (Greenwald–Khanna via
-    * `percentile_approx`) — the bounded-memory sketch a 100 TB
-    * profiler uses — ORACLED through its CONTRACT (r8 verdict item 5):
-    * the sketch value itself is engine-specific (DuckDB's
-    * approx_quantile is a t-digest), so the output carries the
-    * portable columns (q, exact twin, n) plus `rank_ok`, the GK rank
-    * guarantee |rank(approx_q) − q·n| ≤ ε·n (ε = 1/accuracy, +1 slack)
-    * evaluated against the data. The oracle emits literal TRUE for
-    * rank_ok — the hash compare fails exactly when Spark's sketch
-    * breaks its published bound, which is the strongest cross-engine
-    * statement an engine-specific sketch admits. The returned value
-    * v has rank interval [count(<v)+1, count(≤v)]; the check is
-    * interval-overlap so duplicate values can't false-fail it.
-    *
-    * The exact twin is [[Quantiles.exactQuantiles]] — the sharded
-    * rank/count two-pass — NOT the built-in `percentile`, whose
-    * whole-table aggregation buffer was the one unbounded-memory plan
-    * left in the bench path (r4 verdict item 2). */
-  val aggApproxQuantile: QFn = (s, d) => {
-    val li = Tables.lineitem(s, d)
-    val approx = li.agg(
-      expr("percentile_approx(l_extendedprice, array(0.25, 0.5, 0.75), 10000)")
-        .as("approx_a"),
-      count(lit(1)).as("n"))
-      .select(posexplode(col("approx_a")), col("n"))
-      .select((lit(0.25) + col("pos") * lit(0.25)).as("q"),
-        col("col").as("approx_q"), col("n"))
-    val ranked = li.select(col("l_extendedprice").as("x"))
-      .crossJoin(broadcast(approx))
-      .groupBy("q", "n", "approx_q")
-      .agg(
-        sum(when(col("x") <= col("approx_q"), 1L).otherwise(0L)).as("cnt_le"),
-        sum(when(col("x") < col("approx_q"), 1L).otherwise(0L)).as("cnt_lt"))
-    val slack = col("n").cast("double") * 1e-4 + 1.0
-    val rankOk =
-      (col("cnt_le").cast("double") >= col("q") * col("n") - slack) &&
-        ((col("cnt_lt") + 1).cast("double") <= col("q") * col("n") + slack)
-    // round (not fq) on exact_q: Spark's interpolation and DuckDB's
-    // quantile_cont land ulp-apart; round(6) is the absorber (r9 audit)
-    val exact = Quantiles.exactQuantiles(s,
-      li.select("l_extendedprice"), Nil, "l_extendedprice",
-      Seq(0.25, 0.5, 0.75))
-      .select(col("q"), round(col("exact_q"), 6).as("exact_q"))
-    ranked.withColumn("rank_ok", rankOk)
-      .join(broadcast(exact), "q")
-      .select("q", "exact_q", "n", "rank_ok")
-      .orderBy("q")
-  }
-
-  /** The distributed exact-quantile path on its own, ORACLED: the
-    * same (q, exact_q, n) rows DuckDB's `quantile_cont` produces,
-    * proving the sharded rank/count machinery end-to-end — every
-    * shard boundary, offset join, and interpolation — not just its
-    * agreement with another Spark operator. */
-  val aggQuantileTwopass: QFn = (s, d) =>
-    Quantiles.exactQuantiles(s,
-      Tables.lineitem(s, d).select("l_extendedprice"), Nil,
-      "l_extendedprice", Seq(0.1, 0.25, 0.5, 0.75, 0.9, 0.99))
-      .select(col("q"), round(col("exact_q"), 6).as("exact_q"), col("n"))
-      .orderBy("q")
 
   /** CDC changelog apply: compact a change stream (insert / update /
     * delete ops derived from the event feed) into the current
@@ -396,6 +214,133 @@ object Extras {
       .orderBy("o_orderstatus")
   }
 
+  /** Z-order (Morton) clustering key: bit-interleave two join/filter
+    * dimensions so range pruning works on BOTH after one sort — the
+    * layout OPTIMIZE ZORDER writes in lakehouse table maintenance.
+    * The interleave is the classic shift-spread (pure 64-bit integer
+    * ops — bit-identical in any engine); the query reports per
+    * z-range how tightly each source dimension clusters, i.e. the
+    * min/max-pruning stats a file would carry after a z-sorted
+    * rewrite. */
+  val etlZorder: QFn = (s, d) => {
+    def spread16(c: Column): Column = {
+      var x = c.bitwiseAND(lit(0xFFFFL))
+      x = x.bitwiseOR(shiftleft(x, 8)).bitwiseAND(lit(0x00FF00FFL))
+      x = x.bitwiseOR(shiftleft(x, 4)).bitwiseAND(lit(0x0F0F0F0FL))
+      x = x.bitwiseOR(shiftleft(x, 2)).bitwiseAND(lit(0x33333333L))
+      x = x.bitwiseOR(shiftleft(x, 1)).bitwiseAND(lit(0x55555555L))
+      x
+    }
+    Tables.lineitem(s, d)
+      .select(col("l_orderkey"), col("l_partkey"),
+        spread16(col("l_orderkey"))
+          .bitwiseOR(shiftleft(spread16(col("l_partkey")), 1)).as("z"))
+      .groupBy(shiftright(col("z"), 16).as("z_range"))
+      .agg(count(lit(1)).as("n"),
+        min("l_orderkey").as("min_ok"), max("l_orderkey").as("max_ok"),
+        min("l_partkey").as("min_pk"), max("l_partkey").as("max_pk"))
+      .orderBy("z_range")
+  }
+
+  /** Small-file compaction — the lake-maintenance rewrite: a
+    * 64-file fragmented layout (every real ingest produces one)
+    * coalesced into 4, verified lossless by aggregating the
+    * compacted copy against the source-of-truth oracle.
+    * `coalesce` (not `repartition`) keeps the rewrite shuffle-free;
+    * CompactionSpec asserts the output file count. At 100 TB this
+    * runs per-partition with target file size, same plan shape. */
+  val etlCompaction: QFn = (s, d) => {
+    val frag = Tables.sinkPath(s, d, "compact_frag")
+    val tight = Tables.sinkPath(s, d, "compact_tight")
+    val e = Tables.events(s, d).select("event_id", "event_type", "value")
+    e.repartition(64).write.mode("overwrite").parquet(frag)
+    s.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(tight)
+    s.read.parquet(tight)
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
+      .orderBy("event_type")
+  }
+
+  /** Dynamic partition overwrite — the lakehouse partial-reload: a
+    * corrected purchase feed replaces ONLY the purchase partition
+    * (per-write `partitionOverwriteMode=dynamic` option, no session
+    * conf mutation); every other partition's files are untouched. At
+    * 100 TB this is the difference between rewriting a day and
+    * rewriting the table. Final state = untouched partitions ∪
+    * replacement rows, which is exactly what the oracle recomputes. */
+  val etlDynamicPartitionOverwrite: QFn = (s, d) => {
+    val path = Tables.sinkPath(s, d, "dpo_sink")
+    val e = Tables.events(s, d).select("event_id", "event_type", "value")
+    e.write.mode("overwrite").partitionBy("event_type").parquet(path)
+    e.filter(col("event_type") === "purchase" && col("value") > 10)
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("event_type").parquet(path)
+    s.read.parquet(path)
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
+      .orderBy("event_type")
+  }
+
+  /** Bucket count of the GDPR layout. The eraser MUST hash with the
+    * same modulus the writer laid the table out with — a mismatch
+    * targets nonexistent partitions and silently leaves the erased
+    * users' files alive — so both sides share this one constant
+    * instead of taking it as a parameter. */
+  val GdprBuckets = 16
+
+  /** Erase `deleteIds` from a user-hash-bucketed parquet layout at
+    * `path`: map the request to the (few) buckets its ids hash into,
+    * read ONLY those partitions back, filter, and statically
+    * overwrite EACH hit partition — including one whose survivors are
+    * empty. (Dynamic partition overwrite is wrong here: it only
+    * rewrites partitions that receive output rows, so a bucket whose
+    * rows ALL matched `deleteIds` would keep its stale files and the
+    * erasure would silently fail — r3 ADVICE.) `localCheckpoint`
+    * materializes the survivors first so no overwrite reads the files
+    * it is replacing. The per-bucket loop is bounded by the erasure
+    * request size, not the table. */
+  def gdprErase(s: SparkSession, path: String, deleteIds: Seq[Long]): Unit = {
+    val nBuckets = GdprBuckets
+    val buckets = deleteIds.map(id => ((id % nBuckets) + nBuckets) % nBuckets).distinct
+    val survivors = s.read.parquet(path)
+      .filter(col("bucket").isin(buckets: _*))
+      // NULL user_id rows are survivors, not erasure targets: a bare
+      // `!isin` evaluates to NULL for them and would silently erase
+      // bystanders landing in a hit bucket (r4 ADVICE)
+      .filter(col("user_id").isNull || !col("user_id").isin(deleteIds: _*))
+      .localCheckpoint()
+    buckets.foreach { b =>
+      survivors.filter(col("bucket") === b).drop("bucket")
+        .write.mode("overwrite").parquet(s"$path/bucket=$b")
+    }
+  }
+
+  /** Targeted-erasure rewrite (the GDPR delete-by-key pattern): the
+    * table is laid out partitioned by a user-hash bucket and
+    * [[gdprErase]] rewrites exactly the buckets the erasure request
+    * hashes into — every other partition's files are untouched. At
+    * 100 TB this touches |buckets-hit| / |buckets| of the table
+    * instead of all of it. */
+  val etlGdprDelete: QFn = (s, d) => {
+    val path = Tables.sinkPath(s, d, "gdpr_sink")
+    val deleteIds = Seq(1L, 7L, 42L, 99L)
+    Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
+      .withColumn("bucket", pmod(col("user_id"), lit(GdprBuckets)))
+      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+    gdprErase(s, path, deleteIds)
+    s.read.parquet(path).groupBy("event_type")
+      .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"),
+        countDistinct(col("user_id")).as("n_users"))
+      .orderBy("event_type")
+  }
+
+  /** Oracle of `etl_compaction`, `stream_snapshot_sink`, `stream_file_source`, `stream_incremental_resume` and `stream_dedup`. */
+  val eventTypeTotalsSql: String =
+    """SELECT event_type, count(*) AS n,
+           CAST(sum(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
+         FROM events GROUP BY event_type ORDER BY event_type"""
+
   val specs: Seq[KeySpec] = Seq(
     KeySpec.batch("dq_reconcile", dqReconcile,
       // per-order line rollup + the orderkey-co-partitioned header join
@@ -426,47 +371,6 @@ object Extras {
              AS max_abs_diff_micro
          FROM o LEFT JOIN li ON o_orderkey = l_orderkey
          GROUP BY 1 ORDER BY 1"""),
-    KeySpec.batch("agg_pivot", aggPivot, shuffles = 3, {
-      val cols = Segments.map(seg =>
-        s"""CAST(sum(CASE WHEN c_mktsegment = '$seg' THEN CAST(c_acctbal AS DECIMAL(30,2)) END) AS DOUBLE) AS "$seg"""")
-        .mkString(",\n           ")
-      s"""SELECT n_name,
-           $cols
-         FROM customer JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY n_name ORDER BY n_name"""
-    }),
-    KeySpec.batch("agg_sessionize", aggSessionize, shuffles = 2,
-      """WITH t AS (
-           SELECT user_id, ts, event_id,
-             lag(epoch_us(CAST(ts AS TIMESTAMP)))
-               OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM events),
-         marked AS (
-           SELECT user_id, ts, event_id,
-             CASE WHEN prev_us IS NULL
-                    OR epoch_us(CAST(ts AS TIMESTAMP)) - prev_us > 1800000000
-                  THEN 1 ELSE 0 END AS new_sess
-           FROM t),
-         sess AS (
-           SELECT user_id, ts,
-             CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess_id
-           FROM marked)
-         SELECT user_id, sess_id, count(*) AS n_events,
-           min(ts) AS sess_start, max(ts) AS sess_end
-         FROM sess GROUP BY user_id, sess_id ORDER BY user_id, sess_id"""),
-    KeySpec.batch("agg_retention_cohort", aggRetentionCohort, shuffles = 5,
-      """WITH e AS (
-           SELECT user_id, date_trunc('week', CAST(ts AS TIMESTAMP)) AS wk
-           FROM events),
-         f AS (SELECT user_id, min(wk) AS cohort FROM e GROUP BY user_id),
-         a AS (SELECT DISTINCT user_id, wk FROM e)
-         SELECT cohort,
-           CAST(date_diff('day', CAST(cohort AS DATE), CAST(wk AS DATE)) // 7 AS INT)
-             AS week_offset,
-           count(DISTINCT a.user_id) AS n_users
-         FROM a JOIN f USING (user_id)
-         GROUP BY 1, 2 ORDER BY 1, 2"""),
     KeySpec.batch("etl_cdc_apply", etlCdcApply, shuffles = 2,
       """WITH c AS (
            SELECT user_id, ts, event_id, value,
@@ -479,27 +383,6 @@ object Extras {
          SELECT user_id, op AS last_op, ts AS last_ts, value AS last_value
          FROM c WHERE rn = 1 AND op <> 'D' ORDER BY user_id""")
       .constructionJobsOk("applies the changelog to a staged table"),
-    KeySpec.batch("win_funnel", winFunnel, shuffles = 7,
-      """WITH t1 AS (
-           SELECT user_id, min(ts) AS t1 FROM events
-           WHERE event_type = 'view' GROUP BY user_id),
-         t2 AS (
-           SELECT e.user_id, min(e.ts) AS t2 FROM events e
-           JOIN t1 ON e.user_id = t1.user_id
-           WHERE e.event_type = 'click' AND e.ts > t1.t1
-           GROUP BY e.user_id),
-         t3 AS (
-           SELECT e.user_id, min(e.ts) AS t3 FROM events e
-           JOIN t2 ON e.user_id = t2.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > t2.t2
-           GROUP BY e.user_id)
-         SELECT * FROM (
-           SELECT '1_view' AS stage, count(*) AS n_users FROM t1
-           UNION ALL
-           SELECT '2_click', count(*) FROM t2
-           UNION ALL
-           SELECT '3_purchase', count(*) FROM t3)
-         ORDER BY stage"""),
     KeySpec.batch("etl_incremental_agg", etlIncrementalAgg, shuffles = 4,
       """SELECT event_type,
            count(DISTINCT CAST(ts AS DATE)) AS n_partials,
@@ -507,31 +390,6 @@ object Extras {
            CAST(sum(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
          FROM events GROUP BY event_type ORDER BY event_type""")
       .constructionJobsOk("maintains a staged running-aggregate table"),
-    KeySpec.batch("agg_approx_quantile", aggApproxQuantile,
-      // +2 since r9: the oracle'd rank_ok contract column adds a
-      // 3-group rank-count aggregation (grouped count + its exchange)
-      // on top of the sketch agg and the exact-twin two-pass
-      shuffles = 10, {
-      // the portable columns + the literal-TRUE contract bit (see the
-      // aggApproxQuantile scaladoc: hash mismatch ⇔ GK bound violated)
-      val rows = Seq(0.25, 0.5, 0.75).map(q =>
-        s"""SELECT CAST($q AS DOUBLE) AS q,
-             round(quantile_cont(l_extendedprice, $q), 6) AS exact_q,
-             count(*) AS n, true AS rank_ok FROM lineitem""")
-      rows.mkString("", "\n UNION ALL\n ", "\n ORDER BY q")
-    })
-      .crossJoinOk("agg_stats' global exactQuantiles path — O(1) build sides"),
-    KeySpec.batch("agg_quantile_twopass", aggQuantileTwopass, shuffles = 8, {
-      // quantile_cont shares the (n−1)·q linear-interpolation
-      // definition with the sharded two-pass; round(6) absorbs the
-      // final-interpolation ulp like agg_percentile_exact
-      val rows = Seq(0.1, 0.25, 0.5, 0.75, 0.9, 0.99).map(q =>
-        s"""SELECT CAST($q AS DOUBLE) AS q,
-             round(quantile_cont(l_extendedprice, $q), 6) AS exact_q,
-             count(*) AS n FROM lineitem""")
-      rows.mkString("", "\n UNION ALL\n ", "\n ORDER BY q")
-    })
-      .crossJoinOk("agg_stats' global exactQuantiles path — O(1) build sides"),
     KeySpec.batch("etl_scd2", etlScd2, shuffles = 2,
       """WITH marked AS (
            SELECT user_id, ts, event_id, event_type,
@@ -557,28 +415,6 @@ object Extras {
             FROM events e JOIN st ON e.event_type = st.event_type)
           SELECT event_id, event_type, value, z FROM zs
           WHERE abs(z) > 2.5 ORDER BY event_id"""),
-    KeySpec.batch("subquery_family", subqueryFamily, shuffles = 2,
-      """SELECT o_orderkey, o_totalprice
-         FROM orders o
-         WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders)
-           AND o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-           AND EXISTS (SELECT 1 FROM lineitem l
-                       WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)
-         ORDER BY o_orderkey"""),
-    KeySpec.batch("win_percentiles", winPercentiles, shuffles = 2,
-      """SELECT c_mktsegment, c_custkey, c_acctbal,
-           percent_rank() OVER w AS pr,
-           cume_dist() OVER w AS cd,
-           nth_value(c_custkey, 3) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-             AND UNBOUNDED FOLLOWING) AS third_cust
-         FROM customer
-         WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
-         ORDER BY c_mktsegment, c_custkey"""),
-    KeySpec.batch("fn_struct", fnStruct, shuffles = 1,
-      """SELECT o_orderkey, o_orderstatus AS status, o_totalprice AS amount,
-           CAST(o_totalprice > 150000.0 AS INT) AS is_big,
-           CAST(length(o_orderpriority) AS INT) AS prio_len
-         FROM orders ORDER BY o_orderkey"""),
     KeySpec.batch("sink_partitioned_scan", sinkPartitionedScan, shuffles = 2,
       """SELECT event_type, count(*) AS n,
            CAST(sum(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
@@ -615,5 +451,40 @@ object Extras {
                 coalesce(u_acctbal, c_acctbal) AS acctbal
          FROM customer FULL OUTER JOIN updates ON c_custkey = u_custkey
          ORDER BY custkey""")
-      .constructionJobsOk("merges into a staged target table"))
+      .constructionJobsOk("merges into a staged target table"),
+    KeySpec.batch("etl_dynamic_partition_overwrite", etlDynamicPartitionOverwrite, shuffles = 2,
+      s"""SELECT event_type, count(*) AS n, ${sqlSum2("value")} AS sum_value
+          FROM (
+            SELECT event_type, value FROM events WHERE event_type <> 'purchase'
+            UNION ALL
+            SELECT event_type, value FROM events
+            WHERE event_type = 'purchase' AND value > 10)
+          GROUP BY event_type ORDER BY event_type""")
+      .constructionJobsOk("overwrites hit partitions of a staged layout"),
+    KeySpec.batch("etl_gdpr_delete", etlGdprDelete, shuffles = 3,
+      s"""SELECT event_type, count(*) AS n, ${sqlSum2("value")} AS sum_value,
+            count(DISTINCT user_id) AS n_users
+          FROM events WHERE user_id NOT IN (1, 7, 42, 99)
+          GROUP BY event_type ORDER BY event_type""")
+      .constructionJobsOk("rewrites the hit buckets of the staged layout"),
+    KeySpec.batch("etl_compaction", etlCompaction, shuffles = 2, eventTypeTotalsSql)
+      .constructionJobsOk("writes the small-file layout it compacts"),
+    KeySpec.batch("etl_zorder", etlZorder, shuffles = 2,
+      """WITH b AS (
+           SELECT l_orderkey, l_partkey,
+             l_orderkey & 65535 AS a, l_partkey & 65535 AS bb FROM lineitem),
+         s1 AS (SELECT l_orderkey, l_partkey,
+             (a | (a << 8)) & 16711935 AS a, (bb | (bb << 8)) & 16711935 AS bb FROM b),
+         s2 AS (SELECT l_orderkey, l_partkey,
+             (a | (a << 4)) & 252645135 AS a, (bb | (bb << 4)) & 252645135 AS bb FROM s1),
+         s3 AS (SELECT l_orderkey, l_partkey,
+             (a | (a << 2)) & 858993459 AS a, (bb | (bb << 2)) & 858993459 AS bb FROM s2),
+         s4 AS (SELECT l_orderkey, l_partkey,
+             (a | (a << 1)) & 1431655765 AS a, (bb | (bb << 1)) & 1431655765 AS bb FROM s3),
+         z AS (SELECT l_orderkey, l_partkey, (a | (bb << 1)) >> 16 AS z_range FROM s4)
+         SELECT z_range, count(*) AS n,
+           min(l_orderkey) AS min_ok, max(l_orderkey) AS max_ok,
+           min(l_partkey) AS min_pk, max(l_partkey) AS max_pk
+         FROM z GROUP BY z_range ORDER BY z_range""")
+      .constructionJobsOk("writes the interleaved layout it range-scans"))
 }

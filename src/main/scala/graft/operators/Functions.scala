@@ -265,6 +265,51 @@ object Functions {
       .orderBy("p_partkey")
   }
 
+  /** Struct columns: build, nest, project fields back out. */
+  val fnStruct: QFn = (s, d) =>
+    Tables.orders(s, d).select(
+      col("o_orderkey"),
+      struct(
+        col("o_orderstatus").as("status"),
+        struct(col("o_totalprice").as("amount"),
+          col("o_orderpriority").as("prio")).as("detail")).as("ord"))
+      .select(
+        col("o_orderkey"),
+        col("ord.status").as("status"),
+        col("ord.detail.amount").as("amount"),
+        (col("ord.detail.amount") > 150000.0).cast("int").as("is_big"),
+        length(col("ord.detail.prio")).as("prio_len"))
+      .orderBy("o_orderkey")
+
+  /** Bitwise + hash function family. */
+  val fnBitwiseHash: QFn = (s, d) =>
+    Tables.part(s, d).select(
+      col("p_partkey"),
+      col("p_partkey").bitwiseAND(lit(255L)).as("band"),
+      col("p_partkey").bitwiseOR(lit(4096L)).as("bor"),
+      col("p_partkey").bitwiseXOR(lit(21L)).as("bxor"),
+      shiftleft(col("p_partkey"), 3).as("shl"),
+      shiftright(col("p_partkey"), 2).as("shr"),
+      bit_count(col("p_partkey")).as("popcnt"),
+      md5(col("p_name")).as("md5_hex"),
+      sha2(col("p_brand"), 256).as("sha256_hex"),
+      length(sha2(concat(col("p_name"), col("p_type")), 512)).as("sha512_len"))
+      .orderBy("p_partkey")
+
+  /** Spark 4 collation: case-insensitive (UTF8_LCASE) vs binary
+    * string comparison as first-class column semantics — no more
+    * lower()-wrapping every predicate. The oracle expresses the same
+    * comparisons with explicit case folding. */
+  val fnCollation: QFn = (s, d) =>
+    Tables.part(s, d).select(
+      col("p_partkey"),
+      (collate(upper(col("p_type")), "UTF8_LCASE") ===
+        collate(col("p_type"), "UTF8_LCASE")).as("ci_eq"),
+      (upper(col("p_type")) === col("p_type")).as("bin_eq"),
+      startswith(collate(upper(col("p_name")), "UTF8_LCASE"),
+        collate(lit("std"), "UTF8_LCASE")).as("ci_prefix"))
+      .orderBy("p_partkey")
+
   val specs: Seq[KeySpec] = Seq(
     KeySpec.batch("fn_url", fnUrl, shuffles = 1,
       // expected URL components reconstructed from the source columns,
@@ -403,5 +448,28 @@ object Functions {
            CAST(props->>'$.k' AS BIGINT) * 2 AS k2,
            props->>'$.missing' AS k_missing,
            CAST(length(props) AS INT) AS raw_len
-         FROM events ORDER BY event_id"""))
+         FROM events ORDER BY event_id"""),
+    KeySpec.batch("fn_struct", fnStruct, shuffles = 1,
+      """SELECT o_orderkey, o_orderstatus AS status, o_totalprice AS amount,
+           CAST(o_totalprice > 150000.0 AS INT) AS is_big,
+           CAST(length(o_orderpriority) AS INT) AS prio_len
+         FROM orders ORDER BY o_orderkey"""),
+    KeySpec.batch("fn_collation", fnCollation, shuffles = 1,
+      """SELECT p_partkey,
+           lower(upper(p_type)) = lower(p_type) AS ci_eq,
+           upper(p_type) = p_type AS bin_eq,
+           starts_with(lower(upper(p_name)), lower('std')) AS ci_prefix
+         FROM part ORDER BY p_partkey"""),
+    KeySpec.batch("fn_bitwise_hash", fnBitwiseHash, shuffles = 1,
+      """SELECT p_partkey,
+           p_partkey & 255 AS band,
+           p_partkey | 4096 AS bor,
+           xor(p_partkey, 21) AS bxor,
+           p_partkey << 3 AS shl,
+           p_partkey >> 2 AS shr,
+           CAST(bit_count(p_partkey) AS INT) AS popcnt,
+           md5(p_name) AS md5_hex,
+           sha256(p_brand) AS sha256_hex,
+           128 AS sha512_len
+         FROM part ORDER BY p_partkey"""))
 }

@@ -418,7 +418,7 @@ object Graph {
     KeySpec.batch("graph_components", graphComponents,
       // final plan reads the last round's localCheckpoint: two size
       // groupBys + the presentation sort
-      shuffles = 4,
+      shuffles = 3,
       // TRUE components via recursive closure — an INDEPENDENT
       // formulation of what the distributed fixpoint converges to
       // (min reachable node id), so label propagation is verified

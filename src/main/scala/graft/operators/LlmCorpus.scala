@@ -21,6 +21,11 @@ object LlmCorpus {
 
   private val words = split(col("text"), " ")
 
+  /** The number in a document's `source`: sources below 16 are the
+    * base corpus and the rest the delta, for every incremental
+    * ingestion key. */
+  private[operators] val srcNum = regexp_extract(col("source"), "(\\d+)", 1).cast("int")
+
   /** COLLOCATIONS — top-50 bigrams by pointwise mutual information.
     * One corpus pass through the native `bigram_pairs` generator
     * (no per-row UDF, no second tokenization) collapses the corpus
@@ -99,7 +104,6 @@ object LlmCorpus {
     * hash, never on document bodies; the banded MinHash variant
     * composes the same way on `llm_minhash_portable`'s band keys. */
   val llmIncrementalDedup: QFn = (s, d) => {
-    val srcNum = regexp_extract(col("source"), "(\\d+)", 1).cast("int")
     val lead = md5(array_join(slice(split(col("text"), " "), 1, 16), " "))
     val docs = Tables.documents(s, d).withColumn("src_num", srcNum)
     val existingHashes = docs.filter(col("src_num") < 16)

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{KeySpec, QFn, Tables}
+import graft.functions.CosineSimF
 
 /** PORTABLE locality-sensitive hashing — the two LSH families whose
   * APPROXIMATE output is itself DuckDB-reproducible, closing the last
@@ -62,11 +63,6 @@ object LlmLsh {
     Seq.fill(SignGroups * SignBits)(Seq.fill(64)(if (rnd.nextBoolean()) 1 else -1))
   }
 
-  private val ProbeIds = Seq(1L, 2L, 3L, 4L, 5L)
-
-  private def cosine(a: Column, b: Column): Column =
-    graft.functions.CosineSimF(a, b)
-
   /** (vec_id, embedding, g, code): the 8 group codes per vector, each
     * an 8-bit integer whose bit j is sign(⟨vq, plane⟩ ≥ 0) — vq the
     * micro-unit quantized embedding, so every dot is an exact integer
@@ -108,7 +104,7 @@ object LlmLsh {
     * corpus fraction, not rediscover brute force). */
   private[graft] def signCandidates(s: SparkSession, d: String): DataFrame = {
     val codes = signCodes(Tables.embeddings(s, d))
-    val probes = codes.filter(col("vec_id").isin(ProbeIds: _*))
+    val probes = codes.filter(col("vec_id").isin(LlmSimilarity.ProbeIds: _*))
       .select(col("vec_id").as("probe_id"), col("g"), col("code"))
     codes.join(broadcast(probes), Seq("g", "code"))
       .filter(col("vec_id") =!= col("probe_id"))
@@ -118,13 +114,13 @@ object LlmLsh {
   val llmKnnSignLsh: QFn = (s, d) => {
     val emb = Tables.embeddings(s, d)
     val cands = signCandidates(s, d)
-    val probeVecs = emb.filter(col("vec_id").isin(ProbeIds: _*))
+    val probeVecs = emb.filter(col("vec_id").isin(LlmSimilarity.ProbeIds: _*))
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
     val w = Window.partitionBy("probe_id")
       .orderBy(col("sim").desc, col("vec_id"))
     cands.join(emb, "vec_id")
       .join(broadcast(probeVecs), "probe_id")
-      .withColumn("sim", round(cosine(col("probe_vec"), col("embedding")), 6))
+      .withColumn("sim", round(CosineSimF(col("probe_vec"), col("embedding")), 6))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 5)
       .select("probe_id", "rk", "vec_id", "sim")
@@ -335,9 +331,6 @@ object LlmLsh {
     * verify step needs. */
   private val NeardupExactJaccard = 0.5
 
-  private def srcNum: Column =
-    regexp_extract(col("source"), "(\\d+)", 1).cast("int")
-
   /** INGESTION-MODE near-dedup index (r12 verdict #1) — the third leg
     * of the production ingestion triptych (`llm_incremental_dedup`
     * checks exact lead fingerprints, `llm_knn_ivf_append` maintains
@@ -357,7 +350,7 @@ object LlmLsh {
     val fp = graft.IndexStore.fingerprint(s"$d/documents.parquet")
     graft.IndexStore.cachedDir(s"neardup_band_index_v1_$fp") { tmp =>
       val sigs = portableSignaturesOn(
-        Tables.documents(s, d).filter(srcNum < NeardupSplit))
+        Tables.documents(s, d).filter(LlmCorpus.srcNum < NeardupSplit))
       sigs.write.mode("overwrite").parquet(s"$tmp/sigs")
       minhashBandKeys(sigs).write.mode("overwrite").parquet(s"$tmp/keys")
     }
@@ -427,7 +420,7 @@ object LlmLsh {
     * per delta doc: (doc_id, source, n_chars, dup_of, kept). */
   val llmIncrementalNeardup: QFn = (s, d) => {
     val path = neardupIndexPath(s, d)
-    val delta = Tables.documents(s, d).filter(srcNum >= NeardupSplit)
+    val delta = Tables.documents(s, d).filter(LlmCorpus.srcNum >= NeardupSplit)
     incrementalNeardupOn(delta, portableSignaturesOn(delta),
       s.read.parquet(s"$path/keys"), s.read.parquet(s"$path/sigs"))
   }
@@ -438,8 +431,8 @@ object LlmLsh {
     * (IncrementalNeardupSpec). */
   private[graft] def incrementalNeardupOneShot(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val baseSigs = portableSignaturesOn(docs.filter(srcNum < NeardupSplit))
-    val delta = docs.filter(srcNum >= NeardupSplit)
+    val baseSigs = portableSignaturesOn(docs.filter(LlmCorpus.srcNum < NeardupSplit))
+    val delta = docs.filter(LlmCorpus.srcNum >= NeardupSplit)
     incrementalNeardupOn(delta, portableSignaturesOn(delta),
       minhashBandKeys(baseSigs), baseSigs)
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{KeySpec, QFn, Tables}
+import graft.functions.CosineSimF
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -53,16 +54,10 @@ object LlmSimilarity {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Cosine similarity of two float-array columns — the native
-    * codegen'd expression (same sequential double accumulation as the
-    * higher-order-function formulation, ~20× faster because HOF
-    * lambdas are interpreted per element). */
-  private def cosine(a: Column, b: Column): Column =
-    graft.functions.CosineSimF(a, b)
-
   // ------------------------------------------------------------- knn
 
-  private val ProbeIds = Seq(1L, 2L, 3L, 4L, 5L)
+  /** The probe vectors / documents every k-NN and retrieval key queries. */
+  private[operators] val ProbeIds = Seq(1L, 2L, 3L, 4L, 5L)
 
   /** Brute-force cosine top-5 for 5 probe vectors: probes broadcast,
     * corpus scanned once, per-probe top-k via window. At 100 TB the
@@ -76,7 +71,7 @@ object LlmSimilarity {
       .orderBy(col("sim").desc, col("vec_id"))
     emb.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("sim", round(cosine(col("probe_vec"), col("embedding")), 6))
+      .withColumn("sim", round(CosineSimF(col("probe_vec"), col("embedding")), 6))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 5)
       .select("probe_id", "rk", "vec_id", "sim")
@@ -128,7 +123,7 @@ object LlmSimilarity {
     val w = Window.partitionBy(idCol)
       .orderBy(col("cent_sim").desc, col("cent_id"))
     src.join(broadcast(cents))
-      .withColumn("cent_sim", round(cosine(col(vecCol), col("cent_vec")), 6))
+      .withColumn("cent_sim", round(CosineSimF(col(vecCol), col("cent_vec")), 6))
       .withColumn("cent_rk", row_number().over(w))
       .filter(col("cent_rk") <= n)
   }
@@ -148,7 +143,7 @@ object LlmSimilarity {
       .orderBy(col("sim").desc, col("vec_id"))
     corpus.join(broadcast(probes), col("cluster") === col("search_cluster"))
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("sim", round(cosine(col("probe_vec"), col("embedding")), 6))
+      .withColumn("sim", round(CosineSimF(col("probe_vec"), col("embedding")), 6))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 5)
       .select("probe_id", "rk", "vec_id", "sim")
@@ -532,7 +527,7 @@ object LlmSimilarity {
     val wVec = Window.partitionBy("probe_id").orderBy(col("sim").desc, col("vec_id"))
     val vec = emb.crossJoin(broadcast(probesV))
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("sim", round(cosine(col("pv"), col("embedding")), 6))
+      .withColumn("sim", round(CosineSimF(col("pv"), col("embedding")), 6))
       .withColumn("vec_rk", row_number().over(wVec))
       .filter(col("vec_rk") <= 20)
       .select(col("probe_id"), col("vec_id").as("doc_id"), col("vec_rk"))
@@ -566,7 +561,7 @@ object LlmSimilarity {
     val wVec = Window.partitionBy("probe_id").orderBy(col("sim").desc, col("vec_id"))
     val top20 = emb.crossJoin(broadcast(probesV))
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("sim", round(cosine(col("pv"), col("embedding")), 6))
+      .withColumn("sim", round(CosineSimF(col("pv"), col("embedding")), 6))
       .withColumn("rk", row_number().over(wVec))
       .filter(col("rk") <= 20)
       .select(col("probe_id"), col("vec_id"), col("sim"), col("embedding"))
@@ -941,7 +936,7 @@ object LlmSimilarity {
       .select(col("vec_id").as("eval_id"), col("embedding").as("ev"))
     emb.filter(col("vec_id") % 10 =!= 0)
       .crossJoin(broadcast(eval))
-      .withColumn("sim", round(cosine(col("ev"), col("embedding")), 6))
+      .withColumn("sim", round(CosineSimF(col("ev"), col("embedding")), 6))
       .filter(col("sim") >= 0.4)
       .groupBy("vec_id")
       .agg(count(lit(1)).as("n_eval_hits"), max("sim").as("max_sim"))
@@ -1175,7 +1170,7 @@ object LlmSimilarity {
     // cell-partitioned index layout the corpus would be WRITTEN in.
     val w = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell"))
     val assigned = emb.crossJoin(centDf)
-      .withColumn("csim", least(greatest(cosine(col("embedding"), col("cent_vec")),
+      .withColumn("csim", least(greatest(CosineSimF(col("embedding"), col("cent_vec")),
         lit(-1.0)), lit(1.0)))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
@@ -1206,7 +1201,7 @@ object LlmSimilarity {
     val pairs = x.join(admDf, "ca")
       .join(y, col("cb") === col("cy") && col("label") === col("lb") &&
         col("a") < col("b"))
-      .withColumn("cos_sim", round(cosine(col("ea"), col("eb")), 6))
+      .withColumn("cos_sim", round(CosineSimF(col("ea"), col("eb")), 6))
       .filter(col("cos_sim") >= tau)
       .select(col("a"), col("b"), col("label"), col("cos_sim"))
       .orderBy("a", "b")

@@ -410,9 +410,6 @@ object Multimodal {
     * (`llm_incremental_dedup`, `llm_incremental_neardup`). */
   private val PhashSplit = 16
 
-  private def srcNum: Column =
-    regexp_extract(col("source"), "(\\d+)", 1).cast("int")
-
   private def narrowBands: Seq[(Int, Int, Int)] =
     phashBands.map { case (off, w) => (0, off, w) }
 
@@ -441,7 +438,7 @@ object Multimodal {
     val fp = graft.IndexStore.fingerprint(s"$d/documents.parquet")
     graft.IndexStore.cachedDir(s"phash_band_index_v1_$fp") { tmp =>
       buildPhashIndex(
-        Tables.documents(s, d).filter(srcNum < PhashSplit),
+        Tables.documents(s, d).filter(LlmCorpus.srcNum < PhashSplit),
         tmp, narrowHashes, narrowBands)
     }
   }
@@ -514,7 +511,7 @@ object Multimodal {
     * doc, same shape as the text twin. */
   val mmPhashIncremental: QFn = (s, d) => {
     val path = phashIndexPath(s, d)
-    val delta = Tables.documents(s, d).filter(srcNum >= PhashSplit)
+    val delta = Tables.documents(s, d).filter(LlmCorpus.srcNum >= PhashSplit)
     phashIncrementalOn(delta, narrowHashes(delta),
       s.read.parquet(s"$path/bands"), s.read.parquet(s"$path/hashes"))
   }
@@ -523,11 +520,11 @@ object Multimodal {
     * the index-persistence contract, as IncrementalNeardupSpec. */
   private[graft] def phashIncrementalOneShot(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val baseHashes = narrowHashes(docs.filter(srcNum < PhashSplit))
+    val baseHashes = narrowHashes(docs.filter(LlmCorpus.srcNum < PhashSplit))
     val baseBands = baseHashes.select(col("doc_id"),
       posexplode(array(bandColumns(narrowBands): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bval")
-    val delta = docs.filter(srcNum >= PhashSplit)
+    val delta = docs.filter(LlmCorpus.srcNum >= PhashSplit)
     phashIncrementalOn(delta, narrowHashes(delta), baseBands, baseHashes)
   }
 
@@ -723,9 +720,12 @@ object Multimodal {
       // (band,bval) partial-agg exchange + band re-agg + output sort
       shuffles = 3, phashBandStatsOracleSql),
     KeySpec.batch("mm_phash_incremental", mmPhashIncremental,
-      // llm_incremental_neardup's pipeline shape over phash
-      // bands (media leg)
-      shuffles = 6, phashIncrementalOracleSql)
+      // llm_incremental_neardup's pipeline shape over phash bands
+      // (media leg): delta-doc exchange + base candidate distinct + base
+      // verdict groupBy + presentation sort. At the audit scale the
+      // prior-delta branch finds no duplicate, so AQE replaces it with
+      // an empty relation and drops its distinct + groupBy (6 with rows)
+      shuffles = 4, phashIncrementalOracleSql)
       .constructionJobsOk("first touch of new content stages the base " +
         "media corpus's phash band index (bands + hash store) it then bands " +
         "the delta against — the media-side leg of the same pattern")

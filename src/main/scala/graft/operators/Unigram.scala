@@ -467,9 +467,11 @@ object Unigram {
       // stages unigram_vocab_v1 (shared by vocab + encode)
       .reads("llm_unigram_vocab"),
     KeySpec.batch("llm_unigram_encode", llmUnigramEncode,
-      // encode: distinct-words shuffle + per-doc groupBy + first-word
-      // join + presentation sort (segmentation itself is broadcast-only)
-      shuffles = 4, encodeOracleSql)
+      // encode: per-doc groupBy + the first-word side's doc_id exchange
+      // + presentation sort (the distinct-words shuffle runs in the
+      // localCheckpointed segmentation's job; segmentation joins are
+      // broadcast)
+      shuffles = 3, encodeOracleSql)
       .crossJoinOk("each unrolled segmentation step joins the ≤(alphabet+VocabMulti)-row " +
         "broadcast piece table on a substring match (inherently non-equi) — O(1) build " +
         "side at any corpus size")

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Window functions (SURVEY.md §2.5): ranking, top-k, analytic
-  * lag/lead, ROWS and RANGE frames.
+  * lag/lead, ROWS and RANGE frames, percent_rank/cume_dist/nth_value,
+  * and a per-user conversion funnel (stage-ordered min-time joins
+  * on `user_id`).
   *
   * Scale notes: every window here partitions by a high-cardinality key
   * (`user_id`, `c_mktsegment`) — one hash shuffle on the partition key,
@@ -88,6 +90,41 @@ object Windows {
       .orderBy("user_id", "ts", "event_id")
   }
 
+  /** percent_rank / cume_dist / nth_value — the remaining analytic
+    * window functions. */
+  val winPercentiles: QFn = (s, d) => {
+    val w = Window.partitionBy("c_mktsegment")
+      .orderBy(col("c_acctbal"), col("c_custkey"))
+    val wAll = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    Tables.customer(s, d).select(
+      col("c_mktsegment"), col("c_custkey"), col("c_acctbal"),
+      percent_rank().over(w).as("pr"),
+      cume_dist().over(w).as("cd"),
+      nth_value(col("c_custkey"), 3).over(wAll).as("third_cust"))
+      .orderBy("c_mktsegment", "c_custkey")
+  }
+
+  /** Funnel analysis (view → click → purchase): per-user earliest
+    * stage times with strict ordering (each stage must follow the
+    * previous one), then stage reach counts. Three aggregations and
+    * two joins ALL keyed on user_id — one co-partitioned lineage, no
+    * broadcast needed at any corpus size. */
+  val winFunnel: QFn = (s, d) => {
+    val e = Tables.events(s, d).select(col("user_id"), col("ts"), col("event_type"))
+    val t1 = e.filter(col("event_type") === "view")
+      .groupBy("user_id").agg(min("ts").as("t1"))
+    val t2 = e.filter(col("event_type") === "click")
+      .join(t1, "user_id").filter(col("ts") > col("t1"))
+      .groupBy("user_id").agg(min("ts").as("t2"))
+    val t3 = e.filter(col("event_type") === "purchase")
+      .join(t2, "user_id").filter(col("ts") > col("t2"))
+      .groupBy("user_id").agg(min("ts").as("t3"))
+    t1.agg(lit("1_view").as("stage"), count(lit(1)).as("n_users"))
+      .unionByName(t2.agg(lit("2_click").as("stage"), count(lit(1)).as("n_users")))
+      .unionByName(t3.agg(lit("3_purchase").as("stage"), count(lit(1)).as("n_users")))
+      .orderBy("stage")
+  }
+
   val specs: Seq[KeySpec] = Seq(
     KeySpec.batch("win_rank", winRank, shuffles = 2,
       """SELECT c_mktsegment, c_custkey, c_acctbal,
@@ -129,5 +166,35 @@ object Windows {
          FROM events
          WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(CAST(ts AS TIMESTAMP))
            RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-         ORDER BY user_id, ts, event_id"""))
+         ORDER BY user_id, ts, event_id"""),
+    KeySpec.batch("win_funnel", winFunnel, shuffles = 7,
+      """WITH t1 AS (
+           SELECT user_id, min(ts) AS t1 FROM events
+           WHERE event_type = 'view' GROUP BY user_id),
+         t2 AS (
+           SELECT e.user_id, min(e.ts) AS t2 FROM events e
+           JOIN t1 ON e.user_id = t1.user_id
+           WHERE e.event_type = 'click' AND e.ts > t1.t1
+           GROUP BY e.user_id),
+         t3 AS (
+           SELECT e.user_id, min(e.ts) AS t3 FROM events e
+           JOIN t2 ON e.user_id = t2.user_id
+           WHERE e.event_type = 'purchase' AND e.ts > t2.t2
+           GROUP BY e.user_id)
+         SELECT * FROM (
+           SELECT '1_view' AS stage, count(*) AS n_users FROM t1
+           UNION ALL
+           SELECT '2_click', count(*) FROM t2
+           UNION ALL
+           SELECT '3_purchase', count(*) FROM t3)
+         ORDER BY stage"""),
+    KeySpec.batch("win_percentiles", winPercentiles, shuffles = 2,
+      """SELECT c_mktsegment, c_custkey, c_acctbal,
+           percent_rank() OVER w AS pr,
+           cume_dist() OVER w AS cd,
+           nth_value(c_custkey, 3) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
+             AND UNBOUNDED FOLLOWING) AS third_cust
+         FROM customer
+         WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
+         ORDER BY c_mktsegment, c_custkey"""))
 }

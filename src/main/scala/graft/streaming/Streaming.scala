@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{KeySpec, QFn, Tables}
+import graft.{KeySpec, QFn, Tables, Det}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
@@ -30,6 +30,8 @@ import scala.jdk.CollectionConverters._
   * keys (user_id, window), so state stores shard across executors.
   */
 object Streaming {
+
+  import Det._
 
   case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
     event_type: String, value: Double, props: String)
@@ -498,10 +500,6 @@ object Streaming {
     sinkHook; sinkDirs.add(p)
   }
 
-  private def dsum2(c: org.apache.spark.sql.Column) =
-    sum(c.cast(DecimalType(30, 2))).cast("double")
-  private def csum2(c: org.apache.spark.sql.Column) = graft.Det.csum2(c)
-
   /** 1-hour tumbling windows × event_type — watermark + APPEND, the
     * production shape: a window's state row is emitted once when the
     * watermark seals it and then EVICTED, so state holds only open
@@ -652,7 +650,7 @@ object Streaming {
     import df.sparkSession.implicits._
     df.filter(col("event_type") === "click")
       .select(col("event_id"), col("ts"), col("user_id"),
-        graft.Det.cents(col("value")).as("vc"))
+        cents(col("value")).as("vc"))
       .as[CepTick]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(),
@@ -959,6 +957,28 @@ object Streaming {
       .orderBy("user_id")
   }
 
+  /** The stream joins' condition: a click by the purchase's user in
+    * the hour up to the purchase. */
+  private val clickInHourBefore =
+    col("p_user") === col("c_user") &&
+      col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+      col("c_ts") <= col("p_ts")
+
+  /** Purchases `joinType`-joined to clicks under the flush feed: each
+    * side keeps the `__flush__` sentinels and is watermarked BEFORE
+    * its projection, so the sentinels seal both sides' state. */
+  private def flushedJoin(df: DataFrame, joinType: String): DataFrame = {
+    val clicks = df.filter(col("event_type").isin("click", "__flush__"))
+      .withWatermark("ts", "1 hour")
+      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+        col("event_id").as("click_id"))
+    val purchases = df.filter(col("event_type").isin("purchase", "__flush__"))
+      .withWatermark("ts", "1 hour")
+      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+        col("event_id").as("purchase_id"), col("value"))
+    purchases.join(clicks, clickInHourBefore, joinType)
+  }
+
   /** Stream-stream inner join: each purchase joined to the same
     * user's clicks in the preceding hour. Both sides are watermarked
     * so the state store can evict; append mode. The oracle is the
@@ -973,10 +993,7 @@ object Streaming {
         .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
           col("event_id").as("purchase_id"), col("value"))
         .withWatermark("p_ts", "1 hour")
-      purchases.join(clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-          col("c_ts") <= col("p_ts"))
+      purchases.join(clicks, clickInHourBefore)
     }.select(col("purchase_id"), col("click_id"), col("p_user").as("user_id"))
       .orderBy("purchase_id", "click_id")
 
@@ -992,21 +1009,9 @@ object Streaming {
     * event_type, and a filtered-first stream would never see them);
     * sentinel rows ride user_id −1 and drop out at the end. */
   val streamJoinOuter: QFn = (s, d) =>
-    runStream(s, d, OutputMode.Append(), "sjoino", flush = true) { df =>
-      val clicks = df.filter(col("event_type").isin("click", "__flush__"))
-        .withWatermark("ts", "1 hour")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-          col("event_id").as("click_id"))
-      val purchases = df.filter(col("event_type").isin("purchase", "__flush__"))
-        .withWatermark("ts", "1 hour")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("event_id").as("purchase_id"), col("value"))
-      purchases.join(clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-          col("c_ts") <= col("p_ts"),
-        "left_outer")
-    }.filter(col("p_user") =!= -1)
+    runStream(s, d, OutputMode.Append(), "sjoino", flush = true)(
+      flushedJoin(_, "left_outer"))
+      .filter(col("p_user") =!= -1)
       .select(col("purchase_id"), col("click_id"), col("p_user").as("user_id"))
       .orderBy("purchase_id", "click_id")
 
@@ -1022,21 +1027,9 @@ object Streaming {
     * `coalesce` over the two user columns identifies them even when
     * one side is null). */
   val streamJoinFullOuter: QFn = (s, d) =>
-    runStream(s, d, OutputMode.Append(), "sjoinfo", flush = true) { df =>
-      val clicks = df.filter(col("event_type").isin("click", "__flush__"))
-        .withWatermark("ts", "1 hour")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-          col("event_id").as("click_id"))
-      val purchases = df.filter(col("event_type").isin("purchase", "__flush__"))
-        .withWatermark("ts", "1 hour")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("event_id").as("purchase_id"), col("value"))
-      purchases.join(clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-          col("c_ts") <= col("p_ts"),
-        "full_outer")
-    }.filter(coalesce(col("p_user"), col("c_user")) =!= -1)
+    runStream(s, d, OutputMode.Append(), "sjoinfo", flush = true)(
+      flushedJoin(_, "full_outer"))
+      .filter(coalesce(col("p_user"), col("c_user")) =!= -1)
       .select(col("purchase_id"), col("click_id"),
         coalesce(col("p_user"), col("c_user")).as("user_id"))
       .orderBy("purchase_id", "click_id")
@@ -1049,21 +1042,9 @@ object Streaming {
     * sentinel click). Equals the batch RIGHT join under the flush
     * feed. */
   val streamJoinRightOuter: QFn = (s, d) =>
-    runStream(s, d, OutputMode.Append(), "sjoinro", flush = true) { df =>
-      val clicks = df.filter(col("event_type").isin("click", "__flush__"))
-        .withWatermark("ts", "1 hour")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-          col("event_id").as("click_id"))
-      val purchases = df.filter(col("event_type").isin("purchase", "__flush__"))
-        .withWatermark("ts", "1 hour")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("event_id").as("purchase_id"), col("value"))
-      purchases.join(clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-          col("c_ts") <= col("p_ts"),
-        "right_outer")
-    }.filter(col("c_user") =!= -1)
+    runStream(s, d, OutputMode.Append(), "sjoinro", flush = true)(
+      flushedJoin(_, "right_outer"))
+      .filter(col("c_user") =!= -1)
       .select(col("purchase_id"), col("click_id"), col("c_user").as("user_id"))
       .orderBy("purchase_id", "click_id")
 
@@ -1085,11 +1066,7 @@ object Streaming {
         .withWatermark("ts", "1 hour")
         .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
           col("event_id").as("purchase_id"), col("value"))
-      purchases.join(clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-          col("c_ts") <= col("p_ts"),
-        "left_semi")
+      purchases.join(clicks, clickInHourBefore, "left_semi")
     }.filter(col("p_user") =!= -1)
       .select(col("purchase_id"), col("p_user").as("user_id"))
       .orderBy("purchase_id")
@@ -1272,7 +1249,7 @@ object Streaming {
     KeySpec.stream("stream_snapshot_sink", streamSnapshotSink,
       // the latest committed snapshot holds exactly the replayed events,
       // so its aggregate equals the batch aggregate over the table
-      graft.operators.Extras2.eventTypeTotalsSql),
+      graft.operators.Etl.eventTypeTotalsSql),
     KeySpec.stream("stream_join", streamJoin,
       """SELECT p.event_id AS purchase_id, c.event_id AS click_id, p.user_id
          FROM events p JOIN events c
@@ -1331,9 +1308,9 @@ object Streaming {
              AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP))
          ORDER BY purchase_id"""),
     KeySpec.stream("stream_file_source", streamFileSource,
-      graft.operators.Extras2.eventTypeTotalsSql),
+      graft.operators.Etl.eventTypeTotalsSql),
     KeySpec.stream("stream_incremental_resume", streamIncrementalResume,
-      graft.operators.Extras2.eventTypeTotalsSql),
+      graft.operators.Etl.eventTypeTotalsSql),
     KeySpec.stream("stream_foreach_batch", streamForeachBatch,
       """SELECT user_id % 10 AS cohort, count(*) AS n,
            CAST(sum(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
@@ -1342,7 +1319,7 @@ object Streaming {
     KeySpec.stream("stream_bidask_spread", streamBidaskSpread,
       // the flushed streaming quote summary equals the batch namesake
       // key bit-for-bit, so it SHARES that oracle (divergence-proof)
-      graft.operators.TimeSeries2.bidaskSpreadSql),
+      graft.operators.TimeSeries.bidaskSpreadSql),
     KeySpec.stream("stream_asof_enrich", streamAsofEnrich,
       // the flushed temporal join equals the batch as-of exactly: the
       // same correlated-subquery oracle shape the native as-of keys use
@@ -1430,7 +1407,7 @@ object Streaming {
          SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS w_start,
            event_type, count(*) AS n
          FROM kept GROUP BY 1, 2 ORDER BY 1, 2"""),
-    KeySpec.stream("stream_dedup", streamDedup, graft.operators.Extras2.eventTypeTotalsSql),
+    KeySpec.stream("stream_dedup", streamDedup, graft.operators.Etl.eventTypeTotalsSql),
     KeySpec.stream("stream_stateful", streamStateful, purchaseTotalsSql),
     KeySpec.stream("stream_stateful_tws", streamStatefulTws, purchaseTotalsSql),
     KeySpec.stream("stream_stateful_map", streamStatefulMap,

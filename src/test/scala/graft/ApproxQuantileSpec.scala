@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 class ApproxQuantileSpec extends SparkTestBase {
 
   test("operator output: rank_ok true everywhere, quartile rows in order") {
-    val rows = operators.Extras.aggApproxQuantile(spark, sf).collect()
+    val rows = operators.Relational.aggApproxQuantile(spark, sf).collect()
     assert(rows.length == 3)
     assert(rows.map(_.getDouble(0)).toSeq == Seq(0.25, 0.5, 0.75))
     rows.foreach(r => assert(r.getAs[Boolean]("rank_ok"),
@@ -37,7 +37,7 @@ class ApproxQuantileSpec extends SparkTestBase {
   }
 
   test("exact quantile column matches the sorted-data interpolation") {
-    val rows = operators.Extras.aggApproxQuantile(spark, sf).collect()
+    val rows = operators.Relational.aggApproxQuantile(spark, sf).collect()
     val prices = Tables.lineitem(spark, sf)
       .select("l_extendedprice").collect().map(_.getDouble(0)).sorted
     rows.foreach { r =>

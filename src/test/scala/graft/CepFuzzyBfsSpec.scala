@@ -43,7 +43,7 @@ class CepFuzzyBfsSpec extends SparkTestBase {
       (4L, ts("2024-01-01 11:00:00"), 23L, 2.00),
       (4L, ts("2024-01-01 11:00:00"), 24L, 5.00))
       .toDF("user_id", "ts", "event_id", "value")
-    val out = operators.TimeSeries2.cepVReversal(ticks).collect()
+    val out = operators.TimeSeries.cepVReversal(ticks).collect()
       .map(r => r.getAs[Long]("user_id") ->
         (r.getAs[Long]("n_matches"), r.getAs[Long]("rebound_cents"),
           r.getAs[Long]("max_depth_cents"))).toMap
@@ -153,7 +153,7 @@ class CepFuzzyBfsSpec extends SparkTestBase {
   }
 
   test("dq_reconcile: audit invariants hold on the shipped data") {
-    val rows = operators.Extras.dqReconcile(spark, sf).collect()
+    val rows = operators.Etl.dqReconcile(spark, sf).collect()
     assert(rows.map(_.getAs[String]("o_orderstatus")).toSet == Set("F", "O", "P"))
     rows.foreach { r =>
       val (n, orphan, mismatch) = (r.getAs[Long]("n_orders"),

@@ -6,7 +6,7 @@ package graft
 class CompactionSpec extends SparkTestBase {
 
   test("compacted layout has at most 4 parquet files") {
-    operators.Extras2.etlCompaction(spark, sf).collect()
+    operators.Etl.etlCompaction(spark, sf).collect()
     // the SAME app/dataset-suffixed paths the operator writes (a fixed
     // literal here once passed only via stale /tmp leftovers)
     val tight = new java.io.File(Tables.sinkPath(spark, sf, "compact_tight"))

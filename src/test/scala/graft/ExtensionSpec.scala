@@ -112,8 +112,8 @@ class ExtensionSpec extends SparkTestBase {
 
   test("join_dpp plants a dynamic-pruning subquery on the fact scan") {
     // build the partitioned layout, then inspect the join subplan
-    operators.Extras2.joinDpp(spark, sf).collect()
-    val p = plan(operators.Extras2.dppJoinOnly(spark, sf))
+    operators.Relational.joinDpp(spark, sf).collect()
+    val p = plan(operators.Relational.dppJoinOnly(spark, sf))
     assert(p.toLowerCase.contains("dynamicpruning"),
       s"no dynamic partition pruning in plan:\n$p")
   }

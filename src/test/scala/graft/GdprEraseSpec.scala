@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * the r3 advisor flagged: a bucket whose rows ALL match the erasure
   * request. Dynamic partition overwrite would skip that partition
   * (no output rows → no rewrite) and the stale files would silently
-  * survive; [[operators.Extras2.gdprErase]] statically overwrites
+  * survive; [[operators.Etl.gdprErase]] statically overwrites
   * every hit bucket, so the erasure must hold even when a bucket's
   * survivor set is empty. */
 class GdprEraseSpec extends SparkTestBase {
@@ -24,7 +24,7 @@ class GdprEraseSpec extends SparkTestBase {
       .withColumn("bucket", pmod(col("user_id"), lit(16)))
     rows.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
-    operators.Extras2.gdprErase(spark, path, Seq(3L, 5L))
+    operators.Etl.gdprErase(spark, path, Seq(3L, 5L))
 
     val back = spark.read.parquet(path)
     // every row of the erased users is gone — including bucket 3,
@@ -48,7 +48,7 @@ class GdprEraseSpec extends SparkTestBase {
       .withColumn("bucket", coalesce(pmod(col("user_id"), lit(16)), lit(5L)))
     rows.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
-    operators.Extras2.gdprErase(spark, path, Seq(5L))
+    operators.Etl.gdprErase(spark, path, Seq(5L))
 
     val back = spark.read.parquet(path)
     assert(back.filter(col("user_id") === 5L).count() == 0)

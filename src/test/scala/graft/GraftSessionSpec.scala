@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The single session factory: how `SPARK_GRAFT_CPUS` becomes a core
-  * count, and that no other source file builds a session of its own. */
+  * count, and that no other source file builds a session of its own;
+  * and that modules are named by family, not numbered by round. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("cores: an integer as given, '*' as the host's cores, unset as 32") {
@@ -14,18 +15,29 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(GraftSession.coresOf(None) == 32)
   }
 
+  private def scalaFiles(root: String): Seq[Path] = {
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
   test("only GraftSession.scala calls the session builder") {
     val builder = """SparkSession\s*\.\s*builder""".r
-    def scalaFiles(root: String): Seq[Path] = {
-      val walk = Files.walk(Paths.get(root))
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
     val sources = scalaFiles("src/main") ++ scalaFiles("src/test")
     assert(sources.exists(_.getFileName.toString == "GraftSession.scala"))
     val builders = sources
       .filter(p => builder.findFirstIn(Files.readString(p)).isDefined)
       .map(_.getFileName.toString)
     assert(builders == Seq("GraftSession.scala"))
+  }
+
+  test("modules are named by family: no src/main file or top-level object ends in a digit") {
+    val topObject = """(?m)^object\s+(\w+)""".r
+    val numbered = scalaFiles("src/main").flatMap { p =>
+      (p.getFileName.toString.stripSuffix(".scala") +:
+        topObject.findAllMatchIn(Files.readString(p)).map(_.group(1)).toSeq)
+        .filter(_.last.isDigit).distinct
+    }
+    assert(numbered.isEmpty)
   }
 }

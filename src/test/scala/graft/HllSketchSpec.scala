@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 class HllSketchSpec extends SparkTestBase {
 
   test("operator output: contract booleans true, exact count positive") {
-    val row = operators.Extras2.aggHllSketch(spark, sf).collect().head
+    val row = operators.Relational.aggHllSketch(spark, sf).collect().head
     assert(row.getAs[Long]("exact_users") > 0)
     assert(row.getAs[Boolean]("direct_err_ok"), "direct HLL estimate off exact by >10%")
     assert(row.getAs[Boolean]("merged_err_ok"), "unioned HLL estimate off exact by >10%")

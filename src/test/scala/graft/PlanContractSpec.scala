@@ -61,9 +61,9 @@ class PlanContractSpec extends SparkTestBase {
     // sf0.01 (not the smoke sf0.001): the skewed reducer partition must
     // exceed the key's 64KB detection threshold for the split to fire
     if (requireSf(sfData)) {
-      val df = operators.Extras2.joinSkewAqe(spark, sfData)
+      val df = operators.Relational.joinSkewAqe(spark, sfData)
       assert(df.count() > 0)
-      val p = operators.Extras2.lastSkewJoinPlan
+      val p = operators.Relational.lastSkewJoinPlan
       assert(p.contains("skew=true") || p.contains("skewed"),
         s"AQE did not split the skewed join partition:\n$p")
       // the audit reads the captured live plan once, which releases it
@@ -71,8 +71,8 @@ class PlanContractSpec extends SparkTestBase {
       assert(PlanAudit.constructionPlan("join_skew_aqe").isEmpty,
         "the captured plan stayed pinned after the audit read it")
       // a run that fails before capturing leaves no stale plan behind
-      operators.Extras2.joinSkewAqe(spark, sf)
-      intercept[Exception](operators.Extras2.joinSkewAqe(spark, s"$sf/absent"))
+      operators.Relational.joinSkewAqe(spark, sf)
+      intercept[Exception](operators.Relational.joinSkewAqe(spark, s"$sf/absent"))
       assert(PlanAudit.constructionPlan("join_skew_aqe").isEmpty,
         "a failed run left the previous run's plan to be audited")
     }
@@ -96,7 +96,7 @@ class PlanContractSpec extends SparkTestBase {
     // builds a BroadcastHashJoin on it — un-broadcastable at scale.
     // The explicit merge hint pins the shuffled plan; this contract
     // keeps it pinned.
-    val p = executed(operators.Extras2.joinRangeBucketed(spark, sf))
+    val p = executed(operators.Relational.joinRangeBucketed(spark, sf))
     assert(!p.contains("BroadcastHashJoin") && !p.contains("BroadcastExchange"),
       s"bucket join reverted to a broadcast build side:\n$p")
     assert(p.contains("SortMergeJoin"),
@@ -113,7 +113,7 @@ class PlanContractSpec extends SparkTestBase {
   test("ts_rolling_beta: the market series joins by BROADCAST (no fact shuffle for the join)") {
     // the #bars-row index series must never force the symbol series
     // through a join exchange — that broadcast is the key's 100 TB story
-    val p = executed(operators.TimeSeries2.tsRollingBeta(spark, sf))
+    val p = executed(operators.TimeSeries.tsRollingBeta(spark, sf))
     assert(p.contains("BroadcastHashJoin"),
       s"market join lost its broadcast build side:\n$p")
   }

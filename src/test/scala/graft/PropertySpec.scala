@@ -360,7 +360,7 @@ class PropertySpec extends SparkTestBase {
         (u, new java.sql.Timestamp(base + off * 60000L), i.toLong,
           cents / 100.0)
       }
-      val got = operators.TimeSeries2
+      val got = operators.TimeSeries
         .cepVReversal(rows.toDF("user_id", "ts", "event_id", "value"))
         .collect()
         .map(r => r.getAs[Long]("user_id") ->

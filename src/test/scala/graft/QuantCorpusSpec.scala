@@ -2,15 +2,15 @@ package graft
 
 import org.apache.spark.sql.Row
 
-/** Semantic invariants for the round-8 session-5 keys (TimeSeries2 +
-  * LlmCorpus). The driver's DuckDB oracle proves cross-engine hash
+/** Semantic invariants for the market-microstructure keys (TimeSeries)
+  * and LlmCorpus. The driver's DuckDB oracle proves cross-engine hash
   * equality; these assert the STATISTICS mean what they claim — the
   * class of bug a hash match against an identically-wrong SQL twin
   * would not catch. */
 class QuantCorpusSpec extends SparkTestBase {
 
   test("ts_rolling_beta: the market's beta against itself is identically 1") {
-    val rows = operators.TimeSeries2.tsRollingBeta(spark, sf)
+    val rows = operators.TimeSeries.tsRollingBeta(spark, sf)
       .filter("event_type = 'purchase'").collect()
     assert(rows.nonEmpty)
     assert(rows.forall(r => math.abs(r.getAs[Double]("beta") - 1.0) < 1e-9),
@@ -18,7 +18,7 @@ class QuantCorpusSpec extends SparkTestBase {
   }
 
   test("ts_autocorr: coefficients are true correlations (|r| <= 1), one row per (type, lag)") {
-    val rows = operators.TimeSeries2.tsAutocorr(spark, sf).collect()
+    val rows = operators.TimeSeries.tsAutocorr(spark, sf).collect()
     val types = rows.map(_.getAs[String]("event_type")).distinct
     assert(rows.length == types.length * 2, "lag 1 and lag 2 per event_type")
     assert(rows.forall(r => math.abs(r.getAs[Double]("autocorr")) <= 1.0 + 1e-9))
@@ -31,7 +31,7 @@ class QuantCorpusSpec extends SparkTestBase {
   }
 
   test("ts_bidask_spread: micro-unit identities hold and only two-sided hours emit") {
-    val rows = operators.TimeSeries2.tsBidaskSpread(spark, sf).collect()
+    val rows = operators.TimeSeries.tsBidaskSpread(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_bid") > 0 && r.getAs[Long]("n_ask") > 0)
@@ -68,7 +68,7 @@ class QuantCorpusSpec extends SparkTestBase {
     rows.map { case (id, ts, uid, et, v, p) => (id, ts.getTime * 1000L, uid, et, v, p) }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = operators.TimeSeries2.tsBidaskSpread(spark, dir)
+    val out = operators.TimeSeries.tsBidaskSpread(spark, dir)
       .collect().sortBy(_.getAs[Timestamp]("bar").getTime)
     assert(out.length == 2)
     val b1 = out(0)
@@ -88,7 +88,7 @@ class QuantCorpusSpec extends SparkTestBase {
   }
 
   test("ts_roll_spread: spread only where serial covariance is negative, and equals 2*sqrt(-cov)") {
-    val rows = operators.TimeSeries2.tsRollSpread(spark, sfData).collect()
+    val rows = operators.TimeSeries.tsRollSpread(spark, sfData).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val cov = r.getAs[Double]("serial_cov")
@@ -103,7 +103,7 @@ class QuantCorpusSpec extends SparkTestBase {
   }
 
   test("ts_amihud: illiquidity is positive and scales like impact-per-size") {
-    val rows = operators.TimeSeries2.tsAmihud(spark, sfData).collect()
+    val rows = operators.TimeSeries.tsAmihud(spark, sfData).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_bars") > 0)
@@ -112,13 +112,13 @@ class QuantCorpusSpec extends SparkTestBase {
   }
 
   test("ts_kyle_lambda: one regression row over the joined bar frame") {
-    val rows = operators.TimeSeries2.tsKyleLambda(spark, sfData).collect()
+    val rows = operators.TimeSeries.tsKyleLambda(spark, sfData).collect()
     assert(rows.length == 1)
     assert(rows.head.getAs[Long]("n") > 0)
   }
 
   test("ts_variance_ratio: VR(4) is positive and matches a driver-side recomputation") {
-    val rows = operators.TimeSeries2.tsVarianceRatio(spark, sfData).collect()
+    val rows = operators.TimeSeries.tsVarianceRatio(spark, sfData).collect()
     assert(rows.nonEmpty)
     // recompute one symbol's VR from raw hourly bars on the driver
     val et = rows.head.getAs[String]("event_type")
@@ -143,7 +143,7 @@ class QuantCorpusSpec extends SparkTestBase {
   }
 
   test("ts_var_es: expected shortfall is at most VaR and both sit in the loss tail") {
-    val rows = operators.TimeSeries2.tsVarEs(spark, sf).collect()
+    val rows = operators.TimeSeries.tsVarEs(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val v = r.getAs[Double]("var95"); val es = r.getAs[Double]("es95")
@@ -154,7 +154,7 @@ class QuantCorpusSpec extends SparkTestBase {
   }
 
   test("ts_effective_spread: enrichment builds on the native as-of SparkPlan, spreads non-negative") {
-    val rows = operators.TimeSeries2.tsEffectiveSpread(spark, sf).collect()
+    val rows = operators.TimeSeries.tsEffectiveSpread(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Double]("avg_eff_spread") >= 0.0)
@@ -162,14 +162,14 @@ class QuantCorpusSpec extends SparkTestBase {
     }
     // the consumer reads the staged enrichment (tick-store shape); the
     // native as-of node lives in the BUILD plan, pinned here
-    val p = operators.TimeSeries2.enrichTrades(spark, sf)
+    val p = operators.TimeSeries.enrichTrades(spark, sf)
       .queryExecution.executedPlan.toString
     assert(p.contains("AsOfJoinExec") || p.contains("AsOfJoin"),
       s"expected the native as-of physical node in the build plan:\n$p")
   }
 
   test("ts_trade_sign: classes partition the classified trades; share matches the counts") {
-    val rows = operators.TimeSeries2.tsTradeSign(spark, sf).collect()
+    val rows = operators.TimeSeries.tsTradeSign(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val b = r.getAs[Long]("n_buy"); val sl = r.getAs[Long]("n_sell")
@@ -181,7 +181,7 @@ class QuantCorpusSpec extends SparkTestBase {
   }
 
   test("ts_ofi: imbalance is the signed-size flow over the classified volume") {
-    val rows = operators.TimeSeries2.tsOfi(spark, sf).collect()
+    val rows = operators.TimeSeries.tsOfi(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val b = r.getAs[Long]("buy_size"); val sl = r.getAs[Long]("sell_size")

@@ -9,7 +9,7 @@ class R10AdditionsSpec extends SparkTestBase {
 
   test("ts_corwin_schultz: per-symbol estimate matches a plain-Scala replay of the formula") {
     import org.apache.spark.sql.functions._
-    val out = operators.TimeSeries2.tsCorwinSchultz(spark, sf).collect()
+    val out = operators.TimeSeries.tsCorwinSchultz(spark, sf).collect()
       .map(r => r.getAs[String]("event_type") ->
         (r.getAs[Long]("n_pairs"), r.getAs[Double]("cs_spread_raw"),
           r.getAs[Double]("cs_spread"))).toMap
@@ -55,8 +55,8 @@ class R10AdditionsSpec extends SparkTestBase {
 
   test("ts_tsrv: per-symbol statistics match a plain-Scala replay of the two-scale formula") {
     import org.apache.spark.sql.functions.{col, floor}
-    val K = operators.TimeSeries2.TsrvK
-    val out = operators.TimeSeries2.tsTsrv(spark, sf).collect()
+    val K = operators.TimeSeries.TsrvK
+    val out = operators.TimeSeries.tsTsrv(spark, sf).collect()
       .map(r => r.getAs[String]("event_type") ->
         (r.getAs[Long]("n"), r.getAs[Double]("rv_all"), r.getAs[Double]("tsrv")))
       .toMap

@@ -49,7 +49,7 @@ class RelationalSpec extends SparkTestBase {
   }
 
   test("join_shuffle_hash plans a ShuffledHashJoin (hint honored, no sort phase)") {
-    val p = plan(operators.Extras2.joinShuffleHash(spark, sf))
+    val p = plan(operators.Relational.joinShuffleHash(spark, sf))
     assert(p.contains("ShuffledHashJoin"), s"expected SHJ in plan:\n$p")
     assert(!p.contains("SortMergeJoin"), s"SMJ planned despite hint:\n$p")
   }
@@ -60,7 +60,7 @@ class RelationalSpec extends SparkTestBase {
   }
 
   test("join_multiway broadcasts every dimension (facts shuffle only on keys)") {
-    val p = plan(operators.Extras2.joinMultiway(spark, sf))
+    val p = plan(operators.Relational.joinMultiway(spark, sf))
     val nBhj = "BroadcastHashJoin".r.findAllIn(p).length
     assert(nBhj >= 3, s"expected >=3 broadcast joins (nation/region, supplier, nation), got $nBhj:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
@@ -69,14 +69,14 @@ class RelationalSpec extends SparkTestBase {
 
   test("join_bucketed_colocated: bucketed layout removes the join shuffle") {
     // run the registered key once (creates the bucketed tables + checks rows)
-    assert(operators.Extras2.joinBucketedColocated(spark, sf).count() > 0)
+    assert(operators.Relational.joinBucketedColocated(spark, sf).count() > 0)
     // at smoke scale the planner would rather broadcast the tiny orders
     // side (also exchange-free on the fact, but not what this spec
     // proves); pin it off so the bucketed sort-merge path is exercised
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joinDf = operators.Extras2.bucketedJoinOnly(spark, sf)
+      val joinDf = operators.Relational.bucketedJoinOnly(spark, sf)
       joinDf.collect()
       val p = plan(joinDf)
       assert(!p.contains("Exchange"),
