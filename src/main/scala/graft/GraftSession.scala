@@ -32,7 +32,7 @@ object GraftSession {
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
     // throwaway scratch (shuffle files, RocksDB state working dirs)
-    // on the RAM disk when there is one; see graft.scratchConfs
+    // in this JVM's fast run directory; see graft.scratchConfs
     scratchConfs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder
       // interval/bucket arithmetic on NTZ timestamps must agree with
@@ -42,9 +42,10 @@ object GraftSession {
       // only matters when the probe finds timestamp[ns] (it must be set
       // at session build) and is a no-op for µs/ms event files
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // managed tables (bucketed-join keys, ANALYZE) live in tmp, not
-      // in the working directory
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      // managed tables (bucketed-join keys, ANALYZE) live in this
+      // JVM's run directory: never in the working directory, never
+      // shared with another JVM's saved tables
+      .config("spark.sql.warehouse.dir", s"$bulkRunDir/warehouse")
       .config("spark.sql.catalogImplementation", "in-memory")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

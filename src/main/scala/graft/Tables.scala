@@ -14,19 +14,15 @@ import org.apache.spark.sql.types._
   */
 object Tables {
 
-  /** Isolated write-then-read sink path for operators that exercise a
-    * storage layout (roundtrips, partition overwrites, IVF lists):
-    * suffixed with the dataset dir's hash and the Spark
-    * applicationId, so concurrent runs over different scale factors —
-    * or two JVMs (bench + test) running at once — never interleave
-    * writes into the same directory (r3 ADVICE). Within one app and
-    * dataset the path is stable, so repeated bench runs of the same
-    * key reuse (overwrite) their own sink. */
-  def sinkPath(s: SparkSession, d: String, tag: String): String = {
-    val h = d.hashCode & 0x7fffffff
-    val app = s.sparkContext.applicationId
-    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${h}_$app"
-  }
+  /** Write-then-read sink path for operators that exercise a storage
+    * layout (roundtrips, partition overwrites, IVF lists): `tag` and
+    * the dataset dir's hash in this JVM's [[graft.bulkRunDir]], so two
+    * JVMs (bench + test) never interleave writes into one directory
+    * and every sink goes when its JVM exits. Within one JVM and
+    * dataset the path is stable, so repeated runs of a key overwrite
+    * their own sink. (`s` is unused; the call sites pass it.) */
+  def sinkPath(s: SparkSession, d: String, tag: String): String =
+    s"$bulkRunDir/${tag}_${d.hashCode & 0x7fffffff}"
 
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",

@@ -23,8 +23,8 @@ object Etl {
     * filter (the spec asserts PartitionFilters in the scan). This is
     * THE layout decision that makes a 100 TB lake queryable. */
   val sinkPartitionedScan: QFn = (s, d) => {
-    // per-(dataset, app) path + overwrite: isolated from concurrent
-    // runs, no tmpdir growth across repeated runs in one app
+    // per-(dataset, JVM) path + overwrite: isolated from concurrent
+    // runs, no growth across repeated runs in one JVM
     val path = Tables.sinkPath(s, d, "part_sink")
     Tables.events(s, d)
       .write.mode("overwrite").partitionBy("event_type").parquet(path)

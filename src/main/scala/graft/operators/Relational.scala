@@ -56,7 +56,7 @@ object Relational {
     * DuckDB oracle, so the whole write→read path is oracle-checked. */
   private def roundtrip(s: SparkSession, d: String, fmt: String): DataFrame = {
     val sample = Tables.lineitem(s, d).filter(col("l_orderkey") % 50 === 0)
-    // per-(format, dataset, app) path (mode=overwrite): repeated
+    // per-(format, dataset, JVM) path (mode=overwrite): repeated
     // verify/bench runs reuse the directory instead of accumulating
     // litter; concurrent runs over other SFs/JVMs are isolated
     val path = Tables.sinkPath(s, d, s"roundtrip_$fmt")
@@ -714,15 +714,17 @@ object Relational {
     * `join_inner_equi` pays per query into a one-time layout cost —
     * on a petabyte fact table that is the difference between a
     * re-shuffle per query and none. The bucketed copies live in the
-    * session warehouse (tmp); rewritten per (session, sf) so stale
+    * session warehouse (the JVM's run directory); rewritten per
+    * (session, sf) so stale
     * layouts can never leak across scale factors. */
   val joinBucketedColocated: QFn = (s, d) => {
     val suffix = d.replaceAll("[^a-zA-Z0-9]", "_")
     val (tl, to) = (s"bkt_lineitem_$suffix", s"bkt_orders_$suffix")
     if (!s.catalog.tableExists(tl) || !s.catalog.tableExists(to)) {
-      // the in-memory catalog is per-JVM but the warehouse directory is
-      // not: clear any orphan location from a previous run before the
-      // CREATE, or saveAsTable fails with LOCATION_ALREADY_EXISTS
+      // the in-memory catalog lives with the session, the warehouse
+      // directory with the JVM (or a harness's work dir): clear any
+      // orphan location from an earlier session before the CREATE, or
+      // saveAsTable fails with LOCATION_ALREADY_EXISTS
       val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
       Seq(tl, to).foreach { t =>
         val dir = new java.io.File(wh, t)
@@ -968,13 +970,10 @@ object Relational {
     a.crossJoin(b)
   }
 
-  /** Executed (adaptive-final) plan of the last [[joinSkewAqe]] run —
-    * spec diagnostic for the OptimizeSkewedJoin assertion. */
-  @volatile var lastSkewJoinPlan: String = ""
-
-  /** The same executed plan as a live SparkPlan, so PlanAudit can run
-    * its structural checks (countShuffles, smell scan) against the
-    * construction-time join instead of the returned LocalTableScan.
+  /** Executed (adaptive-final) plan of the last [[joinSkewAqe]] run
+    * as a live SparkPlan, so PlanAudit can run its structural checks
+    * (countShuffles, smell scan) against the construction-time join
+    * instead of the returned LocalTableScan.
     * Cleared at the start of every [[joinSkewAqe]] and by
     * [[takeSkewJoinExec]], so a live plan (with its materialized query
     * stages) is never pinned past its audit, and a run that fails
@@ -995,8 +994,8 @@ object Relational {
     * must split the hot reducer partition at runtime instead of one
     * straggler task dragging the stage — at 100 TB the difference
     * between a 5-minute and a 5-hour join. The skewed execution runs
-    * INSIDE the conf scope (plan captured in [[lastSkewJoinPlan]] /
-    * [[lastSkewJoinExec]]); its own ~11 collected rows return as a
+    * INSIDE the conf scope (plan captured in [[lastSkewJoinExec]]);
+    * its own ~11 collected rows return as a
     * local relation (r14) — no second execution under session confs,
     * and the conf restore runs before anything downstream executes,
     * so nothing leaks to later keys. PlanAudit audits the CAPTURED
@@ -1039,7 +1038,6 @@ object Relational {
     val rows = try {
       val skewed = build()
       val out = skewed.collect() // ~11 aggregated rows; runs the skew-split join
-      lastSkewJoinPlan = skewed.queryExecution.executedPlan.toString
       lastSkewJoinExec.set(skewed.queryExecution.executedPlan)
       (out, skewed.schema)
     } finally prev.foreach {
@@ -1258,8 +1256,7 @@ object Relational {
          SELECT 'anti', c_custkey, c_name FROM customer
          WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
          ORDER BY jt, c_custkey"""),
-    KeySpec.batch("join_theta_range", joinThetaRange, shuffles = 2, thetaPairsSql)
-      .crossJoinOk("an intentionally bounded theta join"),
+    KeySpec.batch("join_theta_range", joinThetaRange, shuffles = 2, thetaPairsSql),
     KeySpec.batch("join_theta_prefix", joinThetaPrefix, shuffles = 3,
       // deliberately the NAIVE pair enumeration: the oracle verifies the
       // prefix-sum rewrite against the pair semantics it replaces

@@ -48,8 +48,8 @@ object SnapshotTable {
   /** COW units per table — fixed key-range quartiles. */
   val NBuckets = 4
 
-  /** One construction per (session, dataset): the table root is
-    * appId-suffixed (Tables.sinkPath), so concurrent JVMs never
+  /** One construction per (JVM, dataset): the table root is in the
+    * JVM's run directory (Tables.sinkPath), so concurrent JVMs never
     * interleave writes; the memo makes repeated bench runs of either
     * key read the already-committed manifests. */
   private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()

@@ -688,9 +688,7 @@ object TimeSeries {
     * Two map-side-combined aggregations + a bar equi-join; the
     * moments reduce to a single row. */
   val tsCorrTypes: QFn = (s, d) => {
-    val hourly = Tables.events(s, d)
-      .select(bar.as("bar"), col("event_type"), col("value"))
-      .groupBy("bar", "event_type").agg(davg2(col("value")).as("v"))
+    val hourly = hourlyBars(s, d, "v")
     val x = hourly.filter(col("event_type") === "purchase")
       .select(col("bar"), col("v").as("x"))
     val y = hourly.filter(col("event_type") === "click")
@@ -765,8 +763,7 @@ object TimeSeries {
     * size; the fill window partitions by type, so no global sort. */
   val tsGapfill: QFn = (s, d) => {
     val e = Tables.events(s, d)
-    val hourly = e.select(bar.as("bar"), col("event_type"), col("value"))
-      .groupBy("bar", "event_type").agg(davg2(col("value")).as("avg_value"))
+    val hourly = hourlyBars(s, d, "avg_value")
     val bounds = e.agg(min(bar).as("lo"), max(bar).as("hi"))
     val spine = bounds
       .select(explode(expr("sequence(lo, hi, interval 1 hour)")).as("bar"))
@@ -792,8 +789,7 @@ object TimeSeries {
     * (event_type)-partitioned single-shuffle shape as gapfill. */
   val tsInterpolate: QFn = (s, d) => {
     val e = Tables.events(s, d)
-    val hourly = e.select(bar.as("bar"), col("event_type"), col("value"))
-      .groupBy("bar", "event_type").agg(davg2(col("value")).as("v"))
+    val hourly = hourlyBars(s, d, "v")
     val bounds = e.agg(min(bar).as("lo"), max(bar).as("hi"))
     val spine = bounds
       .select(explode(expr("sequence(lo, hi, interval 1 hour)")).as("bar"))
@@ -903,6 +899,33 @@ object TimeSeries {
       .orderBy("bar", "event_type")
   }
 
+  /** The trades-with-mid enrichment as oracle SQL, the CTEs after
+    * `WITH`: `q`, the view quotes deduplicated per (user, ts) to their
+    * max value; `t`, the clicks; and `j`, each click with the latest
+    * quote at or before it as `mid` (null when there is none). The
+    * oracles of the four keys that read the staged enrichment
+    * continue from `j`. */
+  private def tradesWithMidCtes(withSize: Boolean): String = {
+    // the size column the flow keys sum, on `t` and carried through `j`
+    val (tSz, jSz) =
+      if (withSize) (",\n              CAST(props->>'$.k' AS BIGINT) AS sz", " t.sz,")
+      else ("", "")
+    s"""q AS (
+            SELECT user_id AS q_uid, ts AS q_ts, max(value) AS qv
+            FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+          t AS (
+            SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value$tSz
+            FROM events WHERE event_type = 'click'),
+          j AS (
+            SELECT t.ts, t.value,$jSz
+              (SELECT qv FROM q
+               WHERE q.q_uid = t.user_id AND q.q_ts <= t.ts
+               ORDER BY q.q_ts DESC LIMIT 1) AS mid
+            FROM t)"""
+  }
+  private val tradesWithMidSql = tradesWithMidCtes(withSize = false)
+  private val tradesWithSizeMidSql = tradesWithMidCtes(withSize = true)
+
   val specs: Seq[KeySpec] = Seq(
     KeySpec.batch("ts_intraday_profile", tsIntradayProfile,
       // hour-of-day pre-agg + the 24-row-per-symbol rank window + sort
@@ -1006,18 +1029,7 @@ object TimeSeries {
       // and the native as-of's key exchanges live in the build job):
       // hour agg + presentation sort
       shuffles = 2,
-      s"""WITH q AS (
-            SELECT user_id AS q_uid, ts AS q_ts, max(value) AS qv
-            FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-          t AS (
-            SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
-            FROM events WHERE event_type = 'click'),
-          j AS (
-            SELECT t.ts, t.value,
-              (SELECT qv FROM q
-               WHERE q.q_uid = t.user_id AND q.q_ts <= t.ts
-               ORDER BY q.q_ts DESC LIMIT 1) AS mid
-            FROM t)
+      s"""WITH $tradesWithMidSql
           SELECT date_trunc('hour', ts) AS bar, count(*) AS n_trades,
             ${sqlFq(sqlSum4("2.0 * abs(value - mid)") + " / count(*)", 6)}
               AS avg_eff_spread
@@ -1030,18 +1042,7 @@ object TimeSeries {
     KeySpec.batch("ts_trade_sign", tsTradeSign,
       // staged-enrichment read: hour agg + presentation sort
       shuffles = 2,
-      """WITH q AS (
-            SELECT user_id AS q_uid, ts AS q_ts, max(value) AS qv
-            FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-          t AS (
-            SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
-            FROM events WHERE event_type = 'click'),
-          j AS (
-            SELECT t.ts, t.value,
-              (SELECT qv FROM q
-               WHERE q.q_uid = t.user_id AND q.q_ts <= t.ts
-               ORDER BY q.q_ts DESC LIMIT 1) AS mid
-            FROM t),
+      s"""WITH $tradesWithMidSql,
           agg AS (
             SELECT date_trunc('hour', ts) AS bar,
               CAST(sum(CASE WHEN value > mid THEN 1 ELSE 0 END) AS BIGINT) AS n_buy,
@@ -1058,19 +1059,7 @@ object TimeSeries {
     KeySpec.batch("ts_ofi", tsOfi,
       // staged-enrichment read: hour agg + presentation sort
       shuffles = 2,
-      """WITH q AS (
-            SELECT user_id AS q_uid, ts AS q_ts, max(value) AS qv
-            FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-          t AS (
-            SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value,
-              CAST(props->>'$.k' AS BIGINT) AS sz
-            FROM events WHERE event_type = 'click'),
-          j AS (
-            SELECT t.ts, t.value, t.sz,
-              (SELECT qv FROM q
-               WHERE q.q_uid = t.user_id AND q.q_ts <= t.ts
-               ORDER BY q.q_ts DESC LIMIT 1) AS mid
-            FROM t),
+      s"""WITH $tradesWithSizeMidSql,
           agg AS (
             SELECT date_trunc('hour', ts) AS bar,
               CAST(sum(CASE WHEN value > mid THEN sz ELSE 0 END) AS BIGINT) AS buy_size,
@@ -1221,19 +1210,7 @@ object TimeSeries {
       shuffles = 3,
       // Kyle λ: the trades-with-mid enrichment (same correlated-subquery
       // shape as ts_ofi) signs the flow; mid series from the view side
-      s"""WITH q AS (
-            SELECT user_id AS q_uid, ts AS q_ts, max(value) AS qv
-            FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-          t AS (
-            SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value,
-              CAST(props->>'$$.k' AS BIGINT) AS sz
-            FROM events WHERE event_type = 'click'),
-          j AS (
-            SELECT t.ts, t.value, t.sz,
-              (SELECT qv FROM q
-               WHERE q.q_uid = t.user_id AND q.q_ts <= t.ts
-               ORDER BY q.q_ts DESC LIMIT 1) AS mid
-            FROM t),
+      s"""WITH $tradesWithSizeMidSql,
           flow AS (
             SELECT date_trunc('hour', ts) AS bar,
               CAST(sum(CASE WHEN value > mid THEN sz

@@ -461,7 +461,6 @@ object Unigram {
     KeySpec.batch("llm_unigram_vocab", llmUnigramVocab,
       // unigram vocab: the stored-artifact read + presentation sort
       shuffles = 1, vocabOracleSql)
-      .crossJoinOk("llm_unigram_encode's piece-table cross, plus the 1-row normalizer")
       .constructionJobsOk("first touch of new content trains and stores " +
         "the unigram piece vocabulary (10% sample) it then reads back")
       // stages unigram_vocab_v1 (shared by vocab + encode)
@@ -472,9 +471,6 @@ object Unigram {
       // localCheckpointed segmentation's job; segmentation joins are
       // broadcast)
       shuffles = 3, encodeOracleSql)
-      .crossJoinOk("each unrolled segmentation step joins the ≤(alphabet+VocabMulti)-row " +
-        "broadcast piece table on a substring match (inherently non-equi) — O(1) build " +
-        "side at any corpus size")
       .constructionJobsOk("reads the same stored unigram vocabulary " +
         "artifact (training it on first touch of new content)")
       .reads("llm_unigram_vocab"))

@@ -9,9 +9,9 @@ package object graft {
     * writable 64 MB /dev/shm, which would take every shuffle file and
     * die ENOSPC mid-query where plain /tmp worked — require enough
     * usable space (8 GiB) that sf0.1-scale shuffle + state staging
-    * can never come close. Shared by the `spark.local.dir` scratch
-    * and the streaming checkpoint root so the probe can't drift
-    * between them. */
+    * can never come close. The one probe behind [[fastRunDir]], so
+    * `spark.local.dir` and the streaming checkpoints can't drift
+    * apart. */
   def scratchRoot: String = {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite &&
@@ -19,20 +19,25 @@ package object graft {
     else System.getProperty("java.io.tmpdir")
   }
 
-  /** Harness scratch root for `spark.local.dir` (shuffle files,
-    * RocksDB state-store working dirs): the RAM disk when present,
-    * else the JVM default. This box's /tmp is ext4 — RocksDB commits
-    * fsync their SST/changelog staging there, and that real-disk
-    * round-trip was measured as the stream family's largest remaining
-    * fixed cost (stream_join warm 5.4 → 3.4 s from this
-    * alone; r14). All of spark.local.dir's contents are throwaway by
-    * construction — a production deployment points it at local NVMe,
-    * which tmpfs stands in for here, same rationale as the
-    * [[graft.streaming.Streaming.scratchCkpt]] checkpoint. */
-  def scratchLocalDir: String = {
-    val root = scratchRoot
-    if (root == "/dev/shm") "/dev/shm/graft_local" else root
-  }
+  /** This JVM's run directory on the bulk root, `java.io.tmpdir`: the
+    * session warehouse and every sink or staging directory
+    * ([[Tables.sinkPath]]). Disk, not RAM: a stream key's result is
+    * event-volume sized, GBs at the 300× replica. */
+  lazy val bulkRunDir: String = claimRunDir(System.getProperty("java.io.tmpdir"))
+
+  /** This JVM's run directory on the fast root, [[scratchRoot]]:
+    * `spark.local.dir` (shuffle files, RocksDB state working dirs) and
+    * streaming checkpoints ([[checkpointPath]]). A state commit fsyncs
+    * its changelog to the checkpoint every micro-batch; on an ext4
+    * tmpdir that round-trip was most of a stream key's fixed cost
+    * (stream_join warm 5.4 → 3.4 s on the RAM disk, r14). A production
+    * deployment points both at durable storage or local NVMe. */
+  lazy val fastRunDir: String = claimRunDir(scratchRoot)
+
+  /** A fresh streaming checkpoint path in [[fastRunDir]]: unique per
+    * call, so a run never resumes another run's offsets. */
+  def checkpointPath(tag: String): String =
+    s"$fastRunDir/ckpt/${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
 
   /** The scratch session-conf pair, applied by [[GraftSession.local]]
     * for every main and the shared test session (and by the perfbench
@@ -41,7 +46,49 @@ package object graft {
     * is throwaway tmpfs state — they protect durable remote
     * checkpoints. */
   def scratchConfs: Seq[(String, String)] = Seq(
-    "spark.local.dir" -> scratchLocalDir,
+    "spark.local.dir" -> s"$fastRunDir/local",
     "spark.sql.streaming.stateStore.rocksdb.checkpointFileChecksumEnabled" ->
       "false")
+
+  /** Run directories are `graft_run_<pid>`, one per JVM and root. */
+  private[graft] val RunDirPrefix = "graft_run_"
+
+  private val ownRunDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  // One hook deletes this JVM's run directories at exit. It runs in
+  // Hadoop's ordered hook thread below Spark's own hook (priority 40:
+  // stop the context, delete its temp dirs), so no live block manager
+  // or state store still writes into them.
+  private lazy val runDirHook: Unit =
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => ownRunDirs.forEach(p => deleteTree(new java.io.File(p))), 30)
+
+  private def claimRunDir(root: String): String = {
+    reapRunDirs(root)
+    val dir = new java.io.File(root, RunDirPrefix + ProcessHandle.current().pid())
+    dir.mkdirs()
+    runDirHook
+    ownRunDirs.add(dir.getPath)
+    dir.getPath
+  }
+
+  /** Deletes the run directories under `root` whose process is no
+    * longer alive: the leftovers of a JVM that died without running
+    * its exit hook (SIGKILL, OOM kill). Names without a pid are not
+    * run directories and stay. */
+  private[graft] def reapRunDirs(root: String): Unit =
+    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.startsWith(RunDirPrefix))
+      .foreach { dir =>
+        val pid = dir.getName.stripPrefix(RunDirPrefix).toLongOption
+        // a pid the OS can't look up reads as alive: keep when unsure
+        val alive = pid.forall { p =>
+          scala.util.Try(ProcessHandle.of(p)).map(h => h.isPresent && h.get.isAlive)
+            .getOrElse(true)
+        }
+        if (!alive) deleteTree(dir)
+      }
+
+  private def deleteTree(f: java.io.File): Unit =
+    new scala.reflect.io.Directory(f).deleteRecursively()
 }

@@ -4,10 +4,11 @@ import graft.{KeySpec, QFn, Tables, Det}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState,
-  MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
-  ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor,
+  StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types.DecimalType
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
@@ -214,7 +215,6 @@ object Streaming {
     // never be served
     graft.IndexStore.cachedDir(s"stream_feed_${tag}_v3_$fp") { tmp =>
       import s.implicits._
-      import java.nio.file.{Files, Paths}
       val ev = Tables.events(s, d)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
         .as[Ev]
@@ -243,108 +243,53 @@ object Streaming {
       val dir = Paths.get(tmp)
       Files.createDirectories(dir)
       // part-file NAMES carry the partition (= ts-range) order
-      val parts = {
-        val l = Files.list(Paths.get(stage))
-        try l.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .toSeq.sortBy(_.getFileName.toString)
-        finally l.close()
-      }
-      val moved = parts.zipWithIndex.map { case (part, i) =>
-        val target = dir.resolve(f"feed_$i%03d.parquet")
-        Files.move(part, target)
-        (target, i)
-      }
+      val chunks = parquetParts(stage)
+      chunks.zipWithIndex.foreach { case (part, i) => placeFeedFile(part, dir, i) }
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stage))
       // sentinel 2 gets its own trailing file so every real window is
       // sealed and emitted in a DATA batch (sentinel 1 rode with the
       // last data chunk: its 2099 ts range-partitions it there)
-      val allFiles = if (flush) {
-        val s2stage = s"$tmp/_stage_s2"
-        s.createDataset(Seq(Ev(-2L, Sentinel2, -1L, "__flush__", 0.0, "")))
-          .coalesce(1).write.parquet(s2stage)
-        val s2 = {
-          val l = Files.list(Paths.get(s2stage))
-          try l.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .toSeq.head
-          finally l.close()
-        }
-        val target = dir.resolve(f"feed_${moved.size}%03d.parquet")
-        Files.move(s2, target)
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s2stage))
-        moved :+ (target, moved.size)
-      } else moved
-      // explicit 2 s mtime spacing: FileStreamSource orders by
-      // modification time, and same-millisecond writes would make
-      // the chunk order nondeterministic
-      allFiles.foreach { case (target, i) =>
-        Files.setLastModifiedTime(target,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 2000L))
-      }
+      if (flush) stageFeedFile(s.createDataset(
+        Seq(Ev(-2L, Sentinel2, -1L, "__flush__", 0.0, ""))).toDF(), dir, chunks.size)
+      val nFiles = chunks.size + (if (flush) 1 else 0)
       // the multi-batch guarantee ("≥2 files, one micro-batch each")
       // rests on repartitionByRange yielding ≥2 non-empty range
       // partitions; with degenerate (near-constant) ts all rows could
       // collapse into one and flush=false feeds would silently lose
       // their mid-stream watermark advance — fail loudly instead
-      require(n < 2 || allFiles.size >= 2,
+      require(n < 2 || nFiles >= 2,
         s"stagedFeed($tag): degenerate chunking — $n rows landed in " +
-          s"${allFiles.size} file(s); ts range cannot support ≥2 micro-batches")
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stage))
+          s"$nFiles file(s); ts range cannot support ≥2 micro-batches")
     }
   }
 
-  /** Harness checkpoint dir on tmpfs: the per-batch state commit
-    * fsyncs its changelog files to the checkpoint dir, and at
-    * ~0.4-0.6 s of file-sync per micro-batch that disk round-trip WAS
-    * most of the fixed per-key cost (measured from the micro-batch progress events). A
-    * bench-harness checkpoint is throwaway by construction (each run
-    * starts fresh or resumes within the same key invocation), so
-    * RAM-disk durability is exactly right HERE — a production
-    * deployment keeps its checkpoint on durable storage and pays that
-    * fsync as the price of exactly-once. */
-  def scratchCkpt(tag: String): String = {
-    val shm = new java.io.File("/dev/shm")
-    val root = if (shm.isDirectory && shm.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    sweepStaleCkpts(root)
-    s"$root/graft_ckpt_$tag"
+  /** The parquet part files of a write's output directory, by name. */
+  private def parquetParts(dir: String): Seq[Path] = {
+    val l = Files.list(Paths.get(dir))
+    try l.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+      .toSeq.sortBy(_.getFileName.toString)
+    finally l.close()
   }
 
-  /** Stale-checkpoint sweep (r14, same hygiene class as
-    * IndexStore.sweep): runStream deletes ITS checkpoint after each
-    * query, but the resume-contract keys (`stream_file_source`,
-    * `stream_incremental_resume`, foreachBatch) key theirs by
-    * APPLICATION id — the next JVM's pre-start clear can't reach the
-    * previous JVM's dirs, and hundreds of graft_ckpt_* dirs had
-    * accumulated on the RAM disk. Once per JVM, best-effort delete
-    * sibling graft_ckpt_* entries stale for 6+ hours. Staleness is
-    * the NEWEST mtime within the tree's top two levels, not the root
-    * dir's (r14 review: batch commits write into offsets/commits/
-    * state SUBDIRS and never bump the root, so a long-lived live
-    * query's root mtime is frozen at creation — the offsets/ dir,
-    * one level down, gains a file per batch and is always fresh on a
-    * live checkpoint). Crashed-JVM leftovers under graft_local/
-    * (blockmgr-*, spark-*) age out by the same rule. */
-  private val ckptSwept = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def sweepStaleCkpts(root: String): Unit =
-    if (ckptSwept.compareAndSet(false, true)) try {
-      val cutoff = System.currentTimeMillis() - 6L * 3600 * 1000
-      def newestMtime(f: java.io.File, depth: Int): Long = {
-        val own = f.lastModified()
-        if (depth == 0 || !f.isDirectory) own
-        else Option(f.listFiles()).getOrElse(Array.empty)
-          .foldLeft(own)((m, c) => math.max(m, newestMtime(c, depth - 1)))
-      }
-      def reap(f: java.io.File): Unit =
-        if (newestMtime(f, 2) < cutoff) {
-          try new scala.reflect.io.Directory(f).deleteRecursively()
-          catch { case _: Throwable => () }
-        }
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_ckpt_")).foreach(reap)
-      Option(new java.io.File(root, "graft_local").listFiles())
-        .getOrElse(Array.empty).foreach(reap)
-    } catch { case _: Throwable => () }
+  /** Moves `part` to the feed's file number `i` in `dir`. Explicit 2 s
+    * mtime spacing: FileStreamSource orders by modification time, and
+    * same-millisecond writes would make the file order
+    * nondeterministic. */
+  private def placeFeedFile(part: Path, dir: Path, i: Int): Unit = {
+    val target = dir.resolve(f"feed_$i%03d.parquet")
+    Files.move(part, target)
+    Files.setLastModifiedTime(target,
+      java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 2000L))
+  }
+
+  /** Writes `df` as the ONE (ts, event_id)-sorted file numbered `i` of
+    * the feed in `dir`: one file is one micro-batch. */
+  private def stageFeedFile(df: DataFrame, dir: Path, i: Int): Unit = {
+    val stage = dir.resolve(s"_stage$i").toString
+    df.coalesce(1).sortWithinPartitions("ts", "event_id").write.parquet(stage)
+    placeFeedFile(parquetParts(stage).head, dir, i)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stage))
+  }
 
   /** Replay events through `build`, return the materialized sink.
     * All queries run on the RocksDB state store provider — the
@@ -368,10 +313,10 @@ object Streaming {
     * cardinality (users × batch count), not event volume — the same
     * bound their state story already guarantees. */
   /** SINGLE-LIVE-HANDLE constraint (r10 ADVICE): the Append-mode sink
-    * dir is keyed by (key, dataset, app) and deleteRecursively'd
-    * before each start, so the DataFrame returned by an EARLIER
-    * runStream call for the same triple is invalidated the moment the
-    * key reruns in-session — hold at most one live read-back per
+    * dir is keyed by (key, dataset) and deleteRecursively'd before
+    * each start, so the DataFrame returned by an EARLIER runStream
+    * call for the same pair is invalidated the moment the key reruns
+    * in this JVM — hold at most one live read-back per
     * (key, dataset) and materialize it before rerunning the key.
     * Every current caller (Verify's immediate write, Bench's
     * immediate count, the specs' collect) does; a per-invocation dir
@@ -394,7 +339,7 @@ object Streaming {
     // 55.0 s (stream_join_semi warm 8.1 → 4.6 s), while
     // 2 went CPU-bound (5.8 s) — 4 is the measured knee. Pinned at
     // query start (state partitioning is fixed for the query's life);
-    // previous values restored immediately after start. A production
+    // previous values restored when the query ends. A production
     // deployment sizes this to state volume, not harness latency.
     val confs = Map(
       "spark.sql.shuffle.partitions" -> "4",
@@ -435,51 +380,32 @@ object Streaming {
     ) ++ extraConfs
     val prev = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
     confs.foreach { case (k, v) => s.conf.set(k, v) }
-    val ckpt = scratchCkpt(sinkName)
     val append = mode == OutputMode.Append()
-    // file-sink output path: keyed by (key, dataset, app) and cleared
-    // before start, so repeated runs in one session can't accumulate
-    // stale batches or unbounded tmp growth. NOT /dev/shm — at 300×
-    // an event-volume-proportional result is GBs, which on tmpfs is
-    // RAM. The dir must OUTLIVE this call (the returned DataFrame
-    // reads it lazily), so cleanup is a JVM shutdown hook over every
-    // sink dir this session created — without it each session leaked
-    // its app-id-keyed dirs forever (unreachable by the next app's
-    // pre-start clear; r10 review finding).
-    val outPath = s"${System.getProperty("java.io.tmpdir")}/graft_sink_" +
-      s"${name}_${d.hashCode & 0x7fffffff}_${s.sparkContext.applicationId}"
-    registerSinkDirCleanup(outPath)
-    var outSchema: org.apache.spark.sql.types.StructType = null
-    val q = try {
+    // file-sink output path: keyed by (key, dataset) and cleared
+    // before start, so repeated runs in one JVM can't accumulate
+    // stale batches. NOT the RAM disk — at 300× an
+    // event-volume-proportional result is GBs, which on tmpfs is RAM.
+    // The dir must OUTLIVE this call (the returned DataFrame reads it
+    // lazily); it goes with the JVM's run directory.
+    val outPath = Tables.sinkPath(s, d, s"sink_$name")
+    val (q, outSchema) = try drained(name) { drain =>
       val src = s.readStream.schema(Encoders.product[Ev].schema)
         .option("maxFilesPerTrigger", "1").parquet(feed)
       val streamed = build(src)
-      outSchema = streamed.schema
       val w = streamed.writeStream.outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      if (append) {
-        import scala.reflect.io.Directory
-        new Directory(new java.io.File(outPath)).deleteRecursively()
-        w.format("parquet").option("path", outPath).start()
-      } else w.format("memory").queryName(sinkName).start()
+      // AvailableNow drains the staged files (one batch per file, the
+      // same boundaries the addData feed produced) and stops itself
+      val q = if (append) {
+        new scala.reflect.io.Directory(new java.io.File(outPath)).deleteRecursively()
+        drain(w.format("parquet").option("path", outPath))
+      } else drain(w.format("memory").queryName(sinkName))
+      (q, streamed.schema)
     } finally prev.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None)    => s.conf.unset(k)
     }
-    try {
-      // AvailableNow drains the staged files (one batch per file, the
-      // same boundaries the addData feed produced) and stops itself
-      q.awaitTermination()
-      lastStateRowsTotal = Option(q.lastProgress)
-        .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
-    } finally {
-      q.stop()
-      // tmpfs is a shared finite resource: reclaim the throwaway
-      // checkpoint as soon as the query is done
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(ckpt)).deleteRecursively()
-    }
+    lastStateRowsTotal = Option(q.lastProgress)
+      .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
     // explicit schema: a key whose every batch emitted zero rows has a
     // _spark_metadata log but no part files — schema inference would
     // throw where "empty result" is the correct answer
@@ -487,17 +413,24 @@ object Streaming {
     else s.table(sinkName)
   }
 
-  // Sink dirs created this session, deleted at JVM exit (one hook,
-  // registered on first use). Live read-backs are session-scoped, so
-  // exit is the earliest safe point; other concurrent JVMs' dirs are
-  // never touched (their app id differs).
-  private val sinkDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val sinkHook: Unit = sys.addShutdownHook {
-    import scala.reflect.io.Directory
-    sinkDirs.forEach(p => new Directory(new java.io.File(p)).deleteRecursively())
-  }
-  private def registerSinkDirCleanup(p: String): Unit = {
-    sinkHook; sinkDirs.add(p)
+  /** The one query lifecycle of the stream keys. `run` gets `drain`,
+    * which starts a writer (sink and output mode set) under
+    * `Trigger.AvailableNow` from a checkpoint in this JVM's
+    * [[graft.fastRunDir]], waits until its input is drained and stops
+    * it. All `drain` calls of one `run` share the checkpoint, so a
+    * second call resumes the first; the checkpoint is deleted when
+    * `run` returns — tmpfs is a shared finite resource. A bench
+    * checkpoint is throwaway by construction, so RAM-disk durability
+    * is right HERE; production keeps it on durable storage and pays
+    * the fsync as the price of exactly-once. */
+  private def drained[A](tag: String)(
+      run: (DataStreamWriter[_] => StreamingQuery) => A): A = {
+    val ckpt = graft.checkpointPath(tag)
+    try run { w =>
+      val q = w.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      q
+    } finally new scala.reflect.io.Directory(new java.io.File(ckpt)).deleteRecursively()
   }
 
   /** 1-hour tumbling windows × event_type — watermark + APPEND, the
@@ -776,7 +709,6 @@ object Streaming {
     val fp = graft.IndexStore.fingerprint(s"$d/events.parquet")
     graft.IndexStore.cachedDir(s"stream_feed_late_v1_$fp") { tmp =>
       import s.implicits._
-      import java.nio.file.{Files, Paths}
       val ev = Tables.events(s, d)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
       val b = ev.agg(
@@ -785,23 +717,7 @@ object Streaming {
       val sCut = b.getTimestamp(0); val mTs = b.getTimestamp(1)
       val dir = Paths.get(tmp)
       Files.createDirectories(dir)
-      def stageOne(df: DataFrame, idx: Int): Unit = {
-        val stage = s"$tmp/_stage$idx"
-        df.coalesce(1).sortWithinPartitions("ts", "event_id")
-          .write.parquet(stage)
-        val part = {
-          val l = Files.list(Paths.get(stage))
-          try l.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-          finally l.close()
-        }
-        val target = dir.resolve(f"feed_$idx%03d.parquet")
-        Files.move(part, target)
-        Files.setLastModifiedTime(target,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + idx * 2000L))
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stage))
-      }
-      stageOne(ev.filter(col("ts") < lit(sCut) || col("ts") === lit(mTs)), 0)
+      stageFeedFile(ev.filter(col("ts") < lit(sCut) || col("ts") === lit(mTs)), dir, 0)
       // a one-row "tick" batch between the fast arrival and the late
       // cohort: state eviction runs at END-of-batch against that
       // batch's operative watermark (M − 1h, set by batch 0's fast
@@ -810,13 +726,13 @@ object Streaming {
       // (measured in r9: zero numRowsDroppedByWatermark on a 2-batch
       // feed). The tick's ts = M leaves the watermark where it is;
       // its marker event_type is filtered from the result.
-      stageOne(s.createDataset(
-        Seq(Ev(-3L, mTs, -1L, "__tick__", 0.0, ""))).toDF(), 1)
-      stageOne(ev.filter(col("ts") >= lit(sCut) && col("ts") < lit(mTs)), 2)
-      stageOne(s.createDataset(
-        Seq(Ev(-1L, Sentinel1, -1L, "__flush__", 0.0, ""))).toDF(), 3)
-      stageOne(s.createDataset(
-        Seq(Ev(-2L, Sentinel2, -1L, "__flush__", 0.0, ""))).toDF(), 4)
+      stageFeedFile(s.createDataset(
+        Seq(Ev(-3L, mTs, -1L, "__tick__", 0.0, ""))).toDF(), dir, 1)
+      stageFeedFile(ev.filter(col("ts") >= lit(sCut) && col("ts") < lit(mTs)), dir, 2)
+      stageFeedFile(s.createDataset(
+        Seq(Ev(-1L, Sentinel1, -1L, "__flush__", 0.0, ""))).toDF(), dir, 3)
+      stageFeedFile(s.createDataset(
+        Seq(Ev(-2L, Sentinel2, -1L, "__flush__", 0.0, ""))).toDF(), dir, 4)
     }
   }
 
@@ -1082,28 +998,18 @@ object Streaming {
     * the checkpoint is durable state and `maxFilesPerTrigger` paces
     * ingestion. */
   val streamFileSource: QFn = (s, d) => {
+    // staged parquet stays on real disk (it plays the lake directory)
     val src = Tables.sinkPath(s, d, "stream_src")
-    // staged parquet stays on real disk (it plays the lake directory);
-    // the checkpoint is throwaway harness state → tmpfs (see scratchCkpt)
-    val ckpt = scratchCkpt(
-      s"fsrc_${d.hashCode & 0x7fffffff}_${s.sparkContext.applicationId}")
-    // stage the events as files; clear the previous run's checkpoint
-    // (per-(dataset, app) paths — isolated from concurrent runs,
-    // no tmpdir growth within one app)
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(ckpt)).deleteRecursively()
     val batch = Tables.events(s, d)
     batch.write.mode("overwrite").parquet(src)
     val sinkName = s"fsrc_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = s.readStream.schema(batch.schema).parquet(src)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
+    drained("fsrc") { drain =>
+      drain(s.readStream.schema(batch.schema).parquet(src)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
+        .writeStream.format("memory").queryName(sinkName)
+        .outputMode(OutputMode.Complete()))
+    }
     s.table(sinkName).orderBy("event_type")
   }
 
@@ -1118,35 +1024,28 @@ object Streaming {
     * the day's files, ever. */
   val streamIncrementalResume: QFn = (s, d) => {
     val src = Tables.sinkPath(s, d, "incr_src")
-    // the resume contract is checkpoint-relative, not medium-relative:
-    // run 2 resumes from the same path either way → tmpfs for the bench
-    val ckpt = scratchCkpt(
-      s"incr_${d.hashCode & 0x7fffffff}_${s.sparkContext.applicationId}")
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(src)).deleteRecursively()
-    new Directory(new java.io.File(ckpt)).deleteRecursively()
+    new scala.reflect.io.Directory(new java.io.File(src)).deleteRecursively()
     val e = Tables.events(s, d)
     val split = to_date(col("ts")) < "2024-01-15"
-    def run(): Unit = {
-      val sinkName = s"incr_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = s.readStream.schema(e.schema).parquet(src)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      lastIncrSink = sinkName
+    // the resume contract is checkpoint-relative, not medium-relative:
+    // run 2 resumes from run 1's checkpoint, deleted after run 2
+    val sinkName = drained("incr") { drain =>
+      def run(): String = {
+        val table = s"incr_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+        drain(s.readStream.schema(e.schema).parquet(src)
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
+          .writeStream.format("memory").queryName(table)
+          .outputMode(OutputMode.Complete()))
+        table
+      }
+      e.filter(split).write.mode("overwrite").parquet(src)
+      run()                                              // half 1 only
+      e.filter(!split).write.mode("append").parquet(src) // day's new files land
+      run()                                              // resumes: new files + saved state
     }
-    e.filter(split).write.mode("overwrite").parquet(src)
-    run()                                              // half 1 only
-    e.filter(!split).write.mode("append").parquet(src) // day's new files land
-    run()                                              // resumes: new files + saved state
-    s.table(lastIncrSink).orderBy("event_type")
+    s.table(sinkName).orderBy("event_type")
   }
-  private var lastIncrSink: String = _
 
   /** `foreachBatch` sink — the serving-table pattern: each micro-batch
     * of a complete-mode aggregate is written to a parquet table the
@@ -1159,23 +1058,16 @@ object Streaming {
   val streamForeachBatch: QFn = (s, d) => {
     val out = Tables.sinkPath(s, d, "fb_sink")
     val feed = stagedFeed(s, d, flush = false)
-    val ckpt = scratchCkpt(s"fb_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    val q = s.readStream.schema(Encoders.product[Ev].schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .groupBy((col("user_id") % 10).as("cohort"))
-      .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        batch.write.mode("overwrite").parquet(out)
-      }
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally {
-      q.stop()
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(ckpt)).deleteRecursively()
+    drained("fb") { drain =>
+      drain(s.readStream.schema(Encoders.product[Ev].schema)
+        .option("maxFilesPerTrigger", "1").parquet(feed)
+        .groupBy((col("user_id") % 10).as("cohort"))
+        .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          batch.write.mode("overwrite").parquet(out)
+        }
+        .outputMode(OutputMode.Complete()))
     }
     s.read.parquet(out).orderBy("cohort")
   }
@@ -1196,30 +1088,22 @@ object Streaming {
     * oracle); StreamingSpec asserts the commit history (one version
     * per batch, one unit added per version, monotone row counts). */
   val streamSnapshotSink: QFn = (s, d) => {
+    import graft.operators.SnapshotTable
     val root = Tables.sinkPath(s, d, "snapsink")
     val feed = stagedFeed(s, d, flush = false)
-    val ckpt = scratchCkpt(
-      s"snap_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    import scala.reflect.io.Directory
     // fresh table per run: the run IS the commit history under test
-    new Directory(new java.io.File(root)).deleteRecursively()
-    val q = s.readStream.schema(Encoders.product[Ev].schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         epoch: Long) =>
-          graft.operators.SnapshotTable.commitAppend(batch.toDF(), root, epoch)
-      }
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally {
-      q.stop()
-      new Directory(new java.io.File(ckpt)).deleteRecursively()
+    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
+    drained("snap") { drain =>
+      drain(s.readStream.schema(Encoders.product[Ev].schema)
+        .option("maxFilesPerTrigger", "1").parquet(feed)
+        .writeStream
+        .foreachBatch {
+          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+           epoch: Long) =>
+            SnapshotTable.commitAppend(batch.toDF(), root, epoch)
+        }
+        .outputMode(OutputMode.Append()))
     }
-    import graft.operators.SnapshotTable
     SnapshotTable.readSnapshot(s, root, SnapshotTable.latestVersion(root))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))

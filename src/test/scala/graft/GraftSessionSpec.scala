@@ -40,4 +40,16 @@ class GraftSessionSpec extends AnyFunSuite {
     }
     assert(numbered.isEmpty)
   }
+
+  test("throwaway paths come from the run directories: only package.scala names a scratch root") {
+    // IndexStore's cache and Replicate's output outlive the JVM on
+    // purpose, so they keep their own roots
+    val scratchRoot = """java\.io\.tmpdir|"/dev/shm"|"/tmp/""".r
+    val exempt = Set("package.scala", "IndexStore.scala", "Replicate.scala")
+    val offenders = scalaFiles("src/main")
+      .filterNot(p => exempt(p.getFileName.toString))
+      .filter(p => scratchRoot.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.getFileName.toString).sorted
+    assert(offenders.isEmpty, s"files naming a scratch root: $offenders")
+  }
 }

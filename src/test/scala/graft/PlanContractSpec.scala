@@ -63,11 +63,12 @@ class PlanContractSpec extends SparkTestBase {
     if (requireSf(sfData)) {
       val df = operators.Relational.joinSkewAqe(spark, sfData)
       assert(df.count() > 0)
-      val p = operators.Relational.lastSkewJoinPlan
+      // the audit reads the captured live plan once, which releases it
+      val captured = PlanAudit.constructionPlan("join_skew_aqe")
+      assert(captured.isDefined)
+      val p = captured.get.toString
       assert(p.contains("skew=true") || p.contains("skewed"),
         s"AQE did not split the skewed join partition:\n$p")
-      // the audit reads the captured live plan once, which releases it
-      assert(PlanAudit.constructionPlan("join_skew_aqe").isDefined)
       assert(PlanAudit.constructionPlan("join_skew_aqe").isEmpty,
         "the captured plan stayed pinned after the audit read it")
       // a run that fails before capturing leaves no stale plan behind
