@@ -94,7 +94,7 @@ object IndexStoreOp {
       finally l.close()
     }
     val invalidationOk = {
-      val probe = Files.createTempFile("graft_is_probe", ".bin")
+      val probe = Files.createTempFile(Paths.get(graft.bulkRunDir), "graft_is_probe", ".bin")
       try {
         Files.write(probe, Array[Byte](1))
         Files.setLastModifiedTime(probe,

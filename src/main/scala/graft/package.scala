@@ -39,16 +39,46 @@ package object graft {
   def checkpointPath(tag: String): String =
     s"$fastRunDir/ckpt/${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
 
-  /** The scratch session-conf pair, applied by [[GraftSession.local]]
+  /** Entries in Spark's generated-code cache
+    * (`spark.sql.codegen.cache.maxEntries`). Spark's default of 100 is
+    * smaller than one pass's working set, so every pass over the same
+    * queries evicted classes before their next use and compiled them
+    * again (Janino, then HotSpot warming up the fresh classes): 49
+    * compiles per pass of the 9-key perfbench `bidask_ts` workload.
+    *
+    * Sized by measurement (sf0.01, local[32] on 4 cores): one JVM with
+    * the cap at 100000 ran every registry key twice as `graft.Verify`
+    * runs it (`CodegenMetrics.METRIC_COMPILATION_TIME` per pass). The
+    * first pass compiled 3069 distinct sources. The second compiled
+    * 492, none of them evicted: 410 in the 24 `stream_` keys, whose
+    * byte-identical sources miss because each streaming run's tasks
+    * compile under a new class loader, which is part of the cache key;
+    * 82 in 15 batch keys whose AQE plans differ from run to run. Every
+    * other key compiled 0. `graft.Bench`'s `count()` form compiles
+    * fewer, 2464 on a first pass. The cache is a Guava cache of 4
+    * segments that each evict at a quarter of the cap, so the cap
+    * leaves a third over 3069 for an uneven split. Repeat the
+    * measurement after adding keys.
+    *
+    * Cost: cached classes stay loaded, on the heap and in Metaspace, up
+    * to the cap; a session that is stopped and rebuilt leaves its
+    * classes cached until they are evicted. After one full pass, heap
+    * after GC read 234.9 MB against 152.1 MB at the default cap, and
+    * Metaspace 266.2 MB against 240.9 MB. */
+  val CodegenCacheEntries = 4096
+
+  /** The confs every session shares, applied by [[GraftSession.local]]
     * for every main and the shared test session (and by the perfbench
-    * harness), so a scratch tweak reaches them all alike.
+    * harness), so a change reaches them all alike.
     * Checkpoint-file checksums are off because every checkpoint here
     * is throwaway tmpfs state — they protect durable remote
-    * checkpoints. */
+    * checkpoints. The codegen cache cap is a static conf: Spark reads
+    * it once, when its code generator first loads. */
   def scratchConfs: Seq[(String, String)] = Seq(
     "spark.local.dir" -> s"$fastRunDir/local",
     "spark.sql.streaming.stateStore.rocksdb.checkpointFileChecksumEnabled" ->
-      "false")
+      "false",
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString)
 
   /** Run directories are `graft_run_<pid>`, one per JVM and root. */
   private[graft] val RunDirPrefix = "graft_run_"

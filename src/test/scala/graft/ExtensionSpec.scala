@@ -140,7 +140,7 @@ class ExtensionSpec extends SparkTestBase {
   }
 
   test("sink_partitioned_scan prunes partitions at the source") {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_prune_test"
+    val path = scratchDir("graft_prune_test")
     Tables.events(spark, sf)
       .write.mode("overwrite").partitionBy("event_type").parquet(path)
     val df = spark.read.parquet(path)

@@ -13,7 +13,7 @@ class GdprEraseSpec extends SparkTestBase {
 
   test("a fully-deleted bucket is actually erased, not skipped") {
     import spark.implicits._
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_gdpr_spec_${spark.sparkContext.applicationId}"
+    val path = scratchDir("graft_gdpr_spec")
     // bucket = user_id % 16. Bucket 3 contains ONLY user 3 (all rows
     // deleted); bucket 5 mixes deleted user 5 with survivor user 21.
     val rows = Seq(
@@ -39,7 +39,7 @@ class GdprEraseSpec extends SparkTestBase {
 
   test("NULL user_id rows in a hit bucket survive the erasure") {
     import spark.implicits._
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_gdpr_null_${spark.sparkContext.applicationId}"
+    val path = scratchDir("graft_gdpr_null")
     // a NULL-user row physically lands in bucket 5 alongside deleted
     // user 5: the three-valued `NOT IN` trap would erase it too
     val rows = Seq(

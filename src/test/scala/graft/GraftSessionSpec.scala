@@ -42,11 +42,14 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("throwaway paths come from the run directories: only package.scala names a scratch root") {
+    // a createTemp* call given only a name prefix lands in java.io.tmpdir
+    val scratchRoot = """java\.io\.tmpdir|"/dev/shm"|"/tmp/|createTemp(?:Directory|File)\(\s*"""".r
     // IndexStore's cache and Replicate's output outlive the JVM on
-    // purpose, so they keep their own roots
-    val scratchRoot = """java\.io\.tmpdir|"/dev/shm"|"/tmp/""".r
-    val exempt = Set("package.scala", "IndexStore.scala", "Replicate.scala")
-    val offenders = scalaFiles("src/main")
+    // purpose, so they keep their own roots; RunDirSpec tests the roots
+    // themselves, and this spec's regex names them
+    val exempt = Set("package.scala", "IndexStore.scala", "Replicate.scala",
+      "RunDirSpec.scala", "GraftSessionSpec.scala")
+    val offenders = (scalaFiles("src/main") ++ scalaFiles("src/test"))
       .filterNot(p => exempt(p.getFileName.toString))
       .filter(p => scratchRoot.findFirstIn(Files.readString(p)).isDefined)
       .map(_.getFileName.toString).sorted

@@ -74,7 +74,7 @@ class IndexStoreSpec extends SparkTestBase {
   }
 
   test("fingerprint: sensitive to part mtime/length, insensitive to listing order, stable") {
-    val dir = Files.createTempDirectory("graft_isspec_fp")
+    val dir = Paths.get(scratchDir("graft_isspec_fp"))
     val a = dir.resolve("a.parquet"); val b = dir.resolve("b.parquet")
     Files.write(a, Array[Byte](1, 2, 3)); Files.write(b, Array[Byte](4))
     def pin(p: java.nio.file.Path, ms: Long) = Files.setLastModifiedTime(
@@ -98,7 +98,7 @@ class IndexStoreSpec extends SparkTestBase {
   }
 
   test("sweep: LRU over budget; recent/in-use entries and under-budget roots untouched") {
-    val rootDir = Files.createTempDirectory("graft_isspec_sweep")
+    val rootDir = Paths.get(scratchDir("graft_isspec_sweep"))
     val now = System.currentTimeMillis()
     val H = 3600 * 1000L
     def mk(name: String, bytes: Int, ageMs: Long): java.nio.file.Path = {

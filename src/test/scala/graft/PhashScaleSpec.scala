@@ -99,7 +99,7 @@ class PhashScaleSpec extends SparkTestBase {
     // index: a check that re-decoded or re-joined the base corpus
     // would scale ~10× between the rungs; a delta-proportional one
     // rides its scheduling floor.
-    val dir = java.nio.file.Files.createTempDirectory("phash_incr_probe").toString
+    val dir = scratchDir("phash_incr_probe")
     val baseN = M - 1000
     val corpus = syntheticDocs(M)
       .withColumn("lang", lit("en"))

@@ -49,7 +49,7 @@ class QuantCorpusSpec extends SparkTestBase {
     // (integer division is only guaranteed engine-identical on
     // non-negative numerators, which the abs() guarantees).
     import java.sql.Timestamp
-    val dir = java.nio.file.Files.createTempDirectory("bidask_boundary").toString
+    val dir = scratchDir("bidask_boundary")
     val h1 = Timestamp.valueOf("2024-01-01 10:00:00")
     val h2 = Timestamp.valueOf("2024-01-01 11:00:00")
     val rows = Seq(

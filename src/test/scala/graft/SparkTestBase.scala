@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -31,6 +32,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
+
+  /** A fresh directory in this JVM's bulk run directory: deleted with
+    * it at exit, and never shared with another test JVM. */
+  def scratchDir(tag: String): String =
+    Files.createTempDirectory(Paths.get(bulkRunDir), tag).toString
 }
 
 object SparkTestBase {

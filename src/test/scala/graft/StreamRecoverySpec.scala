@@ -127,19 +127,13 @@ class StreamRecoverySpec extends SparkTestBase {
       .trigger(Trigger.AvailableNow())
       .format("parquet").option("path", out).start()
 
-  private def scratch(tag: String): (String, String, String) = (
-    s"/tmp/graft_recovery_${tag}_feed",
-    s"/tmp/graft_recovery_${tag}_ckpt",
-    s"/tmp/graft_recovery_${tag}_out")
-
-  private def cleanup(paths: String*): Unit = {
-    import scala.reflect.io.Directory
-    paths.foreach(p => new Directory(new java.io.File(p)).deleteRecursively())
+  private def scratch(tag: String): (String, String, String) = {
+    val dir = scratchDir(s"graft_recovery_$tag")
+    (s"$dir/feed", s"$dir/ckpt", s"$dir/out")
   }
 
   test("kill-resume: windowed stateful agg equals the batch oracle exactly") {
     val (feed, ckpt, out) = scratch("agg")
-    cleanup(feed, ckpt, out)
     buildFeed(feed, sealer = true)
     def build(src: DataFrame): DataFrame =
       src.withWatermark("ts", "1 hour")
@@ -173,12 +167,10 @@ class StreamRecoverySpec extends SparkTestBase {
         col("n"), col("sum_value"))
     assert(got.exceptAll(oracle).isEmpty && oracle.exceptAll(got).isEmpty,
       "post-resume flushed windows differ from the batch aggregate")
-    cleanup(feed, ckpt, out)
   }
 
   test("kill-resume: stream-stream interval join finds every match exactly once") {
     val (feed, ckpt, out) = scratch("join")
-    cleanup(feed, ckpt, out)
     buildFeed(feed, sealer = false)
     def build(src: DataFrame): DataFrame = {
       val clicks = src.filter(col("event_type") === "click")
@@ -218,12 +210,10 @@ class StreamRecoverySpec extends SparkTestBase {
       .select(col("purchase_id"), col("click_id"))
     assert(got.exceptAll(oracle).isEmpty && oracle.exceptAll(got).isEmpty,
       "post-resume join pairs differ from the batch interval join")
-    cleanup(feed, ckpt, out)
   }
 
   test("kill-resume: snapshot sink re-commits its epoch idempotently") {
     val (feed, ckpt, root) = scratch("snap")
-    cleanup(feed, ckpt, root)
     buildFeed(feed, sealer = false)
     import graft.operators.SnapshotTable
     def start(src: DataFrame) =
@@ -252,13 +242,11 @@ class StreamRecoverySpec extends SparkTestBase {
         "double-appended or dropped a batch")
     val gotIds = table.select("event_id").distinct().count()
     assert(gotIds == 1000L, s"only $gotIds distinct event_ids of 1000")
-    cleanup(feed, ckpt, root)
   }
 
   test("kill-resume: CEP pattern state crosses the checkpoint — matches spanning the kill found exactly once") {
     import org.apache.spark.sql.expressions.Window
     val (feed, ckpt, out) = scratch("cep")
-    cleanup(feed, ckpt, out)
     // no sealers: the CEP state fn is NoTimeout/Append — nothing
     // waits on a watermark (the streamAsofEnrich feed class)
     buildFeed(feed, sealer = false)
@@ -297,6 +285,5 @@ class StreamRecoverySpec extends SparkTestBase {
     assert(got.toSet == want.toSet,
       s"missing: ${want.toSet -- got.toSet}; extra: ${got.toSet -- want.toSet}")
     assert(want.nonEmpty)
-    cleanup(feed, ckpt, out)
   }
 }

@@ -131,7 +131,7 @@ class UnigramSpec extends SparkTestBase {
     // T=9); doc 1 carries a 16-char over-cap word. Hand-checked:
     //   "aaaaaaaaaaaaaaab" → 16 pieces, 16·(-2) = -32 (fallback)
     //   "ab"               → 1 piece, -3 (enumerated)
-    val dir = java.nio.file.Files.createTempDirectory("unigram_e2e").toString
+    val dir = scratchDir("unigram_e2e")
     val big = "aaaaaaaaaaaaaaab"
     Seq((0L, "aa bb ab", "en", "src0", 8L),
         (1L, s"$big ab", "en", "src1", 19L))
