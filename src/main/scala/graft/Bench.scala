@@ -15,16 +15,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // optional key subset (args or env) for the local iterate loop —
+    // the driver passes nothing and gets the full set
+    val only: Option[Set[String]] =
+      args.headOption.orElse(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+        .map(SparkEntry.keySubset(_).toSet)
     val spark = GraftSession.local(GraftSession.cores)
     // n runs per key, report the best: the round-3 judge re-litigated
     // ~1 s noisy-neighbor swings on single-run numbers; best-of-n in
     // the artifact itself settles that. Spread is kept in "runs".
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt
-    // optional key subset (args or env) for the local iterate loop —
-    // the driver passes nothing and gets the full set
-    val only: Option[Set[String]] =
-      args.headOption.orElse(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
-        .map(_.split(",").toSet)
     // Per-run telemetry (r6 verdict #1): three of six rounds ended in
     // a perf dispute over an official artifact that could not defend
     // itself against ambient machine load. Each run now records its

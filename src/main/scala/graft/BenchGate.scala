@@ -35,18 +35,9 @@ object BenchGate {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_GATE_FACTOR", "3.0").toDouble
+    // keySubset rejects a typo'd key, which would gate zero keys
     val only: Option[Set[String]] =
-      args.headOption.map(_.split(",").toSet)
-    // Mirror the Bench staging-key check (r11 ADVICE): a typo'd key
-    // would filter the registry to zero gated keys and exit 0 with
-    // "GATE OK: 0 keys" — a misspelled CI invocation silently
-    // disabling the gate. Every requested name must exist.
-    only.foreach { s =>
-      val unknown = s -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown gate key(s): ${unknown.toSeq.sorted.mkString(", ")} — " +
-          "not in SparkEntry.queries (renamed?)")
-    }
+      args.headOption.map(SparkEntry.keySubset(_).toSet)
     val baselinePath = sys.env.getOrElse(
       "SPARK_GRAFT_GATE_BASELINE", "tools/bench_baseline.json")
     val baseline = BenchAmbient.readBaseline(baselinePath)

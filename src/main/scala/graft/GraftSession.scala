@@ -26,7 +26,8 @@ object GraftSession {
     case Some(n)   => n.toInt
   }
 
-  /** A `local[cores]` session with `cores` shuffle partitions. */
+  /** A `local[cores]` session with `cores` shuffle partitions and the
+    * engine's Catalyst pieces installed. */
   def local(cores: Int): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cores]")
@@ -50,6 +51,19 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    functions.GraftExtensions.install(spark)
     spark
+  }
+
+  /** The one scoped conf change: runs `body` with `confs` set, then
+    * puts each key back to its earlier value, or unsets it. */
+  def withConfs[T](spark: SparkSession, confs: Map[String, String])(body: => T): T = {
+    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 }

@@ -190,11 +190,10 @@ object PlanAudit {
     require(args.length == 4,
       "usage: PlanAudit explain <outDir> <suffix> <keys> <sfDir>")
     val Array(outDir, suffix, keyList, d) = args
-    val keys = keyList.split(",").map(_.trim).filter(_.nonEmpty)
+    val keys = SparkEntry.keySubset(keyList)
     val spark = GraftSession.local(GraftSession.cores)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     keys.foreach { key =>
-      require(SparkEntry.queries.contains(key), s"unknown key $key")
       if (key.startsWith("stream_")) {
         System.err.println(s"[explain] $key skipped (streaming)")
       } else {

@@ -44,6 +44,18 @@ object SparkEntry {
     operators.FuzzyJoin.specs ++
     plans.AsOfJoinPlans.specs)
 
+  /** A main's comma-separated key subset, in order. A misspelt name
+    * fails here instead of selecting no key and exiting 0. */
+  def keySubset(csv: String): Seq[String] = {
+    val names = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+    val known = specs.map(_.name).toSet
+    val unknown = names.filterNot(known)
+    require(names.nonEmpty, s"no key named in '$csv'")
+    require(unknown.isEmpty, s"unknown key(s): ${unknown.mkString(", ")} " +
+      "— not in SparkEntry.queries (renamed?)")
+    names
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     specs.map(s => s.name -> s.fn).toMap
 

@@ -8,7 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated key subset (fast local loop);
     // the driver always runs the full set
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      if (args.length > 2) Some(SparkEntry.keySubset(args(2)).toSet) else None
     val spark = GraftSession.local(GraftSession.cores)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

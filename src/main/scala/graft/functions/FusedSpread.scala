@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expression: `fused_spread(bid, ask)` =
@@ -14,9 +12,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * This is the §2.10 extension-path proof: a custom `Expression` with
   * `doGenCode` stays inside whole-stage codegen (zero virtual calls
   * per row, no UDF serialization), which is the preferred way to add
-  * scalar functions the engine lacks. Registered per-session via
-  * [[GraftFunctions.register]] or globally through
-  * [[GraftExtensions]] (`spark.sql.extensions`).
+  * scalar functions the engine lacks. Registered for SQL by
+  * [[GraftExtensions.install]].
   */
 case class FusedSpread(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -45,34 +42,12 @@ case class FusedSpread(left: Expression, right: Expression)
 }
 
 object GraftFunctions {
-  private[functions] def toDoubleExpr(e: Expression): Expression =
+  private[functions] def toDouble(e: Expression): Expression =
     if (e.dataType == DoubleType) e else Cast(e, DoubleType)
-  private def toDouble(e: Expression): Expression = toDoubleExpr(e)
 
   /** Column-API entry point (no registration needed). */
   def fusedSpread(bid: Column, ask: Column): Column =
     GraftSqlBridge.column(
       FusedSpread(toDouble(GraftSqlBridge.expression(bid)),
         toDouble(GraftSqlBridge.expression(ask))))
-
-  /** Register `fused_spread` for SQL use in an existing session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("fused_spread"),
-      new ExpressionInfo(classOf[FusedSpread].getName, "fused_spread"),
-      (children: Seq[Expression]) => FusedSpread(toDouble(children(0)), toDouble(children(1))))
-}
-
-/** `--conf spark.sql.extensions=graft.functions.GraftExtensions` —
-  * the deployment-time injection path. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("fused_spread"),
-      new ExpressionInfo(classOf[FusedSpread].getName, "fused_spread"),
-      (children: Seq[Expression]) => FusedSpread(
-        GraftFunctions.toDoubleExpr(children(0)), GraftFunctions.toDoubleExpr(children(1)))))
-    ext.injectOptimizerRule(_ => SimplifySelfSpread)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-  }
 }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.DoubleType
   * times, but it is only folded when deterministic, and codegen
   * subexpression elimination collapses the duplicates.)
   *
-  * Registered through [[GraftExtensions]] (`injectOptimizerRule`); the
-  * spec also applies it directly to analyzed plans. A degenerate
+  * Installed by [[GraftExtensions.install]] (`extraOptimizations`);
+  * the spec also applies it directly to analyzed plans. A degenerate
   * self-spread appears in real queries through view composition and
   * column aliasing — the rule removes the arithmetic before codegen.
   */

@@ -13,15 +13,4 @@ object GraftSqlBridge {
     * transformed by custom optimizer rules). */
   def ofRows(s: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
-
-  /** Apply an extensions installer to a fresh registry clone — lets
-    * tests validate `spark.sql.extensions` wiring without tearing down
-    * the shared session (extensions only bind at session creation). */
-  def applyExtensions(install: SparkSessionExtensions => Unit)
-      : org.apache.spark.sql.catalyst.analysis.FunctionRegistry = {
-    val ext = new SparkSessionExtensions
-    install(ext)
-    ext.registerFunctions(
-      org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin.clone())
-  }
 }

@@ -190,12 +190,14 @@ object Clustering {
         // each merge round costs exactly ONE driver-sync job instead
         // of two (r7 A/B: 2.87 -> 2.68 s median at sf0.1 — the fixed
         // job overhead was the smaller cost; kept for the shape).
-        // Lineage depth is bounded by nMerges projections — no
-        // truncation needed.
         corpus = corpus.select(col("doc_id"),
           regexp_replace(col("text"), pat, s"${a}_$b").as("text"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         cached += corpus
+        // each task deserializes the whole chain of cached rounds
+        // recursively; at 64 rounds that overflowed a 1 MiB executor
+        // thread stack now and then, so cut the chain every 16 rounds
+        if (rank % 16 == 0) corpus = corpus.localCheckpoint()
         rank += 1
       }
     }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{KeySpec, QFn, Tables, Det}
+import graft.{Det, GraftSession, KeySpec, QFn, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1033,16 +1033,11 @@ object Relational {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")
-    val prev = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    val rows = try {
+    val rows = GraftSession.withConfs(s, confs) {
       val skewed = build()
       val out = skewed.collect() // ~11 aggregated rows; runs the skew-split join
       lastSkewJoinExec.set(skewed.queryExecution.executedPlan)
       (out, skewed.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
     // r14: return the skewed execution's OWN rows as a local relation
     // instead of lazily re-building the whole join under session confs

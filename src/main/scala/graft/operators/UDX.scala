@@ -72,7 +72,7 @@ object UDX {
     * through the Column API and through SQL after FunctionRegistry
     * registration — next to the equivalent composed expression. */
   val exprCustom: QFn = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
+    graft.functions.GraftExtensions.install(s)
     val bid = col("p_retailprice") - 5.0
     val ask = col("p_retailprice") + 5.0
     Tables.part(s, d)

@@ -240,14 +240,6 @@ object AsOfJoinStrategy extends SparkStrategy {
 
 object AsOfJoinPlans {
 
-  /** Runtime strategy injection (idempotent). The deployment-time
-    * path is `spark.sql.extensions=graft.functions.GraftExtensions`,
-    * which injects the same strategy at session build. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-
   /** As-of join by column NAME (columns must exist on the respective
     * side; rows with null key/time on either side never match and are
     * pre-filtered from the right). */
@@ -258,7 +250,7 @@ object AsOfJoinPlans {
       mode: AsOfMode.Value = AsOfMode.Backward,
       toleranceMicros: Option[Long] = None): DataFrame = {
     val spark = leftDf.sparkSession
-    install(spark)
+    graft.functions.GraftExtensions.install(spark)
     val l = leftDf.queryExecution.analyzed
     val r = rightDf.filter(col(rightKey).isNotNull && col(rightTime).isNotNull)
       .queryExecution.analyzed

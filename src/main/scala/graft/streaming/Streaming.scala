@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{KeySpec, QFn, Tables, Det}
+import graft.{Det, GraftSession, KeySpec, QFn, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
@@ -378,8 +378,6 @@ object Streaming {
       // just moves to the next data batch: halve the batch count
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
     ) ++ extraConfs
-    val prev = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
     val append = mode == OutputMode.Append()
     // file-sink output path: keyed by (key, dataset) and cleared
     // before start, so repeated runs in one JVM can't accumulate
@@ -388,7 +386,7 @@ object Streaming {
     // The dir must OUTLIVE this call (the returned DataFrame reads it
     // lazily); it goes with the JVM's run directory.
     val outPath = Tables.sinkPath(s, d, s"sink_$name")
-    val (q, outSchema) = try drained(name) { drain =>
+    val (q, outSchema) = GraftSession.withConfs(s, confs)(drained(name) { drain =>
       val src = s.readStream.schema(Encoders.product[Ev].schema)
         .option("maxFilesPerTrigger", "1").parquet(feed)
       val streamed = build(src)
@@ -400,10 +398,7 @@ object Streaming {
         drain(w.format("parquet").option("path", outPath))
       } else drain(w.format("memory").queryName(sinkName))
       (q, streamed.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
+    })
     lastStateRowsTotal = Option(q.lastProgress)
       .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
     // explicit schema: a key whose every batch emitted zero rows has a

@@ -1,11 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
+import graft.functions.{GraftExtensions, SimplifySelfSpread}
 
 /** §2.10 extension surfaces: custom Catalyst expression (codegen) and
   * the multimodal mapPartitions plumbing. */
 class ExtensionSpec extends SparkTestBase {
+
+  /** `df`'s rows with [[SimplifySelfSpread]] excluded from the
+    * optimizer. The shared session has the rule installed, so a plain
+    * collect could already be folded and compare the rule with itself. */
+  private def unfoldedRows(df: DataFrame): Array[Row] =
+    GraftSession.withConfs(spark,
+        Map("spark.sql.optimizer.excludedRules" -> SimplifySelfSpread.ruleName)) {
+      val p = df.queryExecution.optimizedPlan.toString
+      assert(!p.contains("isnan"), s"rule not excluded:\n$p")
+      df.collect()
+    }
 
   test("fused_spread: Column API, SQL registration, and composed expr agree") {
     val bad = operators.UDX.exprCustom(spark, sf)
@@ -15,7 +28,6 @@ class ExtensionSpec extends SparkTestBase {
   }
 
   test("fused_spread stays inside whole-stage codegen") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Tables.part(spark, sf).select(
       graft.functions.GraftFunctions.fusedSpread(
         col("p_retailprice") - 5.0, col("p_retailprice") + 5.0).as("s"))
@@ -28,30 +40,17 @@ class ExtensionSpec extends SparkTestBase {
     assert(code.contains("/ 2.0"), "fused arithmetic not in generated code")
   }
 
-  test("fused_spread works through SparkSessionExtensions injection") {
-    // getOrCreate would return the shared session (extensions bind only
-    // at creation), so validate the injection against a fresh registry
-    val reg = org.apache.spark.sql.GraftSqlBridge.applyExtensions(
-      new graft.functions.GraftExtensions().apply)
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("fused_spread")
-    assert(reg.functionExists(id), "extension did not register fused_spread")
-    val expr = reg.lookupFunction(id,
-      Seq(org.apache.spark.sql.catalyst.expressions.Literal(90.0),
-        org.apache.spark.sql.catalyst.expressions.Literal(110.0)))
-    assert(math.abs(expr.eval(null).asInstanceOf[Double] - 0.2) < 1e-15)
-  }
-
   test("SimplifySelfSpread folds fused_spread(x, x) to a null-safe zero") {
     val df = Tables.part(spark, sf).select(
       graft.functions.GraftFunctions.fusedSpread(
         col("p_retailprice"), col("p_retailprice")).as("s"))
     val before = df.queryExecution.analyzed
-    val after = graft.functions.SimplifySelfSpread(before)
+    val after = SimplifySelfSpread(before)
     assert(before.toString.contains("fused_spread"))
     assert(!after.toString.contains("fused_spread"), s"not simplified:\n$after")
     // semantics preserved: rewritten plan computes the same values
     val viaRule = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, after).collect()
-    val direct = df.collect()
+    val direct = unfoldedRows(df)
     assert(viaRule.map(_.toString).toSeq == direct.map(_.toString).toSeq)
     assert(direct.forall(_.getDouble(0) == 0.0))
   }
@@ -61,20 +60,19 @@ class ExtensionSpec extends SparkTestBase {
     // class: (x-x)/((x+x)/2) is NaN for x = NaN and x = ±Inf, null for
     // null, 0.0 for finite — a plain fold-to-zero would silently
     // change results for non-finite doubles
-    graft.functions.GraftFunctions.register(spark) // idempotent
     val df = spark.sql(
       """SELECT x, fused_spread(x, x) AS s FROM VALUES
            (CAST('NaN' AS DOUBLE)), (CAST('Infinity' AS DOUBLE)),
            (CAST('-Infinity' AS DOUBLE)), (CAST(NULL AS DOUBLE)),
            (42.5D), (0.0D) AS t(x)""")
     val before = df.queryExecution.analyzed
-    val after = graft.functions.SimplifySelfSpread(before)
+    val after = SimplifySelfSpread(before)
     assert(!after.toString.contains("fused_spread"), s"not simplified:\n$after")
-    def render(r: org.apache.spark.sql.Row): String =
+    def render(r: Row): String =
       if (r.isNullAt(1)) "null" else r.getDouble(1).toString
     val viaRule = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, after)
       .collect().map(render).toSeq
-    val direct = df.collect().map(render).toSeq
+    val direct = unfoldedRows(df).map(render).toSeq
     assert(viaRule == direct, s"fold diverged: $viaRule vs $direct")
     assert(direct == Seq("NaN", "NaN", "NaN", "null", "0.0", "0.0"), direct)
   }
@@ -83,31 +81,44 @@ class ExtensionSpec extends SparkTestBase {
     // the statistics surface a 100 TB deployment runs on: row/column
     // stats from ANALYZE feed the cost-based optimizer (join reorder,
     // build-side choice) instead of raw file sizes
-    val prev = spark.conf.get("spark.sql.cbo.enabled", "false")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try {
-      Tables.nation(spark, sf).write.mode("overwrite").saveAsTable("cbo_nation")
-      spark.sql("ANALYZE TABLE cbo_nation COMPUTE STATISTICS FOR ALL COLUMNS")
-      val stats = spark.table("cbo_nation").queryExecution.optimizedPlan.stats
-      val expected = Tables.nation(spark, sf).count()
-      assert(stats.rowCount.contains(BigInt(expected)),
-        s"ANALYZE row count did not reach the plan: ${stats.rowCount}")
-      assert(stats.attributeStats.nonEmpty,
-        "column-level statistics missing from the optimized plan")
-      val distinct = stats.attributeStats.find(_._1.name == "n_nationkey")
-        .flatMap(_._2.distinctCount)
-      assert(distinct.contains(BigInt(expected)),
-        s"n_nationkey NDV should equal row count for a key column: $distinct")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS cbo_nation")
-      spark.conf.set("spark.sql.cbo.enabled", prev)
+    GraftSession.withConfs(spark, Map("spark.sql.cbo.enabled" -> "true")) {
+      try {
+        Tables.nation(spark, sf).write.mode("overwrite").saveAsTable("cbo_nation")
+        spark.sql("ANALYZE TABLE cbo_nation COMPUTE STATISTICS FOR ALL COLUMNS")
+        val stats = spark.table("cbo_nation").queryExecution.optimizedPlan.stats
+        val expected = Tables.nation(spark, sf).count()
+        assert(stats.rowCount.contains(BigInt(expected)),
+          s"ANALYZE row count did not reach the plan: ${stats.rowCount}")
+        assert(stats.attributeStats.nonEmpty,
+          "column-level statistics missing from the optimized plan")
+        val distinct = stats.attributeStats.find(_._1.name == "n_nationkey")
+          .flatMap(_._2.distinctCount)
+        assert(distinct.contains(BigInt(expected)),
+          s"n_nationkey NDV should equal row count for a key column: $distinct")
+      } finally spark.sql("DROP TABLE IF EXISTS cbo_nation")
     }
   }
 
-  test("GraftExtensions also injects the optimizer rule") {
-    // spot-check the installer wires BOTH surfaces without error
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.functions.GraftExtensions().apply(ext) // must not throw
+  test("GraftExtensions.install is idempotent: each piece once") {
+    GraftExtensions.install(spark)
+    GraftExtensions.install(spark)
+    val id = FunctionIdentifier("fused_spread")
+    assert(spark.sessionState.functionRegistry.listFunction().count(_ == id) == 1)
+    assert(spark.experimental.extraOptimizations.count(_ == SimplifySelfSpread) == 1)
+    assert(spark.experimental.extraStrategies.count(_ == plans.AsOfJoinStrategy) == 1)
+  }
+
+  test("keys that need the extensions install them on a fresh session") {
+    // newSession() has its own SessionState: none of the pieces until
+    // a key installs them
+    val fresh = spark.newSession()
+    assert(!fresh.sessionState.functionRegistry.functionExists(FunctionIdentifier("fused_spread")))
+    assert(fresh.experimental.extraStrategies.isEmpty)
+    for (key <- Seq("join_asof_native", "expr_custom")) {
+      val fn = SparkEntry.queries(key)
+      assert(fn(fresh, sf).collect().map(_.toString).toSeq ==
+        fn(spark, sf).collect().map(_.toString).toSeq, key)
+    }
   }
 
   test("join_dpp plants a dynamic-pruning subquery on the fact scan") {

@@ -5,8 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The single session factory: how `SPARK_GRAFT_CPUS` becomes a core
-  * count, and that no other source file builds a session of its own;
-  * and that modules are named by family, not numbered by round. */
+  * count, and that no other source file builds a session of its own
+  * or changes a live one outside `GraftExtensions.install` and
+  * `GraftSession.withConfs`; and that modules are named by family, not
+  * numbered by round. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("cores: an integer as given, '*' as the host's cores, unset as 32") {
@@ -21,14 +23,25 @@ class GraftSessionSpec extends AnyFunSuite {
     finally walk.close()
   }
 
+  /** Names of the src/main and src/test files whose text matches `re`,
+    * sorted. */
+  private def filesMatching(re: scala.util.matching.Regex): Seq[String] =
+    (scalaFiles("src/main") ++ scalaFiles("src/test"))
+      .filter(p => re.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.getFileName.toString).sorted
+
   test("only GraftSession.scala calls the session builder") {
-    val builder = """SparkSession\s*\.\s*builder""".r
-    val sources = scalaFiles("src/main") ++ scalaFiles("src/test")
-    assert(sources.exists(_.getFileName.toString == "GraftSession.scala"))
-    val builders = sources
-      .filter(p => builder.findFirstIn(Files.readString(p)).isDefined)
-      .map(_.getFileName.toString)
-    assert(builders == Seq("GraftSession.scala"))
+    assert(filesMatching("""SparkSession\s*\.\s*builder""".r) == Seq("GraftSession.scala"))
+  }
+
+  test("only GraftExtensions.scala adds Catalyst pieces to a session") {
+    val install = """extra(?:Strategies|Optimizations)\s*(?::\+|\+\+)?=(?!=)|registerFunction\(|inject(?:Function|OptimizerRule|PlannerStrategy)\(""".r
+    assert(filesMatching(install) == Seq("GraftExtensions.scala"))
+  }
+
+  test("only GraftSession.scala sets or unsets a live session's conf") {
+    // everything else scopes a conf change through GraftSession.withConfs
+    assert(filesMatching("""conf\.(?:set|unset)\(""".r) == Seq("GraftSession.scala"))
   }
 
   test("modules are named by family: no src/main file or top-level object ends in a digit") {

@@ -15,6 +15,16 @@ import org.apache.spark.sql.functions._
   * key green off either the trained or the parsed path. */
 class IndexStoreSpec extends SparkTestBase {
 
+  /** Runs `body` on a fresh name in the real [[IndexStore.root]], then
+    * deletes what it published there (`name` or `name.idx`), so the
+    * shared cache keeps only real artifacts. */
+  private def withProbe(prefix: String)(body: String => Unit): Unit = {
+    val name = s"${prefix}_${System.nanoTime()}"
+    try body(name)
+    finally Seq(name, s"$name.idx").foreach(n =>
+      new scala.reflect.io.Directory(new java.io.File(IndexStore.root, n)).deleteRecursively())
+  }
+
   test("cached: doubles round-trip bit-exactly, builder runs once") {
     // NaN, ±0.0, denormal, and an irrational-ish value — the corners a
     // decimal text render would lose; raw-bits render must not
@@ -26,51 +36,53 @@ class IndexStoreSpec extends SparkTestBase {
     // collision-proof name (the root IS overridable via
     // SPARK_GRAFT_INDEX_DIR — this spec deliberately probes the real
     // machine-local store to test the production singleton path)
-    val name = s"spec_probe_${System.nanoTime()}"
-    def train(): Array[Array[Double]] = { builds.incrementAndGet(); payload }
-    IndexStore.cached(name)(train())
-    val second = IndexStore.cached(name)(train())
-    assert(builds.get() == 1, "second cached() call must parse, not retrain")
-    for ((row, i) <- second.zipWithIndex; (v, j) <- row.zipWithIndex) {
-      assert(java.lang.Double.doubleToRawLongBits(v) ==
-        java.lang.Double.doubleToRawLongBits(payload(i)(j)),
-        s"bit drift at ($i,$j): ${payload(i)(j)} -> $v")
+    withProbe("spec_probe") { name =>
+      def train(): Array[Array[Double]] = { builds.incrementAndGet(); payload }
+      IndexStore.cached(name)(train())
+      val second = IndexStore.cached(name)(train())
+      assert(builds.get() == 1, "second cached() call must parse, not retrain")
+      for ((row, i) <- second.zipWithIndex; (v, j) <- row.zipWithIndex) {
+        assert(java.lang.Double.doubleToRawLongBits(v) ==
+          java.lang.Double.doubleToRawLongBits(payload(i)(j)),
+          s"bit drift at ($i,$j): ${payload(i)(j)} -> $v")
+      }
     }
   }
 
   test("cachedDir: concurrent publishers — one winner, no tmp residue, readers see complete artifact") {
-    val name = s"spec_race_${System.nanoTime()}"
-    val builders = new AtomicInteger(0)
-    val gate = new CountDownLatch(1)
-    val pool = Executors.newFixedThreadPool(4)
-    // 4 threads race the SAME artifact name; each writes a one-file
-    // payload whose content identifies completeness (not the writer)
-    val futures = (1 to 4).map { _ =>
-      pool.submit(new java.util.concurrent.Callable[String] {
-        def call(): String = {
-          gate.await()
-          IndexStore.cachedDir(name) { tmp =>
-            builders.incrementAndGet()
-            Files.createDirectories(Paths.get(tmp))
-            Files.writeString(Paths.get(tmp, "payload.txt"), "COMPLETE")
+    withProbe("spec_race") { name =>
+      val builders = new AtomicInteger(0)
+      val gate = new CountDownLatch(1)
+      val pool = Executors.newFixedThreadPool(4)
+      // 4 threads race the SAME artifact name; each writes a one-file
+      // payload whose content identifies completeness (not the writer)
+      val futures = (1 to 4).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[String] {
+          def call(): String = {
+            gate.await()
+            IndexStore.cachedDir(name) { tmp =>
+              builders.incrementAndGet()
+              Files.createDirectories(Paths.get(tmp))
+              Files.writeString(Paths.get(tmp, "payload.txt"), "COMPLETE")
+            }
           }
-        }
-      })
+        })
+      }
+      gate.countDown()
+      val paths = futures.map(_.get(60, TimeUnit.SECONDS))
+      pool.shutdown()
+      assert(paths.distinct.size == 1, s"racers saw different paths: $paths")
+      // every reader sees the COMPLETE payload (rename is the marker)
+      assert(Files.readString(Paths.get(paths.head, "payload.txt")) == "COMPLETE")
+      // losers' tmp dirs are cleaned up
+      val residue = {
+        val l = Files.list(Paths.get(IndexStore.root))
+        try l.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith(s"$name.tmp.")).toList
+        finally l.close()
+      }
+      assert(residue.isEmpty, s"tmp residue left behind: $residue")
     }
-    gate.countDown()
-    val paths = futures.map(_.get(60, TimeUnit.SECONDS))
-    pool.shutdown()
-    assert(paths.distinct.size == 1, s"racers saw different paths: $paths")
-    // every reader sees the COMPLETE payload (rename is the marker)
-    assert(Files.readString(Paths.get(paths.head, "payload.txt")) == "COMPLETE")
-    // losers' tmp dirs are cleaned up
-    val residue = {
-      val l = Files.list(Paths.get(IndexStore.root))
-      try l.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith(s"$name.tmp.")).toList
-      finally l.close()
-    }
-    assert(residue.isEmpty, s"tmp residue left behind: $residue")
   }
 
   test("fingerprint: sensitive to part mtime/length, insensitive to listing order, stable") {
@@ -135,18 +147,19 @@ class IndexStoreSpec extends SparkTestBase {
   }
 
   test("cachedDir hit bumps the last-use stamp the sweep orders on") {
-    val name = s"spec_touch_${System.nanoTime()}"
-    val path = IndexStore.cachedDir(name) { tmp =>
-      Files.createDirectories(Paths.get(tmp))
-      Files.writeString(Paths.get(tmp, "payload.txt"), "X")
+    withProbe("spec_touch") { name =>
+      val path = IndexStore.cachedDir(name) { tmp =>
+        Files.createDirectories(Paths.get(tmp))
+        Files.writeString(Paths.get(tmp, "payload.txt"), "X")
+      }
+      val past = java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - 30L * 24 * 3600 * 1000)
+      Files.setLastModifiedTime(Paths.get(path), past)
+      IndexStore.cachedDir(name)(_ => fail("hit must not rebuild"))
+      val bumped = Files.getLastModifiedTime(Paths.get(path)).toMillis
+      assert(bumped > past.toMillis + 1000,
+        "a cache hit must refresh the artifact's LRU stamp")
     }
-    val past = java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis() - 30L * 24 * 3600 * 1000)
-    Files.setLastModifiedTime(Paths.get(path), past)
-    IndexStore.cachedDir(name)(_ => fail("hit must not rebuild"))
-    val bumped = Files.getLastModifiedTime(Paths.get(path)).toMillis
-    assert(bumped > past.toMillis + 1000,
-      "a cache hit must refresh the artifact's LRU stamp")
   }
 
   test("etl_index_store operator: contract booleans true, data half matches direct aggregate") {

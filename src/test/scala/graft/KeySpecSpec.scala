@@ -29,6 +29,13 @@ class KeySpecSpec extends AnyFunSuite {
     assert(KeySpec.validate(Seq(a, stream.reads("a"))).size == 2)
   }
 
+  test("keySubset: the names in order, and a misspelt or empty subset fails") {
+    assert(SparkEntry.keySubset(" ts_ofi,win_rank,ts_ofi") == Seq("ts_ofi", "win_rank"))
+    val typo = intercept[IllegalArgumentException](SparkEntry.keySubset("ts_ofi,win_rnak"))
+    assert(typo.getMessage.contains("unknown key(s): win_rnak"))
+    intercept[IllegalArgumentException](SparkEntry.keySubset(","))
+  }
+
   test("Bench warm-up: a full run warms every staging key in first-reference order") {
     assert(Bench.warmupKeys(specs, None) == Seq(
       "ts_effective_spread", "stream_tumbling", "stream_foreach_batch",

@@ -48,14 +48,11 @@ class LlmQuantizeSpec extends SparkTestBase {
     for (key <- Seq("llm_emb_quantize", "llm_sample_temperature")) {
       val fn = SparkEntry.queries(key)
       val base = fn(spark, sf).collect().map(_.toString).sorted
-      for (n <- Seq(1, 5)) {
-        val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-        try {
+      for (n <- Seq(1, 5))
+        GraftSession.withConfs(spark, Map("spark.sql.shuffle.partitions" -> n.toString)) {
           val r = fn(spark, sf).collect().map(_.toString).sorted
           assert(r.sameElements(base), s"$key drifts at $n partitions")
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-      }
+        }
     }
   }
 }

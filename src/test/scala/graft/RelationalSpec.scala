@@ -73,16 +73,14 @@ class RelationalSpec extends SparkTestBase {
     // at smoke scale the planner would rather broadcast the tiny orders
     // side (also exchange-free on the fact, but not what this spec
     // proves); pin it off so the bucketed sort-merge path is exercised
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConfs(spark, Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       val joinDf = operators.Relational.bucketedJoinOnly(spark, sf)
       joinDf.collect()
       val p = plan(joinDf)
       assert(!p.contains("Exchange"),
         s"bucketed join must not shuffle either side:\n$p")
       assert(p.contains("SortMergeJoin"), s"expected bucketed SMJ:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("AQE splits a skewed join partition at runtime (skew=true)") {
@@ -90,7 +88,7 @@ class RelationalSpec extends SparkTestBase {
     // author-side half): pile ~90% of both sides onto one key, lower
     // the detection thresholds to smoke-data sizes, and assert
     // OptimizeSkewedJoin rewrote the sort-merge join
-    val confs = Map(
+    GraftSession.withConfs(spark, Map(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
@@ -98,10 +96,7 @@ class RelationalSpec extends SparkTestBase {
       // isolate the skew rule from partition coalescing, and keep it
       // applied even where it would add exchanges
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")) {
       // repartition first: the smoke parquet is ONE file = one map
       // task, and a skewed reducer partition can only be split at
       // mapper-output granularity — several mappers must exist
@@ -118,9 +113,6 @@ class RelationalSpec extends SparkTestBase {
       val p = plan(joined)
       assert(p.contains("skew=true") || p.contains("skewed"),
         s"AQE did not split the skewed partition:\n$p")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 
@@ -142,15 +134,12 @@ class RelationalSpec extends SparkTestBase {
     // partitions
     val base = plans.AsOfJoinPlans.joinAsofNative(spark, sf)
       .collect().map(_.toString).toSeq
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    for (n <- Seq("1", "3")) {
-      spark.conf.set("spark.sql.shuffle.partitions", n)
-      try {
+    for (n <- Seq("1", "3"))
+      GraftSession.withConfs(spark, Map("spark.sql.shuffle.partitions" -> n)) {
         val got = plans.AsOfJoinPlans.joinAsofNative(spark, sf)
           .collect().map(_.toString).toSeq
         assert(got == base, s"result changed at $n shuffle partitions")
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+      }
   }
 
   test("native as-of forward/nearest/tolerance equal their window twins") {
@@ -185,14 +174,11 @@ class RelationalSpec extends SparkTestBase {
     for (fn <- Seq(plans.AsOfJoinPlans.joinAsofForwardNative,
         plans.AsOfJoinPlans.joinAsofNearestNative)) {
       val base = fn(spark, sf).collect().map(_.toString).toSeq
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      for (n <- Seq("1", "3")) {
-        spark.conf.set("spark.sql.shuffle.partitions", n)
-        try {
+      for (n <- Seq("1", "3"))
+        GraftSession.withConfs(spark, Map("spark.sql.shuffle.partitions" -> n)) {
           val got = fn(spark, sf).collect().map(_.toString).toSeq
           assert(got == base, s"result changed at $n shuffle partitions")
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-      }
+        }
     }
   }
 

@@ -79,21 +79,11 @@ class StreamRecoverySpec extends SparkTestBase {
     }
   }
 
-  private val recoveryConfs = Map(
+  private def withRecoveryConfs[T](body: => T): T = GraftSession.withConfs(spark, Map(
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
-    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-
-  private def withRecoveryConfs[T](body: => T): T = {
-    val prev = recoveryConfs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    recoveryConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))(body)
 
   /** Run `build` over the staged feed into `start`-provided sink.
     * `killAfter = Some(k)`: stop abruptly once ≥ k batches have

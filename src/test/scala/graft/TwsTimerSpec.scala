@@ -22,13 +22,10 @@ class TwsTimerSpec extends SparkTestBase {
 
   test("event-time timer fires when the watermark passes session close") {
     import spark.implicits._
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val stream = MemoryStream[Ev](spark)
     val sink = s"tws_timer_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = try {
+    val q = GraftSession.withConfs(spark, Map("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
       stream.toDF()
         .withWatermark("ts", "0 seconds").as[Ev]
         .groupByKey(_.user_id)
@@ -38,11 +35,6 @@ class TwsTimerSpec extends SparkTestBase {
         .toDF("user_id", "n_events", "closed")
         .writeStream.format("memory").queryName(sink)
         .outputMode(OutputMode.Update()).start()
-    } finally prev match {
-      case Some(v) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
     }
     try {
       // user 1: two events (minutes 0, 10) → timer at minute 40
