@@ -16,7 +16,7 @@ package graft
   *   plan-shape regression gates, not performance numbers: a budget of
   *   3 means "this operator's 100 TB story tolerates three data-sized
   *   repartitions and no more". `runMain graft.PlanAudit counts` prints
-  *   measured vs declared.
+  *   measured, pre-AQE and declared.
   * @param crossJoin why a cartesian product / broadcast nested-loop
   *   join is legitimate here: the operator IS a cross product, an
   *   intentionally bounded theta join, or crosses an O(1)-size build

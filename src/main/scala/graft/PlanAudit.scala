@@ -24,13 +24,22 @@ object PlanAudit {
     * into subqueries. ReusedExchange is NOT counted — it reads a
     * sibling's shuffle output instead of shuffling again, which is
     * the thing a budget should reward. */
-  def countShuffles(p: SparkPlan): Int = {
+  def countShuffles(p: SparkPlan): Int = countExchanges(p, _.executedPlan)
+
+  /** The same count over each AQE wrapper's `initialPlan`, the physical
+    * plan before any query stage ran. AQE's final plan depends on the
+    * order its stages finish in, so one exchange can come and go in
+    * unchanged code; the initial plan does not. */
+  private def countInitialShuffles(p: SparkPlan): Int = countExchanges(p, _.initialPlan)
+
+  private def countExchanges(p: SparkPlan,
+      aqePlan: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => SparkPlan): Int = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
     var n = 0
     def walk(x: SparkPlan): Unit = {
       x match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan); return
+        case a: AdaptiveSparkPlanExec => walk(aqePlan(a)); return
         case q: QueryStageExec => walk(q.plan); return
         case _: ReusedExchangeExec => return
         case s: ShuffleExchangeLike => n += 1
@@ -136,8 +145,11 @@ object PlanAudit {
       }
     }
 
-  /** `key<TAB>measured<TAB>declared` shuffle counts for every batch key
-    * in `specs`. A line whose measured count differs from the declared
+  /** `key<TAB>measured<TAB>initial<TAB>declared` shuffle counts for
+    * every batch key in `specs`: the graded plan's count, the same
+    * plan's pre-AQE count ([[countInitialShuffles]], not graded; it is
+    * higher where AQE reused or dropped an exchange at run time) and
+    * the budget. A line whose measured count differs from the declared
     * budget ends in `<TAB>OVER` (the audit fails it) or `<TAB>under`
     * (allowed; tighten the budget when the headroom is not deliberate). */
   def counts(spark: SparkSession, d: String,
@@ -145,12 +157,13 @@ object PlanAudit {
     batchSpecs(specs).map { spec =>
       val declared = spec.shuffleBudget.mkString
       try {
-        val n = measure(spark, spec, d).shuffles
+        val m = measure(spark, spec, d)
+        val n = m.shuffles
         val mark = spec.shuffleBudget.collect {
           case b if n > b => "\tOVER"
           case b if n < b => "\tunder"
         }.mkString
-        s"${spec.name}\t$n\t$declared$mark"
+        s"${spec.name}\t$n\t${countInitialShuffles(m.graded)}\t$declared$mark"
       } catch { case e: Throwable =>
         s"${spec.name}\tERROR ${String.valueOf(e.getMessage).take(80)}\t$declared"
       }
@@ -164,7 +177,8 @@ object PlanAudit {
   val AuditCores = 8
 
   /** `runMain graft.PlanAudit` prints one line per smell;
-    * `... counts` prints `key<TAB>measured<TAB>declared` shuffle counts;
+    * `... counts` prints `key<TAB>measured<TAB>initial<TAB>declared`
+    * shuffle counts;
     * `... explain <outDir> <suffix> <key1,key2,...> <sfDir>` writes
     * each key's formatted plan to `<outDir>/<key>_<suffix>.txt`. */
   def main(args: Array[String]): Unit =

@@ -49,16 +49,15 @@ package object graft {
     * Sized by measurement (sf0.01, local[32] on 4 cores): one JVM with
     * the cap at 100000 ran every registry key twice as `graft.Verify`
     * runs it (`CodegenMetrics.METRIC_COMPILATION_TIME` per pass). The
-    * first pass compiled 3069 distinct sources. The second compiled
-    * 492, none of them evicted: 410 in the 24 `stream_` keys, whose
-    * byte-identical sources miss because each streaming run's tasks
-    * compile under a new class loader, which is part of the cache key;
-    * 82 in 15 batch keys whose AQE plans differ from run to run. Every
-    * other key compiled 0. `graft.Bench`'s `count()` form compiles
-    * fewer, 2464 on a first pass. The cache is a Guava cache of 4
-    * segments that each evict at a quarter of the cap, so the cap
-    * leaves a third over 3069 for an uneven split. Repeat the
-    * measurement after adding keys.
+    * first pass compiled 2815 distinct sources. The second compiled
+    * 74, none of them evicted, all in 14 batch keys whose AQE plans
+    * differ from run to run. Every other key compiled 0, the 24
+    * `stream_` keys included: their tasks share the executor's one
+    * class loader, which is part of the cache key (see
+    * [[scratchConfs]]). The cache is a Guava cache of 4 segments that
+    * each evict at a quarter of the cap, so the cap leaves more than a
+    * third over 2815 for an uneven split. Repeat the measurement after
+    * adding keys.
     *
     * Cost: cached classes stay loaded, on the heap and in Metaspace, up
     * to the cap; a session that is stopped and rebuilt leaves its
@@ -73,12 +72,26 @@ package object graft {
     * Checkpoint-file checksums are off because every checkpoint here
     * is throwaway tmpfs state — they protect durable remote
     * checkpoints. The codegen cache cap is a static conf: Spark reads
-    * it once, when its code generator first loads. */
+    * it once, when its code generator first loads.
+    *
+    * Artifact isolation is off because it gave every stream run its
+    * own executor class loader. With it on, each job carries its
+    * session's UUID, and each stream query runs on a `cloneSession()`
+    * with a new one. For each new UUID the executor builds an
+    * `IsolatedSessionState` with a fresh `MutableURLClassLoader`, and
+    * `CodeGenerator`'s cache is keyed by (class loader, source), so
+    * every stream run compiled its task classes again. The executor
+    * keeps up to 100 of those sessions for 30 minutes after last use,
+    * each holding its loader and its generated classes. Off, every
+    * task runs under the executor's one default session. Isolation
+    * guards per-session jars and files (`addArtifact`, `addJar`),
+    * which this engine never adds. The stream clones copy the conf. */
   def scratchConfs: Seq[(String, String)] = Seq(
     "spark.local.dir" -> s"$fastRunDir/local",
     "spark.sql.streaming.stateStore.rocksdb.checkpointFileChecksumEnabled" ->
       "false",
-    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString)
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** Run directories are `graft_run_<pid>`, one per JVM and root. */
   private[graft] val RunDirPrefix = "graft_run_"

@@ -30,4 +30,22 @@ class CodegenCacheSpec extends SparkTestBase {
     val recompiled = pass().filter(_._2 > 0)
     assert(recompiled.isEmpty, s"keys that compiled again on the second pass: $recompiled")
   }
+
+  test("a second stream_dedup run compiles no class and adds no executor session") {
+    // each stream query runs on a cloned session; artifact isolation
+    // would give each clone its own executor class loader, which is
+    // part of the codegen cache key
+    val sessions0 = org.apache.spark.graft.ExecutorSessions.count
+    def run(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      SparkEntry.queries("stream_dedup")(spark, sf).write.format("noop").mode("overwrite").save()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    info(s"first run compiled ${run()} classes")
+    val recompiled = run()
+    val sessions = org.apache.spark.graft.ExecutorSessions.count
+    info(s"executor isolated sessions: $sessions0 before, $sessions after")
+    assert(recompiled == 0, s"the second run compiled $recompiled classes again")
+    assert(sessions <= sessions0, "each run added an executor isolated session")
+  }
 }

@@ -81,7 +81,7 @@ class PlanContractSpec extends SparkTestBase {
 
   test("join_skew_aqe: counts and the audit measure the captured plan alike, then release it") {
     val spec = SparkEntry.specs.find(_.name == "join_skew_aqe").get
-    assert(PlanAudit.counts(spark, sf, Seq(spec)) == Seq("join_skew_aqe\t4\t4"))
+    assert(PlanAudit.counts(spark, sf, Seq(spec)) == Seq("join_skew_aqe\t4\t4\t4"))
     assert(PlanAudit.constructionPlan("join_skew_aqe").isEmpty,
       "counts left the captured plan pinned")
     // the audit grades the same 4 shuffles: one budget below fails it
