@@ -51,16 +51,47 @@ object BenchAmbient {
     totalBest > 1.0 && totalMedian > 0.0 && totalMedian / totalBest > threshold
 
   /** Keys whose best-of-n exceeds the committed quiet baseline enough
-    * to warrant one tail re-run: BOTH >factor× (default 1.3×, the
-    * r11 verdict's number) AND >absSlack s absolute over (sub-100 ms
-    * keys sit on a fixed scheduling floor that trivially exceeds any
-    * ratio — same rule BenchGate applies). Keys without a baseline
-    * entry (newer than the committed file) or without a successful
-    * run are not re-runnable. Returned sorted for a stable artifact. */
+    * to warrant one tail re-run: BOTH > factor× (1.3×, the r11
+    * verdict's number) AND > absSlack (0.15 s) absolute over (sub-100
+    * ms keys sit on a fixed scheduling floor that trivially exceeds any
+    * ratio). Keys without a baseline entry (newer than the committed
+    * file) or without a successful run are not re-runnable. Returned
+    * sorted for a stable artifact. */
   def tailKeys(best: Map[String, Double], baseline: Map[String, Double],
       factor: Double = 1.3, absSlack: Double = 0.15): Seq[String] =
     best.collect { case (k, b) if baseline.get(k).exists(base =>
       b > base * factor && b - base > absSlack) => k }.toSeq.sorted
+
+  /** [[gate]]'s verdict on one key. */
+  sealed abstract class Verdict(val label: String)
+  case object GateOk extends Verdict("ok")
+  case object GateWarn extends Verdict("WARN(ambient-load)")
+  case object GateFail extends Verdict("FAIL")
+  case object Ungated extends Verdict("ungated")
+  val GateFactor = 3.0
+  val GateSlackSec = 0.3
+
+  /** [[BenchGate]]'s rule for one key. `best` is its best wall over
+    * [[Bench.time]]'s runs, None when any run threw; `base` its
+    * committed median, None for a key newer than the baseline file
+    * ([[Ungated]]). A key that threw FAILs. A key over BOTH
+    * [[GateFactor]]× AND [[GateSlackSec]] s over `base` (sub-100 ms
+    * keys sit on a fixed JIT / task-scheduling floor that trivially
+    * exceeds any ratio) FAILs, or WARNs when the load sampled before
+    * any work was above `cores` (rerun quiet). The gate's one retry is
+    * Bench's tail re-run: any key over this rule is also over
+    * [[tailKeys]]'s, so it was re-run after the main passes and `best`
+    * is already min(best of the passes, the re-run) — a transient
+    * stall does not mint a FAIL; a real regression reproduces. */
+  def gate(best: Option[Double], base: Option[Double], loadStart: Double,
+      cores: Int): Verdict =
+    (best, base) match {
+      case (_, None) => Ungated
+      case (None, _) => GateFail
+      case (Some(b), Some(bl)) if b / bl > GateFactor && b - bl >= GateSlackSec =>
+        if (loadStart > cores) GateWarn else GateFail
+      case _ => GateOk
+    }
 
   /** Headline rate vs the committed quiet baseline, over the keys
     * PRESENT IN BOTH maps (a key subset run, or keys newer than the
@@ -83,10 +114,9 @@ object BenchAmbient {
       .split(" ")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** Minimal flat {"key": secs} parse for the committed baseline, read
-    * by Bench and BenchGate (the build has no JSON dependency by
-    * contract). Missing/unreadable file → empty
-    * map (the bench still runs; the artifact annotates
+  /** Minimal flat {"key": secs} parse for the committed baseline (the
+    * build has no JSON dependency by contract). Missing/unreadable file
+    * → empty map (the bench still runs; the artifact annotates
     * rate_vs_baseline as null). */
   def readBaseline(path: String): Map[String, Double] =
     try {

@@ -365,8 +365,8 @@ object Multimodal {
     * The scale story (bounded buckets, ~linear candidates on DISTINCT
     * random payloads) is measured in PhashScaleSpec — 50k docs (10×
     * the sf0.1 corpus) on every `sbt test` run; the 150k (30×) rung
-    * is env-raised (SPARK_GRAFT_PHASH_PROBE_N) and recorded in
-    * ARCHIVE.md's round-11 delta. */
+    * is raised through that spec's probe-size env override and recorded
+    * in ARCHIVE.md's round-11 delta. */
   val mmPhashWide: QFn = (s, d) =>
     // parallelizeKernel: same single-core decode fix as the narrow key
     phashPairs(wideHashes(

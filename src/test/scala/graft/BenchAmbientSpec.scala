@@ -71,6 +71,51 @@ class BenchAmbientSpec extends AnyFunSuite {
     assert(BenchAmbient.tailKeys(best, baseline) == Seq("a", "b", "c"))
   }
 
+  import BenchAmbient.{gate, GateFail, GateOk, GateWarn, Ungated}
+
+  test("gate: FAIL needs BOTH >3x ratio and >=0.3s absolute") {
+    // 3.5x but only +0.2s: the scheduling floor, not a regression
+    assert(gate(Some(0.28), Some(0.08), 0.5, 32) == GateOk)
+    // 2.9x at +2s: a big absolute gap is not enough on its own
+    val base = 2.0 / 1.9
+    assert(gate(Some(base * 2.9), Some(base), 0.5, 32) == GateOk)
+    assert(gate(Some(4.0), Some(1.0), 0.5, 32) == GateFail)
+    // boundary: the slack is >= (exactly +0.3s fails), the ratio is >
+    assert(0.425 - 0.125 == 0.3) // both exact in binary: a true boundary
+    assert(gate(Some(0.425), Some(0.125), 0.5, 32) == GateFail) // 3.4x, +0.3s
+    assert(gate(Some(0.42), Some(0.125), 0.5, 32) == GateOk) // 3.36x, +0.295s
+    assert(gate(Some(3.0), Some(1.0), 0.5, 32) == GateOk) // exactly 3x
+  }
+
+  test("gate: over threshold WARNs when the start load exceeds the cores") {
+    assert(gate(Some(4.0), Some(1.0), 32.5, 32) == GateWarn)
+    assert(gate(Some(4.0), Some(1.0), 32.0, 32) == GateFail) // equal: not above
+    assert(gate(Some(1.0), Some(1.0), 64.0, 32) == GateOk) // load alone is no verdict
+  }
+
+  test("gate: a key with no baseline entry is ungated, a key that threw fails") {
+    assert(gate(Some(9.0), None, 0.5, 32) == Ungated)
+    assert(gate(None, None, 0.5, 32) == Ungated)
+    assert(gate(None, Some(1.0), 0.5, 32) == GateFail)
+    assert(gate(None, Some(1.0), 64.0, 32) == GateFail) // no load excuse
+  }
+
+  test("gate: every key the gate would fail is re-run at the tail first") {
+    // the gate's one retry IS Bench's tail re-run: over 3x / 0.3s must
+    // imply over tailKeys's 1.3x / 0.15s, or a FAIL would skip it
+    val grid = for {
+      base <- Seq(0.0, 0.001, 0.01, 0.05, 0.1, 0.15, 0.3, 1.0, 2.5, 10.0, 100.0)
+      best <- (0 to 400).map(_ * 0.0125) ++ Seq(base * 3.0, base * 3.0 + 0.3, 1000.0)
+    } yield (best, base)
+    val failing = grid.filter { case (b, base) =>
+      gate(Some(b), Some(base), 0.0, 32) == GateFail }
+    assert(failing.size > 100)
+    failing.foreach { case (b, base) =>
+      assert(BenchAmbient.tailKeys(Map("k" -> b), Map("k" -> base)) == Seq("k"),
+        s"gate fails best $b over base $base, but the tail would not re-run it")
+    }
+  }
+
   test("rateVsBaseline: intersecting keys only, sum-over-sum") {
     val baseline = Map("a" -> 1.0, "b" -> 3.0, "gone" -> 100.0)
     val best = Map("a" -> 1.5, "b" -> 4.5, "new" -> 100.0)

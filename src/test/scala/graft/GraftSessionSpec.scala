@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The single session factory: how `SPARK_GRAFT_CPUS` becomes a core
   * count, and that no other source file builds a session of its own
   * or changes a live one outside `GraftExtensions.install` and
-  * `GraftSession.withConfs`; and that modules are named by family, not
-  * numbered by round. */
+  * `GraftSession.withConfs`; that modules are named by family, not
+  * numbered by round; and which env settings src/main reads. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("cores: an integer as given, '*' as the host's cores, unset as 32") {
@@ -52,6 +52,16 @@ class GraftSessionSpec extends AnyFunSuite {
         .filter(_.last.isDigit).distinct
     }
     assert(numbered.isEmpty)
+  }
+
+  test("the only SPARK_GRAFT_ env settings src/main reads are the five deployment ones") {
+    // every bench tuning knob is a constant in Bench / BenchAmbient; a
+    // new env knob must earn its place in this list
+    val knob = """SPARK_GRAFT_[A-Z_]+""".r
+    val names = scalaFiles("src/main")
+      .flatMap(p => knob.findAllIn(Files.readString(p))).distinct.sorted
+    assert(names == Seq("SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_CPUS",
+      "SPARK_GRAFT_INDEX_DIR", "SPARK_GRAFT_INDEX_MAX_BYTES", "SPARK_GRAFT_SF_DIR"))
   }
 
   test("throwaway paths come from the run directories: only package.scala names a scratch root") {

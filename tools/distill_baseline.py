@@ -1,8 +1,10 @@
 #!/usr/bin/env python3
-"""Refresh the committed BenchGate baseline from a full Bench run:
+"""Refresh the committed Bench/BenchGate baseline from a Bench run:
 copies bench_last.json's per-key `medians` into
-tools/bench_baseline.json. Run after a DELIBERATE perf change and
-commit the result together with the change that moved the numbers.
+tools/bench_baseline.json, merged over the keys already there (a
+`runMain graft.Bench <keys>` subset run refreshes only those keys).
+Run after a DELIBERATE perf change and commit the result together
+with the change that moved the numbers.
 
 Usage: distill_baseline.py [bench_last.json] [tools/bench_baseline.json]
 """
@@ -14,7 +16,7 @@ d = json.load(open(src))
 good = {k: v for k, v in (d.get("medians") or {}).items() if v is not None}
 assert good, f"no medians in {src}"
 # refuse to silently SHRINK gate coverage: a key-subset bench run
-# (SPARK_GRAFT_BENCH_ONLY) produces a medians map with only those keys,
+# (Bench's [keys] argument) produces a medians map with only those keys,
 # and overwriting the baseline with it would leave every other key
 # permanently ungated. Merge instead: subset runs refresh their keys,
 # full runs refresh everything; keys can only be REMOVED by editing
