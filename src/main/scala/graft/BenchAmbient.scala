@@ -73,8 +73,9 @@ object BenchAmbient {
 
   /** [[BenchGate]]'s rule for one key. `best` is its best wall over
     * [[Bench.time]]'s runs, None when any run threw; `base` its
-    * committed median, None for a key newer than the baseline file
-    * ([[Ungated]]). A key that threw FAILs. A key over BOTH
+    * committed median, None for a key newer than the baseline file.
+    * A key that threw FAILs, with or without a baseline entry; one
+    * that ran and has no entry is [[Ungated]]. A key over BOTH
     * [[GateFactor]]× AND [[GateSlackSec]] s over `base` (sub-100 ms
     * keys sit on a fixed JIT / task-scheduling floor that trivially
     * exceeds any ratio) FAILs, or WARNs when the load sampled before
@@ -86,8 +87,8 @@ object BenchAmbient {
   def gate(best: Option[Double], base: Option[Double], loadStart: Double,
       cores: Int): Verdict =
     (best, base) match {
-      case (_, None) => Ungated
       case (None, _) => GateFail
+      case (_, None) => Ungated
       case (Some(b), Some(bl)) if b / bl > GateFactor && b - bl >= GateSlackSec =>
         if (loadStart > cores) GateWarn else GateFail
       case _ => GateOk

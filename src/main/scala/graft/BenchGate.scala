@@ -33,6 +33,7 @@ object BenchGate {
       val base = baseline.get(name)
       val v = BenchAmbient.gate(best, base, t.loadStart, GraftSession.cores)
       val detail = (best, base) match {
+        case (None, None) => "no baseline  threw"
         case (_, None) => "no baseline"
         case (None, Some(bl)) => f"base $bl%7.3f s  threw"
         case (Some(b), Some(bl)) => f"base $bl%7.3f s  best $b%7.3f s  ratio ${b / bl}%5.2fx"

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,10 +37,19 @@ import graft.functions.CosineSimF
   * Scale notes (100 TB): both keys are bucket-join shaped — the
   * corpus is scanned once to produce narrow (id, bucket) rows, joins
   * run on bucket equality (probes broadcast for the ANN key), and
-  * nothing enumerates all pairs. The per-row signature cost here uses
-  * higher-order functions (interpreted per element) for portability;
-  * the production-rate twin is the native codegen'd
-  * [[graft.functions.MinhashSigs]] path in LlmSimilarity.
+  * nothing enumerates all pairs. The portable signature runs the same
+  * native one-pass kernels as `llm_near_dedup`: the one bigram-hash
+  * expression [[graft.functions.HashedBigrams]] (its md5 form) feeding
+  * [[graft.functions.MinhashSigs]], so portability costs only the
+  * gram hash.
+  *
+  * The near-duplicate pipeline's shared steps are stated once here and
+  * used by the MinHash, pHash and gram-set keys of LlmSimilarity and
+  * Multimodal too: the banded candidate join ([[bandCandidates]]),
+  * the signature-agreement estimate ([[sigAgreement]]), the exact
+  * hashed-gram Jaccard ([[gramJaccard]]), the permutation constants
+  * ([[minhashPerms]]) and the delta-vs-base/prior verdict table
+  * ([[deltaVerdicts]]). Each family keeps its own band-key builder.
   *
   * r9 round audit note: round(sim/est, 4|6) retained (not Det.fq) for
   * the same reason as LlmSimilarity — fold orders are engineered
@@ -80,6 +89,18 @@ object LlmLsh {
         posexplode(col("codes")).as(Seq("g", "code")))
   }
 
+  /** Deduped (probe_id, vec_id) bucket-collision candidates — the
+    * measured scan set (spec gates its size: LSH must score a small
+    * corpus fraction, not rediscover brute force). */
+  private[graft] def signCandidates(s: SparkSession, d: String): DataFrame = {
+    val codes = signCodes(Tables.embeddings(s, d))
+    val probes = codes.filter(col("vec_id").isin(LlmSimilarity.ProbeIds: _*))
+      .select(col("vec_id").as("probe_id"), col("g"), col("code"))
+    codes.join(broadcast(probes), Seq("g", "code"))
+      .filter(col("vec_id") =!= col("probe_id"))
+      .select("probe_id", "vec_id").distinct()
+  }
+
   /** Sign-LSH bucketed cosine top-5 for the 5 probe vectors: probes'
     * (g, code) rows broadcast against the corpus codes, candidate ids
     * deduped NARROW (16-byte rows) before the embedding re-join, then
@@ -99,18 +120,6 @@ object LlmLsh {
     * and gates rank-1 retrieval at a ≤ 15% scan); for
     * moderate-similarity top-k the data-adaptive IVF family
     * (`llm_knn_ivf*`) is the production path. */
-  /** Deduped (probe_id, vec_id) bucket-collision candidates — the
-    * measured scan set (spec gates its size: LSH must score a small
-    * corpus fraction, not rediscover brute force). */
-  private[graft] def signCandidates(s: SparkSession, d: String): DataFrame = {
-    val codes = signCodes(Tables.embeddings(s, d))
-    val probes = codes.filter(col("vec_id").isin(LlmSimilarity.ProbeIds: _*))
-      .select(col("vec_id").as("probe_id"), col("g"), col("code"))
-    codes.join(broadcast(probes), Seq("g", "code"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select("probe_id", "vec_id").distinct()
-  }
-
   val llmKnnSignLsh: QFn = (s, d) => {
     val emb = Tables.embeddings(s, d)
     val cands = signCandidates(s, d)
@@ -175,24 +184,27 @@ object LlmLsh {
 
   // ------------------------------------------------ portable MinHash
 
-  private val MinhashPerms = 64
-  private val MinhashBands = 16 // 16 bands × 4 rows
-  private val P = 2147483647L // Mersenne 2^31−1
+  private[operators] val MinhashPerms = 64
+  private[operators] val MinhashBands = 16 // 16 bands × 4 rows
+  private[operators] val MersennePrime = 2147483647L // 2^31−1
 
-  /** Fixed (a, b) permutation constants, a ∈ [1, P), b ∈ [0, P).
+  /** [[MinhashPerms]] fixed (a, b) permutation constants drawn from
+    * `seed`, a ∈ [1, P), b ∈ [0, P) for P = [[MersennePrime]].
     * a·h ≤ 2³¹·2³¹ = 2⁶² — no 64-bit overflow in either engine. */
-  private val permConsts: Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(2027)
+  private[operators] def minhashPerms(seed: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
     Seq.fill(MinhashPerms)(
       (rnd.nextInt(Int.MaxValue - 1).toLong + 1L, rnd.nextInt(Int.MaxValue).toLong))
   }
+
+  private val permConsts = minhashPerms(2027)
 
   /** (doc_id, hs, sig): hs the distinct md5-hashed word-bigram set
     * (lower 4 md5 bytes mod P — reproducible anywhere md5 exists),
     * sig the 64-perm MinHash signature min((a·h + b) mod P), computed
     * by the SAME native one-pass [[graft.functions.MinhashSigs]]
     * kernel `llm_near_dedup` uses — only the gram hash feeding it
-    * differs (portable md5 vs the engine-native HashedBigrams). */
+    * differs (portable md5 vs the engine-native xxhash64). */
   private def portableSignatures(s: SparkSession, d: String): DataFrame =
     portableSignaturesOn(Tables.documents(s, d))
 
@@ -202,14 +214,14 @@ object LlmLsh {
     * ADVICE). */
   private[graft] def portableSignaturesOn(docs: DataFrame): DataFrame = {
     val (as, bs) = permConsts.unzip
-    // Md5Bigrams → MinhashSigs: both native codegen'd one-pass
-    // kernels (same shape as llm_near_dedup's HashedBigrams chain);
+    // HashedBigrams.md5 → MinhashSigs: both native codegen'd one-pass
+    // kernels (llm_near_dedup's chain with the portable gram hash);
     // the composed md5 HOF pipeline measured 10× slower at sf0.1
     docs
-      .withColumn("hs", graft.functions.Md5Bigrams(col("text"), P))
+      .withColumn("hs", graft.functions.HashedBigrams.md5(col("text"), MersennePrime))
       .filter(size(col("hs")) > 0)
       .withColumn("sig",
-        graft.functions.MinhashSigs(col("hs"), as.toArray, bs.toArray, P))
+        graft.functions.MinhashSigs(col("hs"), as.toArray, bs.toArray, MersennePrime))
       .select("doc_id", "hs", "sig")
   }
 
@@ -231,31 +243,53 @@ object LlmLsh {
     * scale probe (same production-path reuse as Multimodal.phashPairs). */
   private[graft] def minhashPairsOn(sigs0: DataFrame): DataFrame = {
     // localCheckpoint (r14): sigs feed the band keys and both verify
-    // attachments — three Md5Bigrams + MinhashSigs derivations over
+    // attachments — three gram-hash + MinhashSigs derivations over
     // every doc without it; derive once (same-window A/B in
     // OPTIMIZATION_r14.md)
     val sigs = sigs0.localCheckpoint()
     val keys = minhashBandKeys(sigs)
-    val cands = keys.as("x").join(keys.as("y"),
-        col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    cands
+    bandCandidates(keys, keys, "band_key", ("a", "b"), Some(_ < _))
       .join(sigs.select(col("doc_id").as("a"), col("sig").as("sa"), col("hs").as("ga")), "a")
       .join(sigs.select(col("doc_id").as("b"), col("sig").as("sb"), col("hs").as("gb")), "b")
-      .withColumn("est_jaccard",
-        aggregate(zip_with(col("sa"), col("sb"),
-          (x, y) => when(x === y, 1).otherwise(0)), lit(0), (acc, x) => acc + x)
-          .cast("double") / lit(MinhashPerms.toDouble))
+      .withColumn("est_jaccard", sigAgreement(col("sa"), col("sb")))
       .filter(col("est_jaccard") >= 0.35)
       .withColumn("shared", graft.functions.IntersectCount(col("ga"), col("gb")))
       .select(col("a"), col("b"), round(col("est_jaccard"), 4).as("est_jaccard"),
-        round(col("shared").cast("double") /
-          (size(col("ga")) + size(col("gb")) - col("shared")), 6)
-          .as("exact_jaccard"))
+        round(gramJaccard(col("shared"), col("ga"), col("gb")), 6).as("exact_jaccard"))
       .orderBy("a", "b")
   }
+
+  /** Distinct (l, r) doc-id pairs of two band-row frames — each
+    * (doc_id, band, `key`) — that agree on some band's key: the banded
+    * candidate join every LSH family in the package runs (xxhash'd
+    * slice keys in `llm_near_dedup`, the portable slice strings here,
+    * pHash bit bands in Multimodal; each builds its own keys).
+    * `idOrder`, when given, further restricts (x.doc_id, y.doc_id) —
+    * the id rule of a self-join. Pairs are deduped FIRST (cheap
+    * 16-byte rows) so the signature / gram payloads never go through
+    * the distinct's shuffle. */
+  private[operators] def bandCandidates(x: DataFrame, y: DataFrame, key: String,
+      names: (String, String),
+      idOrder: Option[(Column, Column) => Column] = None): DataFrame = {
+    val onBand = col("x.band") === col("y.band") && col(s"x.$key") === col(s"y.$key")
+    x.as("x").join(y.as("y"),
+        idOrder.fold(onBand)(o => onBand && o(col("x.doc_id"), col("y.doc_id"))))
+      .select(col("x.doc_id").as(names._1), col("y.doc_id").as(names._2))
+      .distinct()
+  }
+
+  /** MinHash estimate of J(A, B): the share of positions at which two
+    * [[MinhashPerms]]-long signatures agree. matches / 64 is an exact
+    * binary fraction, so gates and rounding agree across engines. */
+  private[operators] def sigAgreement(sa: Column, sb: Column): Column =
+    aggregate(zip_with(sa, sb, (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, x) => acc + x).cast("double") / lit(MinhashPerms.toDouble)
+
+  /** Exact Jaccard of two distinct hashed-gram sets from their
+    * intersection size: |A∪B| = |A| + |B| − |A∩B| on distinct sets,
+    * so one IntersectCount (`shared`) gives both counts. */
+  private[operators] def gramJaccard(shared: Column, ga: Column, gb: Column): Column =
+    shared.cast("double") / (size(ga) + size(gb) - shared)
 
   /** Portable MinHash+LSH near-dedup: band buckets (16×4, keys the
     * raw signature slices — no engine hash), deduped candidate pairs,
@@ -271,28 +305,9 @@ object LlmLsh {
     * slice-string band keys, matches/64 estimate, hashed-gram exact
     * Jaccard. matches/64 is an exact binary fraction, so the ≥ 0.35
     * gate and round(·, 4) agree bit-for-bit across engines. */
-  private def minhashPortableOracleSql: String = {
-    val perms = permConsts.zipWithIndex
-      .map { case ((a, b), i) => s"($i, ${a}::BIGINT, ${b}::BIGINT)" }
-      .mkString(", ")
-    s"""WITH perms(pi, a, b) AS (VALUES $perms),
-          toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-          g AS (
-            SELECT doc_id,
-              unnest(list_distinct(list_transform(range(len(w) - 1),
-                i -> w[i+1] || '_' || w[i+2]))) AS gram
-            FROM toks WHERE len(w) >= 2),
-          h0 AS (
-            SELECT DISTINCT doc_id,
-              ('0x' || substr(md5(gram), 25, 8))::UBIGINT::BIGINT % ${P} AS hv
-            FROM g),
-          sig AS (
-            SELECT doc_id, perms.pi, min((perms.a * hv + perms.b) % ${P}) AS mv
-            FROM h0, perms GROUP BY 1, 2),
-          bk AS (
-            SELECT doc_id, pi // 4 AS band,
-              string_agg(mv::VARCHAR, '_' ORDER BY pi) AS key
-            FROM sig GROUP BY 1, 2),
+  private def minhashPortableOracleSql: String =
+    s"""WITH $permsCte,
+          ${minhashCtes("documents")},
           cand AS (
             SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
             FROM bk x JOIN bk y
@@ -314,7 +329,38 @@ object LlmLsh {
           JOIN hsets x ON x.doc_id = est.a
           JOIN hsets y ON y.doc_id = est.b
           WHERE ej >= 0.35 ORDER BY est.a, est.b"""
+
+  /** The oracles' `perms` CTE: the same 64 (a, b) constants the engine
+    * runs, as a VALUES table. */
+  private def permsCte: String = {
+    val perms = permConsts.zipWithIndex
+      .map { case ((a, b), i) => s"($i, ${a}::BIGINT, ${b}::BIGINT)" }
+      .mkString(", ")
+    s"perms(pi, a, b) AS (VALUES $perms)"
   }
+
+  /** The oracles' md5 → MinHash → band-key CTE chain over `src`'s
+    * (doc_id, text): toks, g (distinct word bigrams), h0 (md5 gram
+    * hashes mod P), sig (min per perm, after [[permsCte]]) and bk (the
+    * 16×4 slice-string band keys). */
+  private def minhashCtes(src: String): String =
+    s"""toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM $src),
+          g AS (
+            SELECT doc_id,
+              unnest(list_distinct(list_transform(range(len(w) - 1),
+                i -> w[i+1] || '_' || w[i+2]))) AS gram
+            FROM toks WHERE len(w) >= 2),
+          h0 AS (
+            SELECT DISTINCT doc_id,
+              ('0x' || substr(md5(gram), 25, 8))::UBIGINT::BIGINT % $MersennePrime AS hv
+            FROM g),
+          sig AS (
+            SELECT doc_id, perms.pi, min((perms.a * hv + perms.b) % $MersennePrime) AS mv
+            FROM h0, perms GROUP BY 1, 2),
+          bk AS (
+            SELECT doc_id, pi // 4 AS band,
+              string_agg(mv::VARCHAR, '_' ORDER BY pi) AS key
+            FROM sig GROUP BY 1, 2)"""
 
   // ------------------------------------ ingestion-mode near-dedup
 
@@ -360,49 +406,53 @@ object LlmLsh {
     * so the registered key (stored index) and the spec's one-shot
     * comparator (fresh signatures over the union) run the SAME
     * decision logic, making IncrementalNeardupSpec a pure test of the
-    * index persistence/roundtrip, the IvfAppendSpec pattern.
+    * index persistence/roundtrip, the IvfAppendSpec pattern. The
+    * verify estimates from signatures first (64-int compare) and
+    * computes the exact hashed-gram Jaccard only on estimate
+    * survivors. */
+  private[graft] def incrementalNeardupOn(
+      deltaDocs: DataFrame, deltaSigs: DataFrame,
+      baseKeys: DataFrame, baseSigs: DataFrame): DataFrame =
+    deltaVerdicts(deltaDocs, minhashBandKeys(deltaSigs), deltaSigs,
+      baseKeys, baseSigs, "band_key",
+      (sigs, id, t) => sigs.select(col("doc_id").as(id),
+        col("sig").as(s"s$t"), col("hs").as(s"g$t")),
+      _.withColumn("est", sigAgreement(col("sa"), col("sb")))
+        .filter(col("est") >= 0.35)
+        .withColumn("shared", graft.functions.IntersectCount(col("ga"), col("gb")))
+        .filter(gramJaccard(col("shared"), col("ga"), col("gb")) >= NeardupExactJaccard))
+
+  /** The delta-vs-base/prior verdict table of the ingestion near-dedup
+    * keys (`llm_incremental_neardup` here, `mm_phash_incremental` in
+    * Multimodal). Candidates are [[bandCandidates]] on `key`: each
+    * delta doc against the base band index, and against every
+    * lower-id delta doc. `side(frame, id, tag)` projects a payload
+    * frame (doc_id + payload) to `id` and its payload columns tagged
+    * `tag`; `verified` keeps the candidate rows — did with tag "a",
+    * oid with tag "b" — that truly match.
     *
     * Decision contract (order-free, non-transitive, so it needs no
     * iteration and replays identically in any engine): a delta doc is
     * dropped iff it near-matches ANY base doc, or ANY lower-doc_id
     * delta doc; `dup_of` reports the lowest matching id across both
     * families, `kept` the survivor flag. */
-  private[graft] def incrementalNeardupOn(
-      deltaDocs: DataFrame, deltaSigs: DataFrame,
-      baseKeys: DataFrame, baseSigs: DataFrame): DataFrame = {
-    val deltaKeys = minhashBandKeys(deltaSigs)
-    // estimate from signatures first (64-int compare), exact
-    // hashed-gram Jaccard only on estimate survivors
-    def verify(cands: DataFrame, otherSigs: DataFrame): DataFrame =
-      cands
-        .join(deltaSigs.select(col("doc_id").as("did"),
-          col("sig").as("sa"), col("hs").as("ga")), "did")
-        .join(otherSigs.select(col("doc_id").as("oid"),
-          col("sig").as("sb"), col("hs").as("gb")), "oid")
-        .withColumn("est",
-          aggregate(zip_with(col("sa"), col("sb"),
-            (x, y) => when(x === y, 1).otherwise(0)), lit(0), (acc, x) => acc + x)
-            .cast("double") / lit(MinhashPerms.toDouble))
-        .filter(col("est") >= 0.35)
-        .withColumn("shared", graft.functions.IntersectCount(col("ga"), col("gb")))
-        .filter(col("shared").cast("double") /
-          (size(col("ga")) + size(col("gb")) - col("shared")).cast("double")
-          >= NeardupExactJaccard)
+  private[operators] def deltaVerdicts(deltaDocs: DataFrame,
+      deltaBands: DataFrame, deltaPay: DataFrame,
+      baseBands: DataFrame, basePay: DataFrame, key: String,
+      side: (DataFrame, String, String) => DataFrame,
+      verified: DataFrame => DataFrame): DataFrame = {
+    def dups(cands: DataFrame, otherPay: DataFrame, name: String): DataFrame =
+      verified(cands
+        .join(side(deltaPay, "did", "a"), "did")
+        .join(side(otherPay, "oid", "b"), "oid"))
         .groupBy("did").agg(min(col("oid")).as("dup"))
-    val candBase = deltaKeys.as("x").join(baseKeys.as("y"),
-        col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key"))
-      .select(col("x.doc_id").as("did"), col("y.doc_id").as("oid")).distinct()
-    val candPrior = deltaKeys.as("x").join(deltaKeys.as("y"),
-        col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key") &&
-          col("y.doc_id") < col("x.doc_id"))
-      .select(col("x.doc_id").as("did"), col("y.doc_id").as("oid")).distinct()
-    val dupBase = verify(candBase, baseSigs)
-      .select(col("did").as("doc_id"), col("dup").as("dup_base"))
-    val dupPrior = verify(candPrior, deltaSigs)
-      .select(col("did").as("doc_id"), col("dup").as("dup_prior"))
+        .select(col("did").as("doc_id"), col("dup").as(name))
+    val candBase = bandCandidates(deltaBands, baseBands, key, ("did", "oid"))
+    val candPrior = bandCandidates(deltaBands, deltaBands, key, ("did", "oid"),
+      Some((x, y) => y < x))
     deltaDocs.select(col("doc_id"), col("source"), col("n_chars"))
-      .join(dupBase, Seq("doc_id"), "left")
-      .join(dupPrior, Seq("doc_id"), "left")
+      .join(dups(candBase, basePay, "dup_base"), Seq("doc_id"), "left")
+      .join(dups(candPrior, deltaPay, "dup_prior"), Seq("doc_id"), "left")
       // explicit CASE, not bare least(): engines disagree on whether
       // least() skips or propagates NULL, so neither side relies on it
       .withColumn("dup_of",
@@ -443,32 +493,13 @@ object LlmLsh {
     * gate, min-id verdicts. Both gates compare exact binary fractions
     * / correctly-rounded single divisions, so the decision — and the
     * whole verdict table — hash-matches. */
-  private def incrementalNeardupOracleSql: String = {
-    val perms = permConsts.zipWithIndex
-      .map { case ((a, b), i) => s"($i, ${a}::BIGINT, ${b}::BIGINT)" }
-      .mkString(", ")
-    s"""WITH perms(pi, a, b) AS (VALUES $perms),
+  private def incrementalNeardupOracleSql: String =
+    s"""WITH $permsCte,
           tagged AS (
             SELECT doc_id, source, n_chars, text,
               TRY_CAST(regexp_extract(source, '(\\d+)', 1) AS INT) AS src_num
             FROM documents),
-          toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM tagged),
-          g AS (
-            SELECT doc_id,
-              unnest(list_distinct(list_transform(range(len(w) - 1),
-                i -> w[i+1] || '_' || w[i+2]))) AS gram
-            FROM toks WHERE len(w) >= 2),
-          h0 AS (
-            SELECT DISTINCT doc_id,
-              ('0x' || substr(md5(gram), 25, 8))::UBIGINT::BIGINT % ${P} AS hv
-            FROM g),
-          sig AS (
-            SELECT doc_id, perms.pi, min((perms.a * hv + perms.b) % ${P}) AS mv
-            FROM h0, perms GROUP BY 1, 2),
-          bk AS (
-            SELECT doc_id, pi // 4 AS band,
-              string_agg(mv::VARCHAR, '_' ORDER BY pi) AS key
-            FROM sig GROUP BY 1, 2),
+          ${minhashCtes("tagged")},
           base_ids AS (SELECT doc_id FROM tagged WHERE src_num < $NeardupSplit),
           delta AS (SELECT doc_id, source, n_chars FROM tagged
                     WHERE src_num >= $NeardupSplit),
@@ -516,7 +547,6 @@ object LlmLsh {
           LEFT JOIN dup_base b ON b.did = d.doc_id
           LEFT JOIN dup_prior p ON p.did = d.doc_id
           ORDER BY d.doc_id"""
-  }
 
   // ---------------------------------------------------- registration
 

@@ -602,16 +602,10 @@ object LlmSimilarity {
 
   // ------------------------------------------------------- minhash LSH
 
-  private val MinhashPerms = 64
-  private val MinhashBands = 16 // 16 bands × 4 rows
-  private val MersennePrime = 2147483647L // 2^31-1
+  import LlmLsh.{MersennePrime, MinhashBands, MinhashPerms, gramJaccard, sigAgreement}
 
   /** Fixed (a, b) permutation constants — deterministic seed. */
-  private val permConsts: Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(42)
-    Seq.fill(MinhashPerms)((rnd.nextInt(Int.MaxValue - 1).toLong + 1L,
-      rnd.nextInt(Int.MaxValue).toLong))
-  }
+  private val permConsts = LlmLsh.minhashPerms(42)
 
   /** (doc_id, sig) — sig is the 64-long MinHash signature array,
     * computed by the native MinhashSigs expression in ONE per-row pass
@@ -645,16 +639,11 @@ object LlmSimilarity {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
   }
 
-  /** Deduped candidate id-pairs from an LSH band-bucket self-join.
-    * Pairs are deduped FIRST (cheap 16-byte rows) so the 512-byte sig
-    * arrays never go through the distinct's shuffle. */
+  /** Deduped (a < b) candidate id-pairs from an LSH band-bucket
+    * self-join ([[LlmLsh.bandCandidates]]). */
   private def lshCandidates(sigs: DataFrame, bands: Int): DataFrame = {
-    val keys = lshBandKeys(sigs, bands).select("doc_id", "band", "band_key")
-    keys.as("x").join(keys.as("y"),
-        col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
+    val keys = lshBandKeys(sigs, bands)
+    LlmLsh.bandCandidates(keys, keys, "band_key", ("a", "b"), Some(_ < _))
   }
 
   /** MinHash LSH near-dedup: candidate pairs from band buckets, scored
@@ -691,14 +680,10 @@ object LlmSimilarity {
     // bounded to ~1 generation between GCs; off local mode the same
     // executor-failure caveat as any localCheckpoint applies.
     val sigs = minhashSignatures(s, d).localCheckpoint().hint("shuffle_hash")
-    val cands = lshCandidates(sigs, MinhashBands)
-    val est = cands
+    val est = lshCandidates(sigs, MinhashBands)
       .join(sigs.select(col("doc_id").as("a"), col("sig").as("sa")), "a")
       .join(sigs.select(col("doc_id").as("b"), col("sig").as("sb")), "b")
-      .withColumn("est_jaccard",
-        aggregate(zip_with(col("sa"), col("sb"),
-          (x, y) => when(x === y, 1).otherwise(0)), lit(0), (acc, x) => acc + x)
-          .cast("double") / lit(MinhashPerms.toDouble))
+      .withColumn("est_jaccard", sigAgreement(col("sa"), col("sb")))
       .filter(col("est_jaccard") >= 0.35)
     // hashed gram sets: intersect/union counts over longs equal the
     // string-gram counts (no-collision assumption shared by the whole
@@ -709,13 +694,9 @@ object LlmSimilarity {
       .hint("shuffle_hash")
     est.join(grams.select(col("doc_id").as("a"), col("grams").as("ga")), "a")
       .join(grams.select(col("doc_id").as("b"), col("grams").as("gb")), "b")
-      // |A∪B| = |A| + |B| − |A∩B| on these distinct gram sets: one
-      // IntersectCount replaces BOTH derived-array allocations
       .withColumn("shared", graft.functions.IntersectCount(col("ga"), col("gb")))
       .select(col("a"), col("b"), round(col("est_jaccard"), 4).as("est_jaccard"),
-        round(col("shared").cast("double") /
-          (size(col("ga")) + size(col("gb")) - col("shared")), 6)
-          .as("exact_jaccard"))
+        round(gramJaccard(col("shared"), col("ga"), col("gb")), 6).as("exact_jaccard"))
       .orderBy("a", "b")
   }
 
@@ -751,23 +732,12 @@ object LlmSimilarity {
       .join(grams.select(col("doc_id").as("a"), col("grams").as("ga")), "a")
       .join(grams.select(col("doc_id").as("b"), col("grams").as("gb")), "b")
       .withColumn("shared", graft.functions.IntersectCount(col("ga"), col("gb")))
-      .withColumn("j", col("shared").cast("double") /
-        (size(col("ga")) + size(col("gb")) - col("shared")))
+      .withColumn("j", gramJaccard(col("shared"), col("ga"), col("gb")))
       .filter(col("j") >= 0.5)
       .select(col("a"), col("b"), round(col("j"), 6).as("exact_jaccard"))
       .orderBy("a", "b")
   }
 
-  /** Near-dup CLUSTERING: connected components over the MinHash-LSH
-    * pair graph via iterative min-label propagation (each doc starts
-    * as its own label; 8 rounds of "take the min label among me and my
-    * neighbors" — enough for the small chain diameters dedup graphs
-    * have). Output: every document with its cluster id and a keep
-    * flag (minimum doc_id per cluster survives) — the final step that
-    * turns pair detection into an actual dedup decision. Each round is
-    * one join + groupBy on (doc, label): at 100 TB this is the
-    * standard large-scale connected-components loop (no driver graph).
-    * No oracle (pairs are LSH-derived); spec checks closure. */
   /** Seed-free exact near-dup pair memo: the 32-band LSH + exact-
     * Jaccard pass is the expensive half of both `llm_near_dedup_exact`
     * and `llm_dedup_cluster`; it is deterministic per dataset CONTENT,
@@ -784,6 +754,16 @@ object LlmSimilarity {
     s.read.schema("a BIGINT, b BIGINT").parquet(path)
   }
 
+  /** Near-dup CLUSTERING: connected components over the near-dup pair
+    * graph via iterative min-label propagation to a fixpoint
+    * ([[connectedComponents]]: each doc starts as its own label and
+    * takes the min label among itself and its neighbors). Output: every document with its cluster id and a keep
+    * flag (minimum doc_id per cluster survives) — the final step that
+    * turns pair detection into an actual dedup decision. Each round is
+    * one join + groupBy on (doc, label): at 100 TB this is the
+    * standard large-scale connected-components loop (no driver graph).
+    * Its input is the seed-free exact pair set, so DuckDB replays the
+    * whole clustering as a recursive closure. */
   val llmDedupCluster: QFn = (s, d) => {
     // cluster over the SEED-FREE pair set (32-band exact twin): the
     // pair graph is then engine-independent, which is what lets the
@@ -1022,7 +1002,27 @@ object LlmSimilarity {
   /** Prefix-filtered Jaccard core over ANY (doc_id, source, hg) frame
     * — the property spec drives it with generated corpora at random
     * thresholds to pin the prefix lemma independent of the fixture. */
-  def ngramJaccardOn(g: DataFrame, tau: Double): DataFrame = {
+  def ngramJaccardOn(g: DataFrame, tau: Double): DataFrame =
+    // exact verification on the (few) candidates: full gram arrays join
+    // back on a / b — plain shuffle joins, AQE broadcasts when small
+    prefixCandidates(g, tau, oneSided = false)
+      .join(g.select(col("doc_id").as("a"), col("hg").as("hga")), "a")
+      .join(g.select(col("doc_id").as("b"), col("hg").as("hgb")), "b")
+      .withColumn("shared",
+        graft.functions.IntersectCount(col("hga"), col("hgb")))
+      .select(col("a"), col("b"), col("source"),
+        gramJaccard(col("shared"), col("hga"), col("hgb")).as("jaccard"))
+      .filter(col("jaccard") >= tau)
+      .orderBy("a", "b")
+
+  /** Distinct same-source (a, b, source) candidates of the prefix
+    * filter, the one index behind both set-similarity bounds. Grams are
+    * ranked per source by (document frequency, gram), and each doc
+    * keeps its first |A| − ⌈τ·|A|⌉ + 1 postings. Jaccard's bound is
+    * two-sided, so a's prefix joins b's prefix, a < b. Containment's
+    * (`oneSided`) bounds only the contained side, so a's prefix joins
+    * b's FULL postings, both orders. */
+  private def prefixCandidates(g: DataFrame, tau: Double, oneSided: Boolean): DataFrame = {
     val postings = g.select(col("source"), col("doc_id"),
       size(col("hg")).as("sz"), explode(col("hg")).as("gram"))
     val dfreq = postings.groupBy("source", "gram").agg(count(lit(1)).as("df"))
@@ -1031,24 +1031,15 @@ object LlmSimilarity {
       .withColumn("rk", row_number().over(byRarity))
       .filter(col("rk") <= col("sz") - ceil(lit(tau) * col("sz")) + lit(1))
       .select("source", "doc_id", "gram")
-    val cand = prefix.as("x").join(prefix.as("y"),
+    val (other, idOrder) =
+      if (oneSided) (postings, col("x.doc_id") =!= col("y.doc_id"))
+      else (prefix, col("x.doc_id") < col("y.doc_id"))
+    prefix.as("x").join(other.as("y"),
         col("x.source") === col("y.source") && col("x.gram") === col("y.gram") &&
-          col("x.doc_id") < col("y.doc_id"))
+          idOrder)
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
         col("x.source").as("source"))
       .distinct()
-    // exact verification on the (few) candidates: full gram arrays join
-    // back on a / b — plain shuffle joins, AQE broadcasts when small
-    cand
-      .join(g.select(col("doc_id").as("a"), col("hg").as("hga")), "a")
-      .join(g.select(col("doc_id").as("b"), col("hg").as("hgb")), "b")
-      .withColumn("shared",
-        graft.functions.IntersectCount(col("hga"), col("hgb")))
-      .select(col("a"), col("b"), col("source"),
-        (col("shared") / (size(col("hga")) + size(col("hgb")) - col("shared")))
-          .as("jaccard"))
-      .filter(col("jaccard") >= tau)
-      .orderBy("a", "b")
   }
 
   /** Asymmetric containment similarity c(A→B) = |A∩B| / |A|: finds
@@ -1062,28 +1053,18 @@ object LlmSimilarity {
     * same rank argument, and in B's full postings trivially).
     * Candidates are verified exactly on the full gram arrays, both
     * (a, b) orders survive, and the denominator is the contained side. */
-  val llmContainment: QFn = (s, d) => {
-    val tau = 0.5
+  val llmContainment: QFn = (s, d) =>
     // localCheckpoint: same derive-once rationale as llmNgramJaccard
     // (postings + both verify sides re-derived the grams 5× without it)
-    val g = Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")
+    containmentOn(Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")
       .select(col("doc_id"), col("source"),
         graft.functions.HashedBigrams(col("text")).as("hg"))
-      .localCheckpoint()
-    val postings = g.select(col("source"), col("doc_id"),
-      size(col("hg")).as("sz"), explode(col("hg")).as("gram"))
-    val dfreq = postings.groupBy("source", "gram").agg(count(lit(1)).as("df"))
-    val byRarity = Window.partitionBy("source", "doc_id").orderBy("df", "gram")
-    val prefix = postings.join(dfreq, Seq("source", "gram"))
-      .withColumn("rk", row_number().over(byRarity))
-      .filter(col("rk") <= col("sz") - ceil(lit(tau) * col("sz")) + lit(1))
-      .select("source", "doc_id", "gram")
-    val cand = prefix.as("x").join(postings.as("y"),
-        col("x.source") === col("y.source") && col("x.gram") === col("y.gram") &&
-          col("x.doc_id") =!= col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        col("x.source").as("source"))
-      .distinct()
+      .localCheckpoint(), 0.5)
+
+  /** Prefix-filtered containment core over ANY (doc_id, source, hg)
+    * frame, beside [[ngramJaccardOn]] — the property spec drives both
+    * with generated corpora at random thresholds. */
+  def containmentOn(g: DataFrame, tau: Double): DataFrame =
     // exact verify on the full gram ARRAYS. A/B measured at the 30×
     // replica (2026-08-14) against a postings-count verify (count
     // shared grams on narrow (source, doc, gram) rows instead of
@@ -1107,7 +1088,7 @@ object LlmSimilarity {
     // MORE than the byte savings — containment 26.3 → 48.5 s,
     // jaccard 53.2 → 64.4 s (100 GB heap; default heap similar).
     // Oracles stayed bit-identical, so the rejection is purely wall.
-    cand
+    prefixCandidates(g, tau, oneSided = true)
       .join(g.select(col("doc_id").as("a"), col("hg").as("hga")), "a")
       .join(g.select(col("doc_id").as("b"), col("hg").as("hgb")), "b")
       .select(col("a"), col("b"), col("source"),
@@ -1115,7 +1096,6 @@ object LlmSimilarity {
           / size(col("hga"))).as("containment"))
       .filter(col("containment") >= tau)
       .orderBy("a", "b")
-  }
 
   /** Embedding cosine near-dup (τ = 0.3, same-label pairs) — EXACT
     * angular-bound cell blocking, not an all-pairs product:

@@ -252,12 +252,6 @@ object Multimodal {
     words
   }
 
-  /** Parameterized Hamming-ball near-dup over pre-hashed
-    * (doc_id, ws: array&lt;long&gt;) rows — the banding + verify tail
-    * of [[mmPhashNeardup]] factored over any hash width, so the
-    * wide variant and the distinct-payload scale probe drive the
-    * production pipeline, not a copy. `bands` are (word, bitOffset,
-    * width) triples; pigeonhole exactness needs bands.size ≥ tau+1. */
   /** Band-value extraction over a `ws: array&lt;long&gt;` hash column —
     * one Column per (word, bitOffset, width) band, including the
     * wd == 64 full-word case ((1L &lt;&lt; 64) wraps to 1, so the mask must
@@ -271,6 +265,12 @@ object Multimodal {
         .bitwiseAND(lit(if (wd == 64) -1L else (1L << wd) - 1))
     }
 
+  /** Parameterized Hamming-ball near-dup over pre-hashed
+    * (doc_id, ws: array&lt;long&gt;) rows — the banding + verify tail
+    * of [[mmPhashNeardup]] factored over any hash width, so the
+    * wide variant and the distinct-payload scale probe drive the
+    * production pipeline, not a copy. `bands` are (word, bitOffset,
+    * width) triples; pigeonhole exactness needs bands.size ≥ tau+1. */
   def phashPairs(hashes: DataFrame,
       bands: Seq[(Int, Int, Int)], tau: Int): DataFrame = {
     require(bands.size >= tau + 1,
@@ -390,11 +390,9 @@ object Multimodal {
     * tens at 100k+ docs). Same production extraction
     * ([[wideHashes]] + [[bandColumns]]), two bounded aggregations,
     * no joins. */
-  val mmPhashBandStats: QFn = (s, d) => {
-    val bandRows = wideHashes(Tables.documents(s, d))
-      .select(col("doc_id"), posexplode(array(bandColumns(phashWideBands): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bval")
-    bandRows.groupBy("band", "bval").agg(count(lit(1)).as("cnt"))
+  val mmPhashBandStats: QFn = (s, d) =>
+    phashBandRows(wideHashes(Tables.documents(s, d)), phashWideBands)
+      .groupBy("band", "bval").agg(count(lit(1)).as("cnt"))
       .groupBy("band").agg(
         count(lit(1)).as("n_buckets"),
         max(col("cnt")).as("max_bucket"),
@@ -402,7 +400,6 @@ object Multimodal {
       .select(col("band").cast("int").as("band"),
         col("n_buckets"), col("max_bucket"), col("n_docs"))
       .orderBy("band")
-  }
 
   // ------------------------------------ ingestion-mode phash check
 
@@ -455,56 +452,32 @@ object Multimodal {
       bands: Seq[(Int, Int, Int)]): Unit = {
     val hashes = hashKernel(docs)
     hashes.write.mode("overwrite").parquet(s"$tmp/hashes")
-    hashes.select(col("doc_id"),
-      posexplode(array(bandColumns(bands): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bval")
-      .write.mode("overwrite").parquet(s"$tmp/bands")
+    phashBandRows(hashes, bands).write.mode("overwrite").parquet(s"$tmp/bands")
   }
+
+  /** (doc_id, band, bval) band rows of a (doc_id, ws) hash frame — the
+    * rows the stored index, the delta pass and the bucket statistics
+    * band on. */
+  private def phashBandRows(hashes: DataFrame, bands: Seq[(Int, Int, Int)]): DataFrame =
+    hashes.select(col("doc_id"), posexplode(array(bandColumns(bands): _*)))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bval")
 
   /** Verdict kernel: delta hashes banded against a base band index,
     * exact popcount verify (pigeonhole-exact — banding loses nothing
-    * at Hamming ≤ tau), lowest matching id per family; non-transitive
-    * lower-id rule within the delta, the `llm_incremental_neardup`
-    * contract. Factored so the registered key (stored index) and the
+    * at Hamming ≤ tau), through the shared
+    * [[LlmLsh.deltaVerdicts]] table (the `llm_incremental_neardup`
+    * contract). Factored so the registered key (stored index) and the
     * spec's one-shot comparator share the decision logic. */
   private[graft] def phashIncrementalOn(
       deltaDocs: DataFrame, deltaHashes: DataFrame,
       baseBands: DataFrame, baseHashes: DataFrame,
-      bands: Seq[(Int, Int, Int)] = narrowBands): DataFrame = {
-    val deltaBands = deltaHashes.select(col("doc_id"),
-      posexplode(array(bandColumns(bands): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bval")
-    def verify(cands: DataFrame, otherHashes: DataFrame): DataFrame =
-      cands
-        .join(deltaHashes.select(col("doc_id").as("did"), col("ws").as("wa")), "did")
-        .join(otherHashes.select(col("doc_id").as("oid"), col("ws").as("wb")), "oid")
-        .withColumn("hamming",
-          aggregate(zip_with(col("wa"), col("wb"),
-            (x, y) => bit_count(x.bitwiseXOR(y))), lit(0), (acc, v) => acc + v))
-        .filter(col("hamming") <= PhashTau)
-        .groupBy("did").agg(min(col("oid")).as("dup"))
-    val candBase = deltaBands.as("x").join(baseBands.as("y"),
-        col("x.band") === col("y.band") && col("x.bval") === col("y.bval"))
-      .select(col("x.doc_id").as("did"), col("y.doc_id").as("oid")).distinct()
-    val candPrior = deltaBands.as("x").join(deltaBands.as("y"),
-        col("x.band") === col("y.band") && col("x.bval") === col("y.bval") &&
-          col("y.doc_id") < col("x.doc_id"))
-      .select(col("x.doc_id").as("did"), col("y.doc_id").as("oid")).distinct()
-    val dupBase = verify(candBase, baseHashes)
-      .select(col("did").as("doc_id"), col("dup").as("dup_base"))
-    val dupPrior = verify(candPrior, deltaHashes)
-      .select(col("did").as("doc_id"), col("dup").as("dup_prior"))
-    deltaDocs.select(col("doc_id"), col("source"), col("n_chars"))
-      .join(dupBase, Seq("doc_id"), "left")
-      .join(dupPrior, Seq("doc_id"), "left")
-      .withColumn("dup_of",
-        when(col("dup_base").isNotNull && col("dup_prior").isNotNull,
-          least(col("dup_base"), col("dup_prior")))
-          .otherwise(coalesce(col("dup_base"), col("dup_prior"))))
-      .withColumn("kept", when(col("dup_of").isNull, 1).otherwise(0))
-      .select("doc_id", "source", "n_chars", "dup_of", "kept")
-      .orderBy("doc_id")
-  }
+      bands: Seq[(Int, Int, Int)] = narrowBands): DataFrame =
+    LlmLsh.deltaVerdicts(deltaDocs, phashBandRows(deltaHashes, bands), deltaHashes,
+      baseBands, baseHashes, "bval",
+      (hashes, id, t) => hashes.select(col("doc_id").as(id), col("ws").as(s"w$t")),
+      _.withColumn("hamming", aggregate(zip_with(col("wa"), col("wb"),
+          (x, y) => bit_count(x.bitwiseXOR(y))), lit(0), (acc, v) => acc + v))
+        .filter(col("hamming") <= PhashTau))
 
   /** `mm_phash_incremental`: the ingest batch's media payloads decoded
     * and banded against the STORED base phash index. Verdict per delta
@@ -521,19 +494,11 @@ object Multimodal {
   private[graft] def phashIncrementalOneShot(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val baseHashes = narrowHashes(docs.filter(LlmCorpus.srcNum < PhashSplit))
-    val baseBands = baseHashes.select(col("doc_id"),
-      posexplode(array(bandColumns(narrowBands): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bval")
     val delta = docs.filter(LlmCorpus.srcNum >= PhashSplit)
-    phashIncrementalOn(delta, narrowHashes(delta), baseBands, baseHashes)
+    phashIncrementalOn(delta, narrowHashes(delta),
+      phashBandRows(baseHashes, narrowBands), baseHashes)
   }
 
-  /** The aHash oracle re-derives every block's cross-multiply bit in
-    * SQL (generated per block, like the BPE/Lloyd unrolls — the SAME
-    * 32/band constants the engine runs with), then computes the
-    * ALL-PAIRS Hamming filter; pigeonhole exactness of the 6-band
-    * join means the engine's banded output equals it bit-for-bit.
-    * The n² join is the oracle's cost, not the engine's. */
   /** The shared "t AS …, h AS …" hash-derivation CTEs: every block's
     * cross-multiply bit generated in SQL, assembling the 32-bit aHash
     * per document. Used by the all-pairs oracle and the incremental
@@ -555,6 +520,12 @@ object Multimodal {
          h AS (SELECT doc_id, $bits AS phash FROM t)"""
   }
 
+  /** The aHash oracle re-derives every block's cross-multiply bit in
+    * SQL (generated per block, like the BPE/Lloyd unrolls — the SAME
+    * 32/band constants the engine runs with), then computes the
+    * ALL-PAIRS Hamming filter; pigeonhole exactness of the 6-band
+    * join means the engine's banded output equals it bit-for-bit.
+    * The n² join is the oracle's cost, not the engine's. */
   private def phashOracleSql: String =
     s"""WITH $phashHashCtes
          SELECT x.doc_id AS a, y.doc_id AS b,

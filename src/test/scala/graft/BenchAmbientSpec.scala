@@ -95,7 +95,7 @@ class BenchAmbientSpec extends AnyFunSuite {
 
   test("gate: a key with no baseline entry is ungated, a key that threw fails") {
     assert(gate(Some(9.0), None, 0.5, 32) == Ungated)
-    assert(gate(None, None, 0.5, 32) == Ungated)
+    assert(gate(None, None, 0.5, 32) == GateFail) // threw, no baseline: still fails
     assert(gate(None, Some(1.0), 0.5, 32) == GateFail)
     assert(gate(None, Some(1.0), 64.0, 32) == GateFail) // no load excuse
   }

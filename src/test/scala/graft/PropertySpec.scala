@@ -106,7 +106,7 @@ class PropertySpec extends SparkTestBase {
     forAll(Gen.listOfN(25, text), n = 6) { texts =>
       import spark.implicits._
       val both = texts.toDF("text").select(
-        graft.functions.Md5Bigrams(col("text"), 2147483647L).as("native"),
+        graft.functions.HashedBigrams.md5(col("text"), 2147483647L).as("native"),
         expr("""CASE WHEN size(split(text, ' ')) >= 2 THEN array_distinct(transform(
             array_distinct(transform(sequence(1, size(split(text,' '))-1),
               i -> concat(element_at(split(text,' '),i), '_', element_at(split(text,' '),i+1)))),
@@ -203,6 +203,36 @@ class PropertySpec extends SparkTestBase {
           size(array_intersect(col("x.hg"), col("y.hg"))).as("i"),
           (size(col("x.hg")) + size(col("y.hg"))).as("s"))
         .filter(col("i") / (col("s") - col("i")) >= tau)
+        .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == truth,
+        s"tau=$tau missed=${truth -- got} extra=${got -- truth} docs=$docs")
+    }
+  }
+
+  test("prefix-filter lemma: filtered containment == all-pairs in both orders, any tau") {
+    // the ONE-SIDED bound through the same prefix helper: only the
+    // contained side's postings are pruned, so every (a, b) with
+    // |A∩B| / |A| >= tau must still collide — in either id order
+    val vocab = Vector("a", "b", "c", "d", "e")
+    val doc = Gen.choose(2, 12).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf(vocab)).map(_.mkString(" ")))
+    val corpus = Gen.choose(8, 25).flatMap(n => Gen.listOfN(n, doc))
+    val tauGen = Gen.oneOf(0.2, 0.3, 0.5, 0.7, 0.9)
+    forAll(Gen.zip(corpus, tauGen), n = 5) { case (docs, tau) =>
+      import spark.implicits._
+      val g = docs.zipWithIndex
+        .map { case (t, i) => (i.toLong, "s" + (i % 2), t) }
+        .toDF("doc_id", "source", "text")
+        .select(col("doc_id"), col("source"),
+          graft.functions.HashedBigrams(col("text")).as("hg"))
+      val got = operators.LlmSimilarity.containmentOn(g, tau)
+        .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val truth = g.as("x").join(g.as("y"),
+          col("x.source") === col("y.source") && col("x.doc_id") =!= col("y.doc_id"))
+        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
+          size(array_intersect(col("x.hg"), col("y.hg"))).as("i"),
+          size(col("x.hg")).as("s"))
+        .filter(col("i") / col("s") >= tau)
         .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == truth,
         s"tau=$tau missed=${truth -- got} extra=${got -- truth} docs=$docs")
