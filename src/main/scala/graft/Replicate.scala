@@ -90,8 +90,9 @@ object Replicate {
     * FKs stay valid — every dominant key exists in replica 0's
     * domain and is NOT stride-shifted on either side of the join.
     * Results legitimately differ from the uniform replica; the spot
-    * oracles run DuckDB ON the skewed replica itself. */
-  /** HUB-skew rung (r12 verdict #5): the `skew` mode above pins BOTH
+    * oracles run DuckDB ON the skewed replica itself.
+    *
+    * HUB-skew rung (r12 verdict #5): the `skew` mode above pins BOTH
     * join sides on the same orderkey slice, so its hot rows collapse
     * into the single (customer 1, supplier 1) edge after the edge
     * build's distinct — a hot-ROW stress, not a hot-NODE one (and the

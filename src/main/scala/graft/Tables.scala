@@ -333,8 +333,8 @@ object Det {
   def sqlSum4(e: String): String = s"CAST(sum(CAST($e AS DECIMAL(30,4))) AS DOUBLE)"
   def sqlSum6(e: String): String = s"CAST(sum(CAST($e AS DECIMAL(30,6))) AS DOUBLE)"
   def sqlAvg2(e: String): String = s"${sqlSum2(e)} / count($e)"
-  def sqlCsum2(e: String): String =
-    s"CAST(sum(CAST(CAST($e AS DECIMAL(30,2)) * 100 AS BIGINT)) AS BIGINT)"
+  def sqlCents(e: String): String = s"CAST(CAST($e AS DECIMAL(30,2)) * 100 AS BIGINT)"
+  def sqlCsum2(e: String): String = s"CAST(sum(${sqlCents(e)}) AS BIGINT)"
 
   /** Deterministic floor-quantization of a derived double, the
     * round()-replacement for OUTPUT columns (r8 verdict item 4):

@@ -29,8 +29,6 @@ import graft.functions.SqEuclidFD
   */
 object Clustering {
 
-  /** One k-means run; returns (cluster, n_points, wssse) — and the
-    * centroids used, for the spec. */
   /** Trained-quantizer memo: Lloyd training is deterministic in
     * (dataset CONTENT, iters, preShuffle, K), so the centroids train
     * ONCE — per machine, not per session — and every consumer (IVF
@@ -48,6 +46,8 @@ object Clustering {
   private val quantizerMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
 
+  /** One k-means run; returns (cluster, n_points, wssse) — and the
+    * centroids used, for the spec. */
   def kmeans(s: SparkSession, d: String, iters: Int, preShuffle: Int = 0,
       K: Int = 8): (DataFrame, Array[Array[Double]]) = {
     val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
@@ -229,19 +229,6 @@ object Clustering {
     s.read.parquet(dir)
   }
 
-  /** BPE ENCODE — the apply half of the tokenizer story: the merge
-    * table trained on the 10% sample (stored artifact above) is
-    * applied IN RANK ORDER to the FULL corpus as a chain of the same
-    * greedy left-to-right non-overlapping fuses the trainer uses —
-    * one codegen'd projection per merge, no shuffle until the final
-    * presentation sort. That asymmetry (train on a bounded sample,
-    * encode everything in a linear pass) is exactly how a production
-    * tokenizer deploys at 100 TB. Output per document: encoded token
-    * count, how many fuses landed, and the first 8 encoded tokens —
-    * bounded columns, fully DuckDB-reproducible (the oracle re-derives
-    * the merges with the trainer's unrolled rounds, then replays the
-    * fuse chain on token lists with the same gaps-and-islands greedy
-    * equivalence bpeRoundSql establishes). */
   /** The stored merge table's rank-ordered greedy fuse chain as ONE
     * Column over `text` — the tokenizer APPLY step, factored so
     * [[llmBpeEncode]] and [[llmTokenizerFertility]] share the exact
@@ -258,6 +245,19 @@ object Clustering {
     }
   }
 
+  /** BPE ENCODE — the apply half of the tokenizer story: the merge
+    * table trained on the 10% sample (stored artifact above) is
+    * applied IN RANK ORDER to the FULL corpus as a chain of the same
+    * greedy left-to-right non-overlapping fuses the trainer uses —
+    * one codegen'd projection per merge, no shuffle until the final
+    * presentation sort. That asymmetry (train on a bounded sample,
+    * encode everything in a linear pass) is exactly how a production
+    * tokenizer deploys at 100 TB. Output per document: encoded token
+    * count, how many fuses landed, and the first 8 encoded tokens —
+    * bounded columns, fully DuckDB-reproducible (the oracle re-derives
+    * the merges with the trainer's unrolled rounds, then replays the
+    * fuse chain on token lists with the same gaps-and-islands greedy
+    * equivalence bpeRoundSql establishes). */
   val llmBpeEncode: QFn = (s, d) => {
     val encoded = bpeEncodedCol(s, d)
     Tables.documents(s, d)

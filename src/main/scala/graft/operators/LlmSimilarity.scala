@@ -181,16 +181,6 @@ object LlmSimilarity {
   @volatile var lastIvfScanRows: (Long, Long) = (-1L, -1L)
   @volatile var collectIvfDiagnostics: Boolean = false
 
-  /** The IVF STORAGE story made literal: the assigned corpus is
-    * WRITTEN cluster-partitioned (`partitionBy(cluster)` — one
-    * directory per inverted list), and the probe batch reads back
-    * through a partition filter on its searched clusters, so Spark's
-    * scan touches only the probed lists' files — the `PartitionFilters`
-    * line in the plan, not a full-scan-then-filter. Same quantizer,
-    * probes, and scoring as [[llmKnnIvf]], so the results are
-    * IDENTICAL (spec-pinned); only the physical access path changes.
-    * This is exactly how a 100 TB IVF index deploys on a data lake:
-    * list = partition, probe = partition-pruned scan. */
   /** Written-layout memo: the cluster-partitioned parquet layout is a
     * deterministic function of (dataset CONTENT, quantizer), and the
     * quantizer is itself content-memoized — so the layout is written
@@ -199,8 +189,9 @@ object LlmSimilarity {
     * content fingerprint) and every later session re-probes the same
     * files, exactly like a deployed IVF index (built offline, probed
     * many times). r6 verdict #2: the previous (session, dataset) key
-    * rebuilt the layout every fresh session. */
-  /** Published location of the cluster-partitioned IVF layout for a
+    * rebuilt the layout every fresh session.
+    *
+    * Published location of the cluster-partitioned IVF layout for a
     * dataset — the content-keyed [[IndexStore]] name; building it if
     * absent. Exposed so diagnostics (ScaleRecallSpec's list-skew
     * readout) inspect the SAME layout the pruned key probes instead
@@ -234,6 +225,16 @@ object LlmSimilarity {
     * variant above. */
   val llmKnnIvfPrunedExact: QFn = (s, d) => llmKnnIvfPrunedWith(s, d, IvfK)
 
+  /** The IVF STORAGE story made literal: the assigned corpus is
+    * WRITTEN cluster-partitioned (`partitionBy(cluster)` — one
+    * directory per inverted list), and the probe batch reads back
+    * through a partition filter on its searched clusters, so Spark's
+    * scan touches only the probed lists' files — the `PartitionFilters`
+    * line in the plan, not a full-scan-then-filter. Same quantizer,
+    * probes, and scoring as [[llmKnnIvf]], so the results are
+    * IDENTICAL (spec-pinned); only the physical access path changes.
+    * This is exactly how a 100 TB IVF index deploys on a data lake:
+    * list = partition, probe = partition-pruned scan. */
   def llmKnnIvfPrunedWith(s: SparkSession, d: String, nProbe: Int): DataFrame = {
     val (kk, iters) = (IvfK, 6)
     val emb = Tables.embeddings(s, d)
@@ -344,6 +345,13 @@ object LlmSimilarity {
     ivfTopK(corpus, probes)
   }
 
+  /** PQ tuning: m subspaces × dsub dims, `codes`-entry codebooks,
+    * [[PqRounds]] joint Lloyd rounds, [[PqShortlist]] ADC candidates
+    * re-ranked exactly. Object-scoped so the DuckDB oracle below is
+    * generated from the SAME constants the key runs with. */
+  private val PqM = 8; private val PqDsub = 8; private val PqCodes = 16
+  private val PqRounds = 3; private val PqShortlist = 100
+
   /** Product-quantization ANN with ASYMMETRIC DISTANCE COMPUTATION —
     * the memory-side companion to IVF: each 64-dim float vector
     * (256 B) is encoded as m = 8 sub-codes from a 16-entry codebook
@@ -367,13 +375,6 @@ object LlmSimilarity {
     * two-stage ranking in DuckDB and the key hash-matches. The spec
     * additionally measures recall@5 against exact L2 (the quality
     * gate the hash-match can't express). */
-  /** PQ tuning: m subspaces × dsub dims, `codes`-entry codebooks,
-    * [[PqRounds]] joint Lloyd rounds, [[PqShortlist]] ADC candidates
-    * re-ranked exactly. Object-scoped so the DuckDB oracle below is
-    * generated from the SAME constants the key runs with. */
-  private val PqM = 8; private val PqDsub = 8; private val PqCodes = 16
-  private val PqRounds = 3; private val PqShortlist = 100
-
   val llmKnnPq: QFn = (s, d) => {
     val m = PqM; val dsub = PqDsub; val codes = PqCodes
     val emb = Tables.embeddings(s, d)
@@ -1224,11 +1225,6 @@ object LlmSimilarity {
         / (sqrt(list_sum(list_transform(range(64), i -> CAST($a[i+1] AS DOUBLE) * CAST($a[i+1] AS DOUBLE))))
            * sqrt(list_sum(list_transform(range(64), i -> CAST($b[i+1] AS DOUBLE) * CAST($b[i+1] AS DOUBLE))))))"""
 
-  /** All-pairs cosine top-5 per probe, recomputed in DOUBLE (DuckDB's
-    * list_cosine_similarity is float32) with the same sequential fold
-    * Spark's [[graft.functions]] cosine performs — shared by the
-    * brute-force key and the exact-mode (nProbe = K) IVF key, which
-    * must produce the identical result set. */
   /** DuckDB twin of the FULL approximate IVF path (r10 verdict #1 —
     * the emit-the-training-into-the-SQL move that oracled
     * `llm_knn_signlsh`): the coarse quantizer's six Lloyd rounds are
@@ -1243,8 +1239,9 @@ object LlmSimilarity {
     * replayed verbatim. Every double is an order-pinned list fold
     * (the proven signlsh/brute-force pattern), so the APPROXIMATE
     * result itself hash-matches — nProbe is a constant in the SQL,
-    * not a tolerance. */
-  /** `trainWhere` (r12, the append key): an optional WHERE clause
+    * not a tolerance.
+    *
+    * `trainWhere` (r12, the append key): an optional WHERE clause
     * restricting the Lloyd TRAINING corpus (`emb` CTE) to the base
     * slice, while assignment/probing/scoring still run over the full
     * `emball` — the SQL replay of train-on-base / assign-everything.
@@ -1400,6 +1397,11 @@ object LlmSimilarity {
             FROM rer) WHERE rk <= 5 ORDER BY probe_id, rk"""
   }
 
+  /** All-pairs cosine top-5 per probe, recomputed in DOUBLE (DuckDB's
+    * list_cosine_similarity is float32) with the same sequential fold
+    * Spark's [[graft.functions]] cosine performs — shared by the
+    * brute-force key and the exact-mode (nProbe = K) IVF key, which
+    * must produce the identical result set. */
   private val bruteForceTopKSql: String =
     """WITH sims AS (
            SELECT p.vec_id AS probe_id, e.vec_id AS vec_id,

@@ -229,87 +229,73 @@ object Relational {
     Tables.region(s, d).crossJoin(Tables.nation(s, d))
       .select("r_name", "n_name").orderBy("r_name", "n_name")
 
-  /** AS-OF join (domain op): for each purchase event, the latest
-    * click by the same user at-or-before the purchase timestamp.
+  /** The AS-OF CARRY over an event frame (event_id, ts, user_id,
+    * event_type): one row per purchase, with the ts of the latest
+    * click by the same user at-or-before it as `prev_ts` (`backward`)
+    * and/or of the earliest at-or-after it as `next_ts` (`forward`).
     *
     * Spark has no native as-of join; rather than a per-row subquery
-    * (which would be O(n²) at scale) this uses the union-tag + running
-    * `last(ignoreNulls)` window composition: one shuffle on user_id,
-    * one sort, linear scan — the same cost shape as a sort-merge as-of
-    * join on a 1000-executor cluster. Ties (click at the purchase ts)
-    * sort before the purchase via the tag and therefore match.
-    */
-  val joinAsof: QFn = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type")
+    * (which would be O(n²) at scale) this is the union-tag + running
+    * `last`/`first(ignoreNulls)` window composition: one shuffle on
+    * user_id, one sort per direction, linear scan — the same cost
+    * shape as a sort-merge as-of join on a 1000-executor cluster.
+    * Clicks are tagged 0 and purchases 1, so at an equal ts the click
+    * sorts BEFORE the purchase in the backward order (ts, tag,
+    * event_id) and AFTER it in the forward order (ts, tag desc,
+    * event_id): either frame sees it, and ties match both ways. */
+  def asofCarry(e: DataFrame, backward: Boolean, forward: Boolean): DataFrame = {
     val clicks = e.filter(col("event_type") === "click").select(
       col("user_id"), col("ts"), lit(0).as("tag"), col("event_id"),
       col("ts").as("click_ts"))
     val purchases = e.filter(col("event_type") === "purchase").select(
       col("user_id"), col("ts"), lit(1).as("tag"), col("event_id"),
       lit(null).cast("timestamp").as("click_ts"))
-    val w = Window.partitionBy("user_id").orderBy("ts", "tag", "event_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    clicks.unionByName(purchases)
-      .withColumn("last_click_ts", last(col("click_ts"), ignoreNulls = true).over(w))
-      .filter(col("tag") === 1)
-      .select("event_id", "user_id", "ts", "last_click_ts")
-      .orderBy("event_id")
+    val byUser = Window.partitionBy("user_id")
+    val events = clicks.unionByName(purchases)
+    val prev = if (!backward) events else events.withColumn("prev_ts",
+      last(col("click_ts"), ignoreNulls = true).over(byUser.orderBy("ts", "tag", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val next = if (!forward) prev else prev.withColumn("next_ts",
+      first(col("click_ts"), ignoreNulls = true).over(
+        byUser.orderBy(col("ts"), col("tag").desc, col("event_id"))
+          .rowsBetween(Window.currentRow, Window.unboundedFollowing)))
+    next.filter(col("tag") === 1)
   }
+
+  private def asofEvents(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d).select("event_id", "ts", "user_id", "event_type")
+
+  /** AS-OF join (domain op): for each purchase event, the latest
+    * click by the same user at-or-before the purchase timestamp —
+    * the backward [[asofCarry]]. */
+  val joinAsof: QFn = (s, d) =>
+    asofCarry(asofEvents(s, d), backward = true, forward = false)
+      .select(col("event_id"), col("user_id"), col("ts"), col("prev_ts").as("last_click_ts"))
+      .orderBy("event_id")
 
   /** Forward as-of: each purchase matched to the NEXT click at-or-after
     * it — the other half of the as-of family (quote-after-trade in the
-    * bid/ask domain). Same union+window shape as [[joinAsof]], mirrored:
-    * purchases sort BEFORE same-ts clicks (tag 0 vs 1) so the
-    * current-row→following frame sees an equal-timestamp click, and
-    * `first(ignoreNulls)` carries it backward. One shuffle on user_id. */
-  val joinAsofForward: QFn = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type")
-    val clicks = e.filter(col("event_type") === "click").select(
-      col("user_id"), col("ts"), lit(1).as("tag"), col("event_id"),
-      col("ts").as("click_ts"))
-    val purchases = e.filter(col("event_type") === "purchase").select(
-      col("user_id"), col("ts"), lit(0).as("tag"), col("event_id"),
-      lit(null).cast("timestamp").as("click_ts"))
-    val w = Window.partitionBy("user_id").orderBy("ts", "tag", "event_id")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    clicks.unionByName(purchases)
-      .withColumn("next_click_ts", first(col("click_ts"), ignoreNulls = true).over(w))
-      .filter(col("tag") === 0)
-      .select("event_id", "user_id", "ts", "next_click_ts")
+    * bid/ask domain), the forward [[asofCarry]]. */
+  val joinAsofForward: QFn = (s, d) =>
+    asofCarry(asofEvents(s, d), backward = false, forward = true)
+      .select(col("event_id"), col("user_id"), col("ts"), col("next_ts").as("next_click_ts"))
       .orderBy("event_id")
-  }
 
   /** Nearest as-of: each purchase matched to the click MINIMIZING
     * |Δt|, earlier side winning ties. Both directional carries come
     * from the same user_id-partitioned exchange (two sorts, one
     * shuffle); the choice is a pure integer-µs projection. */
-  val joinAsofNearest: QFn = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type")
-    val clicks = e.filter(col("event_type") === "click").select(
-      col("user_id"), col("ts"), lit(0).as("tagB"), lit(1).as("tagF"),
-      col("event_id"), col("ts").as("click_ts"))
-    val purchases = e.filter(col("event_type") === "purchase").select(
-      col("user_id"), col("ts"), lit(1).as("tagB"), lit(0).as("tagF"),
-      col("event_id"), lit(null).cast("timestamp").as("click_ts"))
-    val wB = Window.partitionBy("user_id").orderBy("ts", "tagB", "event_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wF = Window.partitionBy("user_id").orderBy("ts", "tagF", "event_id")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    clicks.unionByName(purchases)
-      .withColumn("prev_ts", last(col("click_ts"), ignoreNulls = true).over(wB))
-      .withColumn("next_ts", first(col("click_ts"), ignoreNulls = true).over(wF))
-      .filter(col("tagB") === 1)
+  val joinAsofNearest: QFn = (s, d) => asofNearest(asofEvents(s, d)).orderBy("event_id")
+
+  /** [[joinAsofNearest]] over any event frame (see [[asofCarry]]). */
+  def asofNearest(e: DataFrame): DataFrame =
+    asofCarry(e, backward = true, forward = true)
       .select(col("event_id"), col("user_id"), col("ts"),
         when(col("prev_ts").isNull, col("next_ts"))
           .when(col("next_ts").isNull, col("prev_ts"))
           .when(unix_micros(col("ts")) - unix_micros(col("prev_ts")) <=
             unix_micros(col("next_ts")) - unix_micros(col("ts")), col("prev_ts"))
           .otherwise(col("next_ts")).as("near_click_ts"))
-      .orderBy("event_id")
-  }
 
   /** Tolerance as-of: the backward carry, nulled when the match is
     * STALER than one hour — the staleness bound every production
@@ -1168,6 +1154,25 @@ object Relational {
                AND CAST(c.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP)) AS next_click_ts
          FROM events p WHERE p.event_type = 'purchase' ORDER BY p.event_id"""
 
+  /** Oracle of `join_asof_nearest` and `join_asof_nearest_native`. */
+  val asofNearestSql: String =
+    """WITH p AS (
+           SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
+             (SELECT max(CAST(c.ts AS TIMESTAMP)) FROM events c
+               WHERE c.event_type = 'click' AND c.user_id = e.user_id
+                 AND CAST(c.ts AS TIMESTAMP) <= CAST(e.ts AS TIMESTAMP)) AS prev_ts,
+             (SELECT min(CAST(c.ts AS TIMESTAMP)) FROM events c
+               WHERE c.event_type = 'click' AND c.user_id = e.user_id
+                 AND CAST(c.ts AS TIMESTAMP) >= CAST(e.ts AS TIMESTAMP)) AS next_ts
+           FROM events e WHERE event_type = 'purchase')
+         SELECT event_id, user_id, ts,
+           CASE WHEN prev_ts IS NULL THEN next_ts
+                WHEN next_ts IS NULL THEN prev_ts
+                WHEN epoch_us(ts) - epoch_us(prev_ts)
+                  <= epoch_us(next_ts) - epoch_us(ts) THEN prev_ts
+                ELSE next_ts END AS near_click_ts
+         FROM p ORDER BY event_id"""
+
   /** Oracle of `join_asof_tolerance` and `join_asof_tolerance_native`. */
   val asofToleranceSql: String =
     """SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
@@ -1261,23 +1266,7 @@ object Relational {
       .crossJoinOk("the operator IS a cross product"),
     KeySpec.batch("join_asof", joinAsof, shuffles = 2, asofBackwardSql),
     KeySpec.batch("join_asof_forward", joinAsofForward, shuffles = 2, asofForwardSql),
-    KeySpec.batch("join_asof_nearest", joinAsofNearest, shuffles = 2,
-      """WITH p AS (
-           SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-             (SELECT max(CAST(c.ts AS TIMESTAMP)) FROM events c
-               WHERE c.event_type = 'click' AND c.user_id = e.user_id
-                 AND CAST(c.ts AS TIMESTAMP) <= CAST(e.ts AS TIMESTAMP)) AS prev_ts,
-             (SELECT min(CAST(c.ts AS TIMESTAMP)) FROM events c
-               WHERE c.event_type = 'click' AND c.user_id = e.user_id
-                 AND CAST(c.ts AS TIMESTAMP) >= CAST(e.ts AS TIMESTAMP)) AS next_ts
-           FROM events e WHERE event_type = 'purchase')
-         SELECT event_id, user_id, ts,
-           CASE WHEN prev_ts IS NULL THEN next_ts
-                WHEN next_ts IS NULL THEN prev_ts
-                WHEN epoch_us(ts) - epoch_us(prev_ts)
-                  <= epoch_us(next_ts) - epoch_us(ts) THEN prev_ts
-                ELSE next_ts END AS near_click_ts
-         FROM p ORDER BY event_id"""),
+    KeySpec.batch("join_asof_nearest", joinAsofNearest, shuffles = 2, asofNearestSql),
     KeySpec.batch("join_asof_tolerance", joinAsofTolerance, shuffles = 2, asofToleranceSql),
     KeySpec.batch("join_interval", joinInterval, shuffles = 2, intervalJoinSql),
     KeySpec.batch("agg_pricing_summary", aggPricingSummary, shuffles = 2,

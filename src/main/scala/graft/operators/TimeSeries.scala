@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{KeySpec, QFn, Tables, Det}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,15 +39,33 @@ object TimeSeries {
 
   private val bar = date_trunc("hour", col("ts"))
 
+  /** A tick's size: the JSON `props.k` field as a long. */
+  private val size = get_json_object(col("props"), "$.k").cast("long")
+
   /** The hourly frame of the per-symbol series keys: the bar's
     * exact-decimal mean value as `px` per (bar, event_type), the
     * `extra` aggregates beside it, and `q`, the mean in integer
-    * milli-units. */
+    * milli-units. [[hourlySql]] is its oracle twin. */
   private def hourlyBars(s: SparkSession, d: String, px: String, extra: Column*): DataFrame =
     Tables.events(s, d)
       .groupBy(bar.as("bar"), col("event_type"))
       .agg(davg2(col("value")).as(px), extra: _*)
       .withColumn("q", floor(col(px) * 1000.0).cast("long"))
+
+  /** [[hourlyBars]] as oracle SQL, a CTE body: per (bar, event_type)
+    * the exact-decimal mean as `px`, `q` its floor milli-units, then
+    * the `extra` select items. */
+  private def hourlySql(px: String, extra: String*): String = {
+    val more = extra.map(",\n              " + _).mkString
+    s"""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
+              ${sqlAvg2("value")} AS $px,
+              CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q$more
+            FROM events GROUP BY 1, 2"""
+  }
+
+  /** Each symbol's hourly series in bar order, the window every
+    * per-symbol key runs over (a rolling key adds its frame). */
+  private val series = Window.partitionBy("event_type").orderBy("bar")
 
   /** Hourly QUOTE summary — the reference's namesake shape: the
     * 'view' stream stands in for bid quotes and 'purchase' for asks.
@@ -69,14 +87,25 @@ object TimeSeries {
     * detail r8's failure taught us not to lean on). bid/ask/mid
     * numerators are non-negative (value ≥ 0 in the data contract),
     * where trunc == floor unconditionally. */
-  val tsBidaskSpread: QFn = (s, d) => {
+  val tsBidaskSpread: QFn = (s, d) =>
+    quoteSpread(quoteSides(Tables.events(s, d).groupBy(bar.as("bar"))))
+
+  /** The two quote sides of each group as conditional aggregates:
+    * cents sum and tick count of the bid ('view') and ask ('purchase')
+    * ticks. The batch key groups by `bar`, the stream key by its
+    * watermarked window. */
+  def quoteSides(g: RelationalGroupedDataset): DataFrame = {
     val bidv = when(col("event_type") === "view", col("value"))
     val askv = when(col("event_type") === "purchase", col("value"))
-    Tables.events(s, d)
-      .groupBy(bar.as("bar"))
-      .agg(
-        csum2(bidv).as("bid_c"), count(bidv).as("n_bid"),
-        csum2(askv).as("ask_c"), count(askv).as("n_ask"))
+    g.agg(csum2(bidv).as("bid_c"), count(bidv).as("n_bid"),
+      csum2(askv).as("ask_c"), count(askv).as("n_ask"))
+  }
+
+  /** The quote summary of [[quoteSides]] rows keyed by `bar`: hours
+    * quoted on both sides, their micro-unit bid/ask/spread/mid and
+    * signed bps, in bar order. */
+  def quoteSpread(sides: DataFrame): DataFrame =
+    sides
       .filter(col("n_bid") > 0 && col("n_ask") > 0)
       .withColumn("bid_micro", expr("bid_c * 10000 div n_bid"))
       .withColumn("ask_micro", expr("ask_c * 10000 div n_ask"))
@@ -91,7 +120,6 @@ object TimeSeries {
           .as("spread_bps_c"),
         col("n_bid"), col("n_ask"))
       .orderBy("bar")
-  }
 
   /** Lag-1 / lag-2 AUTOCORRELATION of each symbol's hourly series —
     * the mean-reversion diagnostic. Hourly averages quantize to
@@ -100,12 +128,10 @@ object TimeSeries {
     * exact integer sums in one double expression. The lag pairs for
     * both k ride the SAME window pass (two lag columns, then a
     * 2-element explode), so the series shuffles once. */
-  val tsAutocorr: QFn = (s, d) => {
-    val hourly = hourlyBars(s, d, "px")
-    val w = Window.partitionBy("event_type").orderBy("bar")
-    hourly
-      .withColumn("y1", lag("q", 1).over(w))
-      .withColumn("y2", lag("q", 2).over(w))
+  val tsAutocorr: QFn = (s, d) =>
+    hourlyBars(s, d, "px")
+      .withColumn("y1", lag("q", 1).over(series))
+      .withColumn("y2", lag("q", 2).over(series))
       .select(col("event_type"), col("q").as("x"),
         explode(array(
           struct(lit(1).as("lag"), col("y1").as("y")),
@@ -124,7 +150,6 @@ object TimeSeries {
             sqrt((col("n") * col("syy") - col("sy") * col("sy")).cast("double"))), 6))
       .select("event_type", "lag", "n", "autocorr")
       .orderBy("event_type", "lag")
-  }
 
   /** 24-bar ROLLING BETA of each symbol vs the market series (the
     * 'purchase' stream stands in for the index): cov(x,m)/var(m)
@@ -138,7 +163,7 @@ object TimeSeries {
     val hourly = hourlyBars(s, d, "px")
     val mkt = hourly.filter(col("event_type") === "purchase")
       .select(col("bar"), col("q").as("m"))
-    val w = Window.partitionBy("event_type").orderBy("bar").rowsBetween(-23, 0)
+    val w = series.rowsBetween(-23, 0)
     hourly.join(broadcast(mkt), "bar")
       .withColumn("n", count(lit(1)).over(w))
       .withColumn("sx", sum("q").over(w))
@@ -163,10 +188,8 @@ object TimeSeries {
     * that rank. Per-symbol rank windows over #bars-row series —
     * bounded state at any tick volume. */
   val tsVarEs: QFn = (s, d) => {
-    val hourly = hourlyBars(s, d, "px")
-    val wLag = Window.partitionBy("event_type").orderBy("bar")
-    val rets = hourly
-      .withColumn("r", col("q") - lag("q", 1).over(wLag))
+    val rets = hourlyBars(s, d, "px")
+      .withColumn("r", col("q") - lag("q", 1).over(series))
       .filter(col("r").isNotNull)
     val wRank = Window.partitionBy("event_type").orderBy("r", "bar")
     rets
@@ -191,21 +214,10 @@ object TimeSeries {
     * quote per (user, ts) — max value — so the as-of match is
     * unambiguous), matched by the native as-of SparkPlan (one merge
     * pass per co-partitioned group — plans/AsOfJoin.scala), plus its
-    * size (the JSON `props.k` field) for the flow keys.
-    *
-    * MATERIALIZED ONCE per dataset content via the IndexStore staged-
-    * artifact convention (r8 verdict item 7): a production tick store
-    * runs this enrichment in the ingestion pipeline and every
-    * downstream analytic (effective spread, trade sign, OFI) reads
-    * the enriched table — re-deriving the as-of join per query tripled
-    * its cost across the three consumers here and would re-shuffle
-    * 100 TB of trades three times in deployment. Columns are longs,
-    * a timestamp, and untouched raw doubles, all of which round-trip
-    * parquet bit-exactly, so consumers are oracle-identical off
-    * either path. */
-  /** The declarative enrichment plan itself (public so the plan spec
-    * can pin the native AsOfJoinExec node on the BUILD path — the
-    * consumers' own plans read the staged parquet). */
+    * size (the JSON `props.k` field) for the flow keys. Public so the
+    * plan spec can pin the native AsOfJoinExec node on the BUILD path
+    * — the consumers' own plans read the staged parquet
+    * ([[quotedTrades]]). */
   def enrichTrades(s: SparkSession, d: String): DataFrame = {
     val e = Tables.events(s, d)
     val quotes = e.filter(col("event_type") === "view")
@@ -213,17 +225,28 @@ object TimeSeries {
       .agg(max("value").as("qv"))
     val trades = e.filter(col("event_type") === "click")
       .select(col("event_id"), col("user_id"), col("ts"), col("value"),
-        get_json_object(col("props"), "$.k").cast("long").as("sz"))
+        size.as("sz"))
     graft.plans.AsOfJoinPlans
       .asofJoin(trades, quotes, "user_id", "q_uid", "ts", "q_ts", "qv", "mid")
   }
 
-  private def tradesWithMid(s: SparkSession, d: String) = {
+  /** The [[enrichTrades]] trades that have a prevailing quote, read
+    * from the enrichment MATERIALIZED ONCE per dataset content via the
+    * IndexStore staged-artifact convention (r8 verdict item 7): a
+    * production tick store runs this enrichment in the ingestion
+    * pipeline and every downstream analytic (effective spread, trade
+    * sign, OFI) reads the enriched table — re-deriving the as-of join
+    * per query tripled its cost across the three consumers here and
+    * would re-shuffle 100 TB of trades three times in deployment.
+    * Columns are longs, a timestamp, and untouched raw doubles, all of
+    * which round-trip parquet bit-exactly, so consumers are
+    * oracle-identical off either path. */
+  private def quotedTrades(s: SparkSession, d: String) = {
     val fp = graft.IndexStore.fingerprint(s"$d/events.parquet")
     val path = graft.IndexStore.cachedDir(s"trades_mid_v2_$fp") { tmp =>
       enrichTrades(s, d).write.parquet(tmp)
     }
-    s.read.parquet(path)
+    s.read.parquet(path).filter(col("mid").isNotNull)
   }
 
   /** EFFECTIVE SPREAD per hour — the microstructure measurement that
@@ -233,8 +256,7 @@ object TimeSeries {
     * drop (no market yet). This is the flagship composition: custom
     * physical operator feeding a standard declarative aggregate. */
   val tsEffectiveSpread: QFn = (s, d) => {
-    tradesWithMid(s, d)
-      .filter(col("mid").isNotNull)
+    quotedTrades(s, d)
       .select(bar.as("bar"), (lit(2.0) * abs(col("value") - col("mid"))).as("es"))
       .groupBy("bar")
       .agg(count(lit(1)).as("n_trades"),
@@ -250,8 +272,7 @@ object TimeSeries {
     * the comparison untouched by arithmetic), so the classification
     * is engine-deterministic with no quantization step. */
   val tsTradeSign: QFn = (s, d) => {
-    tradesWithMid(s, d)
-      .filter(col("mid").isNotNull)
+    quotedTrades(s, d)
       .groupBy(bar.as("bar"))
       .agg(
         sum(when(col("value") > col("mid"), 1L).otherwise(0L)).as("n_buy"),
@@ -274,8 +295,7 @@ object TimeSeries {
     * intraday toolkit: quotes → spread → effective spread → trade
     * sign → signed flow. */
   val tsOfi: QFn = (s, d) => {
-    tradesWithMid(s, d)
-      .filter(col("mid").isNotNull)
+    quotedTrades(s, d)
       .groupBy(bar.as("bar"))
       .agg(
         sum(when(col("value") > col("mid"), col("sz")).otherwise(0L)).as("buy_size"),
@@ -301,7 +321,7 @@ object TimeSeries {
       .agg(
         count(lit(1)).as("n_ticks"),
         fq(davg2(col("value")), 6).as("avg_value"),
-        sum(get_json_object(col("props"), "$.k").cast("long")).as("total_size"))
+        sum(size).as("total_size"))
       .withColumn("activity_rank", row_number().over(
         Window.partitionBy("event_type")
           .orderBy(col("n_ticks").desc, col("hour_of_day"))))
@@ -319,12 +339,10 @@ object TimeSeries {
     * positive serial covariance (momentum regime) yields NULL spread,
     * the standard treatment. Per-symbol series → bounded window
     * partitions at any tick volume. */
-  val tsRollSpread: QFn = (s, d) => {
-    val hourly = hourlyBars(s, d, "px")
-    val w = Window.partitionBy("event_type").orderBy("bar")
-    hourly
-      .withColumn("dp", col("q") - lag("q", 1).over(w))
-      .withColumn("dp1", lag("dp", 1).over(w))
+  val tsRollSpread: QFn = (s, d) =>
+    hourlyBars(s, d, "px")
+      .withColumn("dp", col("q") - lag("q", 1).over(series))
+      .withColumn("dp1", lag("dp", 1).over(series))
       .filter(col("dp").isNotNull && col("dp1").isNotNull)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
@@ -342,7 +360,6 @@ object TimeSeries {
             / (col("n") * (col("n") - 1)).cast("double")) / 1000.0, 6))
           .as("roll_spread"))
       .orderBy("event_type")
-  }
 
   /** AMIHUD (2002) ILLIQUIDITY — mean |return|/volume, the price-
     * impact-per-traded-size ratio every liquidity study starts from.
@@ -354,12 +371,9 @@ object TimeSeries {
     * Zero-volume or zero-price bars drop (undefined impact). Same
     * bounded shape as the rest of the module: bar-grain pre-agg →
     * per-symbol series window → O(#bars) rows. */
-  val tsAmihud: QFn = (s, d) => {
-    val sz = get_json_object(col("props"), "$.k").cast("long")
-    val hourly = hourlyBars(s, d, "px", sum(sz).as("vol"))
-    val w = Window.partitionBy("event_type").orderBy("bar")
-    hourly
-      .withColumn("qp", lag("q", 1).over(w))
+  val tsAmihud: QFn = (s, d) =>
+    hourlyBars(s, d, "px", sum(size).as("vol"))
+      .withColumn("qp", lag("q", 1).over(series))
       .filter(col("qp").isNotNull && col("qp") > 0 && col("vol") > 0)
       .withColumn("term", fq(abs(col("q") - col("qp")).cast("double")
         / col("qp").cast("double") / col("vol").cast("double"), 12))
@@ -368,7 +382,6 @@ object TimeSeries {
         fq(sum(col("term").cast(org.apache.spark.sql.types.DecimalType(30, 12)))
           .cast("double") / count(lit(1)) * 1e6, 6).as("amihud_x1e6"))
       .orderBy("event_type")
-  }
 
   /** TSRV subsample scale K (ticks). The oracle below embeds the same
     * constant via string interpolation, so changing it re-derives both
@@ -448,7 +461,6 @@ object TimeSeries {
     val hourly = Tables.events(s, d)
       .groupBy(bar.as("bar"), col("event_type"))
       .agg(max(col("value")).as("hi"), min(col("value")).as("lo"))
-    val w = Window.partitionBy("event_type").orderBy("bar")
     val l0 = log(col("hp") / col("lp"))
     val l1 = log(col("hi") / col("lo"))
     val lg = log(greatest(col("hi"), col("hp")) / least(col("lo"), col("lp")))
@@ -458,8 +470,8 @@ object TimeSeries {
       sqrt(gamma / lit(CsDen))
     val sRaw = lit(2.0) * (exp(alpha) - lit(1.0)) / (exp(alpha) + lit(1.0))
     hourly
-      .withColumn("hp", lag("hi", 1).over(w))
-      .withColumn("lp", lag("lo", 1).over(w))
+      .withColumn("hp", lag("hi", 1).over(series))
+      .withColumn("lp", lag("lo", 1).over(series))
       .filter(col("hp").isNotNull && col("lp") > 0 && col("lo") > 0)
       .withColumn("s6", round(sRaw, 6))
       .groupBy("event_type")
@@ -482,8 +494,7 @@ object TimeSeries {
     * window and the regression run on a bounded frame at any tick
     * volume; emitted in value-per-unit-size ×1e6. */
   val tsKyleLambda: QFn = (s, d) => {
-    val flow = tradesWithMid(s, d)
-      .filter(col("mid").isNotNull)
+    val flow = quotedTrades(s, d)
       .groupBy(bar.as("bar"))
       .agg(sum(when(col("value") > col("mid"), col("sz"))
         .when(col("value") < col("mid"), -col("sz"))
@@ -518,12 +529,10 @@ object TimeSeries {
     * expression over the six integers, floor-quantized. Emitted only
     * where the 1-period variance is positive. Same bounded shape as
     * the rest of the module. */
-  val tsVarianceRatio: QFn = (s, d) => {
-    val hourly = hourlyBars(s, d, "px")
-    val w = Window.partitionBy("event_type").orderBy("bar")
-    hourly
-      .withColumn("r1", col("q") - lag("q", 1).over(w))
-      .withColumn("r4", col("q") - lag("q", 4).over(w))
+  val tsVarianceRatio: QFn = (s, d) =>
+    hourlyBars(s, d, "px")
+      .withColumn("r1", col("q") - lag("q", 1).over(series))
+      .withColumn("r4", col("q") - lag("q", 4).over(series))
       .groupBy("event_type")
       .agg(
         count(col("r1")).as("n1"), sum("r1").as("s1"),
@@ -539,7 +548,6 @@ object TimeSeries {
             * lit(4.0) * (col("n4") * col("n4")).cast("double")), 6)
           .as("vr4"))
       .orderBy("event_type")
-  }
 
   /** CEP-style SEQUENCE-PATTERN detection (the MATCH_RECOGNIZE /
     * Flink-CEP shape, absent from Spark SQL): V-REVERSALS in each
@@ -761,21 +769,40 @@ object TimeSeries {
     * `last(ignoreNulls)`. The spine is |types| × |hours| rows —
     * broadcast-sized metadata next to the fact scan at any corpus
     * size; the fill window partitions by type, so no global sort. */
-  val tsGapfill: QFn = (s, d) => {
-    val e = Tables.events(s, d)
-    val hourly = hourlyBars(s, d, "avg_value")
-    val bounds = e.agg(min(bar).as("lo"), max(bar).as("hi"))
-    val spine = bounds
-      .select(explode(expr("sequence(lo, hi, interval 1 hour)")).as("bar"))
-      .crossJoin(e.select("event_type").distinct())
-    val wFill = Window.partitionBy("event_type").orderBy("bar")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spine.join(hourly, Seq("bar", "event_type"), "left")
+  val tsGapfill: QFn = (s, d) =>
+    onHourSpine(s, d, "avg_value")
       .withColumn("is_gap", col("avg_value").isNull.cast("int"))
-      .withColumn("filled_value", last(col("avg_value"), ignoreNulls = true).over(wFill))
+      .withColumn("filled_value", last(col("avg_value"), ignoreNulls = true)
+        .over(series.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("bar", "event_type", "is_gap", "filled_value")
       .orderBy("bar", "event_type")
+
+  /** The resample keys' frame: every hour of the global [min, max]
+    * bar range × every event type, left-joined to the hourly bars
+    * (mean as `px`), so a missing bar has a null `px`. [[spineSql]]
+    * is its oracle twin. */
+  private def onHourSpine(s: SparkSession, d: String, px: String): DataFrame = {
+    val e = Tables.events(s, d)
+    e.agg(min(bar).as("lo"), max(bar).as("hi"))
+      .select(explode(expr("sequence(lo, hi, interval 1 hour)")).as("bar"))
+      .crossJoin(e.select("event_type").distinct())
+      .join(hourlyBars(s, d, px), Seq("bar", "event_type"), "left")
   }
+
+  /** [[onHourSpine]] as oracle SQL: the CTEs after `WITH`, ending in
+    * `g` (bar, event_type, `px`). */
+  private def spineSql(px: String): String =
+    s"""hourly AS (${hourlySql(px)}),
+          bounds AS (
+            SELECT min(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS lo,
+              max(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS hi
+            FROM events),
+          spine AS (
+            SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS bar, et.event_type
+            FROM bounds, (SELECT DISTINCT event_type FROM events) et),
+          g AS (
+            SELECT s.bar, s.event_type, h.$px
+            FROM spine s LEFT JOIN hourly h ON s.bar = h.bar AND s.event_type = h.event_type)"""
 
   /** Linear-interpolation resample — [[tsGapfill]]'s twin for the mid
     * price a quote store actually wants: a missing hourly bar gets
@@ -788,17 +815,10 @@ object TimeSeries {
     * stay null (the left join's is_gap still marks them). Same
     * (event_type)-partitioned single-shuffle shape as gapfill. */
   val tsInterpolate: QFn = (s, d) => {
-    val e = Tables.events(s, d)
-    val hourly = hourlyBars(s, d, "v")
-    val bounds = e.agg(min(bar).as("lo"), max(bar).as("hi"))
-    val spine = bounds
-      .select(explode(expr("sequence(lo, hi, interval 1 hour)")).as("bar"))
-      .crossJoin(e.select("event_type").distinct())
-    val wIdx = Window.partitionBy("event_type").orderBy("bar")
-    val wPrev = wIdx.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wNext = wIdx.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    spine.join(hourly, Seq("bar", "event_type"), "left")
-      .withColumn("idx", row_number().over(wIdx))
+    val wPrev = series.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wNext = series.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    onHourSpine(s, d, "v")
+      .withColumn("idx", row_number().over(series))
       .withColumn("pv", last(col("v"), ignoreNulls = true).over(wPrev))
       .withColumn("pi", last(when(col("v").isNotNull, col("idx")), ignoreNulls = true).over(wPrev))
       .withColumn("nv", first(col("v"), ignoreNulls = true).over(wNext))
@@ -852,17 +872,13 @@ object TimeSeries {
     * is bounded at 24 rows, so the state per output row is O(1) at
     * any scale — the pandas `ewm` shape with a hard window, which is
     * also what keeps the weights away from pow-overflow territory. */
-  val tsEwma: QFn = (s, d) => {
-    val hourly = hourlyBars(s, d, "px")
-    val w = Window.partitionBy("event_type").orderBy("bar")
-      .rowsBetween(-23, 0)
-    hourly
-      .withColumn("arr", collect_list("px").over(w))
+  val tsEwma: QFn = (s, d) =>
+    hourlyBars(s, d, "px")
+      .withColumn("arr", collect_list("px").over(series.rowsBetween(-23, 0)))
       .select(col("bar"), col("event_type"),
         fq(aggregate(col("arr"), lit(0.0),
           (acc, x) => acc * 0.8 + x * 0.2), 6).as("ewma"))
       .orderBy("bar", "event_type")
-  }
 
   /** Rolling z-score ANOMALY flags — the monitoring/quant staple:
     * each hourly bar scored against the trailing 24 bars' mean/std
@@ -879,10 +895,8 @@ object TimeSeries {
     * window per event_type partition + the hourly pre-aggregate — two
     * shuffles at any scale. */
   val tsAnomaly: QFn = (s, d) => {
-    val hourly = hourlyBars(s, d, "hour_avg")
-    val w = Window.partitionBy("event_type").orderBy("bar")
-      .rowsBetween(-24, -1)
-    hourly
+    val w = series.rowsBetween(-24, -1)
+    hourlyBars(s, d, "hour_avg")
       .withColumn("n", count(col("q")).over(w))
       .withColumn("s", sum(col("q")).over(w))
       .withColumn("ss", sum(col("q") * col("q")).over(w))
@@ -901,30 +915,39 @@ object TimeSeries {
 
   /** The trades-with-mid enrichment as oracle SQL, the CTEs after
     * `WITH`: `q`, the view quotes deduplicated per (user, ts) to their
-    * max value; `t`, the clicks; and `j`, each click with the latest
-    * quote at or before it as `mid` (null when there is none). The
-    * oracles of the four keys that read the staged enrichment
-    * continue from `j`. */
-  private def tradesWithMidCtes(withSize: Boolean): String = {
-    // the size column the flow keys sum, on `t` and carried through `j`
-    val (tSz, jSz) =
-      if (withSize) (",\n              CAST(props->>'$.k' AS BIGINT) AS sz", " t.sz,")
-      else ("", "")
-    s"""q AS (
+    * max value; `t`, the clicks with their size `sz`; and `j`, each
+    * click with the latest quote at or before it as `mid` (null when
+    * there is none). The oracles of the four keys that read the staged
+    * enrichment, and of `stream_asof_enrich`, continue from `j`. */
+  val tradesWithMidSql: String =
+    """q AS (
             SELECT user_id AS q_uid, ts AS q_ts, max(value) AS qv
             FROM events WHERE event_type = 'view' GROUP BY 1, 2),
           t AS (
-            SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value$tSz
+            SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value,
+              CAST(props->>'$.k' AS BIGINT) AS sz
             FROM events WHERE event_type = 'click'),
           j AS (
-            SELECT t.ts, t.value,$jSz
+            SELECT t.*,
               (SELECT qv FROM q
                WHERE q.q_uid = t.user_id AND q.q_ts <= t.ts
                ORDER BY q.q_ts DESC LIMIT 1) AS mid
             FROM t)"""
+
+  /** [[cepVReversal]]'s lag window as oracle SQL, a CTE body: each
+    * click's cents `vc` and the three before it (`v1`..`v3`) in its
+    * user's (ts, event_id) order. `ts_cep_pattern` and
+    * `stream_cep_pattern` select their matches from it. */
+  val cepTicksSql: String = {
+    val vc = sqlCents("value")
+    s"""SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
+             $vc AS vc,
+             lag($vc, 1) OVER w AS v1,
+             lag($vc, 2) OVER w AS v2,
+             lag($vc, 3) OVER w AS v3
+           FROM events WHERE event_type = 'click'
+           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"""
   }
-  private val tradesWithMidSql = tradesWithMidCtes(withSize = false)
-  private val tradesWithSizeMidSql = tradesWithMidCtes(withSize = true)
 
   val specs: Seq[KeySpec] = Seq(
     KeySpec.batch("ts_intraday_profile", tsIntradayProfile,
@@ -947,10 +970,7 @@ object TimeSeries {
       // pre-agg + lag window + grouped moments (AQE folds the
       // tiny final sort)
       shuffles = 3,
-      s"""WITH hourly AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-              CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q
-            FROM events GROUP BY 1, 2),
+      s"""WITH hourly AS (${hourlySql("px")}),
           lagged AS (
             SELECT event_type, q AS x,
               lag(q, 1) OVER (PARTITION BY event_type ORDER BY bar) AS y1,
@@ -973,10 +993,7 @@ object TimeSeries {
     KeySpec.batch("ts_rolling_beta", tsRollingBeta,
       // pre-agg + broadcast market join + rolling window + sort
       shuffles = 4,
-      s"""WITH hourly AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-              CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q
-            FROM events GROUP BY 1, 2),
+      s"""WITH hourly AS (${hourlySql("px")}),
           j AS (
             SELECT h.bar, h.event_type, h.q, m.q AS m
             FROM hourly h
@@ -1000,10 +1017,7 @@ object TimeSeries {
       // pre-agg + one event_type exchange the lag window, rank/count
       // windows and grouped tail share + sort
       shuffles = 3,
-      s"""WITH hourly AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-              CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q
-            FROM events GROUP BY 1, 2),
+      s"""WITH hourly AS (${hourlySql("px")}),
           rets AS (
             SELECT event_type, bar,
               q - lag(q, 1) OVER (PARTITION BY event_type ORDER BY bar) AS r
@@ -1059,7 +1073,7 @@ object TimeSeries {
     KeySpec.batch("ts_ofi", tsOfi,
       // staged-enrichment read: hour agg + presentation sort
       shuffles = 2,
-      s"""WITH $tradesWithSizeMidSql,
+      s"""WITH $tradesWithMidSql,
           agg AS (
             SELECT date_trunc('hour', ts) AS bar,
               CAST(sum(CASE WHEN value > mid THEN sz ELSE 0 END) AS BIGINT) AS buy_size,
@@ -1078,10 +1092,7 @@ object TimeSeries {
       // bar pre-agg + per-symbol series window + grouped moments
       shuffles = 3,
       // Roll: same hourly milli-unit bars; both lags in one window pass
-      s"""WITH hourly AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-              CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q
-            FROM events GROUP BY 1, 2),
+      s"""WITH hourly AS (${hourlySql("px")}),
           diffs AS (
             SELECT event_type, bar,
               q - lag(q, 1) OVER win AS dp
@@ -1104,10 +1115,7 @@ object TimeSeries {
             END AS roll_spread
           FROM m ORDER BY event_type"""),
     KeySpec.batch("ts_variance_ratio", tsVarianceRatio, shuffles = 3,
-      s"""WITH hourly AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-              CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q
-            FROM events GROUP BY 1, 2),
+      s"""WITH hourly AS (${hourlySql("px")}),
           lagged AS (
             SELECT event_type,
               q - lag(q, 1) OVER win AS r1,
@@ -1129,11 +1137,7 @@ object TimeSeries {
     KeySpec.batch("ts_amihud", tsAmihud,
       // bar pre-agg + per-symbol series window + grouped moments
       shuffles = 3,
-      s"""WITH hourly AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-              CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q,
-              CAST(sum(CAST(props->>'$$.k' AS BIGINT)) AS BIGINT) AS vol
-            FROM events GROUP BY 1, 2),
+      s"""WITH hourly AS (${hourlySql("px", "CAST(sum(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS vol")}),
           lagged AS (
             SELECT event_type, q, vol,
               lag(q, 1) OVER (PARTITION BY event_type ORDER BY bar) AS qp
@@ -1154,10 +1158,7 @@ object TimeSeries {
       // absorber, DECIMAL(30,6)-exact means; the denominator 3−2√2 is
       // embedded as the Scala-computed literal so both engines evaluate
       // the identical double
-      s"""WITH h AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-              max(value) AS hi, min(value) AS lo
-            FROM events GROUP BY 1, 2),
+      s"""WITH h AS (${hourlySql("px", "max(value) AS hi", "min(value) AS lo")}),
           p AS (
             SELECT event_type, hi, lo,
               lag(hi, 1) OVER win AS hp, lag(lo, 1) OVER win AS lp
@@ -1210,16 +1211,14 @@ object TimeSeries {
       shuffles = 3,
       // Kyle λ: the trades-with-mid enrichment (same correlated-subquery
       // shape as ts_ofi) signs the flow; mid series from the view side
-      s"""WITH $tradesWithSizeMidSql,
+      s"""WITH $tradesWithMidSql,
           flow AS (
             SELECT date_trunc('hour', ts) AS bar,
               CAST(sum(CASE WHEN value > mid THEN sz
                 WHEN value < mid THEN -sz ELSE 0 END) AS BIGINT) AS sv
             FROM j WHERE mid IS NOT NULL GROUP BY 1),
-          mids AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar,
-              CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q
-            FROM events WHERE event_type = 'view' GROUP BY 1),
+          hourly AS (${hourlySql("px")}),
+          mids AS (SELECT bar, q FROM hourly WHERE event_type = 'view'),
           dps AS (
             SELECT sv, q - lag(q, 1) OVER (ORDER BY bar) AS dp
             FROM mids JOIN flow USING (bar)),
@@ -1243,14 +1242,7 @@ object TimeSeries {
       // CEP V-reversal: same lag-window compilation of the pattern,
       // exact integer cents end to end (count/sum/max over BIGINTs
       // recast — DuckDB's sum(BIGINT) is HUGEINT)
-      """WITH t AS (
-           SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-             CAST(CAST(value AS DECIMAL(30,2)) * 100 AS BIGINT) AS vc,
-             lag(CAST(CAST(value AS DECIMAL(30,2)) * 100 AS BIGINT), 1) OVER w AS v1,
-             lag(CAST(CAST(value AS DECIMAL(30,2)) * 100 AS BIGINT), 2) OVER w AS v2,
-             lag(CAST(CAST(value AS DECIMAL(30,2)) * 100 AS BIGINT), 3) OVER w AS v3
-           FROM events WHERE event_type = 'click'
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
+      s"""WITH t AS ($cepTicksSql)
          SELECT user_id, count(*) AS n_matches,
            min(ts) AS first_match_ts, max(ts) AS last_match_ts,
            CAST(sum(vc - v1) AS BIGINT) AS rebound_cents,
@@ -1262,11 +1254,7 @@ object TimeSeries {
       shuffles = 3,
       // identical exact-integer rolling moments (milli-unit quantized
       // bar averages) → both engines derive z from the same integers
-      s"""WITH hourly AS (
-           SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-             ${sqlAvg2("value")} AS hour_avg,
-             CAST(floor(${sqlAvg2("value")} * 1000.0) AS BIGINT) AS q
-           FROM events GROUP BY 1, 2),
+      s"""WITH hourly AS (${hourlySql("hour_avg")}),
          w AS (
            SELECT bar, event_type, hour_avg, q,
              count(q) OVER win AS n,
@@ -1285,10 +1273,7 @@ object TimeSeries {
     KeySpec.batch("ts_ewma", tsEwma, shuffles = 3,
       // the same ordered fold, elementwise: 0-prepended window list,
       // left-to-right acc*0.8 + x*0.2 — identical IEEE sequence
-      s"""WITH h AS (
-           SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-             ${sqlAvg2("value")} AS px
-           FROM events GROUP BY 1, 2),
+      s"""WITH h AS (${hourlySql("px")}),
          wl AS (
            SELECT bar, event_type,
              list(px) OVER (PARTITION BY event_type ORDER BY bar
@@ -1314,7 +1299,7 @@ object TimeSeries {
          FROM dd WHERE rk = 1 ORDER BY event_type"""),
     KeySpec.batch("ts_ohlc_bars", tsOhlcBars, shuffles = 2,
       """WITH t AS (
-           SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
+           SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar,
              CAST(ts AS TIMESTAMP) AS tts, event_id, value,
              row_number() OVER (PARTITION BY date_trunc('hour', CAST(ts AS TIMESTAMP)), event_type
                ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn_a,
@@ -1336,42 +1321,21 @@ object TimeSeries {
             count(*) AS n_ticks
           FROM events GROUP BY 1 ORDER BY bar"""),
     KeySpec.batch("ts_gapfill", tsGapfill, shuffles = 4,
-      s"""WITH hourly AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-              ${sqlAvg2("value")} AS avg_value
-            FROM events GROUP BY 1, 2),
-          bounds AS (
-            SELECT min(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS lo,
-              max(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS hi
-            FROM events),
-          spine AS (
-            SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS bar, et.event_type
-            FROM bounds, (SELECT DISTINCT event_type FROM events) et)
-          SELECT s.bar, s.event_type,
-            CAST(h.avg_value IS NULL AS INT) AS is_gap,
-            last_value(h.avg_value IGNORE NULLS) OVER (
-              PARTITION BY s.event_type ORDER BY s.bar
+      s"""WITH ${spineSql("avg_value")}
+          SELECT bar, event_type,
+            CAST(avg_value IS NULL AS INT) AS is_gap,
+            last_value(avg_value IGNORE NULLS) OVER (
+              PARTITION BY event_type ORDER BY bar
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_value
-          FROM spine s LEFT JOIN hourly h ON s.bar = h.bar AND s.event_type = h.event_type
-          ORDER BY s.bar, s.event_type""")
+          FROM g ORDER BY bar, event_type""")
       .crossJoinOk("crosses the generated hour spine with the <=5-value event-type dim — " +
         "O(1)-size build side"),
     KeySpec.batch("ts_interpolate", tsInterpolate, shuffles = 4,
-      s"""WITH hourly AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-              ${sqlAvg2("value")} AS v
-            FROM events GROUP BY 1, 2),
-          bounds AS (
-            SELECT min(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS lo,
-              max(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS hi
-            FROM events),
-          spine AS (
-            SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS bar, et.event_type
-            FROM bounds, (SELECT DISTINCT event_type FROM events) et),
+      s"""WITH ${spineSql("v")},
           j AS (
-            SELECT s.bar, s.event_type, h.v,
-              row_number() OVER (PARTITION BY s.event_type ORDER BY s.bar) AS idx
-            FROM spine s LEFT JOIN hourly h ON s.bar = h.bar AND s.event_type = h.event_type),
+            SELECT bar, event_type, v,
+              row_number() OVER (PARTITION BY event_type ORDER BY bar) AS idx
+            FROM g),
           f AS (
             SELECT bar, event_type, v, idx,
               last_value(v IGNORE NULLS) OVER wp AS pv,
@@ -1403,10 +1367,7 @@ object TimeSeries {
             count(*) AS n_ticks
           FROM x GROUP BY bar ORDER BY bar"""),
     KeySpec.batch("ts_corr_types", tsCorrTypes, shuffles = 3,
-      s"""WITH hourly AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bar, event_type,
-              ${sqlAvg2("value")} AS v
-            FROM events GROUP BY 1, 2),
+      s"""WITH hourly AS (${hourlySql("v")}),
           j AS (
             SELECT x.v AS x, y.v AS y
             FROM (SELECT bar, v FROM hourly WHERE event_type = 'purchase') x

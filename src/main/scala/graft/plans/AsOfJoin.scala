@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.{KeySpec, QFn, Tables}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
   AttributeReference, AttributeSet, BindReferences, Expression,
@@ -265,56 +265,34 @@ object AsOfJoinPlans {
       mode, toleranceMicros))
   }
 
-  private def purchasesAndClicks(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
+  /** A native as-of key: each purchase with the click ts matched in
+    * `mode` (and `toleranceMicros`) as column `out`, by event_id —
+    * same query and oracle as its window-composition twin in
+    * operators/Relational.scala. */
+  private def nativeAsof(out: String, mode: AsOfMode.Value = AsOfMode.Backward,
+      toleranceMicros: Option[Long] = None): QFn = (s, d) => {
     val e = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type")
     val purchases = e.filter(col("event_type") === "purchase")
       .select("event_id", "user_id", "ts")
     val clicks = e.filter(col("event_type") === "click")
       .select(col("user_id").as("c_uid"), col("ts").as("c_ts"))
-    (purchases, clicks)
-  }
-
-  /** `join_asof_native`: same query + oracle as `join_asof`, executed
-    * by the native operator instead of the window composition. */
-  val joinAsofNative: QFn = (s, d) => {
-    val (purchases, clicks) = purchasesAndClicks(s, d)
-    asofJoin(purchases, clicks, "user_id", "c_uid", "ts", "c_ts",
-      "c_ts", "last_click_ts")
-      .select("event_id", "user_id", "ts", "last_click_ts")
+    asofJoin(purchases, clicks, "user_id", "c_uid", "ts", "c_ts", "c_ts", out,
+      mode, toleranceMicros)
+      .select("event_id", "user_id", "ts", out)
       .orderBy("event_id")
   }
 
-  /** `join_asof_forward_native`: next click at-or-after each purchase —
-    * same oracle as the window twin `join_asof_forward`. */
-  val joinAsofForwardNative: QFn = (s, d) => {
-    val (purchases, clicks) = purchasesAndClicks(s, d)
-    asofJoin(purchases, clicks, "user_id", "c_uid", "ts", "c_ts",
-      "c_ts", "next_click_ts", mode = AsOfMode.Forward)
-      .select("event_id", "user_id", "ts", "next_click_ts")
-      .orderBy("event_id")
-  }
-
+  /** `join_asof_native`: latest click at-or-before each purchase. */
+  val joinAsofNative: QFn = nativeAsof("last_click_ts")
+  /** `join_asof_forward_native`: next click at-or-after each purchase. */
+  val joinAsofForwardNative: QFn = nativeAsof("next_click_ts", AsOfMode.Forward)
   /** `join_asof_nearest_native`: click minimizing |Δt|, earlier side
-    * winning ties — same oracle as the window twin `join_asof_nearest`. */
-  val joinAsofNearestNative: QFn = (s, d) => {
-    val (purchases, clicks) = purchasesAndClicks(s, d)
-    asofJoin(purchases, clicks, "user_id", "c_uid", "ts", "c_ts",
-      "c_ts", "near_click_ts", mode = AsOfMode.Nearest)
-      .select("event_id", "user_id", "ts", "near_click_ts")
-      .orderBy("event_id")
-  }
-
+    * winning ties. */
+  val joinAsofNearestNative: QFn = nativeAsof("near_click_ts", AsOfMode.Nearest)
   /** `join_asof_tolerance_native`: backward match nulled when staler
-    * than 1 hour — same oracle as the window twin `join_asof_tolerance`. */
-  val joinAsofToleranceNative: QFn = (s, d) => {
-    val (purchases, clicks) = purchasesAndClicks(s, d)
-    asofJoin(purchases, clicks, "user_id", "c_uid", "ts", "c_ts",
-      "c_ts", "last_click_1h",
-      toleranceMicros = Some(3600L * 1000000L))
-      .select("event_id", "user_id", "ts", "last_click_1h")
-      .orderBy("event_id")
-  }
+    * than 1 hour. */
+  val joinAsofToleranceNative: QFn =
+    nativeAsof("last_click_1h", toleranceMicros = Some(3600L * 1000000L))
 
   val specs: Seq[KeySpec] = Seq(
     KeySpec.batch("join_asof_native", joinAsofNative, shuffles = 3,
@@ -322,21 +300,7 @@ object AsOfJoinPlans {
     KeySpec.batch("join_asof_forward_native", joinAsofForwardNative, shuffles = 3,
       graft.operators.Relational.asofForwardSql),
     KeySpec.batch("join_asof_nearest_native", joinAsofNearestNative, shuffles = 3,
-      """WITH p AS (
-           SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-             (SELECT max(CAST(c.ts AS TIMESTAMP)) FROM events c
-               WHERE c.event_type = 'click' AND c.user_id = e.user_id
-                 AND CAST(c.ts AS TIMESTAMP) <= CAST(e.ts AS TIMESTAMP)) AS prev_ts,
-             (SELECT min(CAST(c.ts AS TIMESTAMP)) FROM events c
-               WHERE c.event_type = 'click' AND c.user_id = e.user_id
-                 AND CAST(c.ts AS TIMESTAMP) >= CAST(e.ts AS TIMESTAMP)) AS next_ts
-           FROM events e WHERE event_type = 'purchase')
-         SELECT event_id, user_id, ts,
-           CASE WHEN prev_ts IS NULL THEN next_ts
-                WHEN next_ts IS NULL THEN prev_ts
-                WHEN ts - prev_ts <= next_ts - ts THEN prev_ts
-                ELSE next_ts END AS near_click_ts
-         FROM p ORDER BY event_id"""),
+      graft.operators.Relational.asofNearestSql),
     KeySpec.batch("join_asof_tolerance_native", joinAsofToleranceNative, shuffles = 3,
       graft.operators.Relational.asofToleranceSql))
 }

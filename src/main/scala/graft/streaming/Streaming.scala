@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{Det, GraftSession, KeySpec, QFn, Tables}
+import graft.operators.TimeSeries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
@@ -311,8 +312,9 @@ object Streaming {
     * queries (the stateful quartet) keep the memory sink: file sinks
     * don't support Update, and their output is bounded by STATE
     * cardinality (users × batch count), not event volume — the same
-    * bound their state story already guarantees. */
-  /** SINGLE-LIVE-HANDLE constraint (r10 ADVICE): the Append-mode sink
+    * bound their state story already guarantees.
+    *
+    * SINGLE-LIVE-HANDLE constraint (r10 ADVICE): the Append-mode sink
     * dir is keyed by (key, dataset) and deleteRecursively'd before
     * each start, so the DataFrame returned by an EARLIER runStream
     * call for the same pair is invalidated the moment the key reruns
@@ -446,60 +448,26 @@ object Streaming {
       .filter(col("w_start") < SentinelGuard)
       .orderBy("w_start", "event_type")
 
-  /** STREAM–STATIC dimension join — the enrichment shape Structured
-    * Streaming treats specially: the static side is a plain batch
-    * DataFrame (here a per-user activity profile aggregated once from
-    * the events table — "the serving-side dim snapshot"), joined into
-    * every micro-batch STATELESSLY (no watermark bookkeeping, no join
-    * state store — unlike the stream-stream family) and broadcast so
-    * the streaming side never shuffles for the join. The watermark is
-    * applied BEFORE the join so the flush sentinels (whose user_id
-    * joins nothing) still advance event time and seal every real
-    * window. Flushed result equals the batch join + hour aggregate
-    * exactly — the oracle. At 100 TB the static side is the small
-    * dimension by construction (a profile table), which is what makes
-    * per-batch broadcast the right physical plan. */
   /** STREAMING quote summary — the namesake `ts_bidask_spread` shape
     * run the way a production tick pipeline actually runs it: quotes
     * arrive as a stream, both sides aggregate in ONE watermarked
-    * tumbling window (conditional exact-decimal sums — no second
-    * stateful operator for the second side), and the derived
-    * spread/mid/bps columns are stateless post-window arithmetic.
-    * Flushed result equals the batch key exactly, so the ORACLE IS
+    * tumbling window (the batch key's conditional cents sums,
+    * [[TimeSeries.quoteSides]] — no second stateful operator for the
+    * second side), and the derived spread/mid/bps columns are the
+    * batch key's stateless post-window arithmetic,
+    * [[TimeSeries.quoteSpread]]. Flushed result equals the batch key
+    * exactly, so the ORACLE IS
     * `ts_bidask_spread`'s (1-hour tumbling windows coincide with
     * `date_trunc('hour')`). Sentinel flush rows carry event_type
     * `__flush__`, so both conditional sides ignore them by
     * construction and their window falls beyond the guard. */
-  val streamBidaskSpread: QFn = (s, d) => {
-    val bidv = when(col("event_type") === "view", col("value"))
-    val askv = when(col("event_type") === "purchase", col("value"))
-    runStream(s, d, OutputMode.Append(), "bidask", flush = true) { df =>
-      df.withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(
-          csum2(bidv).as("bid_c"), count(bidv).as("n_bid"),
-          csum2(askv).as("ask_c"), count(askv).as("n_ask"))
-    }.select(col("window.start").as("bar"), col("bid_c"), col("n_bid"),
-        col("ask_c"), col("n_ask"))
-      .filter(col("bar") < SentinelGuard)
-      .filter(col("n_bid") > 0 && col("n_ask") > 0)
-      // identical post-window integer micro-unit arithmetic as the
-      // batch namesake key (shared oracle) — see tsBidaskSpread's
-      // scaladoc for the div-vs-// sign contract
-      .withColumn("bid_micro", expr("bid_c * 10000 div n_bid"))
-      .withColumn("ask_micro", expr("ask_c * 10000 div n_ask"))
-      .withColumn("spread_micro", col("ask_micro") - col("bid_micro"))
-      .withColumn("mid_micro", expr("(bid_micro + ask_micro) div 2"))
-      .select(
-        col("bar"), col("bid_micro"), col("ask_micro"),
-        col("spread_micro"), col("mid_micro"),
-        when(col("mid_micro") > 0,
-          when(col("spread_micro") < 0, lit(-1L)).otherwise(lit(1L)) *
-            expr("abs(spread_micro) * 1000000 div mid_micro"))
-          .as("spread_bps_c"),
-        col("n_bid"), col("n_ask"))
-      .orderBy("bar")
-  }
+  val streamBidaskSpread: QFn = (s, d) =>
+    TimeSeries.quoteSpread(
+      runStream(s, d, OutputMode.Append(), "bidask", flush = true) { df =>
+        TimeSeries.quoteSides(
+          df.withWatermark("ts", "1 hour").groupBy(window(col("ts"), "1 hour")))
+      }.withColumn("bar", col("window.start"))
+        .filter(col("bar") < SentinelGuard))
 
   /** STREAMING TEMPORAL JOIN (as-of enrichment) — the Flink
     * "temporal table join" shape Structured Streaming has no built-in
@@ -553,24 +521,6 @@ object Streaming {
     * exact integer cents (cast in Spark SQL, not JVM code). */
   case class CepTick(event_id: Long, ts: Timestamp, user_id: Long, vc: Long)
 
-  /** STREAMING CEP — the Flink-CEP headline capability as a
-    * Structured Streaming stateful operator: `ts_cep_pattern`'s
-    * V-reversal (three strictly-falling ticks then an up-tick off
-    * the trough) detected ONLINE over the click stream, one output
-    * row per match as it happens. Per-user `flatMapGroupsWithState`
-    * holds the pattern's bounded lookback — the last three tick
-    * prices in cents — which IS the compiled state of a
-    * bounded-length CEP pattern: O(1) per key, no buffering, no
-    * re-scan, so state volume is #users regardless of tick volume.
-    * Cents come from the same DECIMAL(30,2)·100 cast as the batch
-    * key, computed in Spark SQL BEFORE the state function so no JVM
-    * double-rounding can diverge. Within a micro-batch the group
-    * iterates in full-resolution event-time order (ms + nanos,
-    * event_id tiebreak — the batch window's (ts, event_id) total
-    * order); across batches [[stagedFeed]]'s ts-range chunking
-    * keeps global order and never splits an equal-ts run, so the
-    * flushed match set equals the batch lag-window formulation row
-    * for row — and the oracle IS that independent formulation. */
   /** The CEP stream transformation, factored from [[streamCepPattern]]
     * so StreamRecoverySpec can drive the same state machine through a
     * kill-resume checkpoint cycle. */
@@ -601,10 +551,41 @@ object Streaming {
       }.toDF("event_id", "user_id", "ts", "rebound_cents", "depth_cents")
   }
 
+  /** STREAMING CEP — the Flink-CEP headline capability as a
+    * Structured Streaming stateful operator: `ts_cep_pattern`'s
+    * V-reversal (three strictly-falling ticks then an up-tick off
+    * the trough) detected ONLINE over the click stream, one output
+    * row per match as it happens. Per-user `flatMapGroupsWithState`
+    * holds the pattern's bounded lookback — the last three tick
+    * prices in cents — which IS the compiled state of a
+    * bounded-length CEP pattern: O(1) per key, no buffering, no
+    * re-scan, so state volume is #users regardless of tick volume.
+    * Cents come from the same DECIMAL(30,2)·100 cast as the batch
+    * key, computed in Spark SQL BEFORE the state function so no JVM
+    * double-rounding can diverge. Within a micro-batch the group
+    * iterates in full-resolution event-time order (ms + nanos,
+    * event_id tiebreak — the batch window's (ts, event_id) total
+    * order); across batches [[stagedFeed]]'s ts-range chunking
+    * keeps global order and never splits an equal-ts run, so the
+    * flushed match set equals the batch lag-window formulation row
+    * for row — and the oracle IS that independent formulation. */
   val streamCepPattern: QFn = (s, d) =>
     runStream(s, d, OutputMode.Append(), "cep_pattern")(cepStream)
       .orderBy("event_id")
 
+  /** STREAM–STATIC dimension join — the enrichment shape Structured
+    * Streaming treats specially: the static side is a plain batch
+    * DataFrame (here a per-user activity profile aggregated once from
+    * the events table — "the serving-side dim snapshot"), joined into
+    * every micro-batch STATELESSLY (no watermark bookkeeping, no join
+    * state store — unlike the stream-stream family) and broadcast so
+    * the streaming side never shuffles for the join. The watermark is
+    * applied BEFORE the join so the flush sentinels (whose user_id
+    * joins nothing) still advance event time and seal every real
+    * window. Flushed result equals the batch join + hour aggregate
+    * exactly — the oracle. At 100 TB the static side is the small
+    * dimension by construction (a profile table), which is what makes
+    * per-batch broadcast the right physical plan. */
   val streamStaticJoin: QFn = (s, d) => {
     val profile = Tables.events(s, d)
       .groupBy("user_id").agg(count(lit(1)).as("user_events"))
@@ -1198,33 +1179,17 @@ object Streaming {
     KeySpec.stream("stream_bidask_spread", streamBidaskSpread,
       // the flushed streaming quote summary equals the batch namesake
       // key bit-for-bit, so it SHARES that oracle (divergence-proof)
-      graft.operators.TimeSeries.bidaskSpreadSql),
+      TimeSeries.bidaskSpreadSql),
     KeySpec.stream("stream_asof_enrich", streamAsofEnrich,
       // the flushed temporal join equals the batch as-of exactly: the
       // same correlated-subquery oracle shape the native as-of keys use
-      """WITH q AS (
-           SELECT user_id AS q_uid, ts AS q_ts, max(value) AS qv
-           FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-         t AS (
-           SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-           FROM events WHERE event_type = 'click')
-         SELECT t.event_id, t.user_id, t.ts,
-           (SELECT qv FROM q
-            WHERE q.q_uid = t.user_id AND q.q_ts <= t.ts
-            ORDER BY q.q_ts DESC LIMIT 1) AS mid
-         FROM t ORDER BY t.event_id"""),
+      s"""WITH ${TimeSeries.tradesWithMidSql}
+         SELECT event_id, user_id, ts, mid FROM j ORDER BY event_id"""),
     KeySpec.stream("stream_cep_pattern", streamCepPattern,
       // the flushed CEP match stream equals the batch lag-window
       // compilation of the same pattern — an independent formulation
       // (window scan vs state machine), per-match rows
-      """WITH t AS (
-           SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-             CAST(CAST(value AS DECIMAL(30,2)) * 100 AS BIGINT) AS vc,
-             lag(CAST(CAST(value AS DECIMAL(30,2)) * 100 AS BIGINT), 1) OVER w AS v1,
-             lag(CAST(CAST(value AS DECIMAL(30,2)) * 100 AS BIGINT), 2) OVER w AS v2,
-             lag(CAST(CAST(value AS DECIMAL(30,2)) * 100 AS BIGINT), 3) OVER w AS v3
-           FROM events WHERE event_type = 'click'
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
+      s"""WITH t AS (${TimeSeries.cepTicksSql})
          SELECT event_id, user_id, ts, vc - v1 AS rebound_cents,
            v3 - v1 AS depth_cents
          FROM t WHERE v3 > v2 AND v2 > v1 AND vc > v1

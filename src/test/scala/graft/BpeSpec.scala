@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** `llm_bpe_train` (operators/Clustering.scala): merge determinism
   * under repartitioning and the corpus-shrink property of greedy
-  * pair fusion. */
+  * pair fusion; `llm_tokenizer_fertility`'s totals against the
+  * oracled encode key. */
 class BpeSpec extends SparkTestBase {
 
   test("merge table is invariant under input partitioning") {
@@ -52,5 +53,31 @@ class BpeSpec extends SparkTestBase {
     // the sample the merges were trained on must actually compress
     assert(enc.filter(r => r.getLong(0) % 10 == 0).map(_.getInt(2)).sum > 0,
       "no merge landed on the training sample — merge table is vacuous")
+  }
+
+  test("llm_tokenizer_fertility: per-lang totals equal the oracled encode key's sums") {
+    import org.apache.spark.sql.functions._
+    val fert = operators.Clustering.llmTokenizerFertility(spark, sf).collect()
+      .map(r => r.getAs[String]("lang") ->
+        (r.getAs[Long]("n_docs"), r.getAs[Long]("total_tok"),
+          r.getAs[Long]("total_chars"), r.getAs[Long]("fert_micro"))).toMap
+    assert(fert.nonEmpty)
+    // llm_bpe_encode is hash-oracled; summing ITS per-doc token counts
+    // per language must reproduce the fertility totals exactly
+    val viaEncode = operators.Clustering.llmBpeEncode(spark, sf)
+      .join(Tables.documents(spark, sf), "doc_id")
+      .groupBy("lang")
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok").cast("long")).as("tok"),
+        sum("n_chars").as("chars"))
+      .collect()
+      .map(r => (r.getAs[String]("lang"), r.getAs[Long]("n_docs"),
+        r.getAs[Long]("tok"), r.getAs[Long]("chars")))
+    assert(viaEncode.nonEmpty && viaEncode.map(_._1).toSet == fert.keySet)
+    viaEncode.foreach { case (lang, nd, tok, chars) =>
+      val (n, t, c, f) = fert(lang)
+      assert(n == nd && t == tok && c == chars, s"$lang totals")
+      assert(f == t * 1000000L / c, s"$lang truncating fertility division")
+      assert(f > 0 && f < 1000000L, "fertility: tokens per char in (0, 1)")
+    }
   }
 }

@@ -44,14 +44,26 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(filesMatching("""conf\.(?:set|unset)\(""".r) == Seq("GraftSession.scala"))
   }
 
-  test("modules are named by family: no src/main file or top-level object ends in a digit") {
-    val topObject = """(?m)^object\s+(\w+)""".r
-    val numbered = scalaFiles("src/main").flatMap { p =>
+  /** The file and top-level type names under `root` that number a
+    * round instead of naming a family: a trailing digit (`Extras2`) or
+    * a round tag (`R10Additions`). */
+  private def roundNamed(root: String): Seq[String] = {
+    val topType = """(?m)^(?:object|class|trait)\s+(\w+)""".r
+    val round = """R\d+""".r
+    scalaFiles(root).flatMap { p =>
       (p.getFileName.toString.stripSuffix(".scala") +:
-        topObject.findAllMatchIn(Files.readString(p)).map(_.group(1)).toSeq)
-        .filter(_.last.isDigit).distinct
-    }
-    assert(numbered.isEmpty)
+        topType.findAllMatchIn(Files.readString(p)).map(_.group(1)).toSeq)
+        .filter(n => n.last.isDigit || round.findFirstIn(n).isDefined).distinct
+    }.sorted
+  }
+
+  test("modules are named by family: no src/main file or top-level object ends in a digit") {
+    assert(roundNamed("src/main").isEmpty)
+  }
+
+  test("test specs are named by family: no src/test file or top-level type is round-numbered") {
+    val numbered = roundNamed("src/test")
+    assert(numbered.isEmpty, s"round-numbered test files or types: $numbered")
   }
 
   test("the only SPARK_GRAFT_ env settings src/main reads are the five deployment ones") {

@@ -21,7 +21,11 @@ import org.apache.spark.sql.types._
   * random-ish 128-bit hashes the max band bucket stays in the tens
   * (balls-in-bins, N/2²¹ ≪ 1) and candidate volume stays ~linear —
   * the banded join provably never degrades toward the all-pairs n²
-  * the 6-bit-band 32-bit key would hit at this corpus size. */
+  * the 6-bit-band 32-bit key would hit at this corpus size.
+  *
+  * The exactness of the shipped key rides along: `mm_phash_neardup`'s
+  * banded output against brute force, and the `ahash32` kernel on
+  * constructed payloads. */
 class PhashScaleSpec extends SparkTestBase {
 
   import operators.Multimodal
@@ -164,6 +168,40 @@ class PhashScaleSpec extends SparkTestBase {
     assert(wallFull < 2.5 * wallSmall + 1.0,
       f"delta check ${wallFull}%.1f s at full base vs ${wallSmall}%.1f s " +
         "at 10% base — the check scales with the BASE, not the delta")
+  }
+
+  test("mm_phash_neardup: banded output equals brute-force all-pairs (pigeonhole exactness)") {
+    import org.apache.spark.sql.functions._
+    val out = operators.Multimodal.mmPhashNeardup(spark, sf).collect()
+      .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b")) -> r.getAs[Int]("hamming"))
+      .toMap
+    assert(out.nonEmpty, "the corpus should yield at least one Hamming<=5 pair")
+    // brute force through the SAME kernel: every pair at Hamming <= 5
+    // must appear (banding is exact for tau <= 5 by pigeonhole), with
+    // the same distance, and nothing else
+    val hs = Tables.documents(spark, sf).select("doc_id", "text").collect()
+      .map(r => r.getLong(0) ->
+        operators.Multimodal.ahash32(r.getString(1).getBytes("UTF-8")))
+      .sortBy(_._1)
+    val brute = (for {
+      i <- hs.indices.iterator; j <- (i + 1) until hs.length
+      h = java.lang.Long.bitCount(hs(i)._2 ^ hs(j)._2) if h <= 5
+    } yield (hs(i)._1, hs(j)._1) -> h).toMap
+    assert(out == brute, s"banded ${out.size} pairs vs brute ${brute.size}")
+  }
+
+  test("ahash32 kernel: known payloads hash as constructed") {
+    // 32 equal blocks of 4 bytes: block mean > payload mean exactly
+    // where the block carries the high byte
+    val base = Array.fill(128)(10.toByte)
+    assert(operators.Multimodal.ahash32(base) == 0L, "uniform payload: no bit set")
+    val spiked = base.clone(); spiked(0) = 100.toByte // block 0 above mean
+    assert(operators.Multimodal.ahash32(spiked) == 1L, "only block 0 set")
+    val two = spiked.clone(); two(127) = 100.toByte   // + block 31
+    assert(operators.Multimodal.ahash32(two) == (1L | (1L << 31)))
+    assert(java.lang.Long.bitCount(
+      operators.Multimodal.ahash32(spiked) ^ operators.Multimodal.ahash32(two)) == 1)
+    assert(operators.Multimodal.ahash32(Array.emptyByteArray) == 0L)
   }
 }
 

@@ -146,36 +146,41 @@ class PropertySpec extends SparkTestBase {
   }
 
   test("as-of invariant on generated event streams") {
+    // ts in 0..50 s: equal-ts click/purchase ties are common, and the
+    // tag order on a tie is what the carry must get right
     val evGen = Gen.listOfN(30, Gen.zip(
-      Gen.choose(1L, 5L), Gen.choose(0L, 1000L), Gen.oneOf("click", "purchase")))
+      Gen.choose(1L, 5L), Gen.choose(0L, 50L), Gen.oneOf("click", "purchase")))
     forAll(evGen) { evs =>
       import spark.implicits._
       val df = evs.zipWithIndex.map { case ((u, t, ty), i) =>
         (i.toLong, new java.sql.Timestamp(t * 1000), u, ty)
       }.toDF("event_id", "ts", "user_id", "event_type")
-      // reuse the production as-of composition on this tiny frame
-      val clicks = df.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), lit(0).as("tag"), col("event_id"),
-          col("ts").as("click_ts"))
-      val purchases = df.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), lit(1).as("tag"), col("event_id"),
-          lit(null).cast("timestamp").as("click_ts"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("ts", "tag", "event_id")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
-      val res = clicks.unionByName(purchases)
-        .withColumn("last_click_ts", last(col("click_ts"), ignoreNulls = true).over(w))
-        .filter(col("tag") === 1)
+      // the production as-of carry on this tiny frame
+      val res = operators.Relational.asofCarry(df, backward = true, forward = false)
       // invariant: matched click is at-or-before the purchase
-      assert(res.filter(col("last_click_ts") > col("ts")).count() == 0)
+      assert(res.filter(col("prev_ts") > col("ts")).count() == 0)
       // completeness: a purchase with ANY prior click must match one
-      val bad = res.filter(col("last_click_ts").isNull).collect().filter { r =>
+      val bad = res.filter(col("prev_ts").isNull).collect().filter { r =>
         val uid = r.getLong(0); val ts = r.getTimestamp(1)
         evs.exists { case (u, t, ty) =>
           ty == "click" && u == uid && t * 1000 <= ts.getTime }
       }
       assert(bad.isEmpty, s"unmatched purchases with prior clicks: ${bad.length}")
+      // every direction equals the native merge operator's answer
+      val purchases = df.filter(col("event_type") === "purchase")
+        .select("event_id", "user_id", "ts")
+      val clicks = df.filter(col("event_type") === "click")
+        .select(col("user_id").as("c_uid"), col("ts").as("c_ts"))
+      def matches(m: org.apache.spark.sql.DataFrame, c: String) =
+        m.select(col("event_id"), col(c)).collect()
+          .map(r => r.getLong(0) -> Option(r.getTimestamp(1))).toMap
+      def native(mode: plans.AsOfMode.Value) = matches(plans.AsOfJoinPlans
+        .asofJoin(purchases, clicks, "user_id", "c_uid", "ts", "c_ts", "c_ts", "m", mode), "m")
+      assert(matches(res, "prev_ts") == native(plans.AsOfMode.Backward))
+      assert(matches(operators.Relational.asofCarry(df, backward = false, forward = true),
+        "next_ts") == native(plans.AsOfMode.Forward))
+      assert(matches(operators.Relational.asofNearest(df), "near_click_ts") ==
+        native(plans.AsOfMode.Nearest))
     }
   }
 

@@ -41,13 +41,10 @@ class QuantCorpusSpec extends SparkTestBase {
     }
   }
 
-  test("ts_bidask_spread: constructed boundary bar yields exact integer micro-units (r8 hash-mismatch regression)") {
-    // r8's round(<derived double>, 6) output diverged from DuckDB on a
-    // representation-boundary row. Pin the integer recipe on exactly
-    // such a bar: bid avg 0.015 (binary double ...0.014999999999999999)
-    // and a NEGATIVE spread bar exercising the sign·(abs div) contract
-    // (integer division is only guaranteed engine-identical on
-    // non-negative numerators, which the abs() guarantees).
+  /** A dataset dir whose events are two constructed quote hours: a
+    * bid average of 0.015 (binary double ...0.014999999999999999) and
+    * an inverted market (negative spread). */
+  private def boundaryBars(): String = {
     import java.sql.Timestamp
     val dir = scratchDir("bidask_boundary")
     val h1 = Timestamp.valueOf("2024-01-01 10:00:00")
@@ -61,14 +58,26 @@ class QuantCorpusSpec extends SparkTestBase {
       // hour 2: inverted market → negative spread
       (5L, h2, 1L, "view", 200.00, "{}"),
       (6L, h2, 2L, "purchase", 100.00, "{}"))
-    import spark.implicits._
+    val s = spark
+    import s.implicits._
     // ts as bare epoch-µs longs: Tables.loadEvents' INT64_US footer
     // probe handles that shape (a Spark-default timestamp write can
     // land as INT96, which the loader rejects by design)
     rows.map { case (id, ts, uid, et, v, p) => (id, ts.getTime * 1000L, uid, et, v, p) }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = operators.TimeSeries.tsBidaskSpread(spark, dir)
+    dir
+  }
+
+  test("ts_bidask_spread: constructed boundary bar yields exact integer micro-units (r8 hash-mismatch regression)") {
+    // r8's round(<derived double>, 6) output diverged from DuckDB on a
+    // representation-boundary row. Pin the integer recipe on exactly
+    // such a bar: bid avg 0.015 (binary double ...0.014999999999999999)
+    // and a NEGATIVE spread bar exercising the sign·(abs div) contract
+    // (integer division is only guaranteed engine-identical on
+    // non-negative numerators, which the abs() guarantees).
+    import java.sql.Timestamp
+    val out = operators.TimeSeries.tsBidaskSpread(spark, boundaryBars())
       .collect().sortBy(_.getAs[Timestamp]("bar").getTime)
     assert(out.length == 2)
     val b1 = out(0)
@@ -85,6 +94,16 @@ class QuantCorpusSpec extends SparkTestBase {
     // sign·(abs div mid): -(1e14 div 1.5e8) = -666666 (a floor-style
     // signed division would give -666667 — the abs form pins trunc)
     assert(b2.getAs[Long]("spread_bps_c") == -666666L)
+  }
+
+  test("stream_bidask_spread: the constructed boundary bars give the batch key's rows") {
+    // one quoteSpread derivation serves both keys: the streamed windows
+    // of the same events must equal ts_bidask_spread row for row
+    val dir = boundaryBars()
+    val batch = operators.TimeSeries.tsBidaskSpread(spark, dir).collect().toSeq
+    val streamed = streaming.Streaming.streamBidaskSpread(spark, dir).collect().toSeq
+    assert(batch.length == 2)
+    assert(streamed == batch)
   }
 
   test("ts_roll_spread: spread only where serial covariance is negative, and equals 2*sqrt(-cov)") {
@@ -280,5 +299,85 @@ class QuantCorpusSpec extends SparkTestBase {
       .select("tok").as[String].collect().toSet
     val expectKept = toks.filter($"tok".isin(keptVocab.toSeq: _*)).count()
     assert(rows.map(_.getAs[Long]("n_kept")).sum == expectKept)
+  }
+
+  test("ts_corwin_schultz: per-symbol estimate matches a plain-Scala replay of the formula") {
+    import org.apache.spark.sql.functions._
+    val out = operators.TimeSeries.tsCorwinSchultz(spark, sf).collect()
+      .map(r => r.getAs[String]("event_type") ->
+        (r.getAs[Long]("n_pairs"), r.getAs[Double]("cs_spread_raw"),
+          r.getAs[Double]("cs_spread"))).toMap
+    assert(out.nonEmpty)
+
+    // independent replay: hourly hi/lo bars per symbol, consecutive
+    // pairs, the published formula, round(6), exact decimal mean
+    val bars = Tables.events(spark, sf)
+      .groupBy(date_trunc("hour", col("ts")).as("bar"), col("event_type"))
+      .agg(max("value").as("hi"), min("value").as("lo"))
+      .collect()
+      .map(r => (r.getAs[String]("event_type"),
+        r.getAs[java.sql.Timestamp]("bar").getTime,
+        r.getAs[Double]("hi"), r.getAs[Double]("lo")))
+      .groupBy(_._1)
+    val den = 3.0 - 2.0 * math.sqrt(2.0)
+    bars.foreach { case (sym, rows) =>
+      val series = rows.sortBy(_._2).map(t => (t._3, t._4))
+      // mirror the engine's lp>0/lo>0 guard: a regenerated fixture
+      // with a non-positive bar price must not NaN the replay
+      val s6s = series.sliding(2).collect {
+          case Array((hp, lp), (hi, lo)) if lp > 0 && lo > 0 =>
+        val beta = math.pow(math.log(hp / lp), 2) + math.pow(math.log(hi / lo), 2)
+        val gamma = math.pow(math.log(math.max(hi, hp) / math.min(lo, lp)), 2)
+        val a = (math.sqrt(2 * beta) - math.sqrt(beta)) / den - math.sqrt(gamma / den)
+        val sRaw = 2.0 * (math.exp(a) - 1.0) / (math.exp(a) + 1.0)
+        BigDecimal(sRaw).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+      }.toSeq
+      if (s6s.isEmpty) assert(!out.contains(sym), s"$sym: no pairs, no row")
+      else {
+        val (n, raw, clamped) = out(sym)
+        assert(n == s6s.length, s"$sym pair count")
+        // mirror the engine: exact decimal sum -> double, THEN divide
+        def fq9(x: Double) = math.floor(x * 1e9) / 1e9
+        assert(raw == fq9(s6s.sum.toDouble / n), s"$sym raw mean")
+        assert(clamped ==
+          fq9(s6s.map(_.max(BigDecimal(0))).sum.toDouble / n), s"$sym clamped mean")
+        // the clamped estimator dominates the raw one by construction
+        assert(clamped >= raw && clamped >= 0.0)
+      }
+    }
+  }
+
+  test("ts_tsrv: per-symbol statistics match a plain-Scala replay of the two-scale formula") {
+    import org.apache.spark.sql.functions.{col, floor}
+    val K = operators.TimeSeries.TsrvK
+    val out = operators.TimeSeries.tsTsrv(spark, sf).collect()
+      .map(r => r.getAs[String]("event_type") ->
+        (r.getAs[Long]("n"), r.getAs[Double]("rv_all"), r.getAs[Double]("tsrv")))
+      .toMap
+    assert(out.nonEmpty)
+    val ticks = Tables.events(spark, sf)
+      .select(col("event_type"), col("ts"), col("event_id"),
+        floor(col("value") * 1000.0).cast("long").as("q"))
+      .collect()
+      .map(r => (r.getAs[String]("event_type"),
+        r.getAs[java.sql.Timestamp]("ts").getTime, r.getAs[Long]("event_id"),
+        r.getAs[Long]("q")))
+      .groupBy(_._1)
+    def fq9(x: Double) = math.floor(x * 1e9) / 1e9
+    ticks.foreach { case (sym, rows) =>
+      val q = rows.sortBy(t => (t._2, t._3)).map(_._4)
+      val n = q.length
+      if (n <= K) assert(!out.contains(sym))
+      else {
+        val rvAll = (1 until n).map(i => { val d = q(i) - q(i - 1); d * d }).sum
+        val rvK = (K until n).map(i => { val d = q(i) - q(i - K); d * d }).sum
+        val (no, ra, ts) = out(sym)
+        assert(no == n, s"$sym tick count")
+        assert(ra == fq9(rvAll.toDouble / 1e6), s"$sym rv_all")
+        assert(ts == fq9((rvK.toDouble / K -
+          ((n - K + 1).toDouble / K / n) * rvAll.toDouble) / 1e6), s"$sym tsrv")
+        assert(ra >= 0.0, s"$sym: realized variance is a sum of squares")
+      }
+    }
   }
 }

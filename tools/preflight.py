@@ -63,21 +63,7 @@ def main():
     # (duckdb X)" rather than absolute.
     print(f"preflight oracle: duckdb {duckdb.__version__} (driver artifact remains the gate of record)")
     con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf}/{t}.parquet"
-        if os.path.exists(p) or os.path.isdir(p):
-            src = f"'{p}'" if os.path.isfile(p) else f"'{p}/*.parquet'"
-            if t == "events":
-                # ts unit varies by testdata generation: timestamp[ns]
-                # (DuckDB TIMESTAMP_NS), timestamp[us], or a bare int64 of
-                # µs from a pre-fix graft.Replicate output — normalize all
-                # to the µs timestamp Spark's Tables.loadEvents produces
-                ty = con.sql(f"SELECT typeof(ts) FROM {src} LIMIT 1").fetchone()[0]
-                ts = "make_timestamp(ts) AS ts" if ty == "BIGINT" else "ts"
-                con.sql(f"CREATE VIEW events AS SELECT event_id, {ts}, "
-                        f"user_id, event_type, value, props FROM {src}")
-            else:
-                con.sql(f"CREATE VIEW {t} AS SELECT * FROM {src}")
+    create_views(con, sf)
     oracle = json.load(open(f"{out}/oracle_sql.json"))
     cache_dir = os.environ.get("PREFLIGHT_CACHE_DIR", "/tmp/graft_preflight_cache")
     use_cache = not os.environ.get("PREFLIGHT_NO_CACHE")
@@ -204,6 +190,25 @@ def main():
         print(f"\noracle cache: {hits} hit, {misses} miss ({cache_dir})")
     print(f"\n{n_pass} pass, {n_fail} fail; no-oracle keys: {sorted(no_oracle)}")
     sys.exit(1 if n_fail else 0)
+
+def create_views(con, sf):
+    """One DuckDB view per testdata table of scale factor dir `sf`,
+    named as the oracle SQL names it."""
+    for t in TABLES:
+        p = f"{sf}/{t}.parquet"
+        if os.path.exists(p) or os.path.isdir(p):
+            src = f"'{p}'" if os.path.isfile(p) else f"'{p}/*.parquet'"
+            if t == "events":
+                # ts unit varies by testdata generation: timestamp[ns]
+                # (DuckDB TIMESTAMP_NS), timestamp[us], or a bare int64 of
+                # µs from a pre-fix graft.Replicate output — normalize all
+                # to the µs timestamp Spark's Tables.loadEvents produces
+                ty = con.sql(f"SELECT typeof(ts) FROM {src} LIMIT 1").fetchone()[0]
+                ts = "make_timestamp(ts) AS ts" if ty == "BIGINT" else "ts"
+                con.sql(f"CREATE VIEW events AS SELECT event_id, {ts}, "
+                        f"user_id, event_type, value, props FROM {src}")
+            else:
+                con.sql(f"CREATE VIEW {t} AS SELECT * FROM {src}")
 
 if __name__ == "__main__":
     main()
