@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{KeySpec, QFn, Tables, Det}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,11 +28,8 @@ object Etl {
     val path = Tables.sinkPath(s, d, "part_sink")
     Tables.events(s, d)
       .write.mode("overwrite").partitionBy("event_type").parquet(path)
-    s.read.parquet(path)
-      .filter(col("event_type").isin("purchase", "error"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
-      .orderBy("event_type")
+    eventTypeTotals(s.read.parquet(path)
+      .filter(col("event_type").isin("purchase", "error")))
   }
 
   /** Data-quality checks — the ETL gate: row counts, null keys,
@@ -255,10 +252,7 @@ object Etl {
     val e = Tables.events(s, d).select("event_id", "event_type", "value")
     e.repartition(64).write.mode("overwrite").parquet(frag)
     s.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(tight)
-    s.read.parquet(tight)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
-      .orderBy("event_type")
+    eventTypeTotals(s.read.parquet(tight))
   }
 
   /** Dynamic partition overwrite — the lakehouse partial-reload: a
@@ -276,10 +270,7 @@ object Etl {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("event_type").parquet(path)
-    s.read.parquet(path)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
-      .orderBy("event_type")
+    eventTypeTotals(s.read.parquet(path))
   }
 
   /** Bucket count of the GDPR layout. The eraser MUST hash with the
@@ -329,16 +320,26 @@ object Etl {
       .withColumn("bucket", pmod(col("user_id"), lit(GdprBuckets)))
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
     gdprErase(s, path, deleteIds)
-    s.read.parquet(path).groupBy("event_type")
-      .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"),
-        countDistinct(col("user_id")).as("n_users"))
+    totals(s.read.parquet(path).groupBy("event_type"),
+      extra = Seq(countDistinct(col("user_id")).as("n_users")))
       .orderBy("event_type")
   }
 
+  /** The grouped totals of an events-shaped frame: the row count (as
+    * `countAs`) and the exact decimal `sum_value`, then `extra`. */
+  def totals(g: RelationalGroupedDataset, countAs: String = "n",
+      extra: Seq[Column] = Nil): DataFrame =
+    g.agg(count(lit(1)).as(countAs), dsum2(col("value")).as("sum_value") +: extra: _*)
+
+  /** [[totals]] per event_type, ordered: the Scala twin of
+    * [[eventTypeTotalsSql]]. */
+  def eventTypeTotals(df: DataFrame): DataFrame =
+    totals(df.groupBy("event_type")).orderBy("event_type")
+
   /** Oracle of `etl_compaction`, `stream_snapshot_sink`, `stream_file_source`, `stream_incremental_resume` and `stream_dedup`. */
   val eventTypeTotalsSql: String =
-    """SELECT event_type, count(*) AS n,
-           CAST(sum(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
+    s"""SELECT event_type, count(*) AS n,
+           ${sqlSum2("value")} AS sum_value
          FROM events GROUP BY event_type ORDER BY event_type"""
 
   val specs: Seq[KeySpec] = Seq(
@@ -384,10 +385,10 @@ object Etl {
          FROM c WHERE rn = 1 AND op <> 'D' ORDER BY user_id""")
       .constructionJobsOk("applies the changelog to a staged table"),
     KeySpec.batch("etl_incremental_agg", etlIncrementalAgg, shuffles = 4,
-      """SELECT event_type,
+      s"""SELECT event_type,
            count(DISTINCT CAST(ts AS DATE)) AS n_partials,
            count(*) AS n,
-           CAST(sum(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
+           ${sqlSum2("value")} AS sum_value
          FROM events GROUP BY event_type ORDER BY event_type""")
       .constructionJobsOk("maintains a staged running-aggregate table"),
     KeySpec.batch("etl_scd2", etlScd2, shuffles = 2,
@@ -416,8 +417,8 @@ object Etl {
           SELECT event_id, event_type, value, z FROM zs
           WHERE abs(z) > 2.5 ORDER BY event_id"""),
     KeySpec.batch("sink_partitioned_scan", sinkPartitionedScan, shuffles = 2,
-      """SELECT event_type, count(*) AS n,
-           CAST(sum(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
+      s"""SELECT event_type, count(*) AS n,
+           ${sqlSum2("value")} AS sum_value
          FROM events WHERE event_type IN ('purchase', 'error')
          GROUP BY event_type ORDER BY event_type""")
       .constructionJobsOk("writes the partitioned layout it scans"),

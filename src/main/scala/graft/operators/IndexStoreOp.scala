@@ -46,15 +46,12 @@ import org.apache.spark.sql.functions._
 object IndexStoreOp {
 
   val etlIndexStore: QFn = (s, d) => {
-    import graft.Det._
     val fp = IndexStore.fingerprint(s"$d/events.parquet")
     val name = s"etl_index_store_v1_$fp"
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     def build(tmp: String): Unit = {
       builds.incrementAndGet()
-      Tables.events(s, d)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_events"), dsum2(col("value")).as("sum_value"))
+      Etl.totals(Tables.events(s, d).groupBy("event_type"), countAs = "n_events")
         .coalesce(1).write.parquet(tmp)
     }
     val p1 = IndexStore.cachedDir(name)(build)

@@ -713,11 +713,7 @@ object Relational {
       // saveAsTable fails with LOCATION_ALREADY_EXISTS
       val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
       Seq(tl, to).foreach { t =>
-        val dir = new java.io.File(wh, t)
-        if (dir.exists()) {
-          import scala.reflect.io.Directory
-          new Directory(dir).deleteRecursively()
-        }
+        graft.deleteTree(new java.io.File(wh, t).getPath)
       }
       Tables.lineitem(s, d).select("l_orderkey", "l_quantity")
         .write.mode("overwrite").format("parquet")
@@ -898,10 +894,7 @@ object Relational {
     Tables.events(s, d)
       .select("event_id", "event_type", "value")
       .write.mode("overwrite").partitionBy("event_type").parquet(path)
-    dppJoinOnly(s, d)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
-      .orderBy("event_type")
+    Etl.eventTypeTotals(dppJoinOnly(s, d))
   }
 
   /** The DPP join subplan (pre-aggregation), exposed for the spec.
@@ -927,8 +920,7 @@ object Relational {
     * a backfill and a quarantine column you can audit. */
   val scanCsvMalformed: QFn = (s, d) => {
     val path = Tables.sinkPath(s, d, "malformed_csv")
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(path)).deleteRecursively()
+    graft.deleteTree(path)
     Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice")
       .write.mode("overwrite").csv(path)
     java.nio.file.Files.write(
@@ -1512,11 +1504,11 @@ object Relational {
          FROM p JOIN dim ON k IS NOT DISTINCT FROM k2
          GROUP BY d_key ORDER BY d_key"""),
     KeySpec.batch("join_dpp", joinDpp, shuffles = 3,
-      """WITH dim AS (
+      s"""WITH dim AS (
            SELECT event_type AS dim_type, count(*) AS type_n
            FROM events GROUP BY event_type)
          SELECT e.event_type, count(*) AS n,
-           CAST(sum(CAST(e.value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
+           ${sqlSum2("e.value")} AS sum_value
          FROM events e JOIN dim ON e.event_type = dim.dim_type
          WHERE dim.dim_type IN ('purchase', 'error')
          GROUP BY e.event_type ORDER BY e.event_type""")

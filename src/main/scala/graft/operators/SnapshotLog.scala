@@ -182,8 +182,7 @@ object SnapshotLog {
   }
 
   private def build(s: SparkSession, d: String, root: String): Unit = {
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(root)).deleteRecursively()
+    graft.deleteTree(root)
     val cust = base(s, d)
     // v0..v7: one residue slice per commit — append-only deltas
     (0 until NSlices).foreach { k =>

@@ -36,8 +36,11 @@ package object graft {
 
   /** A fresh streaming checkpoint path in [[fastRunDir]]: unique per
     * call, so a run never resumes another run's offsets. */
-  def checkpointPath(tag: String): String =
-    s"$fastRunDir/ckpt/${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+  def checkpointPath(tag: String): String = s"$fastRunDir/ckpt/${uniqueName(tag)}"
+
+  /** `tag` plus a random hex suffix: a name no other call returns. */
+  private[graft] def uniqueName(tag: String): String =
+    s"${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
 
   /** Entries in Spark's generated-code cache
     * (`spark.sql.codegen.cache.maxEntries`). Spark's default of 100 is
@@ -104,7 +107,7 @@ package object graft {
   // or state store still writes into them.
   private lazy val runDirHook: Unit =
     org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
-      () => ownRunDirs.forEach(p => deleteTree(new java.io.File(p))), 30)
+      () => ownRunDirs.forEach(p => deleteTree(p)), 30)
 
   private def claimRunDir(root: String): String = {
     reapRunDirs(root)
@@ -129,9 +132,10 @@ package object graft {
           scala.util.Try(ProcessHandle.of(p)).map(h => h.isPresent && h.get.isAlive)
             .getOrElse(true)
         }
-        if (!alive) deleteTree(dir)
+        if (!alive) deleteTree(dir.getPath)
       }
 
-  private def deleteTree(f: java.io.File): Unit =
-    new scala.reflect.io.Directory(f).deleteRecursively()
+  /** Deletes `path` and everything under it; a missing path is a no-op. */
+  private[graft] def deleteTree(path: String): Unit =
+    new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
 }

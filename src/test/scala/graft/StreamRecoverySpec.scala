@@ -39,8 +39,8 @@ class StreamRecoverySpec extends SparkTestBase {
     * (one micro-batch each under maxFilesPerTrigger=1), plus an
     * optional far-future sealer row in its own trailing file so every
     * real event-time window closes in a data batch. Spec-scale
-    * only — the production feed staging is the distributed
-    * range-partitioned write in Streaming.stagedFeed. */
+    * only — the production feed staging, cut on minute boundaries,
+    * is Streaming.stagedFeed. */
   private def buildFeed(dir: String, sealer: Boolean): Unit = {
     import java.nio.file.{Files, Paths}
     import scala.reflect.io.Directory

@@ -161,6 +161,27 @@ class StreamingSpec extends SparkTestBase {
     } finally streaming.Streaming.trackStateRows = false
   }
 
+  test("the staged feed's chunk cuts depend only on the events") {
+    // (file, rows, min ts, max ts) of a fresh staging of the plain feed
+    def staged(): Seq[(String, Long, String, String)] = {
+      val dir = scratchDir("feed_cuts")
+      streaming.Streaming.writeFeed(spark, sf, flush = false, dir)
+      new java.io.File(dir).listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+        .sorted.toSeq.map { f =>
+          val r = spark.read.parquet(s"$dir/$f")
+            .agg(count(lit(1)), min("ts").cast("string"), max("ts").cast("string")).head()
+          (f, r.getLong(0), r.getString(1), r.getString(2))
+        }
+    }
+    val first = staged()
+    // a sampled range cut is seeded by the RDD id: move the id on
+    (1 to 17).foreach(i => spark.sparkContext.parallelize(1 to i))
+    val second = staged()
+    assert(first.size >= 2, s"the feed must replay in >= 2 micro-batches: $first")
+    assert(first.map(_._2).sum == Tables.events(spark, sf).count())
+    assert(first == second, s"two stagings of one table cut differently: $first vs $second")
+  }
+
   test("streaming keys equal their batch twins (dedup + stateful)") {
     val streamed = streaming.Streaming.streamDedup(spark, sf).collect()
     val batch = Tables.events(spark, sf).groupBy("event_type")
@@ -183,6 +204,28 @@ class StreamingSpec extends SparkTestBase {
         assert(math.abs(s.getDouble(2) - b.getDouble(2)) < 1e-9)
       }
     }
+
+    // MapState: the final per-(user, type) count is the batch count
+    val typeCounts = Tables.events(spark, sf).groupBy("user_id", "event_type")
+      .agg(count(lit(1)).as("n")).orderBy("user_id", "event_type").collect()
+    assert(streaming.Streaming.streamStatefulMap(spark, sf).collect().map(_.toString).toSeq ==
+      typeCounts.map(_.toString).toSeq)
+
+    // ListState: the final last-3 purchase mean per user, summed in
+    // exact decimal and divided once, as the processor does
+    import org.apache.spark.sql.expressions.Window
+    val recent = Tables.events(spark, sf).filter(col("event_type") === "purchase")
+      .withColumn("rn", row_number().over(Window.partitionBy("user_id")
+        .orderBy(col("ts").desc, col("event_id").desc)))
+      .withColumn("n_total", count(lit(1)).over(Window.partitionBy("user_id")))
+      .filter(col("rn") <= 3)
+      .groupBy("user_id", "n_total")
+      .agg(count(lit(1)).as("n_recent"),
+        (Det.dsum2(col("value")) / count(lit(1))).as("recent_mean"))
+      .orderBy("user_id").collect()
+    assert(recent.nonEmpty)
+    assert(streaming.Streaming.streamStatefulList(spark, sf).collect().map(_.toString).toSeq ==
+      recent.map(_.toString).toSeq)
   }
 
   test("outer stream join actually exercises the null-emission path") {

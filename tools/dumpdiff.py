@@ -22,9 +22,11 @@ any difference, a reworded oracle with equal results included.
 It is the only check that covers keys without a DuckDB oracle
 (`llm_near_dedup`, `stream_late_data`): tools/preflight.py compares
 each dump against its oracle, this script compares two trees' dumps.
-`stream_late_data` emits windows as micro-batches happen to fall, so
-compare dumps written on an otherwise idle machine: under load its
-rows can differ between two runs of the same tree.
+`stream_late_data` emits the windows that the staged feed's first
+file seals, so its rows follow that file's cut. Up to the v3 feed the
+cut came from a sampler seeded by the RDD id, and the rows followed
+whichever JVM staged the feed; the v4 feed cuts from per-minute
+counts, so its rows depend only on the events.
 """
 import json
 import os
