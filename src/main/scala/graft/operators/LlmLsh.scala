@@ -1,11 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{KeySpec, QFn, Tables}
-import graft.functions.CosineSimF
+import LlmSimilarity.{ProbeIds, ProbeInSql, knnRows, probeFrame, probeTopKSql}
 
 /** PORTABLE locality-sensitive hashing — the two LSH families whose
   * APPROXIMATE output is itself DuckDB-reproducible, closing the last
@@ -94,7 +93,7 @@ object LlmLsh {
     * corpus fraction, not rediscover brute force). */
   private[graft] def signCandidates(s: SparkSession, d: String): DataFrame = {
     val codes = signCodes(Tables.embeddings(s, d))
-    val probes = codes.filter(col("vec_id").isin(LlmSimilarity.ProbeIds: _*))
+    val probes = codes.filter(col("vec_id").isin(ProbeIds: _*))
       .select(col("vec_id").as("probe_id"), col("g"), col("code"))
     codes.join(broadcast(probes), Seq("g", "code"))
       .filter(col("vec_id") =!= col("probe_id"))
@@ -122,18 +121,8 @@ object LlmLsh {
     * (`llm_knn_ivf*`) is the production path. */
   val llmKnnSignLsh: QFn = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    val cands = signCandidates(s, d)
-    val probeVecs = emb.filter(col("vec_id").isin(LlmSimilarity.ProbeIds: _*))
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    cands.join(emb, "vec_id")
-      .join(broadcast(probeVecs), "probe_id")
-      .withColumn("sim", round(CosineSimF(col("probe_vec"), col("embedding")), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .select("probe_id", "rk", "vec_id", "sim")
-      .orderBy("probe_id", "rk")
+    knnRows(signCandidates(s, d).join(emb, "vec_id")
+      .join(broadcast(probeFrame(emb)), "probe_id"))
   }
 
   /** Oracle: same planes (as ±-strings, expanded per dimension), same
@@ -165,21 +154,10 @@ object LlmLsh {
             SELECT DISTINCT p.vec_id AS probe_id, c.vec_id AS vec_id
             FROM codes p JOIN codes c ON p.g = c.g AND p.code = c.code
               AND c.vec_id <> p.vec_id
-            WHERE p.vec_id IN (1, 2, 3, 4, 5)),
-          sims AS (
-            SELECT cand.probe_id, cand.vec_id,
-              round(
-                list_sum(list_transform(range(64), i -> CAST(p.embedding[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE)))
-                / (sqrt(list_sum(list_transform(range(64), i -> CAST(p.embedding[i+1] AS DOUBLE) * CAST(p.embedding[i+1] AS DOUBLE))))
-                   * sqrt(list_sum(list_transform(range(64), i -> CAST(e.embedding[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE))))), 6) AS sim
-            FROM cand
+            WHERE p.vec_id $ProbeInSql),
+          ${probeTopKSql("""cand
             JOIN embeddings p ON p.vec_id = cand.probe_id
-            JOIN embeddings e ON e.vec_id = cand.vec_id)
-          SELECT probe_id, rk, vec_id, sim FROM (
-            SELECT probe_id, vec_id, sim,
-              CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS INT) AS rk
-            FROM sims)
-          WHERE rk <= 5 ORDER BY probe_id, rk"""
+            JOIN embeddings e ON e.vec_id = cand.vec_id""")}"""
   }
 
   // ------------------------------------------------ portable MinHash

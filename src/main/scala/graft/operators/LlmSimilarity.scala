@@ -59,24 +59,51 @@ object LlmSimilarity {
   /** The probe vectors / documents every k-NN and retrieval key queries. */
   private[operators] val ProbeIds = Seq(1L, 2L, 3L, 4L, 5L)
 
+  /** The probe ids as a SQL `IN` list, for the oracles. Initialized
+    * before `permConsts` below starts LlmLsh, whose specs read it. */
+  private[operators] val ProbeInSql: String = ProbeIds.mkString("IN (", ", ", ")")
+
+  /** The probe rows of `emb` as (probe_id, `vec`); `vec` is by default
+    * the probe's embedding as `probe_vec`, the column [[cosineTopK]]
+    * scores. */
+  private[operators] def probeFrame(emb: DataFrame,
+      vec: Column = col("embedding").as("probe_vec")): DataFrame =
+    emb.filter(col("vec_id").isin(ProbeIds: _*))
+      .select(col("vec_id").as("probe_id"), vec)
+
+  /** Cosine top-k per probe, the one scoring kernel of the k-NN family:
+    * every (probe_id, probe_vec) × (vec_id, embedding) candidate row
+    * but a probe's own is scored with the round-6 [[CosineSimF]],
+    * ranked per probe by (sim desc, vec_id), and the first `k` ranks
+    * are kept with their `sim` and `rk`. Callers differ only in the
+    * candidate set: all pairs, the probed IVF lists, or the sign-LSH
+    * bucket collisions. */
+  private[operators] def cosineTopK(cands: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("probe_id")
+      .orderBy(col("sim").desc, col("vec_id"))
+    cands.filter(col("vec_id") =!= col("probe_id"))
+      .withColumn("sim", round(CosineSimF(col("probe_vec"), col("embedding")), 6))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= k)
+  }
+
+  /** The k-NN keys' result: [[cosineTopK]] at k = 5 as
+    * (probe_id, rk, vec_id, sim) in probe and rank order. */
+  private[operators] def knnRows(cands: DataFrame): DataFrame =
+    cosineTopK(cands, 5)
+      .select("probe_id", "rk", "vec_id", "sim")
+      .orderBy("probe_id", "rk")
+
+  /** All-pairs candidates: the probes broadcast against every corpus
+    * row, so the corpus is scanned once. */
+  private def allPairs(emb: DataFrame): DataFrame =
+    emb.crossJoin(broadcast(probeFrame(emb)))
+
   /** Brute-force cosine top-5 for 5 probe vectors: probes broadcast,
     * corpus scanned once, per-probe top-k via window. At 100 TB the
     * same plan holds — the corpus never shuffles except the final
     * k-rows-per-probe aggregation. */
-  val llmKnnCosine: QFn = (s, d) => {
-    val emb = Tables.embeddings(s, d)
-    val probes = emb.filter(col("vec_id").isin(ProbeIds: _*))
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    emb.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("sim", round(CosineSimF(col("probe_vec"), col("embedding")), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .select("probe_id", "rk", "vec_id", "sim")
-      .orderBy("probe_id", "rk")
-  }
+  val llmKnnCosine: QFn = (s, d) => knnRows(allPairs(Tables.embeddings(s, d)))
 
   /** IVF-bucketed ANN with a REAL k-means coarse quantizer: 64
     * centroids from six distributed Lloyd iterations
@@ -88,32 +115,44 @@ object LlmSimilarity {
     * knob, and FINER lists beat coarser at the same scan fraction —
     * K 16→64 at a fixed ~1/4 ratio lifted recall@5 0.72 → 0.92, and
     * nProbe 16→20 lifts it 0.92 → ≥0.96 while staying ≤ 35% scan;
-    * the r4 sweep showed extra Lloyd rounds buy nothing here). At
+    * a sweep showed extra Lloyd rounds buy nothing here). At
     * 100 TB the corpus would be written bucket-partitioned so a probe
     * reads only its lists' files. The spec asserts recall@5 ≥ 0.95
     * and prints the measured scan fraction. */
-  val llmKnnIvf: QFn = (s, d) => knnIvfWith(s, d, K = IvfK, nProbe = IvfNProbe, iters = 6)
+  val llmKnnIvf: QFn = (s, d) =>
+    ivfSearch(ivfQuantizer(s, d), Tables.embeddings(s, d), IvfNProbe)
 
-  /** The IVF machinery in EXACT mode (r4 verdict item 9): nProbe = K
-    * searches every inverted list, so the index must reproduce the
-    * brute-force top-k bit-for-bit — the same quantizer training,
-    * list assignment, probe routing, and scoring path as
-    * [[llmKnnIvf]], one config knob away, but ORACLED against the
-    * all-pairs cosine SQL. The approximate default stays spec-class
-    * (recall@5 gate) legitimately; this key pins the machinery. */
-  val llmKnnIvfExact: QFn = (s, d) => knnIvfWith(s, d, K = IvfK, nProbe = IvfK, iters = 6)
+  /** The IVF machinery in EXACT mode: nProbe = K searches every
+    * inverted list, so the index must reproduce the brute-force top-k
+    * bit-for-bit — the same quantizer training, list assignment,
+    * probe routing, and scoring path as [[llmKnnIvf]], one config knob
+    * away, but ORACLED against the all-pairs cosine SQL. The
+    * approximate default stays spec-class (recall@5 gate)
+    * legitimately; this key pins the machinery. */
+  val llmKnnIvfExact: QFn = (s, d) =>
+    ivfSearch(ivfQuantizer(s, d), Tables.embeddings(s, d), IvfK)
 
-  /** Trained coarse quantizer as a broadcastable (cent_id, cent_vec)
-    * frame — centroids back to float so the same codegen'd float-array
-    * cosine kernel scores vectors and centroids alike. */
-  private def ivfQuantizer(s: SparkSession, d: String, K: Int,
-      iters: Int): DataFrame = {
-    val km = Clustering.kmeans(s, d, iters = iters, K = K)._2
+  /** IVF tuning: K inverted lists, nProbe probed per query, and the
+    * Lloyd rounds that train the coarse quantizer. Shared by every IVF
+    * key, their oracles AND the recall spec's scan-budget assertion,
+    * so the spec gate tracks the real constants instead of a literal. */
+  val IvfK = 64
+  val IvfNProbe = 20
+  val IvfIters = 6
+
+  /** Centroids as a broadcastable (cent_id, cent_vec) frame — back to
+    * float so the same codegen'd float-array cosine kernel scores
+    * vectors and centroids alike. */
+  private def centFrame(s: SparkSession, cents: Array[Array[Double]]): DataFrame = {
     import s.implicits._
-    km.zipWithIndex
+    cents.zipWithIndex
       .map { case (c, i) => (i.toLong, c.map(_.toFloat)) }.toSeq
       .toDF("cent_id", "cent_vec")
   }
+
+  /** The trained coarse quantizer of the IVF keys. */
+  private def ivfQuantizer(s: SparkSession, d: String): DataFrame =
+    centFrame(s, Clustering.kmeans(s, d, iters = IvfIters, K = IvfK)._2)
 
   /** n nearest centroids per row — one flat (vector × centroid)
     * broadcast join: the cosine runs in ONE codegen'd expression per
@@ -128,90 +167,64 @@ object LlmSimilarity {
       .filter(col("cent_rk") <= n)
   }
 
+  /** Each (vec_id, embedding) row of `src` with its list, the nearest
+    * centroid, as `cluster`. */
+  private def ivfAssign(cents: DataFrame, src: DataFrame): DataFrame =
+    ivfNearest(cents, src, "embedding", "vec_id", 1)
+      .select(col("vec_id"), col("embedding"), col("cent_id").as("cluster"))
+
+  /** Each probe once per list it searches: its `nProbe` nearest
+    * centroids as `search_cluster`. */
   private def ivfProbes(cents: DataFrame, emb: DataFrame,
       nProbe: Int): DataFrame =
-    ivfNearest(cents,
-      emb.filter(col("vec_id").isin(ProbeIds: _*))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec")),
-      "probe_vec", "probe_id", nProbe)
+    ivfNearest(cents, probeFrame(emb), "probe_vec", "probe_id", nProbe)
       .select(col("probe_id"), col("probe_vec"), col("cent_id").as("search_cluster"))
 
-  /** Exact top-5 per probe over a (cluster, vec_id, embedding) corpus
-    * restricted to each probe's searched clusters. */
-  private def ivfTopK(corpus: DataFrame, probes: DataFrame): DataFrame = {
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("sim").desc, col("vec_id"))
+  /** The IVF candidate set: each probe against the
+    * (cluster, vec_id, embedding) rows of the lists it searches. */
+  private def ivfCandidates(corpus: DataFrame, probes: DataFrame): DataFrame =
     corpus.join(broadcast(probes), col("cluster") === col("search_cluster"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("sim", round(CosineSimF(col("probe_vec"), col("embedding")), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .select("probe_id", "rk", "vec_id", "sim")
-      .orderBy("probe_id", "rk")
+
+  /** The list layout at `path` read through a partition filter on the
+    * lists the probes search, so the scan touches only their files.
+    * The list set is ≤ 5 probes × nProbe ids of driver state — the
+    * only thing that leaves the cluster. */
+  private def probedLists(s: SparkSession, path: String,
+      probes: DataFrame): DataFrame = {
+    val searched = probes.select("search_cluster").distinct()
+      .collect().map(_.getLong(0))
+    s.read.parquet(path).filter(col("cluster").isin(searched: _*))
   }
 
-  /** Parameterized IVF body — K lists, nProbe probed, `iters` Lloyd
-    * rounds for the coarse quantizer. The scan fraction is ~nProbe/K;
-    * recall rises with both nProbe/K and quantizer quality. */
-  def knnIvfWith(s: SparkSession, d: String, K: Int, nProbe: Int,
-      iters: Int): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val cents = ivfQuantizer(s, d, K, iters)
-    val assigned = ivfNearest(cents, emb, "embedding", "vec_id", 1)
-      .select(col("vec_id"), col("embedding"), col("cent_id").as("cluster"))
-    ivfTopK(assigned, ivfProbes(cents, emb, nProbe))
-  }
+  /** IVF search over `emb` freshly assigned to the lists of `cents`,
+    * nProbe of them probed. The scan fraction is ~nProbe/K; recall
+    * rises with both nProbe/K and quantizer quality. */
+  private def ivfSearch(cents: DataFrame, emb: DataFrame, nProbe: Int): DataFrame =
+    knnRows(ivfCandidates(ivfAssign(cents, emb), ivfProbes(cents, emb, nProbe)))
 
-  /** IVF tuning: K inverted lists, nProbe probed per query. Shared by
-    * both IVF variants AND the recall spec's scan-budget assertion, so
-    * the spec gate tracks the real constants instead of a literal. */
-  val IvfK = 64
-  val IvfNProbe = 20
-
-  /** Partition-pruned files scanned by the last [[llmKnnIvfPruned]]
-    * run vs the total files in the layout — spec diagnostic. */
-  @volatile var lastIvfScan: (Long, Long) = (-1L, -1L)
-
-  /** Per-probe scan fraction of the last [[llmKnnIvfPruned]] run:
-    * (candidate rows scored across all probes, probes × corpus rows).
-    * The ratio is the fraction of the corpus each probe reads on
-    * average — the IVF cost knob the recall spec prints. Computing it
-    * costs extra Spark jobs, so it only runs when the spec asks
-    * ([[collectIvfDiagnostics]]) — bench runs skip it. */
-  @volatile var lastIvfScanRows: (Long, Long) = (-1L, -1L)
-  @volatile var collectIvfDiagnostics: Boolean = false
-
-  /** Written-layout memo: the cluster-partitioned parquet layout is a
-    * deterministic function of (dataset CONTENT, quantizer), and the
-    * quantizer is itself content-memoized — so the layout is written
-    * once PER MACHINE ([[IndexStore.cachedDir]]: built into a tmp dir,
-    * atomically renamed into place, keyed by the embeddings table's
-    * content fingerprint) and every later session re-probes the same
-    * files, exactly like a deployed IVF index (built offline, probed
-    * many times). r6 verdict #2: the previous (session, dataset) key
-    * rebuilt the layout every fresh session.
-    *
-    * Published location of the cluster-partitioned IVF layout for a
-    * dataset — the content-keyed [[IndexStore]] name; building it if
-    * absent. Exposed so diagnostics (ScaleRecallSpec's list-skew
+  /** Published location of the cluster-partitioned IVF layout for a
+    * dataset, building it if absent. The layout is a deterministic
+    * function of (dataset CONTENT, quantizer), and the quantizer is
+    * itself content-memoized, so it is written once PER MACHINE
+    * ([[IndexStore.cachedDir]]: built into a tmp dir, atomically
+    * renamed into place, keyed by the embeddings table's content
+    * fingerprint) and every later session re-probes the same files,
+    * exactly like a deployed IVF index (built offline, probed many
+    * times). Exposed so diagnostics (ScaleRecallSpec's list-skew
     * readout) inspect the SAME layout the pruned key probes instead
     * of guessing a path. */
   def ivfLayoutPath(s: SparkSession, d: String): String = {
-    val (kk, iters) = (IvfK, 6)
     val emb = Tables.embeddings(s, d)
-    val cents = ivfQuantizer(s, d, kk, iters)
+    val cents = ivfQuantizer(s, d)
     val fp = graft.IndexStore.fingerprint(s"$d/embeddings.parquet")
-    graft.IndexStore.cachedDir(s"ivf_layout_v1_${fp}_${kk}_$iters") { tmp =>
-      ivfNearest(cents, emb, "embedding", "vec_id", 1)
-        .select(col("vec_id"), col("embedding"), col("cent_id").as("cluster"))
-        .write.mode("overwrite").partitionBy("cluster").parquet(tmp)
+    graft.IndexStore.cachedDir(s"ivf_layout_v1_${fp}_${IvfK}_$IvfIters") { tmp =>
+      ivfAssign(cents, emb).write.mode("overwrite").partitionBy("cluster").parquet(tmp)
     }
   }
 
   /** The approximate pruned probe (nProbe = [[IvfNProbe]]) — what the
     * specs drive for the recall gate and the measured scan fraction
-    * (LlmSpec asserts files-read < files-total through the partition
-    * filter). */
+    * ([[ivfPrunedScan]]). */
   val llmKnnIvfPruned: QFn = (s, d) => llmKnnIvfPrunedWith(s, d, IvfNProbe)
 
   /** The REGISTERED pruned key runs the same partition-filtered
@@ -235,40 +248,39 @@ object LlmSimilarity {
     * IDENTICAL (spec-pinned); only the physical access path changes.
     * This is exactly how a 100 TB IVF index deploys on a data lake:
     * list = partition, probe = partition-pruned scan. */
-  def llmKnnIvfPrunedWith(s: SparkSession, d: String, nProbe: Int): DataFrame = {
-    val (kk, iters) = (IvfK, 6)
+  private def llmKnnIvfPrunedWith(s: SparkSession, d: String,
+      nProbe: Int): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val cents = ivfQuantizer(s, d, kk, iters)
+    val cents = ivfQuantizer(s, d)
     val path = ivfLayoutPath(s, d)
     val probes = ivfProbes(cents, emb, nProbe)
-    // the probe batch's list set: ≤ 5 probes × nProbe ids of driver
-    // state — the only thing that leaves the cluster
-    val searched = probes.select("search_cluster").distinct()
-      .collect().map(_.getLong(0))
-    val corpus = s.read.parquet(path)
-      .filter(col("cluster").isin(searched: _*))
-    if (collectIvfDiagnostics) {
-      lastIvfScan = (corpus.inputFiles.length.toLong,
-        s.read.parquet(path).inputFiles.length.toLong)
-      // per-probe candidate volume: rows each probe actually scores /
-      // (probes × corpus) — the average per-probe scan fraction
-      lastIvfScanRows = (
-        corpus.join(broadcast(probes), col("cluster") === col("search_cluster"))
-          .count(),
-        probes.select("probe_id").distinct().count() * emb.count())
-    }
-    ivfTopK(corpus, probes)
+    knnRows(ivfCandidates(probedLists(s, path, probes), probes))
   }
 
-  /** INGESTION-MODE IVF maintenance (r11 verdict #4) — the
-    * corpus-append path a production index runs between retrains: the
-    * coarse quantizer is trained ONCE on the BASE corpus
-    * (vec_id % 10 ≠ [[IvfAppendMod]], the pre-existing index),
-    * persisted ([[graft.IndexStore]]), and the delta batch
-    * (vec_id % 10 = [[IvfAppendMod]], the day's ingest) is assigned to
-    * the FIXED stored centroids and appended into the same
-    * cluster-partitioned list layout — `mode("append")` +
-    * `partitionBy(cluster)`: new files inside existing list
+  /** What the approximate pruned probe ([[llmKnnIvfPruned]]) reads:
+    * (layout files read through the partition filter, layout files in
+    * all, candidate rows scored across all probes, probes × corpus
+    * rows). The last two give the average per-probe scan fraction —
+    * the IVF cost knob the specs print. It costs extra Spark jobs, so
+    * only the specs call it. */
+  private[graft] def ivfPrunedScan(s: SparkSession, d: String): (Long, Long, Long, Long) = {
+    val emb = Tables.embeddings(s, d)
+    val path = ivfLayoutPath(s, d)
+    val probes = ivfProbes(ivfQuantizer(s, d), emb, IvfNProbe)
+    val corpus = probedLists(s, path, probes)
+    (corpus.inputFiles.length.toLong, s.read.parquet(path).inputFiles.length.toLong,
+      ivfCandidates(corpus, probes).count(),
+      probes.select("probe_id").distinct().count() * emb.count())
+  }
+
+  /** INGESTION-MODE IVF maintenance — the corpus-append path a
+    * production index runs between retrains: the coarse quantizer is
+    * trained ONCE on the BASE corpus (vec_id % 10 ≠ [[IvfAppendMod]],
+    * the pre-existing index), persisted ([[graft.IndexStore]]), and
+    * the delta batch (vec_id % 10 = [[IvfAppendMod]], the day's
+    * ingest) is assigned to the FIXED stored centroids and appended
+    * into the same cluster-partitioned list layout — `mode("append")`
+    * + `partitionBy(cluster)`: new files inside existing list
     * directories, no retraining, no rewrite of the base layout. The
     * query then probes the union through the same partition filter as
     * [[llmKnnIvfPruned]]. Pairs with `llm_incremental_dedup` as the
@@ -293,13 +305,10 @@ object LlmSimilarity {
     val fp = graft.IndexStore.fingerprint(s"$d/embeddings.parquet")
     // train-once on the base slice, content-memoized like the main
     // quantizer; the append path below must never retrain
-    val cents = graft.IndexStore.cached(
-      s"ivf_append_quantizer_v1_${fp}_${IvfK}_6") {
-      Clustering.kmeansOn(s, base, iters = 6, K = IvfK)._2
-    }
-    import s.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i.toLong, c.map(_.toFloat)) }
-      .toSeq.toDF("cent_id", "cent_vec")
+    centFrame(s, graft.IndexStore.cached(
+      s"ivf_append_quantizer_v1_${fp}_${IvfK}_$IvfIters") {
+      Clustering.kmeansOn(s, base, iters = IvfIters, K = IvfK)._2
+    })
   }
 
   /** Base layout written once, delta appended once — both against the
@@ -308,16 +317,13 @@ object LlmSimilarity {
     val emb = Tables.embeddings(s, d)
     val cents = ivfAppendCents(s, d)
     val fp = graft.IndexStore.fingerprint(s"$d/embeddings.parquet")
-    graft.IndexStore.cachedDir(s"ivf_append_layout_v1_${fp}_${IvfK}_6") { tmp =>
-      def assign(slice: DataFrame): DataFrame =
-        ivfNearest(cents, slice, "embedding", "vec_id", 1)
-          .select(col("vec_id"), col("embedding"), col("cent_id").as("cluster"))
+    graft.IndexStore.cachedDir(s"ivf_append_layout_v1_${fp}_${IvfK}_$IvfIters") { tmp =>
       // the pre-existing index: base corpus, cluster-partitioned
-      assign(emb.filter(pmod(col("vec_id"), lit(10)) =!= IvfAppendMod))
+      ivfAssign(cents, emb.filter(pmod(col("vec_id"), lit(10)) =!= IvfAppendMod))
         .write.mode("overwrite").partitionBy("cluster").parquet(tmp)
       // the ingest batch: assigned to the SAME fixed centroids and
       // APPENDED — new files land inside existing list directories
-      assign(emb.filter(pmod(col("vec_id"), lit(10)) === IvfAppendMod))
+      ivfAssign(cents, emb.filter(pmod(col("vec_id"), lit(10)) === IvfAppendMod))
         .write.mode("append").partitionBy("cluster").parquet(tmp)
     }
   }
@@ -326,23 +332,13 @@ object LlmSimilarity {
     * scoring over the union assigned in ONE shot against the stored
     * base-trained quantizer — no layout, no append step.
     * [[llmKnnIvfAppend]] must equal this exactly (IvfAppendSpec). */
-  private[graft] def ivfAppendOneShot(s: SparkSession, d: String): DataFrame = {
-    val cents = ivfAppendCents(s, d)
-    val emb = Tables.embeddings(s, d)
-    val assigned = ivfNearest(cents, emb, "embedding", "vec_id", 1)
-      .select(col("vec_id"), col("embedding"), col("cent_id").as("cluster"))
-    ivfTopK(assigned, ivfProbes(cents, emb, IvfNProbe))
-  }
+  private[graft] def ivfAppendOneShot(s: SparkSession, d: String): DataFrame =
+    ivfSearch(ivfAppendCents(s, d), Tables.embeddings(s, d), IvfNProbe)
 
   val llmKnnIvfAppend: QFn = (s, d) => {
     val cents = ivfAppendCents(s, d)
     val probes = ivfProbes(cents, Tables.embeddings(s, d), IvfNProbe)
-    // ≤ 5 probes × nProbe list ids of driver state, like the pruned key
-    val searched = probes.select("search_cluster").distinct()
-      .collect().map(_.getLong(0))
-    val corpus = s.read.parquet(ivfAppendLayoutPath(s, d))
-      .filter(col("cluster").isin(searched: _*))
-    ivfTopK(corpus, probes)
+    knnRows(ivfCandidates(probedLists(s, ivfAppendLayoutPath(s, d), probes), probes))
   }
 
   /** PQ tuning: m subspaces × dsub dims, `codes`-entry codebooks,
@@ -369,7 +365,7 @@ object LlmSimilarity {
     * lands recall@5 ≈ 0.28 on this corpus; the 100-candidate exact
     * re-rank recovers what the shortlist retains — recall@5 0.92
     * (spec-gated ≥ 0.85). Approximate by construction (quantization
-    * error) — but since r11 FULLY ORACLED anyway: the codebook
+    * error) — but FULLY ORACLED anyway: the codebook
     * training is exact integer arithmetic and the ADC fold is
     * order-pinned, so [[pqOracleSql]] re-derives the same approximate
     * two-stage ranking in DuckDB and the key hash-matches. The spec
@@ -384,54 +380,34 @@ object LlmSimilarity {
         explode(sequence(lit(0), lit(m - 1))).as("sub"), col("embedding"))
         .select(col(idCol), col("sub"),
           expr(s"slice(embedding, sub * $dsub + 1, $dsub)").as("sv"))
-    // train all m sub-codebooks JOINTLY — per Lloyd round: ONE corpus
-    // pass assigns every (vector, subspace) pair against its
-    // subspace's codebook and ONE micro-unit integer aggregate
-    // (m × codes × dsub rows) updates every codebook. m separate
-    // kmeansOn loops cost m× the driver-synchronized jobs for the
-    // same math (7.2 s → ~2.5 s at sf0.1); exact integer means keep
-    // the result executor-count-invariant like Clustering.kmeansOn.
+    // train all m sub-codebooks JOINTLY on Clustering's Lloyd kernel —
+    // per round ONE corpus pass assigns every (vector, subspace) pair
+    // against its subspace's codebook and ONE micro-unit integer
+    // aggregate (m × codes × dsub rows) updates every codebook. m
+    // separate kmeansOn loops cost m× the driver-synchronized jobs for
+    // the same math (7.2 s → ~2.5 s at sf0.1); exact integer means
+    // keep the result executor-count-invariant like k-means.
     val subvAll = subvectors(emb, "vec_id")
     val wAsg = Window.partitionBy("vec_id", "sub").orderBy("d2", "code")
     def assignWith(books: Array[(Int, Int, Array[Double])]): DataFrame =
       subvAll.join(broadcast(books.toSeq.toDF("sub", "code", "cvec")), Seq("sub"))
         .withColumn("d2", graft.functions.SqEuclidFD(col("sv"), col("cvec")))
         .withColumn("rk", row_number().over(wAsg)).filter(col("rk") === 1)
-    // codebooks are content-keyed and persisted (r6 verdict #2): a
-    // fresh session reads the trained books instead of re-running the
-    // 3-round joint training — the offline-index production shape.
+    // codebooks are content-keyed and persisted: a fresh session reads
+    // the trained books instead of re-running the 3-round joint
+    // training — the offline-index production shape.
     // Rows flatten as [sub, code, v...]; IEEE bits round-trip exactly.
     val fp = graft.IndexStore.fingerprint(s"$d/embeddings.parquet")
     val flat = graft.IndexStore.cached(s"pq_books_v1_${fp}_${m}_$codes") {
-      // seeds: the same deterministic arithmetic subsample, sliced;
-      // same empty-subsample fallback as Clustering.kmeansOn: a corpus
-      // smaller than the stride must still seed the codebook
-      val seedVecs = {
-        val sub = emb.filter(pmod(col("vec_id"), lit(17)) === 3)
-          .orderBy("vec_id").limit(codes).select("embedding").collect()
-        if (sub.nonEmpty) sub
-        else emb.orderBy("vec_id").limit(codes).select("embedding").collect()
-      }
-      require(seedVecs.nonEmpty, "PQ: empty corpus — cannot seed codebooks")
-      var cents: Array[(Int, Int, Array[Double])] = seedVecs
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+      // seeds: the k-means seed vectors, sliced per subspace
+      var cents: Array[(Int, Int, Array[Double])] = Clustering.seedVectors(emb, codes)
         .zipWithIndex.flatMap { case (v, code) =>
           (0 until m).map(sub => (sub, code, v.slice(sub * dsub, (sub + 1) * dsub)))
         }
       (0 until PqRounds).foreach { _ =>
         val next = cents.map { case (s0, c0, v) => ((s0, c0), v.clone) }.toMap
-        assignWith(cents)
-          .select(col("sub"), col("code"), posexplode(col("sv")))
-          .select(col("sub"), col("code"), col("pos"),
-            floor(col("col").cast("double") * 1000000.0).cast("long").as("q"))
-          .groupBy("sub", "code", "pos")
-          .agg(sum("q").as("sq"), count(lit(1)).as("n"))
-          .collect().foreach { r =>
-            val key = (r.getInt(0), r.getInt(1)); val p = r.getInt(2)
-            val sq = r.getLong(3); val n = r.getLong(4)
-            val half = if (sq >= 0) n / 2 else -(n / 2)
-            next(key)(p) = ((sq + half) / n).toDouble / 1000000.0
-          }
+        Clustering.lloydMeans(assignWith(cents), Seq("sub", "code"), "sv")
+          .foreach { case (Seq(s0, c0), p, mean) => next((s0, c0))(p) = mean }
         cents = next.toArray.map { case ((s0, c0), v) => (s0, c0, v) }
           .sortBy(t => (t._1, t._2))
       }
@@ -444,9 +420,7 @@ object LlmSimilarity {
     // assignment pass against the trained books
     val encoded = assignWith(cents).select("vec_id", "sub", "code")
     // per-probe ADC lookup tables: m × 16 distances each
-    val luts = subvectors(
-      emb.filter(col("vec_id").isin(ProbeIds: _*))
-        .withColumnRenamed("vec_id", "probe_id"), "probe_id")
+    val luts = subvectors(probeFrame(emb, col("embedding")), "probe_id")
       .join(bookDf, Seq("sub"))
       .select(col("probe_id"), col("sub"), col("code"),
         graft.functions.SqEuclidFD(col("sv"), col("cvec")).as("dlut"))
@@ -455,7 +429,7 @@ object LlmSimilarity {
     // sub order (sort + sequential HOF fold) instead of an unordered
     // sum — a plain sum's partial-merge order varies with
     // partitioning, and the DuckDB oracle replays this exact
-    // sub-0..m-1 left fold (r10 verdict #1: the PQ key is oracled)
+    // sub-0..m-1 left fold
     val shortlist = encoded.join(broadcast(luts), Seq("sub", "code"))
       .filter(col("vec_id") =!= col("probe_id"))
       .groupBy("probe_id", "vec_id")
@@ -466,9 +440,7 @@ object LlmSimilarity {
       .filter(col("adc_rk") <= PqShortlist)
       .select("probe_id", "vec_id", "adc")
     // exact re-rank: only the 100-row shortlist touches full vectors
-    val probeVecs = emb.filter(col("vec_id").isin(ProbeIds: _*))
-      .select(col("vec_id").as("probe_id"),
-        col("embedding").cast("array<double>").as("pv"))
+    val probeVecs = probeFrame(emb, col("embedding").cast("array<double>").as("pv"))
     val wTop = Window.partitionBy("probe_id").orderBy("d2", "vec_id")
     shortlist
       .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
@@ -494,9 +466,9 @@ object LlmSimilarity {
     * the vector side, and the fusion joins two ≤(probes × 20)-row
     * lists. */
   val llmHybridSearch: QFn = (s, d) => {
-    // parallelizeKernel (r15): the tokenize + explode feeding the tf
-    // table ran on the single-task local scan (18 single-
-    // task stages); a no-op at production split counts
+    // parallelizeKernel: the tokenize + explode feeding the tf table
+    // would run on the single-task local scan (18 single-task
+    // stages); a no-op at production split counts
     val docs = Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")
       .select(col("doc_id"), words.as("w"))
     val terms = docs.select(col("doc_id"), explode(col("w")).as("t"))
@@ -522,16 +494,8 @@ object LlmSimilarity {
     val wLex = Window.partitionBy("probe_id").orderBy(col("bm25").desc, col("doc_id"))
     val lex = scored.withColumn("lex_rk", row_number().over(wLex))
       .filter(col("lex_rk") <= 20).select("probe_id", "doc_id", "lex_rk")
-    val emb = Tables.embeddings(s, d)
-    val probesV = emb.filter(col("vec_id").isin(ProbeIds: _*))
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-    val wVec = Window.partitionBy("probe_id").orderBy(col("sim").desc, col("vec_id"))
-    val vec = emb.crossJoin(broadcast(probesV))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("sim", round(CosineSimF(col("pv"), col("embedding")), 6))
-      .withColumn("vec_rk", row_number().over(wVec))
-      .filter(col("vec_rk") <= 20)
-      .select(col("probe_id"), col("vec_id").as("doc_id"), col("vec_rk"))
+    val vec = cosineTopK(allPairs(Tables.embeddings(s, d)), 20)
+      .select(col("probe_id"), col("vec_id").as("doc_id"), col("rk").as("vec_rk"))
     val wFuse = Window.partitionBy("probe_id").orderBy(col("rrf").desc, col("doc_id"))
     lex.join(vec, Seq("probe_id", "doc_id"), "full_outer")
       .select(col("probe_id"), col("doc_id"),
@@ -556,15 +520,7 @@ object LlmSimilarity {
     * diversity strictly improves on the plain top-5. */
   val llmRerankMmr: QFn = (s, d) => {
     val lambda = 0.7
-    val emb = Tables.embeddings(s, d)
-    val probesV = emb.filter(col("vec_id").isin(ProbeIds: _*))
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-    val wVec = Window.partitionBy("probe_id").orderBy(col("sim").desc, col("vec_id"))
-    val top20 = emb.crossJoin(broadcast(probesV))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("sim", round(CosineSimF(col("pv"), col("embedding")), 6))
-      .withColumn("rk", row_number().over(wVec))
-      .filter(col("rk") <= 20)
+    val top20 = cosineTopK(allPairs(Tables.embeddings(s, d)), 20)
       .select(col("probe_id"), col("vec_id"), col("sim"), col("embedding"))
     import s.implicits._
     def cosLocal(a: Array[Float], b: Array[Float]): Double = {
@@ -1179,8 +1135,12 @@ object LlmSimilarity {
       col("label"), col("cell").as("ca"))
     val y = assigned.select(col("vec_id").as("b"), col("embedding").as("eb"),
       col("label").as("lb"), col("cell").as("cy"))
+    // the merge hint keeps the planned sort-merge join: without it AQE
+    // broadcasts y once y's shuffle stage finishes, and drops x's
+    // exchange only if x's stage has not finished yet, so the same
+    // code ran 2 or 3 shuffles from run to run
     val pairs = x.join(admDf, "ca")
-      .join(y, col("cb") === col("cy") && col("label") === col("lb") &&
+      .join(y.hint("merge"), col("cb") === col("cy") && col("label") === col("lb") &&
         col("a") < col("b"))
       .withColumn("cos_sim", round(CosineSimF(col("ea"), col("eb")), 6))
       .filter(col("cos_sim") >= tau)
@@ -1218,44 +1178,61 @@ object LlmSimilarity {
     aggregate(transform(a, x => x.cast("double")), lit(0.0), (acc, x) => acc + x)
 
   /** DuckDB twin of the double-precision cosine fold ([[CosineSimF]]):
-    * dot and norms accumulated over the zipped lists in order, so the
-    * doubles match the codegen'd loop bit-for-bit. */
-  private def cosdSql(a: String, b: String): String =
-    s"""(list_sum(list_transform(range(64), i -> CAST($a[i+1] AS DOUBLE) * CAST($b[i+1] AS DOUBLE)))
-        / (sqrt(list_sum(list_transform(range(64), i -> CAST($a[i+1] AS DOUBLE) * CAST($a[i+1] AS DOUBLE))))
-           * sqrt(list_sum(list_transform(range(64), i -> CAST($b[i+1] AS DOUBLE) * CAST($b[i+1] AS DOUBLE))))))"""
+    * dot and norms accumulated over the 64 float elements of `a` and
+    * `b` cast to double, in order, so the doubles match the codegen'd
+    * loop bit-for-bit. The cast is a no-op on a DOUBLE list. The one
+    * place the fold is written (GraftSessionSpec guards it). */
+  private[operators] def cosSql(a: String, b: String): String = {
+    def dot(x: String, y: String): String =
+      s"list_sum(list_transform(range(64), i -> CAST($x[i+1] AS DOUBLE) * CAST($y[i+1] AS DOUBLE)))"
+    s"""(${dot(a, b)}
+        / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))"""
+  }
 
-  /** DuckDB twin of the FULL approximate IVF path (r10 verdict #1 —
-    * the emit-the-training-into-the-SQL move that oracled
-    * `llm_knn_signlsh`): the coarse quantizer's six Lloyd rounds are
-    * unrolled via [[Clustering.lloydCtes]] (exact micro-unit integer
-    * means, so the trained centroids are engine-reproducible
-    * constants DERIVED inside the oracle rather than pasted), the
-    * trained double centroids are cast to FLOAT exactly as
-    * [[ivfQuantizer]] does (IEEE round-to-nearest in both engines),
-    * and then the probe routing (top-nProbe lists by round-6 cosine),
-    * the corpus assignment (top-1 list by the same cosine), the
-    * candidate equi-join, and the round-6 float-cosine re-rank are
-    * replayed verbatim. Every double is an order-pinned list fold
-    * (the proven signlsh/brute-force pattern), so the APPROXIMATE
-    * result itself hash-matches — nProbe is a constant in the SQL,
-    * not a tolerance.
+  /** [[cosSql]] rounded to 6 places, like the engine's `sim` columns. */
+  private[operators] def simSql(a: String, b: String): String =
+    s"round(${cosSql(a, b)}, 6)"
+
+  /** Twin of [[knnRows]]: the `sims` CTE scores every (probe `p`,
+    * candidate `e`) row of `pairs` with [[simSql]], then the top-5 per
+    * probe by (sim desc, vec_id) is selected in probe and rank order.
+    * Closes a WITH clause. */
+  private[operators] def probeTopKSql(pairs: String): String =
+    s"""sims AS (
+            SELECT p.vec_id AS probe_id, e.vec_id AS vec_id,
+              ${simSql("p.embedding", "e.embedding")} AS sim
+            FROM $pairs)
+          SELECT probe_id, rk, vec_id, sim FROM (
+            SELECT probe_id, vec_id, sim,
+              CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS INT) AS rk
+            FROM sims)
+          WHERE rk <= 5 ORDER BY probe_id, rk"""
+
+  /** All-pairs candidates of the brute-force twin: every probe `p`
+    * against every other row `e`. */
+  private val allPairsSql: String =
+    s"embeddings p JOIN embeddings e ON e.vec_id <> p.vec_id WHERE p.vec_id $ProbeInSql"
+
+  /** DuckDB twin of the FULL approximate IVF path: the coarse
+    * quantizer's [[IvfIters]] Lloyd rounds are unrolled via
+    * [[Clustering.lloydCtes]] (exact micro-unit integer means, so the
+    * trained centroids are engine-reproducible constants DERIVED
+    * inside the oracle rather than pasted), the trained double
+    * centroids are cast to FLOAT exactly as [[centFrame]] does (IEEE
+    * round-to-nearest in both engines), and then the probe routing
+    * (top-nProbe lists by round-6 cosine), the corpus assignment
+    * (top-1 list by the same cosine), the candidate equi-join, and the
+    * round-6 float-cosine re-rank are replayed verbatim. Every double
+    * is an order-pinned list fold, so the APPROXIMATE result itself
+    * hash-matches — nProbe is a constant in the SQL, not a tolerance.
     *
-    * `trainWhere` (r12, the append key): an optional WHERE clause
+    * `trainWhere` (the append key): an optional WHERE clause
     * restricting the Lloyd TRAINING corpus (`emb` CTE) to the base
     * slice, while assignment/probing/scoring still run over the full
     * `emball` — the SQL replay of train-on-base / assign-everything.
     * Empty (the default) makes emb ≡ emball: the original oracle. */
-  private def ivfOracleSql(nProbe: Int, iters: Int,
-      trainWhere: String = ""): String = {
-    val (lloyd, lastCents) = Clustering.lloydCtes(IvfK, iters)
-    // cosine(float-array e, double-from-float centroid c) — the exact
-    // CosineSimF fold: per-element float→double, sequential sum
-    def centCos(e: String, c: String): String =
-      s"""round(
-            list_sum(list_transform(range(64), i -> CAST($e.embedding[i+1] AS DOUBLE) * $c.cvec[i+1]))
-            / (sqrt(list_sum(list_transform(range(64), i -> CAST($e.embedding[i+1] AS DOUBLE) * CAST($e.embedding[i+1] AS DOUBLE))))
-               * sqrt(list_sum(list_transform(range(64), i -> $c.cvec[i+1] * $c.cvec[i+1])))), 6)"""
+  private def ivfOracleSql(nProbe: Int, trainWhere: String = ""): String = {
+    val (lloyd, lastCents) = Clustering.lloydCtes(IvfK, IvfIters)
     s"""WITH emball AS (SELECT vec_id, embedding FROM embeddings),
           emb AS (SELECT vec_id, embedding FROM emball $trainWhere),
           $lloyd,
@@ -1264,7 +1241,7 @@ object LlmSimilarity {
               list_transform(cent, x -> CAST(CAST(x AS FLOAT) AS DOUBLE)) AS cvec
             FROM $lastCents),
           csim AS (
-            SELECT e.vec_id, c.cent_id, ${centCos("e", "c")} AS cs
+            SELECT e.vec_id, c.cent_id, ${simSql("e.embedding", "c.cvec")} AS cs
             FROM emball e CROSS JOIN centf c),
           assign AS (
             SELECT vec_id, cent_id AS cluster FROM (
@@ -1275,88 +1252,43 @@ object LlmSimilarity {
             SELECT vec_id AS probe_id, cent_id AS search_cluster FROM (
               SELECT vec_id, cent_id,
                 row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cent_id) AS rk
-              FROM csim WHERE vec_id IN (1, 2, 3, 4, 5)) WHERE rk <= $nProbe),
+              FROM csim WHERE vec_id $ProbeInSql) WHERE rk <= $nProbe),
           cand AS (
             SELECT DISTINCT p.probe_id, a.vec_id
             FROM plists p JOIN assign a ON a.cluster = p.search_cluster
             WHERE a.vec_id <> p.probe_id),
-          sims AS (
-            SELECT cand.probe_id, cand.vec_id,
-              round(
-                list_sum(list_transform(range(64), i -> CAST(p.embedding[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE)))
-                / (sqrt(list_sum(list_transform(range(64), i -> CAST(p.embedding[i+1] AS DOUBLE) * CAST(p.embedding[i+1] AS DOUBLE))))
-                   * sqrt(list_sum(list_transform(range(64), i -> CAST(e.embedding[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE))))), 6) AS sim
-            FROM cand
+          ${probeTopKSql("""cand
             JOIN emball p ON p.vec_id = cand.probe_id
-            JOIN emball e ON e.vec_id = cand.vec_id)
-          SELECT probe_id, rk, vec_id, sim FROM (
-            SELECT probe_id, vec_id, sim,
-              CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS INT) AS rk
-            FROM sims)
-          WHERE rk <= 5 ORDER BY probe_id, rk"""
+            JOIN emball e ON e.vec_id = cand.vec_id""")}"""
   }
 
-  /** DuckDB twin of the FULL IVF-PQ path (r10 verdict #1, second
-    * half): the joint codebook training is unrolled — [[PqRounds]]
-    * rounds of (assign every (vector, subspace) to its argmin
-    * codeword by the order-pinned d2 fold, update each codeword as
-    * the exact micro-unit integer mean with carry-over) from the
-    * same deterministic seed subsample — then the encode pass, the
-    * per-probe LUT, the ADC sum in pinned sub order (the engine's
-    * sort+fold), the top-[[PqShortlist]] shortlist, and the exact
-    * float-double re-rank are replayed. Every double either comes
-    * from exact integer math or an order-pinned list fold, so the
-    * two-stage APPROXIMATE ranking hash-matches end to end. */
+  /** DuckDB twin of the FULL IVF-PQ path: the joint codebook training
+    * is unrolled — [[PqRounds]] rounds of (assign every (vector,
+    * subspace) to its argmin codeword by the order-pinned d2 fold,
+    * update each codeword by [[Clustering.updateSql]]) from the
+    * k-means seed vectors ([[Clustering.seedCtes]]) — then the encode
+    * pass, the per-probe LUT, the ADC sum in pinned sub order (the
+    * engine's sort+fold), the top-[[PqShortlist]] shortlist, and the
+    * exact float-double re-rank are replayed. Every double either
+    * comes from exact integer math or an order-pinned list fold, so
+    * the two-stage APPROXIMATE ranking hash-matches end to end. */
   private def pqOracleSql: String = {
-    // d2(sv FLOAT list, cvec DOUBLE list) — SqEuclidFD's sequential
-    // fold: per element (float→double − double)², left-to-right sum
-    def d2(sv: String, cvec: String): String =
-      s"""list_aggregate(list_transform(list_zip($sv, $cvec),
-            p -> (CAST(p[1] AS DOUBLE) - p[2]) * (CAST(p[1] AS DOUBLE) - p[2])), 'sum')"""
+    import Clustering.d2Sql
     def asgSql(books: String): String =
       s"""SELECT vec_id, sub, sv, code FROM (
             SELECT v.vec_id, v.sub, v.sv, b.code,
               row_number() OVER (PARTITION BY v.vec_id, v.sub
-                ORDER BY ${d2("v.sv", "b.cvec")}, b.code) AS rk
+                ORDER BY ${d2Sql("v.sv", "b.cvec")}, b.code) AS rk
             FROM sv v JOIN $books b ON b.sub = v.sub) WHERE rk = 1"""
-    def updSql(asg: String, prev: String): String =
-      s"""SELECT p.sub, p.code,
-            list(coalesce(CAST(m.next_q AS DOUBLE) / 1000000.0, p.c)
-                 ORDER BY p.pos) AS cvec
-          FROM (SELECT sub, code, generate_subscripts(cvec, 1) AS pos,
-                  unnest(cvec) AS c FROM $prev) p
-          LEFT JOIN (
-            SELECT sub, code, pos,
-              CASE WHEN sq + half >= 0 THEN (sq + half) // n
-                   ELSE -((-(sq + half)) // n) END AS next_q
-            FROM (
-              SELECT sub, code, pos, sum(q) AS sq, count(*) AS n,
-                CASE WHEN sum(q) >= 0 THEN count(*) // 2 ELSE -(count(*) // 2) END AS half
-              FROM (SELECT sub, code, generate_subscripts(sv, 1) AS pos,
-                      CAST(floor(CAST(unnest(sv) AS DOUBLE) * 1000000.0) AS BIGINT) AS q
-                    FROM $asg)
-              GROUP BY sub, code, pos)) m
-          ON p.sub = m.sub AND p.code = m.code AND p.pos = m.pos
-          GROUP BY p.sub, p.code"""
     val rounds = (1 to PqRounds).map { r =>
       val prev = if (r == 1) "books0" else s"books${r - 1}"
       s"""pasg$r AS (${asgSql(prev)}),
-          books$r AS (${updSql(s"pasg$r", prev)})"""
+          books$r AS (${Clustering.updateSql(s"pasg$r", prev, Seq("sub", "code"), "cvec", "sv")})"""
     }.mkString(",\n          ")
     val lastBooks = s"books$PqRounds"
     s"""WITH emb AS (SELECT vec_id, embedding FROM embeddings),
           subs AS (SELECT unnest(range($PqM)) AS sub),
-          seed_src AS (
-            -- same fallback as the engine: empty arithmetic subsample
-            -- seeds from the first `codes` vec_ids instead
-            SELECT vec_id, embedding FROM emb WHERE vec_id % 17 = 3
-            UNION ALL
-            SELECT vec_id, embedding FROM emb
-            WHERE NOT EXISTS (SELECT 1 FROM emb WHERE vec_id % 17 = 3)),
-          pseed AS (
-            SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
-              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM seed_src ORDER BY vec_id LIMIT $PqCodes),
+          ${Clustering.seedCtes("pseed", "code", "v", PqCodes)},
           books0 AS (
             SELECT s.sub, p.code,
               list_slice(p.v, s.sub * $PqDsub + 1, s.sub * $PqDsub + $PqDsub) AS cvec
@@ -1369,9 +1301,9 @@ object LlmSimilarity {
           enc AS (SELECT vec_id, sub, code FROM (${asgSql(lastBooks)})),
           lut AS (
             SELECT v.vec_id AS probe_id, v.sub, b.code,
-              ${d2("v.sv", "b.cvec")} AS dlut
+              ${d2Sql("v.sv", "b.cvec")} AS dlut
             FROM sv v JOIN $lastBooks b ON b.sub = v.sub
-            WHERE v.vec_id IN (1, 2, 3, 4, 5)),
+            WHERE v.vec_id $ProbeInSql),
           adcs AS (
             SELECT l.probe_id, enc.vec_id,
               round(list_sum(list(l.dlut ORDER BY l.sub)), 6) AS adc
@@ -1385,9 +1317,7 @@ object LlmSimilarity {
               FROM adcs) WHERE ark <= $PqShortlist),
           rer AS (
             SELECT s.probe_id, s.vec_id, s.adc,
-              round(list_aggregate(list_transform(list_zip(e.embedding, pe.embedding),
-                pr -> (CAST(pr[1] AS DOUBLE) - CAST(pr[2] AS DOUBLE))
-                      * (CAST(pr[1] AS DOUBLE) - CAST(pr[2] AS DOUBLE))), 'sum'), 6) AS d2
+              round(${d2Sql("e.embedding", "pe.embedding")}, 6) AS d2
             FROM short s
             JOIN emb e ON e.vec_id = s.vec_id
             JOIN emb pe ON pe.vec_id = s.probe_id)
@@ -1400,22 +1330,9 @@ object LlmSimilarity {
   /** All-pairs cosine top-5 per probe, recomputed in DOUBLE (DuckDB's
     * list_cosine_similarity is float32) with the same sequential fold
     * Spark's [[graft.functions]] cosine performs — shared by the
-    * brute-force key and the exact-mode (nProbe = K) IVF key, which
+    * brute-force key and the exact-mode (nProbe = K) IVF keys, which
     * must produce the identical result set. */
-  private val bruteForceTopKSql: String =
-    """WITH sims AS (
-           SELECT p.vec_id AS probe_id, e.vec_id AS vec_id,
-             round(
-               list_sum(list_transform(range(64), i -> CAST(p.embedding[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(range(64), i -> CAST(p.embedding[i+1] AS DOUBLE) * CAST(p.embedding[i+1] AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(range(64), i -> CAST(e.embedding[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE))))), 6) AS sim
-           FROM embeddings p JOIN embeddings e ON e.vec_id <> p.vec_id
-           WHERE p.vec_id IN (1,2,3,4,5))
-         SELECT probe_id, rk, vec_id, sim FROM (
-           SELECT probe_id, vec_id, sim,
-             CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS INT) AS rk
-           FROM sims)
-         WHERE rk <= 5 ORDER BY probe_id, rk"""
+  private val bruteForceTopKSql: String = s"WITH ${probeTopKSql(allPairsSql)}"
 
   /** DuckDB twin of [[llmSimhash]], generated (not hand-unrolled —
     * r4 ADVICE precedent: literals that must stay in sync with the
@@ -1462,7 +1379,7 @@ object LlmSimilarity {
 
   /** Oracle of `llm_knn_ivf`, shared by `llm_knn_ivf_pruned20` (the
     * same search at the same nProbe through the pruned layout). */
-  private val ivfProbeSql: String = ivfOracleSql(IvfNProbe, 6)
+  private val ivfProbeSql: String = ivfOracleSql(IvfNProbe)
 
   val specs: Seq[KeySpec] = Seq(
     KeySpec.batch("llm_knn_cosine", llmKnnCosine, shuffles = 2, bruteForceTopKSql)
@@ -1484,7 +1401,7 @@ object LlmSimilarity {
       .constructionJobsOk("same IVF layout path at nProbe=K")
       .reads("llm_knn_ivf"),
     KeySpec.batch("llm_knn_ivf_append", llmKnnIvfAppend, shuffles = 3,
-      ivfOracleSql(IvfNProbe, 6, s"WHERE vec_id % 10 <> $IvfAppendMod"))
+      ivfOracleSql(IvfNProbe, s"WHERE vec_id % 10 <> $IvfAppendMod"))
       .crossJoinOk("keeps llm_knn_ivf's probe × centroid broadcast cross")
       .constructionJobsOk("base-slice quantizer train + base layout " +
         "write + delta append + centroid collect for pruning")
@@ -1501,8 +1418,7 @@ object LlmSimilarity {
     // first-class oracled key: the partition-filtered layout read at
     // the production operating point, against the same unrolled-
     // training oracle as llm_knn_ivf — its result is spec-pinned
-    // identical, so the SQL twin is shared (r11: the last spec-only
-    // ANN physical path becomes driver-oracled)
+    // identical, so the SQL twin is shared
     KeySpec.batch("llm_knn_ivf_pruned20", llmKnnIvfPruned, shuffles = 3,
       // the pruned-layout physical path at the same nProbe: identical
       // result by construction (LlmSpec pins it), identical oracle
@@ -1518,7 +1434,7 @@ object LlmSimilarity {
       .constructionJobsOk("codebook training collects M×K subvector centroids")
       .reads("llm_knn_pq"),
     KeySpec.batch("llm_hybrid_search", llmHybridSearch,
-      // +1 (r15): Tables.parallelizeKernel's hash repartition of the
+      // +1: Tables.parallelizeKernel's hash repartition of the
       // single-file documents scan ahead of the tokenize + explode
       shuffles = 13,
       // full BM25 + cosine + RRF in SQL — constants mirror the Spark
@@ -1537,7 +1453,7 @@ object LlmSimilarity {
           dfreq AS (SELECT t, CAST(count(*) AS DOUBLE) AS df FROM terms GROUP BY t),
           q AS (
             SELECT DISTINCT doc_id AS probe_id, t FROM terms
-            WHERE doc_id IN (1, 2, 3, 4, 5)),
+            WHERE doc_id $ProbeInSql),
           contrib AS (
             SELECT q.probe_id, terms.doc_id,
               ln((s.n - dfreq.df + 0.5) / (dfreq.df + 0.5) + 1.0) *
@@ -1559,12 +1475,8 @@ object LlmSimilarity {
             WHERE lex_rk <= 20),
           sims AS (
             SELECT p.vec_id AS probe_id, e.vec_id AS doc_id,
-              round(
-                list_sum(list_transform(range(64), i -> CAST(p.embedding[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE)))
-                / (sqrt(list_sum(list_transform(range(64), i -> CAST(p.embedding[i+1] AS DOUBLE) * CAST(p.embedding[i+1] AS DOUBLE))))
-                   * sqrt(list_sum(list_transform(range(64), i -> CAST(e.embedding[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE))))), 6) AS sim
-            FROM embeddings p JOIN embeddings e ON e.vec_id <> p.vec_id
-            WHERE p.vec_id IN (1, 2, 3, 4, 5)),
+              ${simSql("p.embedding", "e.embedding")} AS sim
+            FROM $allPairsSql),
           vec AS (
             SELECT probe_id, doc_id, vec_rk FROM (
               SELECT probe_id, doc_id, row_number() OVER (
@@ -1598,15 +1510,14 @@ object LlmSimilarity {
           cand AS (
             SELECT probe_id, vec_id, sim FROM (
               SELECT p.vec_id AS probe_id, e.vec_id AS vec_id,
-                round(${cosdSql("p.embedding", "e.embedding")}, 6) AS sim,
+                ${simSql("p.embedding", "e.embedding")} AS sim,
                 row_number() OVER (PARTITION BY p.vec_id
-                  ORDER BY round(${cosdSql("p.embedding", "e.embedding")}, 6) DESC, e.vec_id) AS rk
-              FROM embeddings p JOIN embeddings e ON e.vec_id <> p.vec_id
-              WHERE p.vec_id IN (1,2,3,4,5))
+                  ORDER BY ${simSql("p.embedding", "e.embedding")} DESC, e.vec_id) AS rk
+              FROM $allPairsSql)
             WHERE rk <= 20),
           pairs AS (
             SELECT c1.probe_id, c1.vec_id AS a, c2.vec_id AS b,
-              ${cosdSql("e1.embedding", "e2.embedding")} AS cs
+              ${cosSql("e1.embedding", "e2.embedding")} AS cs
             FROM cand c1
             JOIN cand c2 ON c1.probe_id = c2.probe_id AND c1.vec_id <> c2.vec_id
             JOIN embeddings e1 ON e1.vec_id = c1.vec_id
@@ -1734,12 +1645,9 @@ object LlmSimilarity {
          WHERE containment >= 0.5 ORDER BY a, b""")
       .constructionJobsOk("gram frame localCheckpoint (derive once, 5 scans -> 1)"),
     KeySpec.batch("llm_embed_neardup", llmEmbedNeardup, shuffles = 3,
-      """SELECT a, b, label, cos_sim FROM (
+      s"""SELECT a, b, label, cos_sim FROM (
            SELECT x.vec_id AS a, y.vec_id AS b, x.label AS label,
-             round(
-               list_sum(list_transform(range(64), i -> CAST(x.embedding[i+1] AS DOUBLE) * CAST(y.embedding[i+1] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(range(64), i -> CAST(x.embedding[i+1] AS DOUBLE) * CAST(x.embedding[i+1] AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(range(64), i -> CAST(y.embedding[i+1] AS DOUBLE) * CAST(y.embedding[i+1] AS DOUBLE))))), 6) AS cos_sim
+             ${simSql("x.embedding", "y.embedding")} AS cos_sim
            FROM embeddings x JOIN embeddings y
              ON x.label = y.label AND x.vec_id < y.vec_id)
          WHERE cos_sim >= 0.3 ORDER BY a, b""")
@@ -1752,7 +1660,7 @@ object LlmSimilarity {
           SELECT t.vec_id, count(*) AS n_eval_hits, max(sim) AS max_sim
           FROM (
             SELECT t.vec_id,
-              round(${cosdSql("t.embedding", "e.embedding")}, 6) AS sim
+              ${simSql("t.embedding", "e.embedding")} AS sim
             FROM embeddings t JOIN ev e ON t.vec_id % 10 <> 0) t
           WHERE sim >= 0.4
           GROUP BY t.vec_id ORDER BY t.vec_id""")

@@ -174,9 +174,7 @@ object Streaming {
   /** Accurate state-row totals cost RocksDB a read-before-write per
     * update (`trackTotalNumberOfRows`). Only the bounded-state specs
     * consume them ([[lastStateRowsTotal]]), so tracking is off on the
-    * bench path and the specs flip it on around their assertions —
-    * the same diagnostics-are-opt-in shape as
-    * `collectIvfDiagnostics`. */
+    * bench path and the specs flip it on around their assertions. */
   @volatile var trackStateRows: Boolean = false
 
   /** Chunking rule for the staged feed: each chunk is one

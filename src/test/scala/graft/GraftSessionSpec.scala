@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * count, and that no other source file builds a session of its own
   * or changes a live one outside `GraftExtensions.install` and
   * `GraftSession.withConfs`; that modules are named by family, not
-  * numbered by round; and which env settings src/main reads. */
+  * numbered by round; which env settings src/main reads; and that the
+  * vector-search SQL fragments are written once. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("cores: an integer as given, '*' as the host's cores, unset as 32") {
@@ -74,6 +75,30 @@ class GraftSessionSpec extends AnyFunSuite {
       .flatMap(p => knob.findAllIn(Files.readString(p))).distinct.sorted
     assert(names == Seq("SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_CPUS",
       "SPARK_GRAFT_INDEX_DIR", "SPARK_GRAFT_INDEX_MAX_BYTES", "SPARK_GRAFT_SF_DIR"))
+  }
+
+  test("the vector-search SQL fragments are stated once: one cosine fold, no hand-written probe list") {
+    // the double cosine fold is written only inside LlmSimilarity.cosSql
+    val sim = Files.readString(Paths.get("src/main/scala/graft/operators/LlmSimilarity.scala"))
+    val cosDef = sim.indexOf("def cosSql(")
+    val cosDefEnd = sim.indexOf("\n\n", cosDef)
+    val fold = """range\(64\), i -> CAST\(""".r
+    val outside = scalaFiles("src/main").flatMap { p =>
+      val text = Files.readString(p)
+      val inCosSql = p.getFileName.toString == "LlmSimilarity.scala" && cosDef >= 0
+      fold.findAllMatchIn(text)
+        .filterNot(m => inCosSql && m.start > cosDef && m.start < cosDefEnd)
+        .map(_ => p.getFileName.toString)
+    }
+    val perFile = outside.groupBy(identity).map { case (f, n) => s"$f x${n.size}" }.toSeq.sorted
+    assert(outside.isEmpty, s"cosine folds written outside LlmSimilarity.cosSql: $perFile")
+    assert(cosDef >= 0, "LlmSimilarity.cosSql is gone")
+    // the probe list is rendered from ProbeIds (LlmSimilarity.ProbeInSql)
+    val probeList = """IN \(1,\s?2,\s?3,\s?4,\s?5\)""".r
+    val byHand = scalaFiles("src/main/scala/graft/operators")
+      .filter(p => probeList.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.getFileName.toString).sorted
+    assert(byHand.isEmpty, s"hand-written probe lists: $byHand")
   }
 
   test("throwaway paths come from the run directories: only package.scala names a scratch root") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.col
+
 /** Distributed Lloyd k-means (operators/Clustering.scala): Lloyd
   * monotonicity, partitioning invariance (the quantized-integer
   * centroid updates are the load-bearing part), and full coverage. */
@@ -14,8 +16,10 @@ class KMeansSpec extends SparkTestBase {
   }
 
   test("result is invariant under input partitioning") {
-    val (r3, c3) = operators.Clustering.kmeans(spark, sf, iters = 2, preShuffle = 3)
-    val (r8, c8) = operators.Clustering.kmeans(spark, sf, iters = 2, preShuffle = 8)
+    // kmeansOn trains afresh on each input (no quantizer memo)
+    val base = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
+    val (r3, c3) = operators.Clustering.kmeansOn(spark, base.repartition(3), iters = 2)
+    val (r8, c8) = operators.Clustering.kmeansOn(spark, base.repartition(8), iters = 2)
     assert(c3.map(_.toSeq).toSeq == c8.map(_.toSeq).toSeq,
       "centroids differ across partitionings")
     assert(r3.collect().toSeq == r8.collect().toSeq,

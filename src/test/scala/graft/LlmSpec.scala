@@ -79,13 +79,9 @@ class LlmSpec extends SparkTestBase {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     val full = rows(operators.LlmSimilarity.llmKnnIvf(spark, sf))
-    operators.LlmSimilarity.collectIvfDiagnostics = true
-    val pruned =
-      try rows(operators.LlmSimilarity.llmKnnIvfPruned(spark, sf))
-      finally operators.LlmSimilarity.collectIvfDiagnostics = false
+    val pruned = rows(operators.LlmSimilarity.llmKnnIvfPruned(spark, sf))
     assert(pruned == full, "layout change must not change results")
-    val (read, total) = operators.LlmSimilarity.lastIvfScan
-    val (cand, denom) = operators.LlmSimilarity.lastIvfScanRows
+    val (read, total, cand, denom) = operators.LlmSimilarity.ivfPrunedScan(spark, sf)
     val frac = cand.toDouble / denom
     info(s"partition-pruned scan read $read of $total list files")
     info(f"measured per-probe row-scan fraction = $frac%.3f (candidates $cand of $denom probe-row pairs)")
@@ -99,6 +95,18 @@ class LlmSpec extends SparkTestBase {
     // corpus-size artifact; at production N/K (thousands of rows per
     // list) Lloyd balancing pulls it toward the nominal list fraction.
     assert(frac < 0.85, f"row-scan fraction $frac%.3f — pruning is not pruning")
+  }
+
+  test("exact-mode IVF equals brute force: the one top-k kernel over three candidate paths") {
+    // all pairs, every list of the fresh assignment, every list of the
+    // partition-pruned layout: with nProbe = K the candidate sets hold
+    // every pair, so the registered keys must give the same rows
+    def rows(key: String) = SparkEntry.queries(key)(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    val brute = rows("llm_knn_cosine")
+    assert(brute.size == 25, s"brute force returned ${brute.size} rows, not 5 probes x 5")
+    assert(rows("llm_knn_ivf_exact") == brute, "llm_knn_ivf_exact differs from llm_knn_cosine")
+    assert(rows("llm_knn_ivf_pruned") == brute, "llm_knn_ivf_pruned differs from llm_knn_cosine")
   }
 
   test("llm_knn_pq: ADC recall@5 against exact L2 is usable") {

@@ -289,6 +289,24 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
+  test("quantized mean: micro-unit sum sq over n points rounds half away from zero") {
+    // k-means, the PQ codebooks and both Lloyd SQL twins update every
+    // centroid coordinate through this one rule
+    val anySum = Gen.zip(Gen.choose(-1000000000000L, 1000000000000L), Gen.choose(1L, 100000L))
+    // sq / n lands exactly on q + 0.5 (n even), negative q included
+    val tie = for {
+      q <- Gen.choose(-10000000L, 10000000L)
+      n <- Gen.choose(1L, 50000L).map(_ * 2)
+    } yield (q * n + n / 2, n)
+    forAll(Gen.listOfN(200, Gen.oneOf(anySum, tie))) { cases =>
+      cases.foreach { case (sq, n) =>
+        val want = (BigDecimal(sq) / BigDecimal(n))
+          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLongExact.toDouble / 1000000.0
+        assert(operators.Clustering.quantizedMean(sq, n) == want, s"sq=$sq n=$n")
+      }
+    }
+  }
+
   test("Det.fq: floor-quantization laws (idempotent, monotone, grid-bounded, sign-correct)") {
     import spark.implicits._
     val vals = Gen.listOfN(50, Gen.chooseNum(-1e6, 1e6))

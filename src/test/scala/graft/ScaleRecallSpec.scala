@@ -33,10 +33,7 @@ class ScaleRecallSpec extends SparkTestBase {
           operators.LlmSimilarity.IvfNProbe.toDouble / operators.LlmSimilarity.IvfK
         // measured list skew from the persisted IVF layout — the thing
         // that turns a nominal 31% list budget into a larger row scan
-        operators.LlmSimilarity.collectIvfDiagnostics = true
-        try operators.LlmSimilarity.llmKnnIvfPruned(spark, d).count()
-        finally operators.LlmSimilarity.collectIvfDiagnostics = false
-        val (cand, denom) = operators.LlmSimilarity.lastIvfScanRows
+        val (_, _, cand, denom) = operators.LlmSimilarity.ivfPrunedScan(spark, d)
         val layout = spark.read
           .parquet(operators.LlmSimilarity.ivfLayoutPath(spark, d))
           .groupBy("cluster").count().select("count")
